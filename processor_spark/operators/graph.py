@@ -284,8 +284,10 @@ def connected_components(
     # size-adaptive local window (r15): counting checkpointed blocks is
     # one cheap action; below the cap the driver solves exactly and the
     # 6-8-stages-per-round loop never runs (see CC_LOCAL_MAX_EDGES)
+    # cap <= 0 always runs the distributed loop — even on an empty edge
+    # set, where count() <= 0 would otherwise pick the local solver
     cap = CC_LOCAL_MAX_EDGES if local_max_edges is None else local_max_edges
-    if e.count() <= cap:
+    if cap > 0 and e.count() <= cap:
         return _cc_local(e, stats)
     # NB: lazy on purpose — it reads the already-checkpointed initial
     # edge set, is only referenced in the final returned plan, and an

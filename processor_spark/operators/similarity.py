@@ -1290,12 +1290,46 @@ def _cents_np(cents: DataFrame):
     import numpy as np
 
     pdf = cents.select("cid", "cm").toPandas()
-    cids = pdf["cid"].to_numpy().astype(np.int64)
     C = (
         np.stack(pdf["cm"].to_numpy()).astype(np.float64)
         if len(pdf)
         else np.zeros((0, 0), dtype=np.float64)
     )
+    return _cents_sorted(pdf["cid"].to_numpy(), C)
+
+
+def _cents_np_path(path: str):
+    """``_cents_np`` for a (cid, cm) centroid table persisted as a
+    parquet directory on the LOCAL filesystem, read with pyarrow — no
+    Spark job, no schema inference.  For callers whose index already
+    lives on a local root (the streaming IVF index: os.listdir
+    generations, os.replace swaps).  pyarrow skips '_'/'.'-prefixed
+    files (_SUCCESS, .crc), as Spark's listing does."""
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path, columns=["cid", "cm"])
+    cm = t.column("cm").combine_chunks()
+    lens = pc.list_value_length(cm).to_numpy(zero_copy_only=False)
+    if len(t) and (lens != lens[0]).any():
+        raise ValueError(f"ragged centroid table at {path}")
+    C = (
+        cm.flatten().to_numpy(zero_copy_only=False)
+        .reshape(len(t), -1).astype(np.float64)
+        if len(t)
+        else np.zeros((0, 0), dtype=np.float64)
+    )
+    return _cents_sorted(t.column("cid").to_numpy(), C)
+
+
+def _cents_sorted(cids, C):
+    """The shared tail of both centroid reads: cid-ascending rows (the
+    (sq, cid) tie-break every argmin relies on) and the sub-2^53
+    exactness guard."""
+    import numpy as np
+
+    cids = np.asarray(cids).astype(np.int64)
     o = np.argsort(cids, kind="stable")
     cids, C = cids[o], C[o]
     _assert_sub53(C)
@@ -1330,14 +1364,16 @@ def _assert_sub53(*mats) -> None:
 
 
 def _numpy_flat_assign(
-    vecs: DataFrame, cents: DataFrame, keep: tuple[str, ...] = ("vm",)
+    vecs: DataFrame, cents: DataFrame | tuple, keep: tuple[str, ...] = ("vm",)
 ) -> DataFrame:
     """EXACT flat argmin as a closure-captured numpy matmul (r14): the
     same (sq, cid) min_by the Catalyst crossJoin computes, in one
     Arrow-batched mapInPandas — value-identical at any nlist (exact
     integer distances below 2^53, argmin over cid-sorted columns IS
-    the tie-break; the same proof as pipelines._numpy_assign, whose
-    streaming equality tests pin the arithmetic).  Centroids collect
+    the tie-break; the streaming ingest sink and SemDeDup assign
+    through this same kernel, and their equality tests pin the
+    arithmetic).  ``cents`` is a (cid, cm) DataFrame or the (cids, C)
+    pair _cents_np / _cents_np_path return.  Centroids collect
     driver-side (nlist ≤ NUMPY_FLAT_MAX_NLIST rows — the sanctioned
     bounded-collect class) and the matmul is CHUNKED at 2048 rows AND
     BLOCKED at NUMPY_CENT_BLOCK centroid columns with a running
@@ -1353,7 +1389,8 @@ def _numpy_flat_assign(
     13.3–13.4 s with EXACT cells (SCALE.md r14)."""
     import numpy as np
 
-    cids, C = _cents_np(cents)  # Arrow, not python rows (r15)
+    # Arrow, not python rows (r15)
+    cids, C = cents if isinstance(cents, tuple) else _cents_np(cents)
     c2 = (C * C).sum(axis=1)
     in_cols = list(dict.fromkeys(("vec_id", "vm") + tuple(keep)))
     src = vecs.select(*in_cols)
@@ -1475,13 +1512,15 @@ def _router_groups_np(C, blk: int | None = None):
 
 def _numpy_routed_assign(
     vecs: DataFrame,
-    cents: DataFrame,
+    cents: DataFrame | tuple,
     keep: tuple[str, ...] = ("vm",),
     rprobe: int = 1,
 ) -> DataFrame:
     """Two-level multi-probe argmin as closure-captured numpy (r14
-    close) — the batch twin of pipelines._numpy_assign's two-level
-    branch, with keep-column pass-through and a bigint cell.  Cell-for-
+    close), also behind pipelines._numpy_assign's two-level mode and
+    the streaming ingest sink past NUMPY_FLAT_MAX_NLIST (``cents`` as
+    for _numpy_flat_assign), with keep-column pass-through and a
+    bigint cell.  Cell-for-
     cell equal to the Catalyst routed branch of _assign_cells at the
     same rprobe (same _router_groups, exact integer distances in
     float64, stable argsort = the (gsq, gid) router tie-break, running
@@ -1504,7 +1543,7 @@ def _numpy_routed_assign(
     # paid a row-wise .collect() (~2.4 KB/centroid driver RSS) plus a
     # list→numpy rebuild per group; this one holds exactly ONE float64
     # matrix (8·d B/centroid) and groups by index slices.
-    cids, C = _cents_np(cents)
+    cids, C = cents if isinstance(cents, tuple) else _cents_np(cents)
     ncoarse, rassign = _router_groups_np(C)
     G = C[:ncoarse]
     rp = min(rprobe, ncoarse)

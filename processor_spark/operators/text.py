@@ -8,6 +8,8 @@ embarrassingly parallel at 100 TB.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1988,6 +1990,10 @@ def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------------ phrase search
 
 _PHRASE = ("slow", "query")  # the searched phrase, as adjacent tokens
+# the tokens are spliced verbatim into a Java regex (q_phrase_search)
+# and a DuckDB string literal (its oracle): only [A-Za-z0-9]+ is safe
+# in both without escaping
+assert all(re.fullmatch(r"[A-Za-z0-9]+", t) for t in _PHRASE), _PHRASE
 
 
 _PHRASE_SQL = f"""

@@ -572,7 +572,6 @@ class LakeTable:
             for r in kdf.select(
                 _bucket_expr(kdf, m["key"], m["num_buckets"]).alias("b")
             )
-            .distinct()
             .collect()
         }
         wanted &= set(m["buckets"])

@@ -1015,27 +1015,41 @@ def stream_ivf_ingest(
     State: NONE in the state store (the index IS the state); the
     checkpoint carries only source offsets.
 
-    Post-retrain assignment (r14): a micro-batch reads ONE chunk file
-    = one partition, so the flat `_ivfa_assign` crossJoin runs its
-    whole n×nlist zip_with distance fold on ONE core — measured at
-    ~90 s for a 16k-row batch at derived nlist=512 (SCALE.md r14 —
-    the single-file twin of the spread=True rule).  Past
-    STREAM_ASSIGN_NUMPY_MIN_NLIST the sink therefore assigns through
-    the closure-captured numpy exact-flat argmin (_numpy_assign —
-    value-identical to _ivfa_assign: same exact integer distances,
-    same (sq, cid) tie-break; 16k×512×64 is a ~50 ms matmul).  At the
-    fixture floor the broadcast-join plan is unchanged."""
-    import json
+    Job budget: a steady-state micro-batch runs exactly
+    write_partitioned's two jobs (the cell shuffle and the write).
+    The frozen centroids are read with pyarrow as a numpy pair
+    (similarity._cents_np_path: no Spark job, no schema inference) and
+    every batch is assigned by the batch path's closure-captured numpy
+    kernel — exact flat (value-identical to the _ivfa_assign crossJoin:
+    exact integer distances, argmin over cid-ascending columns = the
+    (sq, cid) tie-break), routed multi-probe at TWOLEVEL_RPROBE_PAIR
+    past NUMPY_FLAT_MAX_NLIST (the retrain's own _assign_cells policy,
+    so post-retrain generations keep one cell policy).  A one-file
+    micro-batch is ONE partition, where the crossJoin fold ran
+    n×nlist×d on one core (~90 s per 16k rows at nlist=512 —
+    SCALE.md r14).  Only the FIRST batch counts its rows: it trains
+    the centroids and must not train on nothing.  A later empty batch
+    writes a stage with no parquet file, which is discarded, so it
+    creates no generation.
+
+    The pyarrow read follows the index's existing local-filesystem
+    contract: generations are listed with os.listdir and published
+    with os.replace under the same root, so ``path`` is a local
+    directory already."""
     import os
     import shutil
     import uuid
 
     from processor_spark.operators.similarity import (
         IVFK_NLIST,
-        _int_sqdist,
-        _ivfa_assign,
+        NUMPY_FLAT_MAX_NLIST,
+        TWOLEVEL_RPROBE_PAIR,
+        _cents_np_path,
         _ivfa_cents,
         _micro_arr,
+        _numpy_flat_assign,
+        _numpy_routed_assign,
+        write_partitioned,
     )
 
     schema = T.StructType(
@@ -1054,11 +1068,11 @@ def stream_ivf_ingest(
     )
 
     def sink(batch_df, batch_id):
-        if not batch_df.count():
-            return
         vecs = batch_df.select("vec_id", _micro_arr("embedding").alias("vm"))
         cents_dir = os.path.join(path, "centroids")
         if not os.path.isdir(cents_dir):
+            if not batch_df.count():
+                return
             # first batch trains the frozen centroids (idempotent: a
             # replay of batch 0 retrains from the identical batch).
             # Seeds come from THIS batch's lowest vec_ids — file
@@ -1080,7 +1094,7 @@ def stream_ivf_ingest(
             )
             stage_c = os.path.join(path, f".stage-cents-{uuid.uuid4().hex[:8]}")
             _ivfa_cents(vecs, seeds=seeds).write.parquet(stage_c)
-            n_c = spark.read.parquet(stage_c).count()
+            n_c = len(_cents_np_path(stage_c)[0])
             if n_c != IVFK_NLIST:
                 shutil.rmtree(stage_c, ignore_errors=True)
                 raise ValueError(
@@ -1092,40 +1106,27 @@ def stream_ivf_ingest(
                 os.replace(stage_c, cents_dir)
             except OSError:
                 shutil.rmtree(stage_c, ignore_errors=True)  # lost the race
-        cents = spark.read.parquet(cents_dir)
+        cents = _cents_np_path(cents_dir)
         gen_dir = os.path.join(path, "assignments", f"gen={batch_id}")
         stage = os.path.join(path, f".stage-gen-{batch_id}")
         shutil.rmtree(stage, ignore_errors=True)
         shutil.rmtree(gen_dir, ignore_errors=True)  # replayed batch: redo
-        n_cents = cents.count()
-        if n_cents > STREAM_ASSIGN_NUMPY_MIN_NLIST:
-            # single-file micro-batch = one partition: the flat
-            # crossJoin fold would run n×nlist×d on ONE core (~90 s
-            # at 16k×512 — SCALE.md r14); numpy exact flat is
-            # value-identical and ~single-digit ms.  Past the flat
-            # ceiling follow the shared auto rule (routed rp3) so
-            # post-retrain generations carry the same cell policy the
-            # retrain's own _assign_cells pass would produce — a fold
-            # compaction preserves cells, so a policy split here would
-            # persist forever (the r14 fold lesson).
-            cents_rows = [(r.cid, list(r.cm)) for r in cents.collect()]
-            assigned = _numpy_assign(
-                vecs, cents_rows,
-                two_level=n_cents > NUMPY_FLAT_MAX_NLIST,
-                rprobe=_sim.TWOLEVEL_RPROBE_PAIR
-                if n_cents > NUMPY_FLAT_MAX_NLIST else 1,
+        if len(cents[0]) > NUMPY_FLAT_MAX_NLIST:
+            assigned = _numpy_routed_assign(
+                vecs, cents, rprobe=TWOLEVEL_RPROBE_PAIR
             )
         else:
-            assigned = _ivfa_assign(vecs, cents)
+            assigned = _numpy_flat_assign(vecs, cents)
         # write_partitioned, not raw partitionBy: without the repartition
         # every micro-batch task sprays a file into every cell dir it
         # holds rows for (the r13-measured 56,161-file class,
         # similarity.write_partitioned) — post-retrain at derived
         # nlist=512 each generation would multiply files by task-width
         # and gens accumulate until compaction (VERDICT r13 weak #1).
-        from processor_spark.operators.similarity import write_partitioned
-
         write_partitioned(assigned, stage, "cell")
+        if not _snapshot_parquet_files(stage):
+            shutil.rmtree(stage, ignore_errors=True)  # empty batch
+            return
         os.makedirs(os.path.dirname(gen_dir), exist_ok=True)
         os.replace(stage, gen_dir)
 
@@ -1133,36 +1134,89 @@ def stream_ivf_ingest(
     return path
 
 
+def _nearest_cells(Q, cids, C, nprobe: int):
+    """(nq, min(nprobe, nlist)) cids of each query row's nearest
+    centroids, nearest first: exact integer distances in float64 (the
+    _assert_sub53 contract, checked here for Q; ``cids``/``C`` come
+    cid-ascending from _cents_np / _cents_np_path), and a STABLE
+    argsort over those cid-ascending columns orders equal distances
+    by cid — the (sq, cid) row_number window's tie-break.  Rows go in
+    chunks so a distance block stays near 16M entries at any nlist."""
+    import numpy as np
+
+    from processor_spark.operators.similarity import _assert_sub53
+
+    _assert_sub53(Q)
+    k = min(nprobe, len(cids))
+    c2 = (C * C).sum(axis=1)
+    near = np.empty((len(Q), k), dtype=np.int64)
+    step = max(1, (1 << 24) // max(1, len(cids)))
+    for lo in range(0, len(Q), step):
+        Qc = Q[lo : lo + step]
+        sq = (Qc * Qc).sum(axis=1)[:, None] + c2[None, :] - 2.0 * (Qc @ C.T)
+        near[lo : lo + len(Qc)] = cids[np.argsort(sq, axis=1, kind="stable")[:, :k]]
+    return near
+
+
 def serve_ivf_stream_index(spark: SparkSession, path: str, query_df: DataFrame) -> DataFrame:
     """k-NN against the stream-maintained IVF index: probe the frozen
     centroids with the query batch, then read ONLY the probed cells
     from every generation directory (an absent cell dir in a
     generation means no vectors landed there — skip).  Same exact
-    integer ranking as the batch serve keys."""
+    integer ranking as the batch serve keys.
+
+    ``query_df`` needs (q_id, qm).  The probe runs on the driver: the
+    query batch is collected ONCE through Arrow — O(nq·d) values, the
+    same order as the nq·KNN_K result rows every caller collects — and
+    scored in numpy against the centroids read with pyarrow
+    (similarity._cents_np_path, the index's local-filesystem contract:
+    generations are os.listdir'ed and swapped with os.replace under
+    the same root).  Distances are exact integers (micro-units under
+    the _assert_sub53 bound), and a stable argsort over cid-ascending
+    columns keeps the IVF_NPROBE nearest cells in (sq, cid) order —
+    the tie-break of the row_number window it replaces.  The probes
+    join the candidate scan as a local DataFrame, so a call costs the
+    query collect plus the final top-k plan (≤ 4 jobs for a local
+    query frame, pinned in tests/test_streaming.py).  An empty query
+    batch returns an empty frame with the same schema."""
     import os
+
+    import numpy as np
 
     from pyspark.sql import Window
 
     from processor_spark.operators.similarity import (
         IVF_NPROBE,
         KNN_K,
+        _cents_np_path,
         _int_sqdist,
         heal_swapped_root,
     )
-    from processor_spark.caching import scoped_persist
 
     heal_swapped_root(path)  # recover an interrupted compaction swap
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
-    wp = Window.partitionBy("q_id").orderBy("sq", "cid")
-    probes = (
-        query_df.crossJoin(F.broadcast(cents))
-        .select("q_id", "qm", "cid", _int_sqdist(F.col("qm"), F.col("cm")).alias("sq"))
-        .withColumn("rn", F.row_number().over(wp))
-        .where(F.col("rn") <= IVF_NPROBE)
-        .select("q_id", "qm", F.col("cid").alias("cell"))
-        .transform(scoped_persist)
+    cids, C = _cents_np_path(os.path.join(path, "centroids"))
+    qsrc = query_df.select("q_id", "qm")
+    q = qsrc.toPandas()
+    Q = (
+        np.stack(q["qm"].to_numpy()).astype(np.float64)
+        if len(q)
+        else np.zeros((0, C.shape[1]), dtype=np.float64)
     )
-    cells = sorted({r.cell for r in probes.select("cell").distinct().collect()})
+    near = _nearest_cells(Q, cids, C, IVF_NPROBE)
+    k = near.shape[1]
+    probes = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "q_id": np.repeat(q["q_id"].to_numpy(), k),
+                "qm": np.repeat(q["qm"].to_numpy(), k),
+                "cell": near.ravel(),
+            }
+        ),
+        T.StructType(
+            [*qsrc.schema.fields, T.StructField("cell", T.LongType())]
+        ),
+    )
+    cells = sorted(set(near.ravel().tolist()))
     root = os.path.join(path, "assignments")
     frames = []
     for g in sorted(os.listdir(root)):
@@ -1333,10 +1387,7 @@ def compact_ivf_stream_index(
     import shutil
     import uuid
 
-    from processor_spark.operators.similarity import (
-        _ivfa_assign,
-        heal_swapped_root,
-    )
+    from processor_spark.operators.similarity import heal_swapped_root
 
     heal_swapped_root(path)
     root = os.path.join(path, "assignments")
@@ -1743,18 +1794,6 @@ from processor_spark.operators.similarity import (  # noqa: E402
     NUMPY_FLAT_MAX_NLIST,
 )
 
-# Above this many centroids the streaming IVF ingest assigns each
-# micro-batch via the numpy exact-flat argmin instead of the
-# _ivfa_assign broadcast crossJoin: a micro-batch is one chunk file =
-# ONE partition, so the crossJoin's n×nlist×d zip_with fold runs on a
-# single core — measured ~90 s for a 16k-row batch at derived
-# nlist=512 vs a ~50 ms numpy matmul (SCALE.md r14).  At the fixture
-# floor (nlist=8) the broadcast-join plan is cheap and fully
-# Catalyst-visible, so it stays.  Exactness note: the numpy flat
-# branch is VALUE-IDENTICAL to _ivfa_assign at any nlist (exact
-# integer distances below 2^53, same (sq, cid) tie-break).
-STREAM_ASSIGN_NUMPY_MIN_NLIST = 64
-
 # Batches at or above this many documents get spread across cores
 # before the posting build (stream_text_index_ingest): the tokenize +
 # posexplode stage runs BEFORE the postings agg's shuffle, so on a
@@ -1789,141 +1828,45 @@ _router_groups = _sim._router_groups
 def _numpy_assign(
     vecs_vm: DataFrame, cents_rows: list, two_level: bool, rprobe: int = 1
 ) -> DataFrame:
-    """Closure-captured numpy argmin assignment (VERDICT r12 "what's
+    """Closure-captured numpy argmin assignment over a (cid, cm) row
+    list — the streaming SemDeDup's front to the batch path's ONE
+    numpy kernel pair (similarity._numpy_flat_assign, exact flat, and
+    similarity._numpy_routed_assign, two-level).  VERDICT r12 "what's
     wrong": the literal-CASE router's plan grows linearly with nlist —
     ~34k literals at derived nlist=512 — and Catalyst re-plans it every
     micro-batch; this keeps the PLAN O(1) in nlist and moves the
-    distance work into one Arrow-batched mapInPandas).
+    distance work into one Arrow-batched mapInPandas.
 
     Bit-exact with both literal branches: vm is integerized Spark-side
-    (identical _micro_arr projection), distances are exact — every
-    product ≤ (4.2e6)² ≈ 1.8e13 and every 64-dim sum ≤ 2.3e15 sits
-    below 2^53, so float64 matmul is integer-exact regardless of BLAS
-    summation order — and argmin over cid-sorted rows IS the (sq, cid)
-    min_by tie-break (first occurrence = lowest cid).  Two-level mode
-    reuses _router_groups, so routed cells equal _assign_cells
-    two_level=True exactly (asserted in tests/test_streaming.py).
-
-    ``rprobe`` (r14, VERDICT r13 missing #3): multi-probe routing for
-    the two-level branch — each vector's candidate set is the UNION of
-    its rprobe nearest router groups' fine centroids, mirroring
-    _assign_cells(rprobe=...) exactly (stable argsort over exact
-    float64 integer distances = the (gsq, gid) tie-break; the running
-    (sq, cid) min across probed groups = the union min_by).  Without
-    it, the past-NUMPY_FLAT_MAX_NLIST regime would hand streaming
-    SemDeDup's per-cell state exactly the rp1-imbalanced cells the r13
-    probe refuted (max_occ 2,896 vs 1,053 at rp3)."""
+    (identical _micro_arr projection), distances are exact integers in
+    float64 (the _assert_sub53 contract), and argmin over cid-sorted
+    columns IS the (sq, cid) min_by tie-break.  Two-level mode routes
+    through the same router as _router_groups, so routed cells equal
+    _assign_cells two_level=True exactly; ``rprobe`` (r14, VERDICT r13
+    missing #3) unions the rprobe nearest router groups, mirroring
+    _assign_cells(rprobe=...) (asserted in tests/test_streaming.py).
+    Output is (vec_id, vm, cell int), the literal branches' shape."""
     import numpy as np
 
-    rows = sorted((int(cid), [int(e) for e in cm]) for cid, cm in cents_rows)
     # the output column is int32 (matches the literal branches' cast):
     # a derived nlist past 2^31 would silently overflow — refuse loudly
     # (ADVICE r13; at the n/250 occupancy rule that is a >500-trillion
     # vector stream partition, far past any single-partition design)
-    if rows and rows[-1][0] >= 2**31:
-        raise ValueError(
-            f"centroid id {rows[-1][0]} overflows the int32 cell column"
-        )
-    cids = np.asarray([cid for cid, _ in rows], dtype=np.int64)
-    C = np.asarray([cm for _, cm in rows], dtype=np.float64)
-    if two_level:
-        cseeds, groups = _router_groups(cents_rows)
-        G = np.asarray([gm for _, gm in cseeds], dtype=np.float64)
-        gids = [gid for gid, _ in cseeds]
-        rp = min(rprobe, len(cseeds))  # same clamp as _assign_cells
-        # per-group fine matrices, cid-sorted (groups preserve cid order)
-        fine = {
-            gid: (
-                np.asarray([cid for cid, _ in mem], dtype=np.int64),
-                np.asarray([cm for _, cm in mem], dtype=np.float64),
-            )
-            for gid, mem in groups.items()
-            if mem
-        }
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["vm"].to_numpy()).astype(np.float64)
-            if not two_level:
-                # chunked rows + blocked centroid columns with a
-                # running (sq, cid) min — the batch twin's r14-close
-                # shape (similarity._numpy_flat_assign): per-task
-                # memory flat in nlist (a default 10k-row Arrow batch
-                # at the nlist ceiling would otherwise hold a 671 MB
-                # distance matrix), tie-break preserved because blocks
-                # ascend in cid and the min updates on strict <
-                c2 = (C * C).sum(axis=1)
-                cell = np.empty(len(X), dtype=np.int64)
-                blk = _sim.NUMPY_CENT_BLOCK
-                for lo in range(0, len(X), 2048):
-                    Xc = X[lo : lo + 2048]
-                    x2 = (Xc * Xc).sum(axis=1)[:, None]
-                    best_sq = np.full(len(Xc), np.inf)
-                    bcell = np.empty(len(Xc), dtype=np.int64)
-                    for cl in range(0, len(C), blk):
-                        Cb = C[cl : cl + blk]
-                        sq = (
-                            x2
-                            + c2[None, cl : cl + len(Cb)]
-                            - 2.0 * (Xc @ Cb.T)
-                        )
-                        loc = sq.argmin(axis=1)
-                        v = sq[np.arange(len(Xc)), loc]
-                        upd = v < best_sq
-                        best_sq[upd] = v[upd]
-                        bcell[upd] = cids[cl + loc[upd]]
-                    cell[lo : lo + len(Xc)] = bcell
-            else:
-                gsq = (
-                    (X * X).sum(axis=1)[:, None]
-                    + (G * G).sum(axis=1)[None, :]
-                    - 2.0 * (X @ G.T)
-                )
-                # top-rp router groups per vector: distances are exact
-                # integers in float64, and gids ascend with column
-                # index, so a STABLE argsort's first-occurrence order
-                # IS the (gsq, gid) tie-break
-                probed = np.argsort(gsq, axis=1, kind="stable")[:, :rp]
-                best_sq = np.full(len(X), np.inf)
-                cell = np.zeros(len(X), dtype=np.int64)
-                for j, gid in enumerate(gids):
-                    mask = (probed == j).any(axis=1)
-                    if not mask.any() or gid not in fine:
-                        continue
-                    mcids, M = fine[gid]
-                    Xm = X[mask]
-                    msq = (
-                        (Xm * Xm).sum(axis=1)[:, None]
-                        + (M * M).sum(axis=1)[None, :]
-                        - 2.0 * (Xm @ M.T)
-                    )
-                    loc = msq.argmin(axis=1)  # lowest cid within group
-                    gsqm = msq[np.arange(len(Xm)), loc]
-                    gcid = mcids[loc]
-                    idx = np.flatnonzero(mask)
-                    # groups iterate in ascending-gid order and each
-                    # group's cids are disjoint from every other's, so
-                    # strict < on ties keeps the lowest cid: equal sq
-                    # across groups resolves to the group seen first
-                    # only if its cid is lower — compare (sq, cid)
-                    upd = (gsqm < best_sq[idx]) | (
-                        (gsqm == best_sq[idx]) & (gcid < cell[idx])
-                    )
-                    best_sq[idx[upd]] = gsqm[upd]
-                    cell[idx[upd]] = gcid[upd]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "vm": pdf["vm"],
-                    "cell": pd.Series(cell, index=pdf.index).astype("int32"),
-                }
-            )
-
-    return vecs_vm.mapInPandas(
-        fn, schema="vec_id bigint, vm array<bigint>, cell int"
+    top = max((int(cid) for cid, _ in cents_rows), default=0)
+    if top >= 2**31:
+        raise ValueError(f"centroid id {top} overflows the int32 cell column")
+    C = (
+        np.asarray([[int(e) for e in cm] for _, cm in cents_rows], dtype=np.float64)
+        if cents_rows
+        else np.zeros((0, 0), dtype=np.float64)
     )
+    cents = _sim._cents_sorted([int(cid) for cid, _ in cents_rows], C)
+    assigned = (
+        _sim._numpy_routed_assign(vecs_vm, cents, rprobe=rprobe)
+        if two_level
+        else _sim._numpy_flat_assign(vecs_vm, cents)
+    )
+    return assigned.select("vec_id", "vm", F.col("cell").cast("int"))
 
 
 def semdedup_assign_frame(

@@ -271,6 +271,16 @@ def test_read_keys_prunes_to_hashed_buckets(table, spark):
     assert dirs <= {"5"}, f"scan touched extra buckets: {dirs}"
 
 
+def test_read_keys_repeated_keys_read_each_row_once(table, spark):
+    """The bucket probe deduplicates driver-side (no distinct()
+    shuffle): keys repeated in the list — and two keys sharing a
+    bucket — still return each matching row exactly once."""
+    got = sorted(
+        (r.k, r.v) for r in table.read_keys(spark, [5, 13, 5, 5, 42, 13]).collect()
+    )
+    assert got == [(5, "v5"), (13, "v13"), (42, "v42")]
+
+
 def test_create_rejects_missing_key_column(tmp_path, spark):
     t = LakeTable(str(tmp_path / "bad"))
     with pytest.raises(ValueError, match="merge key"):

@@ -297,6 +297,25 @@ def test_connected_components_local_equals_distributed(spark):
     assert "impl" not in st_dist
 
 
+def test_connected_components_cap_zero_pins_distributed_on_empty(spark):
+    """ADVICE r15 low: local_max_edges=0 must pin the distributed loop
+    even on an EMPTY edge set (count 0 <= cap 0 used to pick the local
+    solver), so a forced-distributed caller never gets impl=local; a
+    self-loop-only input collapses to the same empty edge set."""
+    from processor_spark.operators.graph import connected_components
+
+    for rows in ([], [(4, 4)]):
+        edges = spark.createDataFrame(rows, "src bigint, dst bigint")
+        st_dist, st_loc = {}, {}
+        dist = connected_components(
+            edges, stats=st_dist, local_max_edges=0
+        ).collect()
+        loc = connected_components(edges, stats=st_loc).collect()
+        assert dist == [] and loc == []
+        assert "impl" not in st_dist, st_dist
+        assert st_loc.get("impl") == "local"
+
+
 def test_approx_count_distinct_within_declared_error(spark):
     """q_agg_approx is rows-only by contract (HLL sketches differ
     between engines) — so grade it on ACCURACY instead: every group's

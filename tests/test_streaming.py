@@ -2142,14 +2142,21 @@ def test_batch_and_streaming_drift_decisions_agree():
 
 
 def test_stream_ivf_assign_numpy_equals_flat(spark):
-    """r14: past STREAM_ASSIGN_NUMPY_MIN_NLIST the ingest sink assigns
-    micro-batches via the numpy exact-flat argmin (a single-file batch
-    is ONE partition — the crossJoin fold measured ~90 s/16k rows at
-    nlist=512 on one core); it must equal _ivfa_assign cell-for-cell
-    at any nlist (exact integer distances, same (sq, cid) tie-break)."""
+    """r14: the ingest sink assigns micro-batches via the numpy
+    exact-flat argmin (a single-file batch is ONE partition — the
+    crossJoin fold measured ~90 s/16k rows at nlist=512 on one core);
+    it must equal _ivfa_assign cell-for-cell at any nlist (exact
+    integer distances, same (sq, cid) tie-break) — the fixture-floor
+    nlist=8 included, which the sink now assigns through numpy too.
+    Both fronts are pinned: the numpy pair the sink passes and the
+    row-list _numpy_assign the streaming SemDeDup uses."""
+    import numpy as np
+
     from processor_spark.operators.similarity import (
+        _cents_sorted,
         _ivfa_assign,
         _micro_arr,
+        _numpy_flat_assign,
     )
 
     svecs = (
@@ -2157,30 +2164,39 @@ def test_stream_ivf_assign_numpy_equals_flat(spark):
         .select("vec_id", _micro_arr("embedding").alias("vm"))
         .coalesce(1)  # the streaming shape: one partition per batch
     )
-    cents_rows = [
-        (1000 + i, [int(e) for e in r.vm])
-        for i, r in enumerate(svecs.orderBy("vec_id").limit(80).collect())
-    ]
-    assert len(cents_rows) > P.STREAM_ASSIGN_NUMPY_MIN_NLIST
-    cents = spark.createDataFrame(
-        cents_rows, "cid long, cm array<bigint>"
-    )
-    npy = {
-        (r.vec_id, int(r.cell))
-        for r in P._numpy_assign(svecs, cents_rows, two_level=False).collect()
-    }
-    flat = {
-        (r.vec_id, int(r.cell))
-        for r in _ivfa_assign(svecs, cents).collect()
-    }
-    assert npy == flat and len(npy) > 0
+    seeds = svecs.orderBy("vec_id").limit(80).collect()
+    for nlist in (8, 80):
+        cents_rows = [
+            (1000 + i, [int(e) for e in r.vm])
+            for i, r in enumerate(seeds[:nlist])
+        ]
+        cents = spark.createDataFrame(
+            cents_rows, "cid long, cm array<bigint>"
+        )
+        flat = {
+            (r.vec_id, int(r.cell))
+            for r in _ivfa_assign(svecs, cents).collect()
+        }
+        pair = _cents_sorted(
+            [cid for cid, _ in cents_rows],
+            np.asarray([cm for _, cm in cents_rows], dtype=np.float64),
+        )
+        sink = {
+            (r.vec_id, int(r.cell))
+            for r in _numpy_flat_assign(svecs, pair).collect()
+        }
+        rows = {
+            (r.vec_id, int(r.cell))
+            for r in P._numpy_assign(svecs, cents_rows, two_level=False).collect()
+        }
+        assert sink == flat and rows == flat and len(flat) > 0, nlist
 
 
 def test_stream_ivf_ingest_numpy_branch_end_to_end(spark, tmp_path):
-    """r14: a pre-seeded >threshold centroid table (the post-retrain
-    shape) must route the ingest sink through the numpy branch and
-    produce generations identical to the _ivfa_assign batch twin —
-    including the one-file-per-cell-dir clustered layout."""
+    """r14: a pre-seeded 80-centroid table (the post-retrain shape)
+    must make the ingest sink's numpy assign produce generations
+    identical to the _ivfa_assign batch twin — including the
+    one-file-per-cell-dir clustered layout."""
     import os
 
     from processor_spark.operators.similarity import (
@@ -2243,6 +2259,222 @@ def test_stream_ivf_ingest_numpy_branch_end_to_end(spark, tmp_path):
                 if f.endswith(".parquet")
             ]
             assert len(files) == 1, (g, cell_dir, files)
+
+
+def _ivf_chunk_frames(spark, parts: int):
+    """The fixture embeddings sorted by vec_id, split into ``parts``
+    contiguous pandas frames (one chunk file each)."""
+    pdf = load(spark, SF_SMALL, "embeddings").toPandas().sort_values("vec_id")
+    step = len(pdf) // parts + 1
+    return pdf, [pdf.iloc[lo : lo + step] for lo in range(0, len(pdf), step)]
+
+
+def _local_queries(spark):
+    """The KNN_QUERIES query batch as a LOCAL DataFrame (no scan)."""
+    from processor_spark.operators.similarity import KNN_QUERIES, _micro_arr
+
+    qv = (
+        load(spark, SF_SMALL, "embeddings")
+        .where(F.col("vec_id") <= KNN_QUERIES)
+        .select(F.col("vec_id").alias("q_id"), _micro_arr("embedding").alias("qm"))
+    )
+    qdf = spark.createDataFrame(qv.toPandas(), qv.schema)
+    assert "LocalRelation" in qdf._jdf.queryExecution().logical().toString()
+    return qdf
+
+
+def _ivf_gens(path):
+    import os
+
+    return sorted(
+        g for g in os.listdir(os.path.join(path, "assignments"))
+        if g.startswith("gen=")
+    )
+
+
+def test_stream_ivf_ingest_and_serve_job_budget(spark, tmp_path):
+    """The streaming IVF path's Spark job budget, counted with the DAG
+    scheduler's job counter: after the training batch, a micro-batch
+    costs only write_partitioned's shuffle + write (the centroids are
+    read with pyarrow and assigned in numpy — no count(), no schema
+    inference, no crossJoin), and a serve of a local query frame costs
+    the query collect plus the final top-k plan."""
+    next_job = spark.sparkContext._jsc.sc().dagScheduler().nextJobId
+    chunks = tmp_path / "chunks"
+    chunks.mkdir()
+    path, ckpt = str(tmp_path / "ivf"), str(tmp_path / "ckpt")
+    _, parts = _ivf_chunk_frames(spark, 3)
+    per_batch = []
+    for i, part in enumerate(parts):
+        part.to_parquet(chunks / f"chunk_{i:02d}.parquet", index=False)
+        j0 = next_job()
+        P.stream_ivf_ingest(spark, str(chunks), path, ckpt)
+        per_batch.append(next_job() - j0)
+    assert len(_ivf_gens(path)) == 3
+    assert all(n <= 2 for n in per_batch[1:]), per_batch
+
+    qdf = _local_queries(spark)
+    j0 = next_job()
+    got = P.serve_ivf_stream_index(spark, path, qdf).collect()
+    assert next_job() - j0 <= 4
+    assert len(got) > 0
+
+
+def test_stream_ivf_ingest_empty_chunk_adds_no_generation(spark, tmp_path):
+    """An empty chunk file is an empty micro-batch: its stage holds no
+    parquet file and is discarded, so no gen= dir appears, no stage
+    debris is left, the index serves as before, and the next non-empty
+    batch still lands as its own generation."""
+    import os
+
+    import pyarrow as pa
+
+    chunks = tmp_path / "chunks"
+    chunks.mkdir()
+    path, ckpt = str(tmp_path / "ivf"), str(tmp_path / "ckpt")
+    pdf, (first, second) = _ivf_chunk_frames(spark, 2)
+    first.to_parquet(chunks / "chunk_00.parquet", index=False)
+    P.stream_ivf_ingest(spark, str(chunks), path, ckpt)
+    assert _ivf_gens(path) == ["gen=0"]
+    qdf = _local_queries(spark)
+    before = sorted(tuple(r) for r in P.serve_ivf_stream_index(spark, path, qdf).collect())
+
+    pdf.iloc[:0].to_parquet(
+        chunks / "chunk_01.parquet",
+        index=False,
+        schema=pa.Schema.from_pandas(pdf, preserve_index=False),
+    )
+    P.stream_ivf_ingest(spark, str(chunks), path, ckpt)
+    assert _ivf_gens(path) == ["gen=0"]
+    assert not [d for d in os.listdir(path) if d.startswith(".stage")]
+    after = sorted(tuple(r) for r in P.serve_ivf_stream_index(spark, path, qdf).collect())
+    assert after == before and len(after) > 0
+
+    second.to_parquet(chunks / "chunk_02.parquet", index=False)
+    P.stream_ivf_ingest(spark, str(chunks), path, ckpt)
+    assert _ivf_gens(path) == ["gen=0", "gen=2"]
+    n = spark.read.schema("vec_id bigint, vm array<bigint>, cell bigint").parquet(
+        os.path.join(path, "assignments")
+    ).count()
+    assert n == len(pdf)
+
+
+def _catalyst_serve(spark, path, query_df):
+    """The pre-numpy serve, kept as the reference: the frozen centroids
+    read by Spark, probed with a broadcast crossJoin + (sq, cid)
+    row_number window, then the same candidate join and top-k."""
+    import os
+
+    from processor_spark.operators.similarity import IVF_NPROBE, KNN_K, _int_sqdist
+
+    cents = spark.read.parquet(os.path.join(path, "centroids"))
+    wp = Window.partitionBy("q_id").orderBy("sq", "cid")
+    probes = (
+        query_df.crossJoin(F.broadcast(cents))
+        .select("q_id", "qm", "cid", _int_sqdist(F.col("qm"), F.col("cm")).alias("sq"))
+        .withColumn("rn", F.row_number().over(wp))
+        .where(F.col("rn") <= IVF_NPROBE)
+        .select("q_id", "qm", F.col("cid").alias("cell"))
+    )
+    cells = sorted({r.cell for r in probes.select("cell").distinct().collect()})
+    assign = spark.read.schema("vec_id bigint, vm array<bigint>, cell bigint").parquet(
+        os.path.join(path, "assignments", "gen=0")
+    ).where(F.col("cell").isin(cells))
+    wr = Window.partitionBy("q_id").orderBy("sq", "vec_id")
+    return (
+        assign.join(F.broadcast(probes), "cell")
+        .where(F.col("vec_id") != F.col("q_id"))
+        .select("q_id", "vec_id", _int_sqdist(F.col("qm"), F.col("vm")).alias("sq"))
+        .withColumn("rank", F.row_number().over(wr))
+        .where(F.col("rank") <= KNN_K)
+        .select(
+            "q_id",
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("sq").cast("long").alias("sq_micro2"),
+            F.col("rank").cast("long").alias("rank"),
+        )
+    )
+
+
+def test_serve_ivf_probe_equals_catalyst_probe(spark, tmp_path):
+    """The driver-side numpy probe must pick exactly the cells of the
+    Catalyst crossJoin + row_number((sq, cid)) probe it replaced:
+    planted equal-distance and duplicate centroids stored out of cid
+    order (ties resolve by cid), a table with fewer centroids than
+    IVF_NPROBE (every query probes all of them), and an empty query
+    batch (an empty frame with the serve's usual schema)."""
+    import os
+
+    import numpy as np
+
+    from processor_spark.operators.similarity import (
+        IVF_NPROBE,
+        _cents_np_path,
+        _int_sqdist,
+    )
+
+    planted = [  # (cid, cm): 7/3/5 equidistant from the origin, 9 == 7
+        (7, [10, 0, 0, 0]),
+        (3, [0, 10, 0, 0]),
+        (5, [-10, 0, 0, 0]),
+        (9, [10, 0, 0, 0]),
+        (2, [0, 0, 20, 0]),
+    ]
+    queries = [
+        (1, [0, 0, 0, 0]),
+        (2, [10, 0, 0, 0]),
+        (3, [5, 5, 0, 0]),
+        (4, [0, 0, 10, 0]),
+        (5, [-5, 5, 0, 0]),
+    ]
+    rng = np.random.default_rng(3)
+    vec_rows = [
+        (100 + i, [int(x) for x in rng.integers(-12, 13, 4)], cid)
+        for i, cid in enumerate([c for c, _ in planted] * 6)
+    ]
+    qdf = spark.createDataFrame(queries, "q_id bigint, qm array<bigint>")
+    for name, cents_rows in (("planted", planted), ("one_cell", planted[2:3])):
+        path = str(tmp_path / name)
+        spark.createDataFrame(cents_rows, "cid bigint, cm array<bigint>").write.parquet(
+            os.path.join(path, "centroids")
+        )
+        keep = {c for c, _ in cents_rows}
+        spark.createDataFrame(
+            [r for r in vec_rows if r[2] in keep],
+            "vec_id bigint, vm array<bigint>, cell bigint",
+        ).write.partitionBy("cell").parquet(os.path.join(path, "assignments", "gen=0"))
+
+        cids, C = _cents_np_path(os.path.join(path, "centroids"))
+        Q = np.asarray([qm for _, qm in queries], dtype=np.float64)
+        near = P._nearest_cells(Q, cids, C, IVF_NPROBE)
+        assert near.shape == (len(queries), min(IVF_NPROBE, len(cents_rows)))
+        got_probe = {
+            (q_id, rank + 1, int(c))
+            for (q_id, _), row in zip(queries, near)
+            for rank, c in enumerate(row)
+        }
+        wp = Window.partitionBy("q_id").orderBy("sq", "cid")
+        want_probe = {
+            (r.q_id, r.rn, r.cid)
+            for r in qdf.crossJoin(spark.read.parquet(os.path.join(path, "centroids")))
+            .select("q_id", "cid", _int_sqdist(F.col("qm"), F.col("cm")).alias("sq"))
+            .withColumn("rn", F.row_number().over(wp))
+            .where(F.col("rn") <= IVF_NPROBE)
+            .collect()
+        }
+        assert got_probe == want_probe, name
+
+        served = P.serve_ivf_stream_index(spark, path, qdf)
+        ref = _catalyst_serve(spark, path, qdf)
+        got = sorted(tuple(r) for r in served.collect())
+        assert got == sorted(tuple(r) for r in ref.collect()) and got, name
+
+        empty = P.serve_ivf_stream_index(spark, path, qdf.limit(0))
+        assert empty.collect() == []
+        assert empty.schema == served.schema
+        assert [(f.name, f.dataType) for f in empty.schema] == [
+            (f.name, f.dataType) for f in ref.schema
+        ]
 
 
 def test_availablenow_timeout_raises_and_resumes(spark, tmp_path):

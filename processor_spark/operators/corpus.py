@@ -458,9 +458,12 @@ def q_data_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+MIXTURE_BUDGET = 500
+
+
 @register(
     "q_corpus_mixture",
-    sql="""
+    sql=f"""
     WITH counts AS (
       SELECT source, count(*) AS n_docs,
              CAST(floor(sqrt(count(*)) * 1000000 + 0.5) AS BIGINT) AS w_micro
@@ -468,7 +471,7 @@ def q_data_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), tot AS (
       SELECT CAST(sum(w_micro) AS BIGINT) AS tot_micro FROM counts
     ), shares AS (
-      SELECT source, (500 * w_micro) // tot_micro AS share
+      SELECT source, ({MIXTURE_BUDGET} * w_micro) // tot_micro AS share
       FROM counts CROSS JOIN tot
     ), ranked AS (
       SELECT doc_id, source,
@@ -497,32 +500,43 @@ def q_corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection ranks the portable 48-bit md5 of doc_id with a doc_id
     tie-break — every step replayed bit-for-bit by the oracle.
 
-    Scale: per-source counts are one mergeable agg; shares are a
-    ~#sources-row broadcast; selection is one row_number window per
-    source partition (at 100 TB swap the exact rank for a hash
-    THRESHOLD — keep h < share/n·2^48 — which needs no window at all;
-    the rank form is kept here because it makes the budget exact).
+    Scale: one hash exchange on source feeds one Window operator that
+    yields both the hash rank and the source's n_docs (same spec, two
+    frames).  No share exceeds MIXTURE_BUDGET, so rows ranked past it
+    are dropped before the grand total; that total is an unpartitioned
+    window reading at most MIXTURE_BUDGET × #sources rows (Spark's "No
+    Partition Defined for Window operation" warning is expected here).
+    NULL-source rows count toward the total, as in the oracle's GROUP
+    BY, and are dropped after it, as by its inner join.  At 100 TB
+    swap the exact rank for a hash THRESHOLD — keep h < share/n·2^48 —
+    which needs no window at all; the rank form is kept here because
+    it makes the budget exact.
     """
     d = load(spark, sf_dir, "documents")
-    counts = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
-    counts = counts.withColumn(
-        "w_micro", F.floor(F.sqrt(F.col("n_docs")) * 1000000 + F.lit(0.5)).cast("long")
-    )
-    tot = counts.agg(F.sum("w_micro").cast("long").alias("tot_micro"))
-    shares = counts.crossJoin(F.broadcast(tot)).select(
-        "source", F.expr("(500 * w_micro) div tot_micro").alias("share")
-    )
     h = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 12), 16, 10)
         .cast("long")
     )
     w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
-    ranked = d.select("doc_id", "source").withColumn("pick_rank", F.row_number().over(w))
-    return (
-        ranked.join(F.broadcast(shares), "source")
-        .where(F.col("pick_rank") <= F.col("share"))
-        .select("source", "doc_id", "pick_rank")
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    ranked = (
+        d.select(
+            "doc_id",
+            "source",
+            F.row_number().over(w).alias("pick_rank"),
+            F.count(F.lit(1)).over(whole).alias("n_docs"),
+        )
+        .where(F.col("pick_rank") <= MIXTURE_BUDGET)
+        .withColumn(
+            "w_micro", F.floor(F.sqrt(F.col("n_docs")) * 1000000 + F.lit(0.5)).cast("long")
+        )
     )
+    first = F.when(F.col("pick_rank") == 1, F.col("w_micro"))
+    ranked = ranked.withColumn("tot_micro", F.sum(first).over(Window.partitionBy()))
+    return ranked.where(
+        F.col("source").isNotNull()
+        & (F.col("pick_rank") <= F.expr(f"({MIXTURE_BUDGET} * w_micro) div tot_micro"))
+    ).select("source", "doc_id", "pick_rank")
 
 
 @register(

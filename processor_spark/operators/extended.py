@@ -1060,7 +1060,9 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: leading-digit extraction is a narrow projection (no
     regex), counts are one 9-group map-side-combinable agg, and the
-    comparison runs over nine rows."""
+    total n is an unpartitioned window over those nine rows (Spark's
+    "No Partition Defined for Window operation" warning is expected
+    here), so the comparison runs in the same plan."""
     o = load(spark, sf_dir, "orders")
     digits = o.where(F.col("o_totalprice") >= 1).select(
         F.substring(F.floor("o_totalprice").cast("long").cast("string"), 1, 1)
@@ -1068,29 +1070,23 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("d")
     )
     counts = digits.groupBy("d").agg(F.count(F.lit(1)).alias("observed"))
-    tot = counts.agg(F.sum("observed").cast("long").alias("n"))
     p = None
     for d, prob in _BENFORD_P.items():
         p = F.when(F.col("d") == d, F.lit(prob)) if p is None else p.when(
             F.col("d") == d, F.lit(prob)
         )
     exp_d = p * F.col("n")
-    return (
-        counts.crossJoin(F.broadcast(tot))
-        .select(
-            "d",
-            "observed",
-            F.floor(exp_d + F.lit(0.5)).cast("long").alias("expected"),
-            F.floor(
-                (F.col("observed") - exp_d)
-                * (F.col("observed") - exp_d)
-                / exp_d
-                * 1000000
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("chi2_contrib_micro"),
+    counts = counts.withColumn("n", F.sum("observed").over(Window.partitionBy()))
+    return counts.select(
+        "d",
+        "observed",
+        F.floor(exp_d + F.lit(0.5)).cast("long").alias("expected"),
+        F.floor(
+            (F.col("observed") - exp_d) * (F.col("observed") - exp_d) / exp_d * 1000000
+            + F.lit(0.5)
         )
+        .cast("long")
+        .alias("chi2_contrib_micro"),
     )
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from processor_spark.caching import scoped_persist
+from processor_spark.operators.timeseries import chi2_drift_contribs
 from processor_spark.registry import register
 from processor_spark.sources import load
 
@@ -6351,17 +6352,15 @@ def q_embed_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix q_semdedup/q_ann_ivf_kmeans ride).  Slices are the
     even/odd vec_id halves (a deterministic A/B over a common
     binning); each cell reports its χ² contribution with period A as
-    the baseline, via q_chi2_drift's exact integer bridge — the
-    rational expected count never materializes ((b·n_a − n_b·a)²
-    cross-multiplied, numerator squared in 128-bit, snapped to micro
-    units per row so no float ever sums across rows), and a cell
-    empty in the baseline reports the -1 new-category sentinel
-    instead of dividing by zero.  PSI needs log — designed out, same
-    decision signal (the CLAUDE.md r4 rule).
+    the baseline, via q_chi2_drift's exact integer bridge
+    (chi2_drift_contribs, with its -1 new-category sentinel).  PSI
+    needs log — designed out, same decision signal (the CLAUDE.md r4
+    rule).
 
     Scale shape: rides the family's persisted assign frame (the
-    corpus pass is already paid), then an nlist-row agg + a 1-row
-    broadcast of the totals — the drift report itself is free at any
+    corpus pass is already paid), then an nlist-row agg; the totals
+    and the χ² arithmetic run over those nlist rows
+    (chi2_drift_contribs) — the drift report itself is free at any
     corpus size."""
     assign = _semdedup_assign_frame(spark, sf_dir).select("vec_id", "cell")
     per_cell = assign.groupBy("cell").agg(
@@ -6372,33 +6371,7 @@ def q_embed_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("b_cnt"),
     )
-    tot = per_cell.agg(
-        F.sum("a_cnt").cast("long").alias("n_a"),
-        F.sum("b_cnt").cast("long").alias("n_b"),
-    )
-    j = per_cell.crossJoin(F.broadcast(tot))
-    delta = F.col("b_cnt") * F.col("n_a") - F.col("n_b") * F.col("a_cnt")
-    dd = delta.cast("decimal(19,0)")
-    num = (dd * dd).cast("double")
-    den = (
-        F.col("n_a").cast("decimal(19,0)")
-        * F.col("n_b").cast("decimal(19,0)")
-        * F.col("a_cnt").cast("decimal(19,0)")
-    ).cast("double")
-    return j.select(
-        F.col("cell").cast("long").alias("cell"),
-        "a_cnt",
-        "b_cnt",
-        delta.alias("delta_scaled"),
-        # n_b = 0 (empty B slice) would make num/den = 0/0 → NaN and
-        # floor(NaN)::BIGINT is a data-dependent crash on both engines
-        # (ADVICE r13); with n_b = 0 every b_cnt is 0, delta is 0, and
-        # the χ² contribution's limit is exactly 0 — emit it directly
-        F.when(F.col("a_cnt") == 0, F.lit(-1))
-        .when(F.col("n_b") == 0, F.lit(0))
-        .otherwise(F.floor(num / den * 1000000 + F.lit(0.5)).cast("long"))
-        .alias("contrib_micro"),
-    )
+    return chi2_drift_contribs(per_cell, F.col("cell").cast("long").alias("cell"))
 
 
 _EMBED_DRIFT_SCORE_SQL = f"""

@@ -17,7 +17,7 @@ relational compositions (SURVEY.md §2.9 family):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from processor_spark.caching import scoped_persist
@@ -1021,6 +1021,41 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def chi2_drift_contribs(counts: DataFrame, key: Column) -> DataFrame:
+    """The exact integer χ² bridge of the drift keys (q_chi2_drift's
+    docstring has the arithmetic) over ``counts``, one row per category
+    with long a_cnt (baseline A) and b_cnt (period B).  The totals n_a,
+    n_b are an unpartitioned window over those rows (Spark's "No
+    Partition Defined for Window operation" warning is expected here).
+    Divisions by zero are guarded: a_cnt = 0 → the -1 new-category
+    sentinel; n_b = 0 (empty period B: every delta is 0) → the exact
+    limit 0."""
+    whole = Window.partitionBy()
+    j = counts.select(
+        "*",
+        F.sum("a_cnt").over(whole).alias("n_a"),
+        F.sum("b_cnt").over(whole).alias("n_b"),
+    )
+    delta = F.col("b_cnt") * F.col("n_a") - F.col("n_b") * F.col("a_cnt")
+    dd = delta.cast("decimal(19,0)")
+    num = (dd * dd).cast("double")
+    den = (
+        F.col("n_a").cast("decimal(19,0)")
+        * F.col("n_b").cast("decimal(19,0)")
+        * F.col("a_cnt").cast("decimal(19,0)")
+    ).cast("double")
+    return j.select(
+        key,
+        "a_cnt",
+        "b_cnt",
+        delta.alias("delta_scaled"),
+        F.when(F.col("a_cnt") == 0, F.lit(-1))
+        .when(F.col("n_b") == 0, F.lit(0))
+        .otherwise(F.floor(num / den * 1000000 + F.lit(0.5)).cast("long"))
+        .alias("contrib_micro"),
+    )
+
+
 @register(
     "q_chi2_drift",
     sql="""
@@ -1039,7 +1074,8 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT p.event_type, p.a_cnt, p.b_cnt,
            p.b_cnt * t.n_a - t.n_b * p.a_cnt AS delta_scaled,
-           CASE WHEN p.a_cnt = 0 THEN -1 ELSE CAST(floor(
+           CASE WHEN p.a_cnt = 0 THEN -1
+                WHEN t.n_b = 0 THEN 0 ELSE CAST(floor(
              CAST(CAST(p.b_cnt * t.n_a - t.n_b * p.a_cnt AS HUGEINT)
                   * (p.b_cnt * t.n_a - t.n_b * p.a_cnt) AS DOUBLE)
              / CAST(CAST(t.n_a AS HUGEINT) * t.n_b * p.a_cnt AS DOUBLE)
@@ -1062,8 +1098,8 @@ def q_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     which carries the same decision signal.
 
     Scale shape: one conditional map-side-combinable agg over the
-    event stream, then a 1-row broadcast of the totals; the χ²
-    arithmetic runs over one row per category."""
+    event stream; the period totals and the χ² arithmetic then run
+    over one row per category (chi2_drift_contribs)."""
     e = load(spark, sf_dir, "events")
     split = e.select(
         "event_type",
@@ -1073,32 +1109,7 @@ def q_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("in_a").cast("long").alias("a_cnt"),
         F.sum(1 - F.col("in_a")).cast("long").alias("b_cnt"),
     )
-    tot = per_type.agg(
-        F.sum("a_cnt").cast("long").alias("n_a"),
-        F.sum("b_cnt").cast("long").alias("n_b"),
-    )
-    j = per_type.crossJoin(F.broadcast(tot))
-    delta = F.col("b_cnt") * F.col("n_a") - F.col("n_b") * F.col("a_cnt")
-    dd = delta.cast("decimal(19,0)")
-    num = (dd * dd).cast("double")
-    den = (
-        F.col("n_a").cast("decimal(19,0)")
-        * F.col("n_b").cast("decimal(19,0)")
-        * F.col("a_cnt").cast("decimal(19,0)")
-    ).cast("double")
-    return j.select(
-        "event_type",
-        "a_cnt",
-        "b_cnt",
-        delta.alias("delta_scaled"),
-        # a category absent from the baseline period has expected
-        # count 0 (chi-square undefined; the statistic would divide by
-        # zero — a drift monitor must flag new categories, not abort):
-        # -1 sentinel on both engines
-        F.when(F.col("a_cnt") == 0, F.lit(-1))
-        .otherwise(F.floor(num / den * 1000000 + F.lit(0.5)).cast("long"))
-        .alias("contrib_micro"),
-    )
+    return chi2_drift_contribs(per_type, F.col("event_type"))
 
 
 @register(

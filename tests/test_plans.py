@@ -275,10 +275,19 @@ def test_dedup_family_never_plans_pair_explosion(spark):
     ]:
         plan = explain_str(_df(spark, key))
         assert "CartesianProduct" not in plan, (key, plan)
-        assert "BroadcastNestedLoopJoin" not in plan or key == "q_corpus_mixture", (
-            key,
-            plan,
-        )
+        assert "BroadcastNestedLoopJoin" not in plan, (key, plan)
+
+
+def test_corpus_mixture_is_one_linear_plan(spark):
+    """The mixture's grand total is a window inside the plan that holds
+    the ranked rows: one documents scan, one hash exchange on source
+    (rank and n_docs share one Window), one SinglePartition exchange
+    for the total, and no broadcast of a re-aggregate."""
+    plan = _df(spark, "q_corpus_mixture")._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("documents.parquet") == 1, plan
+    assert plan.count("Exchange hashpartitioning(source") == 1, plan
+    assert plan.count("Exchange SinglePartition") == 1, plan
+    assert "BroadcastExchange" not in plan, plan
 
 
 def test_sample_weighted_is_take_ordered_no_shuffle_no_window(spark):

@@ -1038,7 +1038,7 @@ TWOLEVEL_RPROBE_PAIR = 3
 # 11.5/41–46 s at 32768 — flat won the span; tools/
 # flat_crossover_probe.py).  r14-opt then found the 41–46 s routed
 # wall was 42.2 s of DRIVER-side pure-python router construction and
-# vectorized it (_router_groups): routed rp3 walls 1.3–2.2 s at 8192
+# vectorized it (_router_groups_np): routed rp3 walls 1.3–2.2 s at 8192
 # and 2.2–4.2 s at 32768 vs blocked-flat 3.3–5.6 / 8.8–9.8 on the
 # same hour (tools/router_groups_vec_probe.py) — the SPEED crossover
 # sits just below 8192.  The QUALITY side was then priced by the
@@ -1056,7 +1056,8 @@ TWOLEVEL_RPROBE_PAIR = 3
 # s), so the ceiling returned to the speed crossover.  Flat
 # work/vector = nlist vs routed ≈ 2·rprobe·sqrt(nlist): at the n/250
 # derivation the ceiling is a 2M-vector partition; 100 TB-scale
-# nlist ≈ 10⁶ routes, as it must.
+# nlist ≈ 10⁶ routes, as it must.  Read in ONE place,
+# _numpy_assign_auto, which batch and both streaming consumers call.
 NUMPY_FLAT_MAX_NLIST = 8192
 
 # Above this many centroids the AUTO path stops collecting the
@@ -1371,8 +1372,8 @@ def _numpy_flat_assign(
     same (sq, cid) min_by the Catalyst crossJoin computes, in one
     Arrow-batched mapInPandas — value-identical at any nlist (exact
     integer distances below 2^53, argmin over cid-sorted columns IS
-    the tie-break; the streaming ingest sink and SemDeDup assign
-    through this same kernel, and their equality tests pin the
+    the tie-break; batch and both streaming consumers reach it
+    through _numpy_assign_auto, and their equality tests pin the
     arithmetic).  ``cents`` is a (cid, cm) DataFrame or the (cids, C)
     pair _cents_np / _cents_np_path return.  Centroids collect
     driver-side (nlist ≤ NUMPY_FLAT_MAX_NLIST rows — the sanctioned
@@ -1435,59 +1436,25 @@ def _numpy_flat_assign(
     return src.mapInPandas(fn, schema=T.StructType(out_fields))
 
 
-def _router_groups(cents_rows: list) -> tuple[list, dict]:
-    """Driver-side two-level router construction — the SAME groups the
-    Catalyst routed branch computes Spark-side: router seeds = the
-    isqrt(nlist) lowest-cid centroids, each fine centroid routed to
-    its (gsq, gid)-min seed.  Shared by the batch numpy-routed path
-    below and the streaming literal-CASE / numpy branches (pipelines
-    re-exports it) so every impl mirrors one router.  (Moved here from
-    streaming/pipelines.py at r14 close so operators need not import
-    the streaming layer.)
-
-    The fine→seed routing is a vectorized float64 matmul identity —
-    exact for micro-unit coordinates: all terms are integers and the
-    sufficient condition is 2·d·M² < 2^53 (the x²+Σs² intermediate of
-    the decomposed form is the largest term — |coord| ≤ ~8.39e6 at
-    d=64, ~4.19e6 at d=256; asserted by _assert_sub53, ADVICE r14 —
-    the r14 text overclaimed 256·M² < 2^53, which the intermediate
-    can exceed at d=256).  The stable argmin reproduces the
-    (gsq, gid) lexicographic tie-break because seeds are
-    cid-ascending.  The r14-close pure-python loop cost 42.2 s at
-    nlist=32768 (O(nlist·ncoarse·d) interpreted ops) and was the real
-    cliff behind the routed ladder's 41–46 s wall — the vectorized
-    build runs 1.6 s on the identical inputs, group-for-group equal
-    (planted duplicate-centroid ties included;
-    test_router_groups_vectorized_equals_reference, and the Spark-side
-    cross-check test_numpy_routed_equals_catalyst_routed).  Empty
-    input returns ([], {}) — the streaming caller's contemplated
-    empty-centroids case (ADVICE r14 low)."""
-    import numpy as np
-
-    if not cents_rows:
-        return [], {}
-    rows = sorted((int(cid), [int(e) for e in cm]) for cid, cm in cents_rows)
-    C = np.asarray([cm for _, cm in rows], dtype=np.float64)
-    _assert_sub53(C)
-    ncoarse, assign = _router_groups_np(C)
-    cseeds = rows[:ncoarse]  # lowest-cid centroids double as the router
-    gid_of = [gid for gid, _ in cseeds]
-    groups: dict[int, list] = {gid: [] for gid, _ in cseeds}
-    for (cid, cm), j in zip(rows, assign):
-        groups[gid_of[j]].append((cid, cm))
-    return cseeds, groups
-
-
 def _router_groups_np(C, blk: int | None = None):
     """numpy core of the two-level router construction: given the
     cid-ASCENDING fine-centroid matrix (float64 of exact integers,
     caller asserts the sub-2^53 contract), route every fine row to
     its (gsq, gid)-min seed among the first ncoarse = isqrt(n) rows.
     Returns (ncoarse, assign) with assign[i] = seed POSITION (0-based
-    row index into the first ncoarse rows).  Shared by the list-API
-    wrapper above (streaming literal-CASE branch, equality tests) and
-    the numpy-native batch router (_numpy_routed_assign), so every
-    impl mirrors ONE routing."""
+    row index into the first ncoarse rows).  The SAME groups the
+    Catalyst routed branch computes Spark-side (router seeds = the
+    isqrt(nlist) lowest-cid centroids, each fine centroid routed to
+    its (gsq, gid)-min seed): the float64 matmul identity is exact
+    under _assert_sub53, and the row argmin keeps the lowest seed on
+    equal distance, the (gsq, gid) tie-break, because seeds are
+    cid-ascending.  The only router: _numpy_routed_assign builds its
+    groups here, for batch and stream alike.  Vectorized at r14-opt:
+    the pure-python loop it replaced cost 42.2 s at nlist=32768 and
+    was the real cliff behind the routed ladder's 41–46 s wall; this
+    build runs 1.6 s on the identical inputs, group-for-group equal
+    (test_router_groups_vectorized_equals_reference, and the
+    Spark-side cross-check test_numpy_routed_equals_catalyst_routed)."""
     import math
 
     import numpy as np
@@ -1518,12 +1485,11 @@ def _numpy_routed_assign(
     rprobe: int = 1,
 ) -> DataFrame:
     """Two-level multi-probe argmin as closure-captured numpy (r14
-    close), also behind pipelines._numpy_assign's two-level mode and
-    the streaming ingest sink past NUMPY_FLAT_MAX_NLIST (``cents`` as
-    for _numpy_flat_assign), with keep-column pass-through and a
-    bigint cell.  Cell-for-
+    close) — _numpy_assign_auto's past-ceiling half for batch and
+    both streaming consumers (``cents`` as for _numpy_flat_assign),
+    with keep-column pass-through and a bigint cell.  Cell-for-
     cell equal to the Catalyst routed branch of _assign_cells at the
-    same rprobe (same _router_groups, exact integer distances in
+    same rprobe (same _router_groups_np, exact integer distances in
     float64, stable argsort = the (gsq, gid) router tie-break, running
     strict-<-or-lower-cid min across probed groups = the union's
     (sq, cid) min_by) — pinned by test_numpy_routed_equals_catalyst_
@@ -1531,7 +1497,7 @@ def _numpy_routed_assign(
     ceiling path: measured at 128k vectors, numpy routing walls
     7.6–8.7 s vs Catalyst 26.4–31.8 s at nlist=8192 and 41–46 s vs
     57–61 s at 32768 (tools/flat_crossover_probe.py, SCALE.md r14
-    close); after _router_groups went vectorized (r14-opt — the 32768
+    close); after _router_groups_np went vectorized (r14-opt — the 32768
     wall was 42.2 s of driver-side router construction) the same legs
     read 1.9–2.2 s at 8192 and 3.5–4.2 s at 32768
     (tools/router_groups_vec_probe.py).  Forced two_level=True keeps
@@ -1611,6 +1577,33 @@ def _numpy_routed_assign(
     return src.mapInPandas(fn, schema=T.StructType(out_fields))
 
 
+def _numpy_assign_auto(
+    vecs: DataFrame,
+    cents: tuple,
+    keep: tuple[str, ...] = ("vm",),
+    rprobe: int | None = None,
+) -> DataFrame:
+    """The auto numpy nearest-centroid policy, the one kernel batch
+    and stream share: exact flat (_numpy_flat_assign) up to
+    NUMPY_FLAT_MAX_NLIST centroids, routed multi-probe
+    (_numpy_routed_assign) past it at ``rprobe``, default
+    TWOLEVEL_RPROBE_PAIR.  Callers: the auto window of _assign_cells,
+    the streaming IVF ingest sink and the streaming SemDeDup
+    (semdedup_assign_frame), so one centroid table gives every
+    consumer identical cells.  ``cents`` is the (cids, C) pair
+    _cents_np / _cents_np_path return; an empty table raises (the flat
+    kernel would otherwise emit uninitialized cells)."""
+    cids, _ = cents
+    if not len(cids):
+        raise ValueError("no centroids to assign to")
+    if len(cids) <= NUMPY_FLAT_MAX_NLIST:
+        return _numpy_flat_assign(vecs, cents, keep)
+    return _numpy_routed_assign(
+        vecs, cents, keep,
+        rprobe=TWOLEVEL_RPROBE_PAIR if rprobe is None else rprobe,
+    )
+
+
 def _assign_cells(
     vecs: DataFrame,
     cents: DataFrame,
@@ -1648,19 +1641,19 @@ def _assign_cells(
     shuffle: the only corpus-sized exchange remains the final n-row
     min_by agg), so shuffle volume is identical to rprobe=1.
 
-    AUTO POLICY (r14 — unified with the streaming twin, closing the
-    ADVICE r13 divergence): in the window TWOLEVEL_MIN_NLIST ≤ nlist ≤
-    NUMPY_FLAT_MAX_NLIST, auto runs the EXACT flat argmin as a blocked
-    numpy matmul (_numpy_flat_assign — fastest impl in the window AND
-    exact: measured faster than routing through nlist=8192 once the
-    centroid block is cache-sized, and strictly better quality at the
-    64× default: dropped 126,579 exact vs 124,173 under rp3's
-    boundary loss at nlist=512), so mixed batch/stream consumers
+    AUTO POLICY (r14 — one function, _numpy_assign_auto, shared with
+    both streaming consumers): in the window TWOLEVEL_MIN_NLIST ≤
+    nlist ≤ NUMPY_FLAT_MAX_NLIST, auto runs the EXACT flat argmin as a
+    blocked numpy matmul (_numpy_flat_assign — fastest impl in the
+    window AND exact: measured faster than routing through nlist=8192
+    once the centroid block is cache-sized, and strictly better
+    quality at the 64× default: dropped 126,579 exact vs 124,173
+    under rp3's boundary loss at nlist=512), so mixed batch/stream consumers
     sharing one centroid table get IDENTICAL exact cells there.  Past
     the ceiling both sides route multi-probe NUMPY
     (_numpy_routed_assign) at rprobe=TWOLEVEL_RPROBE_PAIR when the
     caller left ``rprobe=None`` — 2.3–4× faster than blocked flat at
-    8192–32768 after the r14-opt _router_groups vectorization, and
+    8192–32768 after the r14-opt _router_groups_np vectorization, and
     QUALITY-equal at the occupancy-250 layouts of that band (drop
     count within 0.008% of exact, Σocc² within ±5% — the
     flat_quality_ladder rows on NUMPY_FLAT_MAX_NLIST's comment; the
@@ -1675,21 +1668,10 @@ def _assign_cells(
     oracles encode that expression tree exactly)."""
     use2l = (nlist >= TWOLEVEL_MIN_NLIST) if two_level is None else two_level
     if two_level is None and use2l:
-        if nlist <= NUMPY_FLAT_MAX_NLIST:
-            # r14 auto window [TWOLEVEL_MIN_NLIST, NUMPY_FLAT_MAX_NLIST]:
-            # the EXACT blocked numpy-flat argmin beats routing outright
-            # (NUMPY_FLAT_MAX_NLIST's ladder), so the routed
-            # approximation is reserved for forced two_level (the pinned
-            # proof keys) and for nlist past the measured crossover.
-            return _numpy_flat_assign(vecs, cents, keep)
         if nlist <= ROUTED_DRIVER_MAX_NLIST:
-            # past the flat ceiling but inside the driver-collect
-            # window: numpy multi-probe routing, balance-safe width
-            # when unspecified (the streaming twin's auto rule)
-            return _numpy_routed_assign(
-                vecs, cents, keep,
-                rprobe=TWOLEVEL_RPROBE_PAIR if rprobe is None else rprobe,
-            )
+            # inside the driver-collect window: the shared numpy policy
+            # (exact flat up to the measured crossover, routed past it)
+            return _numpy_assign_auto(vecs, _cents_np(cents), keep, rprobe)
         # past ROUTED_DRIVER_MAX_NLIST (r15): never materialize
         # O(nlist·d) on the driver — fall through to the DISTRIBUTED
         # Catalyst two-level routing below (bit-identical cells at the

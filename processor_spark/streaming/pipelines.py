@@ -1019,18 +1019,18 @@ def stream_ivf_ingest(
     write_partitioned's two jobs (the cell shuffle and the write).
     The frozen centroids are read with pyarrow as a numpy pair
     (similarity._cents_np_path: no Spark job, no schema inference) and
-    every batch is assigned by the batch path's closure-captured numpy
-    kernel — exact flat (value-identical to the _ivfa_assign crossJoin:
-    exact integer distances, argmin over cid-ascending columns = the
-    (sq, cid) tie-break), routed multi-probe at TWOLEVEL_RPROBE_PAIR
-    past NUMPY_FLAT_MAX_NLIST (the retrain's own _assign_cells policy,
-    so post-retrain generations keep one cell policy).  A one-file
-    micro-batch is ONE partition, where the crossJoin fold ran
-    n×nlist×d on one core (~90 s per 16k rows at nlist=512 —
-    SCALE.md r14).  Only the FIRST batch counts its rows: it trains
-    the centroids and must not train on nothing.  A later empty batch
-    writes a stage with no parquet file, which is discarded, so it
-    creates no generation.
+    every batch is assigned by the batch path's numpy policy,
+    similarity._numpy_assign_auto — exact flat (value-identical to the
+    _ivfa_assign crossJoin: exact integer distances, argmin over
+    cid-ascending columns = the (sq, cid) tie-break), routed
+    multi-probe at TWOLEVEL_RPROBE_PAIR past NUMPY_FLAT_MAX_NLIST (the
+    retrain's own _assign_cells policy, so post-retrain generations
+    keep one cell policy).  A one-file micro-batch is ONE partition,
+    where the crossJoin fold ran n×nlist×d on one core (~90 s per 16k
+    rows at nlist=512 — SCALE.md r14).  Only the FIRST batch counts
+    its rows: it trains the centroids and must not train on nothing.
+    A later empty batch writes a stage with no parquet file, which is
+    discarded, so it creates no generation.
 
     The pyarrow read follows the index's existing local-filesystem
     contract: generations are listed with os.listdir and published
@@ -1042,13 +1042,10 @@ def stream_ivf_ingest(
 
     from processor_spark.operators.similarity import (
         IVFK_NLIST,
-        NUMPY_FLAT_MAX_NLIST,
-        TWOLEVEL_RPROBE_PAIR,
         _cents_np_path,
         _ivfa_cents,
         _micro_arr,
-        _numpy_flat_assign,
-        _numpy_routed_assign,
+        _numpy_assign_auto,
         write_partitioned,
     )
 
@@ -1106,17 +1103,11 @@ def stream_ivf_ingest(
                 os.replace(stage_c, cents_dir)
             except OSError:
                 shutil.rmtree(stage_c, ignore_errors=True)  # lost the race
-        cents = _cents_np_path(cents_dir)
         gen_dir = os.path.join(path, "assignments", f"gen={batch_id}")
         stage = os.path.join(path, f".stage-gen-{batch_id}")
         shutil.rmtree(stage, ignore_errors=True)
         shutil.rmtree(gen_dir, ignore_errors=True)  # replayed batch: redo
-        if len(cents[0]) > NUMPY_FLAT_MAX_NLIST:
-            assigned = _numpy_routed_assign(
-                vecs, cents, rprobe=TWOLEVEL_RPROBE_PAIR
-            )
-        else:
-            assigned = _numpy_flat_assign(vecs, cents)
+        assigned = _numpy_assign_auto(vecs, _cents_np_path(cents_dir))
         # write_partitioned, not raw partitionBy: without the repartition
         # every micro-batch task sprays a file into every cell dir it
         # holds rows for (the r13-measured 56,161-file class,
@@ -1764,36 +1755,6 @@ def _semdedup_state_fn(key, pdfs: Iterator[pd.DataFrame], state):
     )
 
 
-# Literal-ints budget for the streaming assignment PROJECTION: past it
-# the plan embeds so many centroid literals (nlist × d, plus ncoarse × d
-# routed) that per-micro-batch Catalyst re-planning dominates the
-# trigger — measured at derived nlist=512 / d=64 (≈34k literals) by
-# tools/semdedup_router512_probe.py (SCALE.md r13): the literal router
-# takes 27.4 s of py4j calls just to BUILD and its steady-state batch
-# runs 6,799 ms vs the numpy-argmin branch's 1,514 ms (4.5×; stream
-# total 130.4 s vs 25.3 s).  Below the budget (the fixture floor
-# nlist=8 → 512 literals) the literal projection is cheapest and keeps
-# the plan fully Catalyst-visible.
-ASSIGN_LITERAL_MAX = 4096
-
-# Above this many centroids the numpy impl routes two-level even in
-# auto mode.  The flat branch is row-chunked AND centroid-blocked
-# (similarity.NUMPY_CENT_BLOCK), so memory is flat in nlist and the
-# ceiling is the MEASURED speed crossover vs the vectorized numpy
-# routing (8192, r14-opt) — quality-safe because the
-# flat_quality_ladder priced routed rp3's SemDeDup drops within
-# 0.008% of exact flat at every occupancy-250 layout in 8192–32768
-# (see NUMPY_FLAT_MAX_NLIST's comment in similarity.py); below the
-# ceiling exact flat is both fastest and oracle-exact, covering every
-# n/250-derived deployment up to ~2M vectors per stream partition.
-# The constant is canonical in similarity.py — the BATCH auto path
-# runs the same exact-flat numpy argmin in the same window (ADVICE
-# r13 policy divergence closed by unification).
-from processor_spark.operators import similarity as _sim  # noqa: E402
-from processor_spark.operators.similarity import (  # noqa: E402
-    NUMPY_FLAT_MAX_NLIST,
-)
-
 # Batches at or above this many documents get spread across cores
 # before the posting build (stream_text_index_ingest): the tokenize +
 # posexplode stage runs BEFORE the postings agg's shuffle, so on a
@@ -1817,221 +1778,55 @@ TEXT_INGEST_SPREAD_MIN_DOCS = 4096
 TEXT_FOLD_MAX_GENS = 12
 
 
-# Driver-side two-level router construction — moved to
-# operators/similarity.py at r14 close (the batch numpy-routed path
-# shares it and operators must not import the streaming layer);
-# re-exported here so the streaming branches and tests keep their
-# name.
-_router_groups = _sim._router_groups
-
-
-def _numpy_assign(
-    vecs_vm: DataFrame, cents_rows: list, two_level: bool, rprobe: int = 1
-) -> DataFrame:
-    """Closure-captured numpy argmin assignment over a (cid, cm) row
-    list — the streaming SemDeDup's front to the batch path's ONE
-    numpy kernel pair (similarity._numpy_flat_assign, exact flat, and
-    similarity._numpy_routed_assign, two-level).  VERDICT r12 "what's
-    wrong": the literal-CASE router's plan grows linearly with nlist —
-    ~34k literals at derived nlist=512 — and Catalyst re-plans it every
-    micro-batch; this keeps the PLAN O(1) in nlist and moves the
-    distance work into one Arrow-batched mapInPandas.
-
-    Bit-exact with both literal branches: vm is integerized Spark-side
-    (identical _micro_arr projection), distances are exact integers in
-    float64 (the _assert_sub53 contract), and argmin over cid-sorted
-    columns IS the (sq, cid) min_by tie-break.  Two-level mode routes
-    through the same router as _router_groups, so routed cells equal
-    _assign_cells two_level=True exactly; ``rprobe`` (r14, VERDICT r13
-    missing #3) unions the rprobe nearest router groups, mirroring
-    _assign_cells(rprobe=...) (asserted in tests/test_streaming.py).
-    Output is (vec_id, vm, cell int), the literal branches' shape."""
-    import numpy as np
-
-    # the output column is int32 (matches the literal branches' cast):
-    # a derived nlist past 2^31 would silently overflow — refuse loudly
-    # (ADVICE r13; at the n/250 occupancy rule that is a >500-trillion
-    # vector stream partition, far past any single-partition design)
-    top = max((int(cid) for cid, _ in cents_rows), default=0)
-    if top >= 2**31:
-        raise ValueError(f"centroid id {top} overflows the int32 cell column")
-    C = (
-        np.asarray([[int(e) for e in cm] for _, cm in cents_rows], dtype=np.float64)
-        if cents_rows
-        else np.zeros((0, 0), dtype=np.float64)
-    )
-    cents = _sim._cents_sorted([int(cid) for cid, _ in cents_rows], C)
-    assigned = (
-        _sim._numpy_routed_assign(vecs_vm, cents, rprobe=rprobe)
-        if two_level
-        else _sim._numpy_flat_assign(vecs_vm, cents)
-    )
-    return assigned.select("vec_id", "vm", F.col("cell").cast("int"))
-
-
-def semdedup_assign_frame(
-    vecs: DataFrame,
-    cents_rows: list,
-    two_level: bool | None = None,
-    impl: str | None = None,
-    rprobe: int | None = None,
-) -> DataFrame:
-    """(vec_id, vm, cell) assignment for the streaming SemDeDup —
+def semdedup_assign_frame(vecs: DataFrame, cents: tuple) -> DataFrame:
+    """(vec_id, vm, cell int) assignment for the streaming SemDeDup —
     streaming-safe by construction: no aggregation before the stateful
-    operator, no stream-static join state.  Three bodies, one
-    semantics (every pair equality-tested in tests/test_streaming.py):
+    operator, no stream-static join state.  ``cents`` is the epoch's
+    (cids, C) numpy pair (similarity._cents_np_path); the assignment
+    is the batch path's own numpy policy, similarity._numpy_assign_auto
+    (exact flat up to NUMPY_FLAT_MAX_NLIST, routed rp3 past it): one
+    Arrow-batched mapInPandas whose plan is O(1) in nlist, so nothing
+    is re-planned per micro-batch as nlist grows.  The literal-struct
+    projection this replaced ran 6,799 vs 1,514 ms per batch at
+    nlist=512 (tools/semdedup_router512_probe.py@3c5cbe8, SCALE.md
+    r13); at the nlist=8 floor it drained a 4-file, 500-vector stream
+    in 3.80 s vs 4.25 s (median of 10, 4 local cores) — one Arrow UDF
+    round trip fewer per micro-batch, not worth a second
+    implementation.  Equality with the Catalyst batch assignment is
+    pinned by the streamed-equals-batch tests in
+    tests/test_streaming.py.
 
-    - ``literal`` flat: a pure projection against centroid LITERALS;
-      argmin = array_min over (sq, cid) structs — lexicographic struct
-      ordering IS the batch min_by (sq, cid) tie-break.
-    - ``literal`` two-level (past TWOLEVEL_MIN_NLIST or forced):
-      mirrors _assign_cells r12 — driver-side integer router groups
-      (_router_groups), ncoarse literal router structs, then a
-      lazily-evaluated CASE over the routed group's literals.
-    - ``numpy`` (auto past ASSIGN_LITERAL_MAX embedded literal ints —
-      the VERDICT r12 plan-size hazard, measured at nlist=512 by
-      tools/semdedup_router512_probe.py): closure-captured centroid
-      matrix, one Arrow-batched mapInPandas, plan size O(1) in nlist.
-
-    ``impl`` forces a branch ("literal"/"numpy"); default picks by the
-    literal budget.
-
-    ``rprobe`` (r14, VERDICT r13 missing #3) applies to the numpy
-    two-level branch.  Auto policy table:
-
-    ======================  =========================================
-    regime                  assignment
-    ======================  =========================================
-    nlist ≤ literal budget  literal projection (flat < 64 cells,
-                            routed rp1 CASE past TWOLEVEL_MIN_NLIST)
-    past literal budget,    numpy EXACT flat argmin (perfect balance,
-    nlist ≤ NUMPY_FLAT_     one blocked BLAS matmul — r13; ceiling =
-    MAX_NLIST (8192,        the r14-opt speed crossover, quality-
-    r14-opt)                adjudicated — similarity.NUMPY_FLAT_MAX_NLIST)
-    nlist > the ceiling     numpy routed rprobe=TWOLEVEL_RPROBE_PAIR
-                            (per-cell streaming state is occupancy-
-                            sensitive; rp1 was refuted by the r13
-                            balance probe — max_occ 2,896 vs 1,053)
-    ======================  =========================================
-
-    Forced two_level with no explicit rprobe stays rp1 so the
-    numpy==literal equality tests pin byte-identical branches."""
+    The cell column is int: epoch checkpoints key their state by it.
+    A centroid id past the int32 range is refused before any Spark
+    job runs (at the n/250 occupancy rule that is a >500-trillion
+    vector stream partition, far past any single-partition design)."""
     from processor_spark.operators.similarity import (
-        TWOLEVEL_MIN_NLIST,
-        TWOLEVEL_RPROBE_PAIR,
-        _int_sqdist,
         _micro_arr,
+        _numpy_assign_auto,
     )
 
-    vm = _micro_arr("embedding")
-    use2l = (
-        (len(cents_rows) >= TWOLEVEL_MIN_NLIST) if two_level is None else two_level
-    )
-    if impl is None:
-        d = len(cents_rows[0][1]) if cents_rows else 0
-        import math
-
-        nlits = (len(cents_rows) + (math.isqrt(len(cents_rows)) if use2l else 0)) * d
-        impl = "numpy" if nlits > ASSIGN_LITERAL_MAX else "literal"
-    if impl == "numpy":
-        if two_level is None:
-            # auto-numpy is EXACT below NUMPY_FLAT_MAX_NLIST (r13): one
-            # BLAS matmul per batch beats any routing AND keeps cells
-            # perfectly balanced — per-cell state size is occupancy-
-            # bound, so exactness is also the balance-safe choice.
-            # Routed numpy remains for forced two_level (the batch-twin
-            # equality tests) and for nlist past the matrix ceiling,
-            # where it probes at the PAIR-family width (r14): per-cell
-            # state balance is the whole point of routing wide here.
-            use2l = len(cents_rows) > NUMPY_FLAT_MAX_NLIST
-            if rprobe is None and use2l:
-                rprobe = TWOLEVEL_RPROBE_PAIR
-        return _numpy_assign(
-            vecs.select("vec_id", vm.alias("vm")),
-            cents_rows,
-            use2l,
-            rprobe=rprobe if rprobe is not None else 1,
+    cids = cents[0]
+    if len(cids) and int(cids.max()) >= 2**31:
+        raise ValueError(
+            f"centroid id {int(cids.max())} overflows the int32 cell column"
         )
-    if not use2l:
-        structs = [
-            F.struct(
-                _int_sqdist(
-                    vm, F.array(*[F.lit(int(e)) for e in cm])
-                ).alias("sq"),
-                F.lit(int(cid)).cast("int").alias("cid"),
-            )
-            for cid, cm in cents_rows
-        ]
-        return vecs.select(
-            "vec_id",
-            vm.alias("vm"),
-            F.array_min(F.array(*structs))["cid"].alias("cell"),
-        )
-
-    cseeds, groups = _router_groups(cents_rows)
-    gid_col = F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    _int_sqdist(
-                        F.col("vm"), F.array(*[F.lit(e) for e in gm])
-                    ).alias("gsq"),
-                    F.lit(gid).cast("int").alias("gid"),
-                )
-                for gid, gm in cseeds
-            ]
-        )
-    )["gid"]
-    cell_expr = None
-    for gid, members in groups.items():
-        if not members:
-            # duplicate trained centroids can tie-route a seed's own
-            # group empty; F.array() over zero structs fails analysis
-            # and gid_col can never select an empty group under the
-            # same (gsq, gid) tie-break (ADVICE r12)
-            continue
-        fine = F.array_min(
-            F.array(
-                *[
-                    F.struct(
-                        _int_sqdist(
-                            F.col("vm"), F.array(*[F.lit(e) for e in cm])
-                        ).alias("sq"),
-                        F.lit(cid).cast("int").alias("cid"),
-                    )
-                    for cid, cm in members
-                ]
-            )
-        )["cid"]
-        cond = F.col("gid") == F.lit(gid)
-        cell_expr = (
-            F.when(cond, fine) if cell_expr is None else cell_expr.when(cond, fine)
-        )
-    return (
-        vecs.select("vec_id", vm.alias("vm"))
-        .withColumn("gid", gid_col)
-        .select("vec_id", "vm", cell_expr.alias("cell"))
-    )
+    return _numpy_assign_auto(
+        vecs.select("vec_id", _micro_arr("embedding").alias("vm")), cents
+    ).select("vec_id", "vm", F.col("cell").cast("int"))
 
 
-def semdedup_stream_flags(
-    vecs: DataFrame,
-    cents_rows: list,
-    two_level: bool | None = None,
-    impl: str | None = None,
-) -> DataFrame:
+def semdedup_stream_flags(vecs: DataFrame, cents: tuple) -> DataFrame:
     """Streaming SemDeDup: each arriving embedding is assigned to its
-    frozen k-means cell by a shuffle-free stateless assignment (literal
-    projection at small nlist, closure-captured numpy argmin past
-    ASSIGN_LITERAL_MAX embedded literals — semdedup_assign_frame r13),
-    then probed against the cell's standing membership (stream
-    state) with the exact batch ε-ball rule — (vec_id, cell, kept,
-    dup_of) per arrival.  Update mode; NoTimeout (the standing corpus
+    frozen k-means cell by a shuffle-free stateless assignment (the
+    batch path's numpy policy over the (cids, C) centroid pair —
+    semdedup_assign_frame), then probed against the cell's standing
+    membership (stream state) with the exact batch ε-ball rule —
+    (vec_id, cell, kept, dup_of) per arrival.  Update mode; NoTimeout (the standing corpus
     is the product).  Drift handling: retrain_semdedup_stream opens a
     new epoch (retrained centroids + log replay re-celling)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    assigned = semdedup_assign_frame(vecs, cents_rows, two_level, impl)
+    assigned = semdedup_assign_frame(vecs, cents)
     return assigned.groupBy("cell").applyInPandasWithState(
         _semdedup_state_fn,
         outputStructType=SEMDEDUP_STREAM_OUT_SCHEMA,
@@ -2090,6 +1885,7 @@ def retrain_semdedup_stream(
     import uuid
 
     from processor_spark.operators.similarity import (
+        _cents_np_path,
         _micro_arr,
         heal_swapped_root,
     )
@@ -2106,16 +1902,16 @@ def retrain_semdedup_stream(
 
     stage = root + f".stage-retrain-{uuid.uuid4().hex[:8]}"
     shutil.rmtree(stage, ignore_errors=True)
-    staged = _stage_centroids(spark, cents, stage, nlist)
+    _stage_centroids(spark, cents, stage, nlist)
     # the epoch's TRAINING cell histogram — the baseline the drift
     # trigger (semdedup_drift_stat) compares arrivals against.  One
-    # assignment pass over the corpus; the numpy branch prices this at
+    # assignment pass over the corpus; the numpy assign prices this at
     # 1.83 s per 128k vectors (SCALE.md r13), negligible next to the
     # 66 s training it rides behind.
-    cents_rows = [(r.cid, list(r.cm)) for r in staged.collect()]
+    staged = _cents_np_path(os.path.join(stage, "centroids"))
     hist = {
         str(int(r.cell)): int(r.n)
-        for r in semdedup_assign_frame(static, cents_rows)
+        for r in semdedup_assign_frame(static, staged)
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
@@ -2149,8 +1945,10 @@ def run_semdedup_stream(
     timeout_s: int = 120,
 ) -> int:
     """One availableNow pass of the streaming SemDeDup under the
-    CURRENT epoch: collect the epoch's centroids (literal-projection
-    assignment — shuffle-free, nlist × d integers), stream the chunk
+    CURRENT epoch: read the epoch's centroids as a numpy pair
+    (similarity._cents_np_path — the root is a local directory, as for
+    the stream IVF index; no Spark job) for the shuffle-free numpy
+    assignment (semdedup_assign_frame), stream the chunk
     log against the epoch's own checkpoint (``ckpt-<epoch>`` inside a
     sibling dir so it survives until the next retrain swaps the
     root), and hand each verdict micro-batch to ``sink``.  Replay
@@ -2177,16 +1975,17 @@ def run_semdedup_stream(
     verdict semantics across files are contractual there."""
     import os
 
+    from processor_spark.operators.similarity import _cents_np_path
+
     meta = _semdedup_epoch(root)
-    cents = spark.read.parquet(os.path.join(root, "centroids"))
-    cents_rows = [(r.cid, list(r.cm)) for r in cents.collect()]
+    cents = _cents_np_path(os.path.join(root, "centroids"))
     ckpt = root + f"-ckpt-{meta['epoch']}"
     reader = spark.readStream.schema(_emb_stream_schema())
     if os.path.isdir(ckpt):
         reader = reader.option("maxFilesPerTrigger", 1)
     stream = reader.parquet(chunks_dir)
     run_foreach_batch_ckpt(
-        semdedup_stream_flags(stream, cents_rows), sink, ckpt,
+        semdedup_stream_flags(stream, cents), sink, ckpt,
         timeout_s=timeout_s,
     )
     return meta["epoch"]

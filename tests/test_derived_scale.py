@@ -193,33 +193,46 @@ def test_numpy_routed_equals_catalyst_routed(spark):
     """r14 close: _numpy_routed_assign (the batch numpy twin of the
     two-level router, now the AUTO past-ceiling path) must equal the
     Catalyst routed branch cell-for-cell at rprobe 1 AND 3, with keep
-    columns through — same _router_groups, exact integer distances,
-    same (gsq, gid) router and (sq, cid) union tie-breaks."""
+    columns through — same _router_groups_np, exact integer distances,
+    same (gsq, gid) router and (sq, cid) union tie-breaks.  Two
+    layouts: 80 seed vectors (ncoarse=8), and four centroids where
+    cid 1 and cid 2 share a vector — both are router seeds
+    (ncoarse=isqrt(4)=2), every fine centroid tie-routes to seed 1, so
+    seed 2's group is EMPTY (ADVICE r12) and cell 2 can never win."""
+    import numpy as np
+
     from processor_spark.operators import similarity as S
 
     svecs = _label_vecs(spark)
-    cents = spark.createDataFrame(
-        [
-            (1000 + i, [int(x) for x in r.vm])
-            for i, r in enumerate(svecs.orderBy("vec_id").limit(80).collect())
-        ],
-        "cid long, cm array<bigint>",
+    seeds = [[int(x) for x in r.vm] for r in svecs.orderBy("vec_id").limit(80).collect()]
+    dup = [(1, seeds[0]), (2, seeds[0]), (3, seeds[1]), (4, seeds[2])]
+    ncoarse, rassign = S._router_groups_np(
+        np.asarray([cm for _, cm in dup], dtype=np.float64)
     )
-    for rp in (1, 3):
-        npy = {
-            (r.vec_id, int(r.cell), int(r.label))
-            for r in S._numpy_routed_assign(
-                svecs, cents, keep=("vm", "label"), rprobe=rp
-            ).collect()
-        }
-        cat = {
-            (r.vec_id, int(r.cell), int(r.label))
-            for r in S._assign_cells(
-                svecs, cents, 80, two_level=True,
-                keep=("vm", "label"), rprobe=rp,
-            ).collect()
-        }
-        assert npy == cat and len(npy) > 0, f"rprobe={rp}"
+    assert ncoarse == 2 and not (rassign == 1).any()  # the hazard pinned
+    layouts = {
+        "seeds80": [(1000 + i, cm) for i, cm in enumerate(seeds)],
+        "dup_empty_group": dup,
+    }
+    for name, rows in layouts.items():
+        cents = spark.createDataFrame(rows, "cid long, cm array<bigint>")
+        for rp in (1, 3):
+            npy = {
+                (r.vec_id, int(r.cell), int(r.label))
+                for r in S._numpy_routed_assign(
+                    svecs, cents, keep=("vm", "label"), rprobe=rp
+                ).collect()
+            }
+            cat = {
+                (r.vec_id, int(r.cell), int(r.label))
+                for r in S._assign_cells(
+                    svecs, cents, len(rows), two_level=True,
+                    keep=("vm", "label"), rprobe=rp,
+                ).collect()
+            }
+            assert npy == cat and len(npy) > 0, (name, rp)
+            if name == "dup_empty_group":
+                assert not any(c == 2 for _, c, _ in npy)
 
 
 def test_auto_assign_past_ceiling_routes_numpy_rp3(spark, monkeypatch):
@@ -265,7 +278,7 @@ def test_auto_assign_past_ceiling_routes_numpy_rp3(spark, monkeypatch):
 
 
 def test_router_groups_vectorized_equals_reference():
-    """r14-opt: _router_groups' vectorized fine->seed routing must be
+    """r14-opt: _router_groups_np's vectorized fine->seed routing must be
     group-for-group identical to the r14-close pure-python reference
     (exact integer min over (gsq, gid)), including duplicate-centroid
     ties planted across the seed/fine boundary — the lexicographic
@@ -274,7 +287,7 @@ def test_router_groups_vectorized_equals_reference():
 
     import numpy as np
 
-    from processor_spark.operators.similarity import _router_groups
+    from processor_spark.operators.similarity import _router_groups_np
 
     def reference(cents_rows):
         rows = sorted((int(cid), [int(e) for e in cm]) for cid, cm in cents_rows)
@@ -295,7 +308,11 @@ def test_router_groups_vectorized_equals_reference():
     for i in (1, 5, 40, nlist // 2, nlist - 1):  # dup ties; 40 > ncoarse=32
         cents[i] = cents[0]
     cents_rows = [(i, [int(x) for x in cents[i]]) for i in range(nlist)]
-    cs_v, gr_v = _router_groups(cents_rows)
+    ncoarse, assign = _router_groups_np(cents.astype(np.float64))
+    cs_v = cents_rows[:ncoarse]  # cids 0..nlist-1 are already ascending
+    gr_v = {gid: [] for gid, _ in cs_v}
+    for row, j in zip(cents_rows, assign):
+        gr_v[cs_v[j][0]].append(row)
     cs_r, gr_r = reference(cents_rows)
     assert cs_v == cs_r
     assert gr_v == gr_r
@@ -303,12 +320,16 @@ def test_router_groups_vectorized_equals_reference():
 
 
 def test_router_groups_empty_input():
-    """ADVICE r14 low: _router_groups([]) must return ([], {}) — the
-    streaming semdedup_assign_frame contemplates empty cents_rows; the
-    first vectorized version raised numpy AxisError instead."""
-    from processor_spark.operators.similarity import _router_groups
+    """ADVICE r14 low: the router over an empty centroid matrix must
+    return an empty assignment — the first vectorized version raised
+    numpy AxisError instead.  (The assign paths themselves refuse an
+    empty table: test_semdedup_assign_refuses_unrepresentable_cells.)"""
+    import numpy as np
 
-    assert _router_groups([]) == ([], {})
+    from processor_spark.operators.similarity import _router_groups_np
+
+    _, assign = _router_groups_np(np.zeros((0, 64)))
+    assert len(assign) == 0
 
 
 def test_router_groups_np_multiblock_equals_single(monkeypatch):

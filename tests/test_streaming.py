@@ -1258,6 +1258,35 @@ def _emb_schema():
     )
 
 
+def _batch_twin(static, cents, nlist, **assign_kw):
+    """Batch SemDeDup verdicts over the CATALYST assignment
+    (_assign_cells) — independent of the numpy kernel the stream
+    assigns with.  Below TWOLEVEL_MIN_NLIST that is the flat crossJoin
+    the registered oracles encode."""
+    from processor_spark.operators.similarity import (
+        SEMDEDUP_EPS,
+        _assign_cells,
+        _micro_arr,
+        _semdedup_from_assign,
+    )
+
+    svecs = static.select("vec_id", _micro_arr("embedding").alias("vm"))
+    twin = _semdedup_from_assign(
+        _assign_cells(svecs, cents, nlist, **assign_kw), SEMDEDUP_EPS
+    )
+    return {(r.vec_id, int(r.cell), r.kept, r.dup_of) for r in twin.collect()}
+
+
+def _epoch_twin(spark, chunks, root):
+    """_batch_twin over the whole chunk log under the current epoch's
+    centroids and nlist."""
+    return _batch_twin(
+        spark.read.schema(_emb_schema()).parquet(str(chunks)),
+        spark.read.parquet(root + "/centroids"),
+        P._semdedup_epoch(root)["nlist"],
+    )
+
+
 class _FakeGroupState:
     """Minimal applyInPandasWithState GroupState double for driving
     _semdedup_state_fn directly (exists/get/update are all it uses)."""
@@ -1369,13 +1398,13 @@ def test_streaming_semdedup_equals_batch(spark, tmp_path):
     """r11: streaming SemDeDup — arriving embeddings probe the
     standing corpus' k-means cells held as stream state.  With
     id-ordered ingest the streamed verdicts must equal the batch
-    twin (same frozen centroids through _semdedup_from_assign)
-    EXACTLY, including planted cross-batch clones."""
+    twin (same frozen centroids, Catalyst flat assignment) EXACTLY,
+    including planted cross-batch clones."""
     from processor_spark.operators.similarity import (
-        SEMDEDUP_EPS,
+        IVFK_NLIST,
+        _cents_np,
         _ivfk_cents,
         _micro_arr,
-        _semdedup_from_assign,
     )
 
     chunks = tmp_path / "emb_chunks"
@@ -1395,7 +1424,6 @@ def test_streaming_semdedup_equals_batch(spark, tmp_path):
 
     static = spark.read.schema(_emb_schema()).parquet(str(chunks))
     cents = _ivfk_cents(static.select("vec_id", _micro_arr("embedding").alias("vm")))
-    cents_rows = [(r.cid, list(r.cm)) for r in cents.collect()]
 
     stream = (
         spark.readStream.schema(_emb_schema())
@@ -1403,17 +1431,16 @@ def test_streaming_semdedup_equals_batch(spark, tmp_path):
         .parquet(str(chunks))
     )
     got_df = _drain(
-        spark, P.semdedup_stream_flags(stream, cents_rows), "t_semdedup", mode="update"
+        spark,
+        P.semdedup_stream_flags(stream, _cents_np(cents)),
+        "t_semdedup",
+        mode="update",
     )
     got = {
         (r.vec_id, int(r.cell), r.kept, r.dup_of) for r in got_df.collect()
     }
 
-    twin = _semdedup_from_assign(
-        P.semdedup_assign_frame(static, cents_rows), SEMDEDUP_EPS
-    )
-    want = {(r.vec_id, int(r.cell), r.kept, r.dup_of) for r in twin.collect()}
-    assert got == want
+    assert got == _batch_twin(static, cents, IVFK_NLIST)
     planted_ids = {int(v) for v in planted["vec_id"]}
     origin_ids = {int(v) for v in pdf.head(2)["vec_id"]}
     dropped = {v: d for v, _, k, d in got if v in planted_ids and k == 0}
@@ -1428,7 +1455,11 @@ def test_streaming_semdedup_state_survives_restart(spark, tmp_path):
     checkpoint: run 2 contains ONLY clones of run-1 vectors, so every
     drop it emits references a run-1 vec_id — impossible if the
     standing membership was lost on restart."""
-    from processor_spark.operators.similarity import _ivfk_cents, _micro_arr
+    from processor_spark.operators.similarity import (
+        _cents_np,
+        _ivfk_cents,
+        _micro_arr,
+    )
 
     data = tmp_path / "inbox"
     ckpt = str(tmp_path / "ckpt")
@@ -1444,8 +1475,9 @@ def test_streaming_semdedup_state_survives_restart(spark, tmp_path):
     )
     pdf.to_parquet(data / "c1.parquet", index=False)
     static = spark.read.schema(_emb_schema()).parquet(str(data))
-    cents = _ivfk_cents(static.select("vec_id", _micro_arr("embedding").alias("vm")))
-    cents_rows = [(r.cid, list(r.cm)) for r in cents.collect()]
+    cents = _cents_np(
+        _ivfk_cents(static.select("vec_id", _micro_arr("embedding").alias("vm")))
+    )
 
     def sink(batch_df, batch_id):
         if batch_df.count():
@@ -1458,7 +1490,7 @@ def test_streaming_semdedup_state_survives_restart(spark, tmp_path):
             .parquet(str(data))
         )
         P.run_foreach_batch_ckpt(
-            P.semdedup_stream_flags(stream, cents_rows), sink, ckpt
+            P.semdedup_stream_flags(stream, cents), sink, ckpt
         )
 
     run_once()
@@ -1489,11 +1521,6 @@ def test_streaming_semdedup_retrain_recells_after_drift(spark, tmp_path):
     run on the same epoch with no new data must emit nothing
     (replay-idempotent within an epoch)."""
     import numpy as np
-
-    from processor_spark.operators.similarity import (
-        SEMDEDUP_EPS,
-        _semdedup_from_assign,
-    )
 
     chunks = tmp_path / "inbox"
     out = tmp_path / "out"
@@ -1549,16 +1576,9 @@ def test_streaming_semdedup_retrain_recells_after_drift(spark, tmp_path):
         for r in spark.read.parquet(str(out / "rows")).collect()
     }
 
-    static = spark.read.schema(_emb_schema()).parquet(str(chunks))
-    cents_rows = [
-        (r.cid, list(r.cm))
-        for r in spark.read.parquet(root + "/centroids").collect()
-    ]
-    twin = _semdedup_from_assign(
-        P.semdedup_assign_frame(static, cents_rows), SEMDEDUP_EPS
+    assert got == _epoch_twin(spark, chunks, root), (
+        "epoch-1 replay must equal the fresh-trained batch twin"
     )
-    want = {(r.vec_id, int(r.cell), r.kept, r.dup_of) for r in twin.collect()}
-    assert got == want, "epoch-1 replay must equal the fresh-trained batch twin"
 
     # same epoch, no new data: nothing re-emitted
     shutil.rmtree(out / "rows", ignore_errors=True)
@@ -1570,20 +1590,15 @@ def test_streaming_semdedup_retrain_recells_after_drift(spark, tmp_path):
     ]
 
 
-def test_streaming_semdedup_twolevel_router_equals_batch(spark, tmp_path):
-    """r12: the streaming literal-projection assign must mirror
-    _assign_cells' two-level router EXACTLY (same driver-side integer
-    router groups, same tie-breaks) — forced on at fixture scale and
-    compared against the batch twin built with two_level=True."""
-    from pyspark.sql import functions as F
-
-    from processor_spark.operators.similarity import (
-        SEMDEDUP_EPS,
-        _assign_cells,
-        _ivfk_cents,
-        _micro_arr,
-        _semdedup_from_assign,
-    )
+def test_streaming_semdedup_twolevel_router_equals_batch(
+    spark, tmp_path, monkeypatch
+):
+    """Past NUMPY_FLAT_MAX_NLIST the streaming SemDeDup routes through
+    the shared numpy policy at rprobe=TWOLEVEL_RPROBE_PAIR: with the
+    ceiling lowered below an 80-centroid table (ncoarse=8, a real
+    3-probe) the streamed verdicts must equal the batch twin built on
+    the CATALYST two-level router at rprobe=3."""
+    from processor_spark.operators import similarity as S
 
     chunks = tmp_path / "emb_chunks"
     chunks.mkdir()
@@ -1596,16 +1611,15 @@ def test_streaming_semdedup_twolevel_router_equals_batch(spark, tmp_path):
         )
 
     static = spark.read.schema(_emb_schema()).parquet(str(chunks))
-    svecs = static.select("vec_id", _micro_arr("embedding").alias("vm"))
-    cents = _ivfk_cents(svecs, 8)
-    cents_rows = [(r.cid, list(r.cm)) for r in cents.collect()]
-
-    # sanity: the streaming projection's cells == the batch router's
-    stream_assign = P.semdedup_assign_frame(static, cents_rows, two_level=True)
-    batch_assign = _assign_cells(svecs, cents, 8, two_level=True)
-    sa = {(r.vec_id, int(r.cell)) for r in stream_assign.collect()}
-    ba = {(r.vec_id, int(r.cell)) for r in batch_assign.collect()}
-    assert sa == ba
+    svecs = static.select("vec_id", S._micro_arr("embedding").alias("vm"))
+    cents = spark.createDataFrame(
+        [
+            (1000 + i, [int(e) for e in r.vm])
+            for i, r in enumerate(svecs.orderBy("vec_id").limit(80).collect())
+        ],
+        "cid long, cm array<bigint>",
+    )
+    monkeypatch.setattr(S, "NUMPY_FLAT_MAX_NLIST", 64)
 
     stream = (
         spark.readStream.schema(_emb_schema())
@@ -1614,111 +1628,28 @@ def test_streaming_semdedup_twolevel_router_equals_batch(spark, tmp_path):
     )
     got_df = _drain(
         spark,
-        P.semdedup_stream_flags(stream, cents_rows, two_level=True),
-        "t_semdedup_2l",
+        P.semdedup_stream_flags(stream, S._cents_np(cents)),
+        "t_semdedup_routed",
         mode="update",
     )
     got = {(r.vec_id, int(r.cell), r.kept, r.dup_of) for r in got_df.collect()}
-    twin = _semdedup_from_assign(batch_assign, SEMDEDUP_EPS)
-    want = {(r.vec_id, int(r.cell), r.kept, r.dup_of) for r in twin.collect()}
-    assert got == want
+    want = _batch_twin(static, cents, 80, two_level=True, rprobe=3)
+    assert got == want and len(got) == n
+    # non-vacuous: rp3 routing differs from the exact flat cells here
+    flat = _batch_twin(static, cents, 80, two_level=False)
+    assert {(v, c) for v, c, *_ in want} != {(v, c) for v, c, *_ in flat}
 
 
-def test_semdedup_numpy_assign_equals_literal(spark, tmp_path):
-    """r13 (VERDICT r12 weak component): the closure-captured numpy
-    argmin assignment must equal BOTH literal branches cell-for-cell —
-    flat vs flat, routed vs routed — and the auto policy must pick
-    numpy once the literal projection would exceed ASSIGN_LITERAL_MAX
-    embedded ints (a synthetic 80-centroid layout at d=64)."""
-    from processor_spark.operators.similarity import _ivfk_cents, _micro_arr
-
-    static = load(spark, SF_SMALL, "embeddings")
-    svecs = static.select("vec_id", _micro_arr("embedding").alias("vm"))
-    cents = _ivfk_cents(svecs, 8)
-    cents_rows = [(r.cid, list(r.cm)) for r in cents.collect()]
-
-    def cells(df):
-        return {(r.vec_id, int(r.cell)) for r in df.collect()}
-
-    # flat: numpy == literal
-    lit_flat = cells(
-        P.semdedup_assign_frame(static, cents_rows, two_level=False, impl="literal")
-    )
-    np_flat = cells(
-        P.semdedup_assign_frame(static, cents_rows, two_level=False, impl="numpy")
-    )
-    assert np_flat == lit_flat
-
-    # two-level: numpy == literal CASE (same driver-side router groups)
-    lit_2l = cells(
-        P.semdedup_assign_frame(static, cents_rows, two_level=True, impl="literal")
-    )
-    np_2l = cells(
-        P.semdedup_assign_frame(static, cents_rows, two_level=True, impl="numpy")
-    )
-    assert np_2l == lit_2l
-
-    # auto policy: 80 centroids at d=64 → (80 + isqrt(80)) × 64 > 4096
-    # literal ints → numpy branch, which in auto mode is the EXACT flat
-    # argmin (r13: below NUMPY_FLAT_MAX_NLIST exactness is also the
-    # balance-safe choice) — equality against the literal FLAT branch
-    big_rows = [
-        (1000 + i, list(r.vm))
-        for i, r in enumerate(svecs.orderBy("vec_id").limit(80).collect())
-    ]
-    assert (len(big_rows) + 8) * 64 > P.ASSIGN_LITERAL_MAX
-    auto = cells(P.semdedup_assign_frame(static, big_rows))
-    forced_lit_flat = cells(
-        P.semdedup_assign_frame(static, big_rows, two_level=False, impl="literal")
-    )
-    assert auto == forced_lit_flat
-
-
-def test_semdedup_literal_router_skips_empty_group(spark):
-    """ADVICE r12: duplicate trained centroids can tie-route a router
-    seed's own group EMPTY; the literal CASE must skip it (F.array()
-    over zero structs fails analysis) and numpy must agree."""
-    from processor_spark.operators.similarity import _micro_arr
-
-    static = load(spark, SF_SMALL, "embeddings")
-    svecs = static.select("vec_id", _micro_arr("embedding").alias("vm"))
-    base = [list(r.vm) for r in svecs.orderBy("vec_id").limit(3).collect()]
-    # cid=1 and cid=2 share a vector: ncoarse = isqrt(4) = 2 router
-    # seeds are cids 1 and 2; every fine centroid tie-routes to gid=1
-    # over gid=2 where distances tie, so group 2 is empty
-    dup_rows = [(1, base[0]), (2, base[0]), (3, base[1]), (4, base[2])]
-    cseeds, groups = P._router_groups(dup_rows)
-    assert [gid for gid, _ in cseeds] == [1, 2]
-    assert groups[2] == []  # the hazard this test pins
-
-    lit = {
-        (r.vec_id, int(r.cell))
-        for r in P.semdedup_assign_frame(
-            static, dup_rows, two_level=True, impl="literal"
-        ).collect()
-    }
-    npy = {
-        (r.vec_id, int(r.cell))
-        for r in P.semdedup_assign_frame(
-            static, dup_rows, two_level=True, impl="numpy"
-        ).collect()
-    }
-    assert lit == npy
-    assert not any(c == 2 for _, c in lit)  # empty group never selected
-
-
-def test_streaming_semdedup_numpy_router_equals_batch(spark, tmp_path):
-    """r13: the full streaming SemDeDup path under the numpy assignment
-    (the shape production reaches past ASSIGN_LITERAL_MAX literals)
-    must emit verdicts equal to the two-level batch twin — the same
-    contract the literal router test pins, at the O(1)-plan branch."""
-    from processor_spark.operators.similarity import (
-        SEMDEDUP_EPS,
-        _assign_cells,
-        _ivfk_cents,
-        _micro_arr,
-        _semdedup_from_assign,
-    )
+def test_streaming_semdedup_numpy_router_equals_batch(
+    spark, tmp_path, monkeypatch
+):
+    """The full streaming SemDeDup path on TRAINED fixture-floor
+    centroids (nlist=8) with the flat ceiling lowered below nlist, so
+    the numpy router (ncoarse=isqrt(8)=2, rprobe=3) assigns every
+    arrival: the streamed verdicts must equal the Catalyst two-level
+    batch twin, and — since rprobe covers every router group — the
+    exact flat twin too."""
+    from processor_spark.operators import similarity as S
 
     chunks = tmp_path / "emb_chunks_np"
     chunks.mkdir()
@@ -1731,9 +1662,9 @@ def test_streaming_semdedup_numpy_router_equals_batch(spark, tmp_path):
         )
 
     static = spark.read.schema(_emb_schema()).parquet(str(chunks))
-    svecs = static.select("vec_id", _micro_arr("embedding").alias("vm"))
-    cents = _ivfk_cents(svecs, 8)
-    cents_rows = [(r.cid, list(r.cm)) for r in cents.collect()]
+    svecs = static.select("vec_id", S._micro_arr("embedding").alias("vm"))
+    cents = S._ivfk_cents(svecs, 8)
+    monkeypatch.setattr(S, "NUMPY_FLAT_MAX_NLIST", 4)
 
     stream = (
         spark.readStream.schema(_emb_schema())
@@ -1742,15 +1673,70 @@ def test_streaming_semdedup_numpy_router_equals_batch(spark, tmp_path):
     )
     got_df = _drain(
         spark,
-        P.semdedup_stream_flags(stream, cents_rows, two_level=True, impl="numpy"),
+        P.semdedup_stream_flags(stream, S._cents_np(cents)),
         "t_semdedup_np",
         mode="update",
     )
     got = {(r.vec_id, int(r.cell), r.kept, r.dup_of) for r in got_df.collect()}
-    batch_assign = _assign_cells(svecs, cents, 8, two_level=True)
-    twin = _semdedup_from_assign(batch_assign, SEMDEDUP_EPS)
-    want = {(r.vec_id, int(r.cell), r.kept, r.dup_of) for r in twin.collect()}
-    assert got == want
+    assert len(got) == n
+    assert got == _batch_twin(static, cents, 8, two_level=True, rprobe=3)
+    assert got == _batch_twin(static, cents, 8)
+
+
+def test_semdedup_literal_router_skips_empty_group(spark, monkeypatch):
+    """Duplicate trained centroids can tie-route a router seed's own
+    group EMPTY: cid 1 and cid 2 share a vector, both are router seeds
+    (ncoarse=isqrt(4)=2) and every fine centroid tie-routes to seed 1.
+    The streaming assign, routed once the flat ceiling sits below
+    nlist, must skip the empty group, equal the Catalyst two-level
+    router cell-for-cell, and never select cell 2."""
+    import numpy as np
+
+    from processor_spark.operators import similarity as S
+
+    static = load(spark, SF_SMALL, "embeddings")
+    svecs = static.select("vec_id", S._micro_arr("embedding").alias("vm"))
+    base = [[int(e) for e in r.vm] for r in svecs.orderBy("vec_id").limit(3).collect()]
+    dup_rows = [(1, base[0]), (2, base[0]), (3, base[1]), (4, base[2])]
+    ncoarse, rassign = S._router_groups_np(
+        np.asarray([cm for _, cm in dup_rows], dtype=np.float64)
+    )
+    assert ncoarse == 2 and not (rassign == 1).any()  # the hazard pinned
+
+    cents = spark.createDataFrame(dup_rows, "cid long, cm array<bigint>")
+    monkeypatch.setattr(S, "NUMPY_FLAT_MAX_NLIST", 2)
+    npy = {
+        (r.vec_id, int(r.cell))
+        for r in P.semdedup_assign_frame(static, S._cents_np(cents)).collect()
+    }
+    cat = {
+        (r.vec_id, int(r.cell))
+        for r in S._assign_cells(
+            svecs, cents, 4, two_level=True, rprobe=3
+        ).collect()
+    }
+    assert npy == cat and len(npy) == static.count()
+    assert not any(c == 2 for _, c in npy)  # empty group never selected
+
+
+def test_semdedup_assign_refuses_unrepresentable_cells(spark):
+    """The streaming SemDeDup cell column is int32 (epoch checkpoints
+    key their state by it): a centroid id of 2**31 must raise before
+    any Spark job runs, and so must an empty centroid table (the flat
+    kernel would emit uninitialized cells)."""
+    import numpy as np
+
+    static = load(spark, SF_SMALL, "embeddings")
+    jobs = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    C = np.zeros((2, 64))
+    with pytest.raises(ValueError, match="int32"):
+        P.semdedup_assign_frame(static, (np.array([1, 2**31]), C))
+    with pytest.raises(ValueError, match="no centroids"):
+        P.semdedup_assign_frame(static, (np.zeros(0, np.int64), C[:0]))
+    assert spark.sparkContext._jsc.sc().dagScheduler().nextJobId() == jobs
+    # the largest representable id still assigns
+    cells = P.semdedup_assign_frame(static, (np.array([1, 2**31 - 1]), C))
+    assert {int(r.cell) for r in cells.collect()} <= {1, 2**31 - 1}
 
 
 def test_stream_ivf_second_retrain_sees_new_files(spark, tmp_path):
@@ -1832,11 +1818,6 @@ def test_streaming_semdedup_drift_trigger(spark, tmp_path):
 
     import numpy as np
 
-    from processor_spark.operators.similarity import (
-        SEMDEDUP_EPS,
-        _semdedup_from_assign,
-    )
-
     chunks = tmp_path / "inbox"
     out = tmp_path / "out"
     root = str(tmp_path / "semstream")
@@ -1884,16 +1865,7 @@ def test_streaming_semdedup_drift_trigger(spark, tmp_path):
         (r.vec_id, int(r.cell), r.kept, r.dup_of)
         for r in spark.read.parquet(str(out / "rows")).collect()
     }
-    static = spark.read.schema(_emb_schema()).parquet(str(chunks))
-    cents_rows = [
-        (r.cid, list(r.cm))
-        for r in spark.read.parquet(root + "/centroids").collect()
-    ]
-    twin = _semdedup_from_assign(
-        P.semdedup_assign_frame(static, cents_rows), SEMDEDUP_EPS
-    )
-    want = {(r.vec_id, int(r.cell), r.kept, r.dup_of) for r in twin.collect()}
-    assert got == want
+    assert got == _epoch_twin(spark, chunks, root)
 
 
 # --------- r14: scale-calibrated drift gate (VERDICT r13 missing #2)
@@ -2029,58 +2001,6 @@ def test_snapshot_skips_hidden_dirs(tmp_path):
     assert files == [str(root / "gen=0" / "part-0.parquet")]
 
 
-def test_numpy_routed_rprobe_equals_batch(spark):
-    """r14 (VERDICT r13 missing #3): the numpy two-level assignment at
-    rprobe=3 must equal _assign_cells(rprobe=3) cell-for-cell — the
-    multi-probe union argmin, not the refuted rp1 routing — on a
-    router layout wide enough for a real 3-probe (80 centroids →
-    ncoarse=8)."""
-    from processor_spark.operators.similarity import (
-        _assign_cells,
-        _micro_arr,
-    )
-
-    static = load(spark, SF_SMALL, "embeddings")
-    svecs = static.select("vec_id", _micro_arr("embedding").alias("vm"))
-    big_rows = [
-        (1000 + i, [int(e) for e in r.vm])
-        for i, r in enumerate(svecs.orderBy("vec_id").limit(80).collect())
-    ]
-    cents = spark.createDataFrame(
-        [(cid, cm) for cid, cm in big_rows], "cid long, cm array<bigint>"
-    )
-
-    for rp in (1, 3):
-        npy = {
-            (r.vec_id, int(r.cell))
-            for r in P.semdedup_assign_frame(
-                static, big_rows, two_level=True, impl="numpy", rprobe=rp
-            ).collect()
-        }
-        batch = {
-            (r.vec_id, int(r.cell))
-            for r in _assign_cells(
-                svecs, cents, len(big_rows), two_level=True, rprobe=rp
-            ).collect()
-        }
-        assert npy == batch, f"rprobe={rp}"
-    # non-vacuous: widening the probe must change at least one routed
-    # cell on this layout, or the test proves nothing
-    np1 = {
-        (r.vec_id, int(r.cell))
-        for r in P.semdedup_assign_frame(
-            static, big_rows, two_level=True, impl="numpy", rprobe=1
-        ).collect()
-    }
-    np3 = {
-        (r.vec_id, int(r.cell))
-        for r in P.semdedup_assign_frame(
-            static, big_rows, two_level=True, impl="numpy", rprobe=3
-        ).collect()
-    }
-    assert np1 != np3
-
-
 def test_batch_and_streaming_drift_decisions_agree():
     """r14 (VERDICT r13 next #6): q_embed_drift_score's batch χ²
     decision and the streaming trigger (semdedup_drift_stat against
@@ -2148,14 +2068,15 @@ def test_stream_ivf_assign_numpy_equals_flat(spark):
     it must equal _ivfa_assign cell-for-cell at any nlist (exact
     integer distances, same (sq, cid) tie-break) — the fixture-floor
     nlist=8 included, which the sink now assigns through numpy too.
-    Both fronts are pinned: the numpy pair the sink passes and the
-    row-list _numpy_assign the streaming SemDeDup uses."""
+    Both entry points are pinned: the flat kernel and the auto policy
+    (_numpy_assign_auto) the sink and the streaming SemDeDup call."""
     import numpy as np
 
     from processor_spark.operators.similarity import (
         _cents_sorted,
         _ivfa_assign,
         _micro_arr,
+        _numpy_assign_auto,
         _numpy_flat_assign,
     )
 
@@ -2185,11 +2106,11 @@ def test_stream_ivf_assign_numpy_equals_flat(spark):
             (r.vec_id, int(r.cell))
             for r in _numpy_flat_assign(svecs, pair).collect()
         }
-        rows = {
+        auto = {
             (r.vec_id, int(r.cell))
-            for r in P._numpy_assign(svecs, cents_rows, two_level=False).collect()
+            for r in _numpy_assign_auto(svecs, pair).collect()
         }
-        assert sink == flat and rows == flat and len(flat) > 0, nlist
+        assert sink == flat and auto == flat and len(flat) > 0, nlist
 
 
 def test_stream_ivf_ingest_numpy_branch_end_to_end(spark, tmp_path):
@@ -2558,11 +2479,6 @@ def test_monitored_replay_after_retrain(spark, tmp_path):
     nothing new and stay quiet."""
     import numpy as np
 
-    from processor_spark.operators.similarity import (
-        SEMDEDUP_EPS,
-        _semdedup_from_assign,
-    )
-
     chunks = tmp_path / "inbox"
     out = tmp_path / "out"
     root = str(tmp_path / "semstream")
@@ -2594,15 +2510,7 @@ def test_monitored_replay_after_retrain(spark, tmp_path):
 
     # the replay's emitted rows (the tail of out/) must equal the
     # fresh-trained batch twin over the full log — without another pass
-    static = spark.read.schema(_emb_schema()).parquet(str(chunks))
-    cents_rows = [
-        (r.cid, list(r.cm))
-        for r in spark.read.parquet(root + "/centroids").collect()
-    ]
-    twin = _semdedup_from_assign(
-        P.semdedup_assign_frame(static, cents_rows), SEMDEDUP_EPS
-    )
-    want = {(r.vec_id, int(r.cell), r.kept, r.dup_of) for r in twin.collect()}
+    want = _epoch_twin(spark, chunks, root)
     got_all = spark.read.parquet(str(out / "rows"))
     # out/ holds pre-trip epoch-0 verdicts AND the epoch-1 replay; the
     # replay re-emitted every vec_id, so filtering to rows matching the

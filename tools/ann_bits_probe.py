@@ -42,39 +42,9 @@ ONLY = next((a for a in _args if a and not a.isdigit()), None)
 _KNOWN = (None, "graph", "ivf", "filtered", "ivfpq", "semdedup", "twolevel", "semdedup2")
 if ONLY not in _KNOWN:
     sys.exit(f"unknown section {ONLY!r}; expected one of {_KNOWN[1:]}")
-SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-DST = f"/tmp/processor_spark-ann-bits-probe-{REPL}x"
+from tools.jittered_layout import SRC, build_layout, layout_dir  # noqa: E402
 
-
-def build_layout(spark) -> None:
-    from pyspark.sql import functions as F
-
-    from processor_spark.sources.fixtures import load
-
-    if os.path.isdir(DST):
-        return  # deterministic per (SRC, REPL); reuse
-    os.makedirs(DST)
-    df = load(spark, SRC, "embeddings")
-    parts = []
-    for i in range(REPL):
-        rep = df.withColumn("vec_id", F.col("vec_id") + F.lit(i * 10_000_000))
-        if i > 0:
-            # deterministic ±5 % jitter per (vec_id, dim): replicas are
-            # NEAR-dups of the base corpus, not bit-clones, so bucket
-            # occupancy and neighbor structure scale like a real corpus
-            rep = rep.withColumn(
-                "embedding",
-                F.expr(
-                    f"transform(embedding, (x, d) -> CAST(x + "
-                    f"(((vec_id * 2654435761 + d * 40503 + {i}) % 997) / 997.0"
-                    f" - 0.5) * 0.1 AS FLOAT))"
-                ),
-            )
-        parts.append(rep)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.write.mode("overwrite").parquet(f"{DST}/embeddings.parquet")
+DST = layout_dir(REPL)
 
 
 def exact_topk(spark):
@@ -163,7 +133,7 @@ def main() -> None:
     from processor_spark.sources.fixtures import load
 
     spark = build_session(app_name="processor_spark-ann-bits-probe")
-    build_layout(spark)
+    build_layout(spark, REPL)
 
     n = load(spark, DST, "embeddings").count()
     n_base = load(spark, SRC, "embeddings").count()

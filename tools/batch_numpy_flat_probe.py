@@ -35,8 +35,7 @@ def main() -> None:
     from processor_spark.operators import similarity as S
     from processor_spark.session import build_session
     from processor_spark.sources.fixtures import load
-    from processor_spark.streaming import pipelines as P
-    from tools.semdedup_router512_probe import build_layout
+    from tools.jittered_layout import build_layout
 
     spark = build_session(app_name="batch-numpy-flat-probe")
     build_layout(spark)
@@ -49,18 +48,16 @@ def main() -> None:
     def leg_numpy_flat():
         t0 = time.perf_counter()
         e = load(spark, DST, "embeddings", spread=True)
-        static = e.select("vec_id", "embedding")
         vecs = e.select("vec_id", S._micro_arr("embedding").alias("vm"))
         nlist = S.derived_nlist(spark, DST)
-        seed_rows = [
-            (int(r.vec_id), [int(x) for x in r.vm])
-            for r in vecs.where(F.col("vec_id") < nlist).collect()
-        ]
+        seeds = vecs.where(F.col("vec_id") < nlist).select(
+            F.col("vec_id").alias("cid"), F.col("vm").alias("cm")
+        )
         # numpy Lloyd argmin (exact flat), then exact integer means —
         # the same cmeans code _ivfk_cents runs
-        a0 = P.semdedup_assign_frame(
-            static, seed_rows, two_level=False, impl="numpy"
-        ).select(F.col("cell").cast("long").alias("cid"), "vm")
+        a0 = S._numpy_flat_assign(vecs, seeds).select(
+            F.col("cell").alias("cid"), "vm"
+        )
         cents = (
             a0.select("cid", F.posexplode("vm").alias("pos", "m"))
             .groupBy("cid", "pos")
@@ -74,11 +71,8 @@ def main() -> None:
                 ).alias("cm")
             )
         )
-        cents_rows = [(int(r.cid), [int(x) for x in r.cm]) for r in cents.collect()]
         assign = scoped_persist(
-            P.semdedup_assign_frame(
-                static, cents_rows, two_level=False, impl="numpy"
-            ).select("vec_id", F.col("cell").cast("long").alias("cell"), "vm")
+            S._numpy_flat_assign(vecs, cents).select("vec_id", "cell", "vm")
         )
         pdf = S._semdedup_from_assign(assign, S.SEMDEDUP_EPS).toPandas()
         return round(time.perf_counter() - t0, 1), int((pdf["kept"] == 0).sum())

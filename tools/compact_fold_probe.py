@@ -35,7 +35,7 @@ def main() -> None:
     from processor_spark.session import build_session
     from processor_spark.sources.fixtures import load
     from processor_spark.streaming import pipelines as P
-    from tools.semdedup_router512_probe import build_layout
+    from tools.jittered_layout import build_layout
 
     spark = build_session(app_name="compact-fold-probe")
     build_layout(spark)

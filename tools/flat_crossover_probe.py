@@ -24,7 +24,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from processor_spark.session import build_session
 from processor_spark.operators import similarity as S
-from processor_spark.streaming import pipelines as P
 from processor_spark.sources.fixtures import load
 
 DST = "/tmp/processor_spark-ann-bits-probe-64x"
@@ -48,7 +47,7 @@ for nlist in (8192, 32768):
     cents = spark.createDataFrame(rows, "cid long, cm array<bigint>")
     legs = {
         "flat": lambda: S._numpy_flat_assign(vecs, cents),
-        "np_rp3": lambda: P._numpy_assign(vecs, rows, two_level=True, rprobe=3),
+        "np_rp3": lambda: S._numpy_routed_assign(vecs, cents, rprobe=3),
         "cat_rp3": lambda: S._assign_cells(
             vecs, cents, nlist, two_level=True, rprobe=3
         ),

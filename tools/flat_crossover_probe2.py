@@ -14,7 +14,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from processor_spark.session import build_session
 from processor_spark.operators import similarity as S
-from processor_spark.streaming import pipelines as P
 from processor_spark.sources.fixtures import load
 
 DST = "/tmp/processor_spark-ann-bits-probe-64x"
@@ -37,7 +36,7 @@ for nlist in (512, 1024, 2048, 4096):
     for rnd in (1, 2):
         for name, build in (
             ("flat", lambda: S._numpy_flat_assign(vecs, cents)),
-            ("np_rp3", lambda: P._numpy_assign(vecs, rows, two_level=True, rprobe=3)),
+            ("np_rp3", lambda: S._numpy_routed_assign(vecs, cents, rprobe=3)),
         ):
             spark.catalog.clearCache()
             t0 = time.perf_counter()

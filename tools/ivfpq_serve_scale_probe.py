@@ -36,11 +36,11 @@ def main() -> None:
     from processor_spark import registry
     from processor_spark.operators import similarity as S
     from processor_spark.session import build_session
-    from tools.semdedup_router512_probe import build_layout
+    from tools.jittered_layout import build_layout
 
     registry.load_all_modules()
     spark = build_session(app_name="ivfpq-serve-probe")
-    build_layout(spark)
+    build_layout(spark, REPL)
     out = {}
 
     for builder, fam in (

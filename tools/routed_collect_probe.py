@@ -10,7 +10,7 @@ Per nlist in {32768, 65536, 131072, 262144}:
                    (wall + driver RSS delta + resident bytes held)
   - arrow_collect: Arrow toPandas + np.stack into (cids, C) numpy
                    (the candidate replacement — same values)
-  - router_groups: driver-side _router_groups over the rows
+  - router_groups: driver-side _router_groups_np over the rows' matrix
   - e2e numpy routed rp3 assign wall at 128k synthetic vectors
   - e2e Catalyst routed rp3 wall (the distributed alternative that
     never materializes python-object centroids on the driver)
@@ -89,9 +89,9 @@ for nlist in NLISTS:
 
     # 2. driver-side router construction over those rows
     t0 = time.perf_counter()
-    cseeds, groups = S._router_groups(rows)
+    S._router_groups_np(np.asarray([cm for _, cm in sorted(rows)], dtype=np.float64))
     row["router_groups_s"] = round(time.perf_counter() - t0, 2)
-    del cseeds, groups, rows
+    del rows
     gc.collect()
 
     # 3. Arrow collect into numpy (candidate replacement)

@@ -140,7 +140,7 @@ def main() -> None:
 
     src = os.path.join(DST, "embeddings.parquet")
     if not os.path.isdir(src) and not os.path.exists(src):
-        sys.exit(f"layout missing: run tools/semdedup_router512_probe.py first ({src})")
+        sys.exit(f"layout missing: run tools/ann_bits_probe.py first ({src})")
     import pyarrow.dataset as ds
 
     tbl = ds.dataset(src).to_table(columns=["vec_id", "embedding"])

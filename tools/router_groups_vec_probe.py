@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """r14-opt: re-measure the routed assignment ladder after
-_router_groups' fine->seed routing went vectorized (the pure-python
+_router_groups_np's fine->seed routing went vectorized (the pure-python
 loop measured 42.2 s driver-side at nlist=32768 — the real cliff
 behind the r14-close "routed degrades with ncoarse" rows; the
 per-group gather loop was only ~3 s single-threaded).
@@ -11,9 +11,11 @@ rounds, consumer action toPandas, clearCache between legs.  The flat
 leg is UNTOUCHED by the change and serves as the in-run machine-hour
 control against the r14-close rows (SCALE.md).  cat_rp3 (Catalyst
 routed) computes its groups Spark-side and is unaffected — omitted.
+The r14-opt np_rp3 leg (a row-list front to the same kernel) is gone
+with that front; np_routed_rp3 is the kernel it fronted.
 
-Driver-side _router_groups is additionally timed standalone per nlist
-(the component the change targets).
+Driver-side _router_groups_np is additionally timed standalone per
+nlist (the component the change targets).
 """
 
 import json
@@ -21,11 +23,12 @@ import os
 import sys
 import time
 
+import numpy as np
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from processor_spark.operators import similarity as S
 from processor_spark.session import build_session
 from processor_spark.sources.fixtures import load
-from processor_spark.streaming import pipelines as P
 from tools.canary import canary
 
 DST = "/tmp/processor_spark-ann-bits-probe-64x"
@@ -50,14 +53,14 @@ out = {"canary": canary(), "loadavg_1m": round(os.getloadavg()[0], 2)}
 for nlist in (8192, 32768):
     rows = seed_rows[:nlist]
     cents = spark.createDataFrame(rows, "cid long, cm array<bigint>")
+    C = np.asarray([cm for _, cm in rows], dtype=np.float64)
     t0 = time.perf_counter()
-    S._router_groups(rows)
+    S._router_groups_np(C)
     out.setdefault(f"nlist={nlist}", {})["router_groups_driver_s"] = round(
         time.perf_counter() - t0, 2
     )
     legs = {
         "flat": lambda: S._numpy_flat_assign(vecs, cents),
-        "np_rp3": lambda: P._numpy_assign(vecs, rows, two_level=True, rprobe=3),
         "np_routed_rp3": lambda: S._numpy_routed_assign(vecs, cents, rprobe=3),
     }
     for rnd in (1, 2):

@@ -43,10 +43,10 @@ def main() -> None:
     from processor_spark.session import build_session
     from processor_spark.sources.fixtures import load
     from processor_spark.streaming import pipelines as P
-    from tools.semdedup_router512_probe import build_layout
+    from tools.jittered_layout import build_layout
 
     spark = build_session(app_name="semdedup-monitored-probe")
-    build_layout(spark)
+    build_layout(spark, REPL)
     work = tempfile.mkdtemp(prefix="semdedup-monitored-")
     inbox = os.path.join(work, "inbox")
     os.makedirs(inbox)

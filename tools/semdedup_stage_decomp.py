@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""SemDeDup r13 stage decomposition at the 64x jittered layout: routed-rp3 train / assign / pair timings + Sigma-occ2 + max_occ (SCALE.md r13).  Requires the ann-bits 64x layout (run tools/semdedup_router512_probe.py or tools/ann_bits_probe.py first)."""
+"""SemDeDup r13 stage decomposition at the 64x jittered layout: routed-rp3 train / assign / pair timings + Sigma-occ2 + max_occ (SCALE.md r13).  Requires the ann-bits 64x layout (run tools/ann_bits_probe.py first)."""
 
 import json, os, sys, time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))

@@ -36,7 +36,11 @@ SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> None:
     from pyspark.sql import types as T
 
-    from processor_spark.operators.similarity import _ivfk_cents, _micro_arr
+    from processor_spark.operators.similarity import (
+        _cents_np,
+        _ivfk_cents,
+        _micro_arr,
+    )
     from processor_spark.session import build_session
     from processor_spark.sources import load
     from processor_spark.streaming import pipelines as P
@@ -63,8 +67,9 @@ def main() -> None:
         ]
     )
     static = spark.read.schema(schema).parquet(chunks)
-    cents = _ivfk_cents(static.select("vec_id", _micro_arr("embedding").alias("vm")))
-    cents_rows = [(r.cid, list(r.cm)) for r in cents.collect()]
+    cents = _cents_np(
+        _ivfk_cents(static.select("vec_id", _micro_arr("embedding").alias("vm")))
+    )
 
     stream = (
         spark.readStream.schema(schema)
@@ -77,7 +82,7 @@ def main() -> None:
         sunk.append((batch_id, batch_df.count()))
 
     q = (
-        P.semdedup_stream_flags(stream, cents_rows)
+        P.semdedup_stream_flags(stream, cents)
         .writeStream.foreachBatch(sink)
         .outputMode("update")
         .option("checkpointLocation", ckpt)

@@ -4024,6 +4024,23 @@ def heal_swapped_root(root: str) -> None:
         os.replace(os.path.join(parent, olds[0]), root)
 
 
+def _swap_root(stage: str, root: str) -> None:
+    """Two-rename whole-root swap (stage in, live aside, GC) — each
+    rename atomic, a crash between them healed on entry by
+    heal_swapped_root (the r11 compaction contract)."""
+    import os
+    import shutil
+    import uuid
+
+    if os.path.isdir(root):
+        old = root + f".old-{uuid.uuid4().hex[:8]}"
+        os.replace(root, old)   # live root aside (atomic)
+        os.replace(stage, root)  # new complete tree in (atomic)
+        shutil.rmtree(old, ignore_errors=True)  # best-effort GC
+    else:
+        os.replace(stage, root)
+
+
 def compact_ivf_append_index(spark: SparkSession, sf_dir: str, path: str | None = None) -> str:
     """LSM-style maintenance for the generational IVF index: fold every
     generation's assignments into a single rewritten gen=0 (same
@@ -4071,15 +4088,12 @@ def compact_ivf_append_index(spark: SparkSession, sf_dir: str, path: str | None 
         gf = spark.read.schema("vec_id bigint, vm array<bigint>, cell bigint").parquet(gdir)
         merged = gf if merged is None else merged.unionByName(gf)
     write_partitioned(merged, os.path.join(stage, "gen=0"), "cell")
-    old = assign_root + f".old-{uuid.uuid4().hex[:8]}"
-    os.replace(assign_root, old)      # old layout aside (atomic)
-    os.replace(stage, assign_root)    # new single-gen layout in (atomic)
+    _swap_root(stage, assign_root)
     meta = dict(meta, compacted=True)
     tmp = meta_path + f".tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as fh:
         json.dump(meta, fh)
-    os.replace(tmp, meta_path)  # marker last
-    shutil.rmtree(old, ignore_errors=True)  # best-effort GC of the old tree
+    os.replace(tmp, meta_path)  # marker last, after the swap
     return path
 
 

@@ -983,12 +983,84 @@ def quality_model_stats(docs: DataFrame) -> DataFrame:
     return _ols_stats_frame(_feat_from(docs))
 
 
+# ------------------- the stream-index generation log, shared by the
+# IVF and text stream indexes (stream_ivf_ingest,
+# stream_text_index_ingest).  Every micro-batch publishes one
+# ``gen=<batch_id>`` directory by an atomic rename, and a fold names its
+# generation after the highest batch id it holds, so the highest
+# generation name is the log's high-water mark.  A sink skips every
+# batch id at or below it: the Structured Streaming idempotent-sink rule
+# (remember the last committed batch id, ignore replays at or below it,
+# as FileStreamSink.addBatch does), with the directory names as the
+# record.  Names stay integers, so Spark's partition inference over a
+# whole index root still reads ``gen`` as bigint.  A generation cannot
+# be keyed by its source files instead: DataFrame.inputFiles() is empty
+# on a foreachBatch frame.
+
+
+def _gen_ids(root: str) -> list[int]:
+    """Ascending batch ids of the generations published under ``root``
+    ([] before the first); the last is the high-water mark."""
+    import os
+
+    if not os.path.isdir(root):
+        return []
+    return sorted(int(g[4:]) for g in os.listdir(root) if g.startswith("gen="))
+
+
+def _publish_gen(root: str, batch_id: int, write) -> None:
+    """Publish micro-batch ``batch_id`` as ``root/gen=<batch_id>``.
+    ``write(stage)`` fills a stage dir beside ``root`` and returns
+    whether it holds a generation (an empty micro-batch's stage is
+    discarded).  One atomic rename makes the generation visible whole
+    or not at all — which is what lets a sink skip every batch id at or
+    below the high-water mark instead of rewriting it."""
+    import os
+    import shutil
+
+    stage = os.path.join(os.path.dirname(root), f".stage-gen-{batch_id}")
+    shutil.rmtree(stage, ignore_errors=True)  # a crashed write's debris
+    if not write(stage):
+        shutil.rmtree(stage, ignore_errors=True)
+        return
+    os.makedirs(root, exist_ok=True)
+    os.replace(stage, os.path.join(root, f"gen={batch_id}"))
+
+
+def _read_gens(spark: SparkSession, root: str, gens: list[int], schema: str) -> DataFrame:
+    """The union of generations ``gens`` under ``root``, each read with
+    ``schema`` (a partition column in it is inferred from the dirs)."""
+    import os
+    from functools import reduce
+
+    return reduce(
+        DataFrame.unionByName,
+        (spark.read.schema(schema).parquet(os.path.join(root, f"gen={g}")) for g in gens),
+    )
+
+
+def _fold_gens(
+    spark: SparkSession, root: str, gens: list[int], schema: str, part: str, stage: str
+) -> str:
+    """Fold generations ``gens`` into one, written clustered by ``part``
+    as ``stage/gen=<max(gens)>``: the high-water name, so a replay of
+    any folded batch id stays at or below the mark and is skipped.
+    Returns the written generation dir."""
+    import os
+
+    from processor_spark.operators.similarity import write_partitioned
+
+    out = os.path.join(stage, f"gen={gens[-1]}")
+    write_partitioned(_read_gens(spark, root, gens, schema), out, part)
+    return out
+
+
 # ------------------- streaming vector ingest into a generational IVF
 # index (r10).  The batch half (build_ivf_append_index /
 # compact_ivf_append_index) absorbs a two-way split; this is the
 # continuous form: every micro-batch of embeddings becomes a new
-# generation directory under frozen centroids, written idempotently
-# so foreachBatch replays after a crash converge to the same layout.
+# generation directory under frozen centroids, published through the
+# generation log above.
 
 
 def stream_ivf_ingest(
@@ -1003,12 +1075,15 @@ def stream_ivf_ingest(
     table (one exact-integer Lloyd round — the offline-training stand-
     in); every batch (including the first) is assigned against those
     frozen centroids and written as ``assignments/gen=<batch_id>``
-    partitioned by cell.  Writes are idempotent per batch id (staging
-    dir + atomic rename; a replayed batch after a crash re-stages and
-    re-renames the SAME generation), so exactly-once layout follows
-    from foreachBatch's at-least-once replay + idempotent sink — the
-    standard Structured Streaming sink contract.  Serving reads the
-    centroid table + every generation's probed cells
+    partitioned by cell.  Each generation is published whole by an
+    atomic rename, and a batch id at or below the highest published
+    generation (the high-water mark) is skipped, so exactly-once layout
+    follows from foreachBatch's at-least-once replay + idempotent sink
+    — the standard Structured Streaming sink contract.  A fresh
+    checkpoint over the same chunk log, in the same order, is a no-op;
+    a fresh checkpoint over a chunk log that lost files (retention) is
+    not supported — its batch ids no longer name the same chunks.
+    Serving reads the centroid table + every generation's probed cells
     (serve_ivf_stream_index); compaction is the batch half's
     compact_ivf_append_index generalized — fold gens, keep centroids.
 
@@ -1063,15 +1138,18 @@ def stream_ivf_ingest(
         .option("maxFilesPerTrigger", 1)
         .parquet(chunks_dir)
     )
+    root = os.path.join(path, "assignments")
+    cents_dir = os.path.join(path, "centroids")
 
     def sink(batch_df, batch_id):
+        if batch_id <= max(_gen_ids(root), default=-1):
+            return  # published whole already: the replay is a no-op
         vecs = batch_df.select("vec_id", _micro_arr("embedding").alias("vm"))
-        cents_dir = os.path.join(path, "centroids")
         if not os.path.isdir(cents_dir):
             if not batch_df.count():
                 return
-            # first batch trains the frozen centroids (idempotent: a
-            # replay of batch 0 retrains from the identical batch).
+            # first batch trains the frozen centroids (a replay of it
+            # after the centroids landed reuses them).
             # Seeds come from THIS batch's lowest vec_ids — file
             # listing order is not contractual, so absolute-id seeding
             # (vec_id 1..nlist) can land on a batch without those ids
@@ -1089,37 +1167,24 @@ def stream_ivf_ingest(
                     F.col("vm").alias("cm"),
                 )
             )
-            stage_c = os.path.join(path, f".stage-cents-{uuid.uuid4().hex[:8]}")
-            _ivfa_cents(vecs, seeds=seeds).write.parquet(stage_c)
-            n_c = len(_cents_np_path(stage_c)[0])
-            if n_c != IVFK_NLIST:
-                shutil.rmtree(stage_c, ignore_errors=True)
-                raise ValueError(
-                    f"degenerate first batch: trained {n_c} centroids, "
-                    f"expected {IVFK_NLIST} — refusing to freeze an "
-                    "under-seeded index"
-                )
-            try:
-                os.replace(stage_c, cents_dir)
-            except OSError:
-                shutil.rmtree(stage_c, ignore_errors=True)  # lost the race
-        gen_dir = os.path.join(path, "assignments", f"gen={batch_id}")
-        stage = os.path.join(path, f".stage-gen-{batch_id}")
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(gen_dir, ignore_errors=True)  # replayed batch: redo
-        assigned = _numpy_assign_auto(vecs, _cents_np_path(cents_dir))
-        # write_partitioned, not raw partitionBy: without the repartition
-        # every micro-batch task sprays a file into every cell dir it
-        # holds rows for (the r13-measured 56,161-file class,
-        # similarity.write_partitioned) — post-retrain at derived
-        # nlist=512 each generation would multiply files by task-width
-        # and gens accumulate until compaction (VERDICT r13 weak #1).
-        write_partitioned(assigned, stage, "cell")
-        if not _snapshot_parquet_files(stage):
-            shutil.rmtree(stage, ignore_errors=True)  # empty batch
-            return
-        os.makedirs(os.path.dirname(gen_dir), exist_ok=True)
-        os.replace(stage, gen_dir)
+            stage = os.path.join(path, f".stage-cents-{uuid.uuid4().hex[:8]}")
+            _stage_centroids(_ivfa_cents(vecs, seeds=seeds), stage, IVFK_NLIST)
+            os.replace(os.path.join(stage, "centroids"), cents_dir)
+            shutil.rmtree(stage, ignore_errors=True)
+
+        def write(stage):
+            # write_partitioned, not raw partitionBy: without the
+            # repartition every micro-batch task sprays a file into
+            # every cell dir it holds rows for (the r13-measured
+            # 56,161-file class, similarity.write_partitioned) —
+            # post-retrain at derived nlist=512 each generation would
+            # multiply files by task-width and gens accumulate until
+            # compaction (VERDICT r13 weak #1).
+            assigned = _numpy_assign_auto(vecs, _cents_np_path(cents_dir))
+            write_partitioned(assigned, stage, "cell")
+            return bool(_snapshot_parquet_files(stage))  # empty batch: none
+
+        _publish_gen(root, batch_id, write)
 
     run_foreach_batch_ckpt(stream, sink, ckpt, timeout_s=timeout_s)
     return path
@@ -1209,18 +1274,9 @@ def serve_ivf_stream_index(spark: SparkSession, path: str, query_df: DataFrame) 
     )
     cells = sorted(set(near.ravel().tolist()))
     root = os.path.join(path, "assignments")
-    frames = []
-    for g in sorted(os.listdir(root)):
-        if not g.startswith("gen="):
-            continue
-        frames.append(
-            spark.read.schema("vec_id bigint, vm array<bigint>, cell bigint")
-            .parquet(os.path.join(root, g))
-            .where(F.col("cell").isin(cells))
-        )
-    assign = frames[0]
-    for fr in frames[1:]:
-        assign = assign.unionByName(fr)
+    assign = _read_gens(
+        spark, root, _gen_ids(root), "vec_id bigint, vm array<bigint>, cell bigint"
+    ).where(F.col("cell").isin(cells))
     cand = assign.join(F.broadcast(probes), "cell").where(
         F.col("vec_id") != F.col("q_id")
     )
@@ -1313,48 +1369,37 @@ def _retrain_cents(vecs: DataFrame) -> tuple[int, int, DataFrame]:
     )
 
 
-def _stage_centroids(
-    spark: SparkSession, cents: DataFrame, stage: str, nlist: int
-) -> DataFrame:
-    """Write the trained centroids into the stage tree and verify the
-    row count BEFORE anything swaps (a short train — empty seeds, bad
-    snapshot — must fail loudly, not serve a half-index).  Returns the
-    re-read frame (reading back decouples later consumers from the
-    persisted training lineage)."""
+def _stage_centroids(cents: DataFrame, stage: str, nlist: int):
+    """Write the trained centroids as ``stage/centroids`` and verify the
+    row count BEFORE anything publishes them (a short train — a
+    degenerate first batch, empty seeds, a bad snapshot — must fail
+    loudly, not serve a half-index; the stage is removed).  The count
+    is the pyarrow read (similarity._cents_np_path, no Spark job), and
+    its (cids, C) numpy pair is returned."""
     import os
     import shutil
 
-    cents.write.parquet(os.path.join(stage, "centroids"))
-    got = spark.read.parquet(os.path.join(stage, "centroids"))
-    n_c = got.count()
-    if n_c != nlist:
+    from processor_spark.operators.similarity import _cents_np_path
+
+    out = os.path.join(stage, "centroids")
+    cents.write.parquet(out)
+    staged = _cents_np_path(out)
+    if len(staged[0]) != nlist:
         shutil.rmtree(stage, ignore_errors=True)
-        raise ValueError(f"retrain produced {n_c} centroids, expected {nlist}")
-    return got
-
-
-def _swap_root(stage: str, root: str) -> None:
-    """Two-rename whole-root swap (stage in, live aside, GC) — each
-    rename atomic, a crash between them healed on entry by
-    heal_swapped_root (the r11 compaction contract)."""
-    import os
-    import shutil
-    import uuid
-
-    if os.path.isdir(root):
-        old = root + f".old-{uuid.uuid4().hex[:8]}"
-        os.replace(root, old)   # live root aside (atomic)
-        os.replace(stage, root)  # new complete tree in (atomic)
-        shutil.rmtree(old, ignore_errors=True)  # best-effort GC
-    else:
-        os.replace(stage, root)
+        raise ValueError(
+            f"trained {len(staged[0])} centroids, expected {nlist} — "
+            "refusing to publish an under-seeded index"
+        )
+    return staged
 
 
 def compact_ivf_stream_index(
     spark: SparkSession, path: str, retrain: bool = False
 ) -> str:
     """LSM maintenance for the stream-maintained IVF index: fold every
-    assignment generation into one gen=0, and with ``retrain=True``
+    assignment generation into one named after the highest batch id it
+    holds (``gen=<hi>``, so the ingest's high-water skip still covers
+    every folded batch), and with ``retrain=True``
     also RE-TRAIN the centroids on the full accumulated corpus and
     re-assign every vector (VERDICT r10 missing #3: stream_ivf_ingest
     freezes first-batch centroids forever, so a drifting embedding
@@ -1370,91 +1415,87 @@ def compact_ivf_stream_index(
 
     Swap is WHOLE-ROOT (centroids and assignments must change
     together under retrain): stage a complete new index tree as a
-    sibling, rename the live root aside, rename the stage in.  The
-    two renames are individually atomic; a crash between them is
-    healed on entry by heal_swapped_root (the r11 compaction
-    contract), applied to the INDEX ROOT here."""
+    sibling, rename the live root aside, rename the stage in
+    (similarity._swap_root).  The two renames are individually atomic;
+    a crash between them is healed on entry by heal_swapped_root (the
+    r11 compaction contract), applied to the INDEX ROOT here."""
     import os
     import shutil
     import uuid
 
-    from processor_spark.operators.similarity import heal_swapped_root
+    from processor_spark.operators.similarity import (
+        _assign_cells,
+        _swap_root,
+        heal_swapped_root,
+        write_partitioned,
+    )
 
     heal_swapped_root(path)
     root = os.path.join(path, "assignments")
-    gens = sorted(g for g in os.listdir(root) if g.startswith("gen="))
+    gens = _gen_ids(root)
     if len(gens) <= 1 and not retrain:
         return path  # already compact, centroids untouched
 
-    # explicit file-list snapshot (ADVICE r12 medium): the assignments
-    # dir GROWS a generation per micro-batch, and _ivfa_cents persists
-    # its plan — a dir-path read would build the identical logical plan
-    # on every retrain and the CacheManager would serve the PRIOR
-    # epoch's cached training rows (the exact stale-cache failure the
-    # r12 drift test caught on the SemDeDup path).  cell is a partition
-    # DIR, absent from leaf files — this read doesn't need it (the
-    # retrain recomputes every cell).
-    files = _snapshot_parquet_files(root)
-    vecs = (
-        spark.read.schema("vec_id bigint, vm array<bigint>")
-        .parquet(*files)
-        .select("vec_id", "vm")
-    )
     stage = path + f".stage-compact-{uuid.uuid4().hex[:8]}"
-    shutil.rmtree(stage, ignore_errors=True)
     if retrain:
+        # explicit file-list snapshot (ADVICE r12 medium): the
+        # assignments dir GROWS a generation per micro-batch, and
+        # _ivfa_cents persists its plan — a dir-path read would build
+        # the identical logical plan on every retrain and the
+        # CacheManager would serve the PRIOR epoch's cached training
+        # rows (the exact stale-cache failure the r12 drift test caught
+        # on the SemDeDup path).  cell is a partition DIR, absent from
+        # leaf files — this read doesn't need it (the retrain
+        # recomputes every cell).
+        vecs = spark.read.schema("vec_id bigint, vm array<bigint>").parquet(
+            *_snapshot_parquet_files(root)
+        )
         # retrain is exactly when a growing stream must re-derive its
         # cell count — the occupancy rule applied at the moment the
         # full accumulated corpus is in hand (shared kernel with
         # retrain_semdedup_stream, r13; fixture-scale tests see the
         # unchanged IVFK_NLIST floor)
         _n, nlist, cents = _retrain_cents(vecs)
-        new_cents = _stage_centroids(spark, cents, stage, nlist)
+        _stage_centroids(cents, stage, nlist)
+        new_cents = spark.read.schema("cid bigint, cm array<bigint>").parquet(
+            os.path.join(stage, "centroids")
+        )
         # derived nlist → the O(n·nlist) flat re-assign is the two-level
         # router's exact use case (auto past TWOLEVEL_MIN_NLIST; flat —
         # byte-identical to _ivfa_assign — at the fixture-scale floor)
-        from processor_spark.operators.similarity import _assign_cells
-
-        reassigned = _assign_cells(
-            vecs, new_cents.selectExpr("cid", "cm"), nlist
-        ).select("vec_id", "cell", "vm")
-    else:
-        cents = spark.read.parquet(os.path.join(path, "centroids"))
-        cents.write.parquet(os.path.join(stage, "centroids"))
-        # fold-only compaction KEEPS every vector's cell — and the cell
-        # is already encoded in each leaf file's cell= directory.
-        # Re-deriving it with the flat _ivfa_assign crossJoin (the
-        # pre-r14 path) was O(n·nlist) waste (128k × 512 ≈ 66M zip_with
-        # folds: measured 247.6 s vs 5.9 s for the path-parse fold at
-        # 64×/nlist=512 — SCALE.md r14) AND not cell-preserving: a
-        # post-retrain gen=0 carries the retrain's ROUTED assignment,
-        # so the flat rederive silently moved boundary vectors between
-        # cells on every fold (invisible at the fixture floor where
-        # flat == flat).  Parse the partition value from the file path
-        # instead — the explicit file-list snapshot read is what drops
-        # partition columns.
-        reassigned = vecs.withColumn(
+        write_partitioned(
+            _assign_cells(vecs, new_cents, nlist).select("vec_id", "cell", "vm"),
+            os.path.join(stage, "assignments", f"gen={gens[-1]}"),
             "cell",
-            F.regexp_extract(
-                F.input_file_name(), r"cell=([0-9]+)", 1
-            ).cast("long"),
-        ).select("vec_id", "cell", "vm")
-    from processor_spark.operators.similarity import write_partitioned
-
-    write_partitioned(
-        reassigned, os.path.join(stage, "assignments", "gen=0"), "cell"
-    )
+        )
+    else:
+        # fold-only compaction KEEPS every vector's cell, and each
+        # generation's cell= directories already carry it.  Re-deriving
+        # it with the flat _ivfa_assign crossJoin (the pre-r14 path) was
+        # O(n·nlist) waste (128k × 512 ≈ 66M zip_with folds: measured
+        # 247.6 s vs 5.9 s for the path-parse fold at 64×/nlist=512 —
+        # SCALE.md r14) AND not cell-preserving: a post-retrain
+        # generation carries the retrain's ROUTED assignment, so the
+        # flat rederive silently moved boundary vectors between cells on
+        # every fold (invisible at the fixture floor where flat == flat).
+        shutil.copytree(
+            os.path.join(path, "centroids"), os.path.join(stage, "centroids")
+        )
+        _fold_gens(
+            spark, root, gens, "vec_id bigint, vm array<bigint>, cell bigint",
+            "cell", os.path.join(stage, "assignments"),
+        )
     _swap_root(stage, path)
     return path
 
 
 # ------------------- streaming text-index ingest (r10): the text twin
 # of stream_ivf_ingest — every micro-batch of documents becomes a new
-# posting GENERATION (partitioned by term bucket), with that batch's
-# corpus stats sealed INSIDE the staged generation tree so a replayed
-# batch overwrites both atomically (idempotent sink; no state-store
-# state — the index is the state, the checkpoint holds offsets only).
-
+# posting GENERATION (partitioned by term bucket) on the shared
+# generation log, with that batch's corpus stats sealed INSIDE the
+# staged generation tree so data and stats publish together
+# (idempotent sink; no state-store state — the index is the state, the
+# checkpoint holds offsets only).
 
 def stream_text_index_ingest(
     spark: SparkSession, chunks_dir: str, path: str, ckpt: str,
@@ -1466,13 +1507,18 @@ def stream_text_index_ingest(
     partitioned, exactly the batch builder's layout) with a
     ``_GEN_STATS.json`` (n_docs, tot_toks) sealed in the same staged
     tree before the atomic rename.  Readers sum the per-generation
-    stats instead of trusting a mutable global marker, so replays
-    can't double-count: a replayed batch re-stages and re-renames the
-    SAME generation, data and stats together."""
+    stats instead of trusting a mutable global marker, and a batch id
+    at or below the highest published generation (the high-water mark,
+    which an in-stream fold keeps) is skipped, so replays can't
+    double-count: a same-checkpoint replay after a crash and a fresh
+    checkpoint over the same chunk log, in the same order, are both
+    no-ops.  A fresh checkpoint over a chunk log that lost files
+    (retention) is not supported — its batch ids no longer name the
+    same chunks."""
     import json
     import os
-    import shutil
 
+    from processor_spark.operators.similarity import write_partitioned
     from processor_spark.operators.text import _postings_frame
 
     schema = T.StructType(
@@ -1489,23 +1535,19 @@ def stream_text_index_ingest(
         .option("maxFilesPerTrigger", 1)
         .parquet(chunks_dir)
     )
+    root = os.path.join(path, "postings")
 
     def sink(batch_df, batch_id):
+        gens = _gen_ids(root)
+        if batch_id <= max(gens, default=-1):
+            return  # published whole already: the replay is a no-op
         n = batch_df.count()
         if not n:
             return
-        gen_root = os.path.join(path, "postings")
-        if (
-            os.path.isdir(gen_root)
-            and not os.path.isdir(os.path.join(gen_root, f"gen={batch_id}"))
-            and sum(
-                1 for g in os.listdir(gen_root) if g.startswith("gen=")
-            )
-            >= TEXT_FOLD_MAX_GENS
-        ):
-            # in-stream fold (r15): every gen on disk is committed (this
-            # batch's own gen is absent — see TEXT_FOLD_MAX_GENS), so the
-            # compactor may fold all of them; serving is layout-agnostic.
+        if len(gens) >= TEXT_FOLD_MAX_GENS:
+            # in-stream fold (r15): every gen on disk is published whole
+            # and below this batch id, so the compactor may fold all of
+            # them; serving is layout-agnostic.
             compact_text_stream_index(batch_df.sparkSession, path)
         if n >= TEXT_INGEST_SPREAD_MIN_DOCS:
             # one chunk file = one partition: tokenize + posexplode
@@ -1523,22 +1565,33 @@ def stream_text_index_ingest(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("tot_toks"),
         ).collect()[0]
-        gen_dir = os.path.join(path, "postings", f"gen={batch_id}")
-        stage = os.path.join(path, f".stage-gen-{batch_id}")
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(gen_dir, ignore_errors=True)  # replayed batch: redo
-        # Clustered per-generation write (VERDICT r13 weak #1): one file
-        # per term-bucket dir per generation instead of tasks×buckets.
-        from processor_spark.operators.similarity import write_partitioned
 
-        write_partitioned(postings, stage, "tbucket")
-        with open(os.path.join(stage, "_GEN_STATS.json"), "w") as fh:
-            json.dump({"n_docs": st.n_docs, "tot_toks": st.tot_toks}, fh)
-        os.makedirs(os.path.dirname(gen_dir), exist_ok=True)
-        os.replace(stage, gen_dir)
+        def write(stage):
+            # Clustered per-generation write (VERDICT r13 weak #1): one
+            # file per term-bucket dir per generation, not tasks×buckets.
+            write_partitioned(postings, stage, "tbucket")
+            with open(os.path.join(stage, "_GEN_STATS.json"), "w") as fh:
+                json.dump({"n_docs": st.n_docs, "tot_toks": st.tot_toks}, fh)
+            return True  # n > 0: the stats count even with no posting
+
+        _publish_gen(root, batch_id, write)
 
     run_foreach_batch_ckpt(stream, sink, ckpt, timeout_s=timeout_s)
     return path
+
+
+def _text_gen_stats(root: str, gens: list[int]) -> tuple[int, int]:
+    """(n_docs, tot_toks) summed over the sealed stats of ``gens``."""
+    import json
+    import os
+
+    n_docs = tot_toks = 0
+    for g in gens:
+        with open(os.path.join(root, f"gen={g}", "_GEN_STATS.json")) as fh:
+            st = json.load(fh)
+        n_docs += st["n_docs"]
+        tot_toks += st["tot_toks"]
+    return n_docs, tot_toks
 
 
 def serve_text_stream_bm25(spark: SparkSession, path: str) -> DataFrame:
@@ -1546,7 +1599,6 @@ def serve_text_stream_bm25(spark: SparkSession, path: str) -> DataFrame:
     corpus stats are the SUM of every generation's sealed stats; the
     read opens only the query terms' term-bucket directories in each
     generation (absent dir = bucket empty in that generation)."""
-    import json
     import os
 
     from processor_spark.operators.text import (
@@ -1556,15 +1608,10 @@ def serve_text_stream_bm25(spark: SparkSession, path: str) -> DataFrame:
     )
 
     root = os.path.join(path, "postings")
-    gens = sorted(g for g in os.listdir(root) if g.startswith("gen="))
-    n_docs = tot_toks = 0
-    for g in gens:
-        with open(os.path.join(root, g, "_GEN_STATS.json")) as fh:
-            st = json.load(fh)
-        n_docs += st["n_docs"]
-        tot_toks += st["tot_toks"]
+    gens = _gen_ids(root)
+    n_docs, tot_toks = _text_gen_stats(root, gens)
     dirs = [
-        os.path.join(root, g, f"tbucket={_term_bucket_py(t)}")
+        os.path.join(root, f"gen={g}", f"tbucket={_term_bucket_py(t)}")
         for g in gens
         for t in BM25_TERMS
     ]
@@ -1578,53 +1625,43 @@ def serve_text_stream_bm25(spark: SparkSession, path: str) -> DataFrame:
 
 
 def compact_text_stream_index(spark: SparkSession, path: str) -> str:
-    """Fold every posting generation into a single rewritten gen=0 —
-    the text twin of compact_ivf_append_index: read fan-out stops
+    """Fold every posting generation into one named after the highest
+    batch id it holds (``gen=<hi>``, so the ingest's high-water skip
+    still covers every folded batch) — the text twin of
+    compact_ivf_stream_index, through the same fold: read fan-out stops
     growing with ingest count, stats are summed into the merged
-    generation's sealed stats file, and the swap is crash-safe: stage
-    the full new tree, rename the old postings root aside, rename the
-    new one in.  The two renames are individually atomic but the pair
-    is not — a crash between them leaves no postings root and a
-    complete ``.old-*`` survivor, so entry self-heals by renaming the
-    survivor back (heal_swapped_root, ADVICE r10).  Serving
-    (serve_text_stream_bm25) is layout-agnostic: it sums whatever
-    generations exist, so answers are bit-identical before and after
-    (asserted in tests/test_streaming.py)."""
+    generation's sealed stats file, and the swap is crash-safe
+    (similarity._swap_root): stage the full new tree, rename the old
+    postings root aside, rename the new one in.  The two renames are
+    individually atomic but the pair is not — a crash between them
+    leaves no postings root and a complete ``.old-*`` survivor, so
+    entry self-heals by renaming the survivor back (heal_swapped_root,
+    ADVICE r10).  Serving (serve_text_stream_bm25) is layout-agnostic:
+    it sums whatever generations exist, so answers are bit-identical
+    before and after (asserted in tests/test_streaming.py)."""
     import json
     import os
-    import shutil
     import uuid
 
-    from processor_spark.operators.similarity import heal_swapped_root
+    from processor_spark.operators.similarity import _swap_root, heal_swapped_root
 
     root = os.path.join(path, "postings")
     heal_swapped_root(root)
-    gens = sorted(g for g in os.listdir(root) if g.startswith("gen="))
+    gens = _gen_ids(root)
     if len(gens) <= 1:
         return path  # already compact
 
-    n_docs = tot_toks = 0
-    merged = None
-    for g in gens:
-        with open(os.path.join(root, g, "_GEN_STATS.json")) as fh:
-            st = json.load(fh)
-        n_docs += st["n_docs"]
-        tot_toks += st["tot_toks"]
-        gf = spark.read.schema(
-            "term string, doc_id bigint, tf bigint,"
-            " positions array<int>, dl bigint, tbucket bigint"
-        ).parquet(os.path.join(root, g))
-        merged = gf if merged is None else merged.unionByName(gf)
+    n_docs, tot_toks = _text_gen_stats(root, gens)
     stage = os.path.join(path, f".stage-compact-{uuid.uuid4().hex[:8]}")
-    from processor_spark.operators.similarity import write_partitioned
-
-    write_partitioned(merged, os.path.join(stage, "gen=0"), "tbucket")
-    with open(os.path.join(stage, "gen=0", "_GEN_STATS.json"), "w") as fh:
+    out = _fold_gens(
+        spark, root, gens,
+        "term string, doc_id bigint, tf bigint,"
+        " positions array<int>, dl bigint, tbucket bigint",
+        "tbucket", stage,
+    )
+    with open(os.path.join(out, "_GEN_STATS.json"), "w") as fh:
         json.dump({"n_docs": n_docs, "tot_toks": tot_toks}, fh)
-    old = root + f".old-{uuid.uuid4().hex[:8]}"
-    os.replace(root, old)    # old layout aside (atomic)
-    os.replace(stage, root)  # new single-gen layout in (atomic)
-    shutil.rmtree(old, ignore_errors=True)  # best-effort GC
+    _swap_root(stage, root)
     return path
 
 
@@ -1768,13 +1805,15 @@ TEXT_INGEST_SPREAD_MIN_DOCS = 4096
 # the generation axis — measured 0.93 s (compact) vs 1.7-2.8 s warm /
 # 19.7 s cold at 16 generations, with the 4.2 s fold paying for
 # itself within ~2 serves (SCALE.md r14 text_serve_gens_probe).  The
-# fold runs at the START of a sink invocation, where every generation
-# on disk is from a COMMITTED batch — and is skipped when the current
-# batch's own generation already exists (a replayed batch), so an
-# uncommitted generation can never be folded into gen=0 and then
-# re-written (the double-count hazard).  12 keeps worst-case serve
-# fan-out below the measured degradation knee while folding ~1/12th
-# of ingests.
+# fold runs in a sink invocation before the batch's own generation is
+# published, and only for a batch id above the high-water mark (a
+# replay at or below it returns first), so every generation it folds
+# is published whole and below the current batch.  The fold keeps the
+# high-water name (gen=<hi>), so a fresh checkpoint replaying the same
+# chunk log is skipped batch by batch instead of rewriting gen=0 over
+# the folded index (ADVICE r15).  12 keeps worst-case serve fan-out
+# below the measured degradation knee while folding ~1/12th of
+# ingests.
 TEXT_FOLD_MAX_GENS = 12
 
 
@@ -1885,8 +1924,8 @@ def retrain_semdedup_stream(
     import uuid
 
     from processor_spark.operators.similarity import (
-        _cents_np_path,
         _micro_arr,
+        _swap_root,
         heal_swapped_root,
     )
 
@@ -1902,13 +1941,12 @@ def retrain_semdedup_stream(
 
     stage = root + f".stage-retrain-{uuid.uuid4().hex[:8]}"
     shutil.rmtree(stage, ignore_errors=True)
-    _stage_centroids(spark, cents, stage, nlist)
+    staged = _stage_centroids(cents, stage, nlist)
     # the epoch's TRAINING cell histogram — the baseline the drift
     # trigger (semdedup_drift_stat) compares arrivals against.  One
     # assignment pass over the corpus; the numpy assign prices this at
     # 1.83 s per 128k vectors (SCALE.md r13), negligible next to the
     # 66 s training it rides behind.
-    staged = _cents_np_path(os.path.join(stage, "centroids"))
     hist = {
         str(int(r.cell)): int(r.n)
         for r in semdedup_assign_frame(static, staged)

@@ -1125,7 +1125,7 @@ def test_stream_ivf_retrain_compaction_handles_drift(spark, tmp_path):
     gens = sorted(
         d for d in os.listdir(os.path.join(path, "assignments")) if d.startswith("gen=")
     )
-    assert gens == ["gen=0"], gens
+    assert gens == ["gen=1"], gens
     retrained = sorted(
         tuple(r) for r in spark.read.parquet(os.path.join(path, "centroids")).collect()
     )
@@ -1193,7 +1193,7 @@ def test_stream_text_index_bm25_equals_full_rebuild_and_replay_safe(spark, tmp_p
     gens3 = sorted(
         g for g in os.listdir(os.path.join(path, "postings")) if g.startswith("gen=")
     )
-    assert gens3 == ["gen=0"], gens3
+    assert gens3 == ["gen=2"], gens3
     compacted = sorted(
         tuple(r) for r in P.serve_text_stream_bm25(spark, path).collect()
     )
@@ -1202,7 +1202,7 @@ def test_stream_text_index_bm25_equals_full_rebuild_and_replay_safe(spark, tmp_p
     P.compact_text_stream_index(spark, path)
     assert sorted(
         g for g in os.listdir(os.path.join(path, "postings")) if g.startswith("gen=")
-    ) == ["gen=0"]
+    ) == ["gen=2"]
 
 
 def test_stream_text_index_autofold_bounds_generations(
@@ -1215,10 +1215,10 @@ def test_stream_text_index_autofold_bounds_generations(
     With the trigger forced to 3, six one-file batches must leave at
     most 3 generations on disk — and the served BM25 must still equal
     the one-shot full-corpus key exactly (folding changes layout,
-    never answers).  Same-checkpoint resume stays safe (batch ids
-    continue past the folded gen=0); a FRESH-checkpoint replay over a
-    folded index was already out of contract for the manual
-    compactor, which the auto-fold rides unchanged."""
+    never answers).  A fold keeps the high-water name gen=<hi>, so
+    both a same-checkpoint resume and a fresh-checkpoint replay of the
+    same chunk log skip every folded batch id
+    (test_stream_index_fresh_checkpoint_over_folded_index)."""
     import os
 
     from processor_spark.operators.text import q_bm25
@@ -1239,11 +1239,83 @@ def test_stream_text_index_autofold_bounds_generations(
         g for g in os.listdir(os.path.join(path, "postings")) if g.startswith("gen=")
     )
     # without the fold 6 batches leave 6 generations; the forced
-    # trigger folds at batches 3 and 5, leaving {gen=0, gen=5}
+    # trigger folds {0,1,2} → gen=2 at batch 3 and {2,3,4} → gen=4 at
+    # batch 5, leaving {gen=4, gen=5}
     assert len(gens) <= 3, gens
     got = sorted(tuple(r) for r in P.serve_text_stream_bm25(spark, path).collect())
     want = sorted(tuple(r) for r in q_bm25.__wrapped__(spark, SF_SMALL).collect())
     assert got == want and len(got) > 0
+
+
+@pytest.mark.parametrize("index", ["text", "ivf"])
+def test_stream_index_fresh_checkpoint_over_folded_index(
+    spark, tmp_path, monkeypatch, index
+):
+    """ADVICE r15 medium: a fold names its generation after the highest
+    batch id it holds, and both ingest sinks skip every batch id at or
+    below that high-water mark.  A fresh checkpoint (batch ids restart
+    at 0) replaying the same chunk log in the same order over a folded
+    index is therefore a no-op: same generations, same answers.  When a
+    fold wrote gen=0, the replay of batch 0 deleted the folded
+    multi-batch generation and re-wrote batch 0 alone."""
+    import json
+    import os
+
+    chunks = tmp_path / "chunks"
+    chunks.mkdir()
+    path = str(tmp_path / "index")
+    if index == "text":
+        from processor_spark.operators.text import q_bm25
+
+        pdf = load(spark, SF_SMALL, "documents").toPandas().sort_values("doc_id")
+        step = len(pdf) // 6 + 1
+        parts = [pdf.iloc[lo : lo + step] for lo in range(0, len(pdf), step)]
+        monkeypatch.setattr(P, "TEXT_FOLD_MAX_GENS", 3)
+        root = os.path.join(path, "postings")
+
+        def ingest(ckpt):
+            P.stream_text_index_ingest(spark, str(chunks), path, str(tmp_path / ckpt))
+
+        def served():
+            return sorted(tuple(r) for r in P.serve_text_stream_bm25(spark, path).collect())
+    else:
+        pdf, parts = _ivf_chunk_frames(spark, 3)
+        root = os.path.join(path, "assignments")
+        qdf = _local_queries(spark)
+
+        def ingest(ckpt):
+            P.stream_ivf_ingest(spark, str(chunks), path, str(tmp_path / ckpt))
+
+        def served():
+            return sorted(
+                tuple(r) for r in P.serve_ivf_stream_index(spark, path, qdf).collect()
+            )
+
+    for i, part in enumerate(parts):
+        part.to_parquet(chunks / f"chunk_{i:02d}.parquet", index=False)
+    ingest("ckpt")
+    if index == "ivf":
+        P.compact_ivf_stream_index(spark, path)
+
+    def gens():
+        return sorted(g for g in os.listdir(root) if g.startswith("gen="))
+
+    folded = gens()
+    assert len(folded) < len(parts), folded
+    before = served()
+    assert len(before) > 0
+
+    ingest("ckpt_fresh")
+    assert gens() == folded
+    assert served() == before
+    if index == "text":
+        n_docs = 0
+        for g in folded:
+            with open(os.path.join(root, g, "_GEN_STATS.json")) as fh:
+                n_docs += json.load(fh)["n_docs"]
+        assert n_docs == len(pdf)
+        want = sorted(tuple(r) for r in q_bm25.__wrapped__(spark, SF_SMALL).collect())
+        assert before == want
 
 
 def _emb_schema():
@@ -2239,6 +2311,26 @@ def test_stream_ivf_ingest_and_serve_job_budget(spark, tmp_path):
     got = P.serve_ivf_stream_index(spark, path, qdf).collect()
     assert next_job() - j0 <= 4
     assert len(got) > 0
+
+
+def test_stream_ivf_ingest_refuses_degenerate_first_batch(spark, tmp_path):
+    """A first micro-batch with fewer vectors than IVFK_NLIST trains
+    fewer centroids than the frozen table needs.  The ingest must raise
+    before publishing anything: no centroids dir and no stage debris."""
+    import os
+
+    from processor_spark.operators.similarity import IVFK_NLIST
+
+    chunks = tmp_path / "chunks"
+    chunks.mkdir()
+    pdf, _ = _ivf_chunk_frames(spark, 1)
+    pdf.head(5).to_parquet(chunks / "chunk_00.parquet", index=False)
+    path = str(tmp_path / "ivf")
+    with pytest.raises(Exception, match=f"5 centroids, expected {IVFK_NLIST}"):
+        P.stream_ivf_ingest(spark, str(chunks), path, str(tmp_path / "ckpt"))
+    assert not os.path.isdir(os.path.join(path, "centroids"))
+    left = os.listdir(path) if os.path.isdir(path) else []
+    assert not [d for d in left if d.startswith(".stage")], left
 
 
 def test_stream_ivf_ingest_empty_chunk_adds_no_generation(spark, tmp_path):

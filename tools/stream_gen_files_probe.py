@@ -81,6 +81,9 @@ def main() -> None:
 
     t0 = time.perf_counter()
     P.compact_ivf_stream_index(spark, path, retrain=True)
+    # the retrain folds into one generation named for the high-water
+    # batch id; every generation above it is a post-retrain arrival
+    folded = f"gen={P._gen_ids(os.path.join(path, 'assignments'))[-1]}"
     nlist = spark.read.parquet(os.path.join(path, "centroids")).count()
     print(json.dumps({"retrain_s": round(time.perf_counter() - t0, 1),
                       "derived_nlist": int(nlist)}), flush=True)
@@ -96,7 +99,7 @@ def main() -> None:
     P.stream_ivf_ingest(spark, inbox, path, ckpt)
     ingest_post_s = round(time.perf_counter() - t0, 1)
     counts = count_leaf_files(os.path.join(path, "assignments"))
-    post_gens = {g: c for g, c in counts.items() if g != "gen=0"}
+    post_gens = {g: c for g, c in counts.items() if g != folded}
     print(json.dumps({
         "ingest_post_s": ingest_post_s,
         "files_per_gen_clustered": counts,
@@ -126,7 +129,7 @@ def main() -> None:
         "one_gen_clustered_files": clustered_files,
     }), flush=True)
 
-    # serve against the accumulated generations (gen=0 + post gens)
+    # serve against the accumulated generations (folded + post gens)
     from processor_spark.operators.similarity import KNN_QUERIES
 
     qv = (

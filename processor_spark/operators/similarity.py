@@ -1826,7 +1826,11 @@ def ivf_kmeans_topk(
         .where(F.col("rn") <= nprobe)
         .select("q_id", "qm", F.col("cid").alias("cell"))
     )
-    cand = assign.join(probes, "cell").where(F.col("vec_id") != F.col("q_id"))
+    # the probes are |Q|·nprobe rows: broadcast them, so the corpus side
+    # streams through without a shuffle on cell
+    cand = assign.join(F.broadcast(probes), "cell").where(
+        F.col("vec_id") != F.col("q_id")
+    )
     wr = Window.partitionBy("q_id").orderBy("sq", "vec_id")
     return (
         cand.select(

@@ -1,4 +1,11 @@
-from processor_spark.sources.fixtures import TABLES, load, load_all, register_views, schema_for
+from processor_spark.sources.fixtures import (
+    TABLES,
+    load,
+    load_all,
+    register_views,
+    row_key,
+    schema_for,
+)
 from processor_spark.sources.lakehouse import CommitConflict, LakeCatalog, LakeTable
 
 __all__ = [
@@ -6,6 +13,7 @@ __all__ = [
     "load",
     "load_all",
     "register_views",
+    "row_key",
     "schema_for",
     "LakeTable",
     "LakeCatalog",

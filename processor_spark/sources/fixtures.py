@@ -13,6 +13,7 @@ layout can change freely underneath them.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Fixture parquet stores timestamps with isAdjustedToUTC=false → Spark
@@ -130,18 +131,31 @@ def schema_for(table: str) -> T.StructType:
     return _SCHEMAS[table]
 
 
+def row_key(table: str) -> str:
+    """The table's row key: the first field of its pinned schema, which
+    in every fixture table is the id column."""
+    return _SCHEMAS[table].fields[0].name
+
+
 def load(
     spark: SparkSession, sf_dir: str, table: str, spread: bool = False
 ) -> DataFrame:
     """Load one fixture table as a batch DataFrame with its pinned schema.
 
-    ``spread=True`` round-robins the rows across the session's default
-    parallelism straight off the scan. Use it ONLY ahead of
-    compute-dense per-row/per-pair stages (vector scoring, simhash bit
-    voting): a small table arrives as a single file split, so without
-    it the expensive stage runs on one core no matter how many the
-    cluster has. Filter-then-aggregate paths should NOT spread — the
-    extra exchange would cost more than the map work it balances.
+    ``spread=True`` hash-partitions the rows on the table's row key
+    (``row_key(table)``: the first field of the pinned schema, its id
+    column) across the session's default parallelism straight off the
+    scan. Use it ONLY ahead of compute-dense per-row/per-pair stages
+    (vector scoring, simhash bit voting): a small table arrives as a
+    single file split, so without it the expensive stage runs on one
+    core no matter how many the cluster has. The row key is unique
+    (lineitem: a handful of lines per order), so the hash still splits
+    the rows evenly. Hashing on the id rather than round-robin also
+    pays for the next wide operator: its HashPartitioning satisfies the
+    clustered distribution of every grouping, window or join whose keys
+    include the id, so the first such operator plans no exchange of its
+    own. Filter-then-aggregate paths should NOT spread — the extra
+    exchange would cost more than the map work it balances.
     """
     if table not in _SCHEMAS:
         raise KeyError(f"unknown fixture table {table!r}; known: {TABLES}")
@@ -166,15 +180,15 @@ def load(
         # documented contract, not whatever the parquet footer says.
         df = spark.read.schema(_SCHEMAS[table]).parquet(f"{sf_dir}/{table}.parquet")
     if spread:
-        df = df.repartition(spark.sparkContext.defaultParallelism)
+        df = df.repartition(
+            spark.sparkContext.defaultParallelism, F.col(row_key(table))
+        )
     if table == "events":
         # normalize ts to the pinned TimestampType whatever the layout:
         # - driver fixture: TIMESTAMP(NANOS) surfaced as long nanos via
         #   spark.sql.legacy.parquet.nanosAsLong → timestamp_micros
         #   (lossless: fixture ns values are µs-aligned, asserted in tests)
         # - µs layouts: NTZ → TIMESTAMP under the pinned UTC session tz
-        from pyspark.sql import functions as F
-
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -561,10 +561,19 @@ class LakeTable:
         bucket dirs — the manifest plans the scan, not a listing — so
         at 100 TB a single-key fetch reads ~1/num_buckets of the table
         in the worst case instead of all of it (plus parquet row-group
-        skipping under the pushed IN-filter inside each bucket)."""
+        skipping under the pushed IN-filter inside each bucket).
+
+        The bucket probe runs no Spark job: the keys go in as a pandas
+        frame, which Arrow turns into a LocalRelation, so the optimizer
+        folds the bucket projection and the collect reads the result
+        off the plan.  An object column carries the keys as given (no
+        float round trip for large ints).  A session with Arrow off
+        still gets the right buckets, through one small job."""
+        import pandas as pd
+
         m = self.manifest(version)
         kdf = spark.createDataFrame(
-            [(k,) for k in keys],
+            pd.DataFrame({m["key"]: pd.Series(list(keys), dtype=object)}),
             f"{m['key']} {self._key_type(spark, m)}",
         )
         wanted = {

@@ -1121,9 +1121,14 @@ def stream_ivf_ingest(
         _ivfa_cents,
         _micro_arr,
         _numpy_assign_auto,
+        heal_swapped_root,
         write_partitioned,
     )
 
+    # a compaction crashed between its two renames leaves the whole
+    # index in a ``.old-*`` survivor: rename it back before the sink
+    # would start a fresh index beside it
+    heal_swapped_root(path)
     schema = T.StructType(
         [
             T.StructField("vec_id", T.LongType()),
@@ -1518,7 +1523,7 @@ def stream_text_index_ingest(
     import json
     import os
 
-    from processor_spark.operators.similarity import write_partitioned
+    from processor_spark.operators.similarity import heal_swapped_root, write_partitioned
     from processor_spark.operators.text import _postings_frame
 
     schema = T.StructType(
@@ -1536,6 +1541,7 @@ def stream_text_index_ingest(
         .parquet(chunks_dir)
     )
     root = os.path.join(path, "postings")
+    heal_swapped_root(root)  # before the high-water mark is read
 
     def sink(batch_df, batch_id):
         gens = _gen_ids(root)
@@ -1606,8 +1612,10 @@ def serve_text_stream_bm25(spark: SparkSession, path: str) -> DataFrame:
         _bm25_rank_from_postings,
         _term_bucket_py,
     )
+    from processor_spark.operators.similarity import heal_swapped_root
 
     root = os.path.join(path, "postings")
+    heal_swapped_root(root)  # recover an interrupted compaction swap
     gens = _gen_ids(root)
     n_docs, tot_toks = _text_gen_stats(root, gens)
     dirs = [

@@ -281,6 +281,35 @@ def test_read_keys_repeated_keys_read_each_row_once(table, spark):
     assert got == [(5, "v5"), (13, "v13"), (42, "v42")]
 
 
+def test_read_keys_bucket_probe_starts_no_job(table, spark):
+    """The keys enter as an Arrow LocalRelation, so the optimizer folds
+    the bucket projection and the probe's collect runs no Spark job (a
+    list-built key frame is an RDD scan: one job per lookup)."""
+    next_job = spark.sparkContext._jsc.sc().dagScheduler().nextJobId
+    j0 = next_job()
+    df = table.read_keys(spark, [5, 13, 42])
+    assert next_job() - j0 == 0
+    assert sorted((r.k, r.v) for r in df.collect()) == [(5, "v5"), (13, "v13"), (42, "v42")]
+
+
+def test_read_keys_without_arrow_and_past_float_precision(tmp_path, spark):
+    """With Arrow off the key frame takes the row path, and a key past
+    2^53 must bucket on its exact value either way (no float64 round
+    trip through pandas)."""
+    big = 2**60 + 1
+    t = LakeTable(str(tmp_path / "big"))
+    t.create(spark, _mk(spark, [(big, "b"), (big + 1, "c"), (7, "s")]), key="k", num_buckets=8)
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(conf)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(conf, arrow)
+            got = sorted((r.k, r.v) for r in t.read_keys(spark, [big, 7]).collect())
+            assert got == [(7, "s"), (big, "b")], arrow
+    finally:
+        spark.conf.set(conf, prev)
+
+
 def test_create_rejects_missing_key_column(tmp_path, spark):
     t = LakeTable(str(tmp_path / "bad"))
     with pytest.raises(ValueError, match="merge key"):

@@ -11,8 +11,11 @@ target scale.
 
 from __future__ import annotations
 
+import pytest
+
 from processor_spark import registry
 from processor_spark.plans import assert_in_plan, assert_not_in_plan, explain_str
+from processor_spark.sources import TABLES, load, row_key
 from tests.conftest import SF_SMALL
 
 registry.load_all_modules()
@@ -748,3 +751,26 @@ def test_rprobe_router_is_a_projection_with_equi_join_fine_stage(spark):
     assert "BroadcastHashJoin" in plan, plan  # fine stage equi-joins
     assert "CartesianProduct" not in plan, plan
     assert "Generate" in plan, plan           # top-rprobe explode
+
+
+@pytest.mark.parametrize("table", TABLES)
+def test_spread_hash_partitions_on_the_row_key(spark, table):
+    """load(spread=True) is a hash exchange on the table's row key, never
+    round-robin: a keyed exchange satisfies the next grouping, window or
+    join on the id, a round-robin one satisfies nothing."""
+    plan = explain_str(load(spark, SF_SMALL, table, spread=True))
+    assert f"hashpartitioning({row_key(table)}#" in plan, plan
+    assert "RoundRobinPartitioning" not in plan, plan
+
+
+@pytest.mark.parametrize(
+    "key, exchanges", [("q_dedup_minhash_md5", 3), ("q_simhash_md5", 1)]
+)
+def test_spread_exchange_is_reused_by_the_first_doc_id_shuffle(spark, key, exchanges):
+    """The per-doc aggregate after the spread plans no exchange of its
+    own: the spread's hashpartitioning(doc_id) already clusters it.
+    q_simhash_md5 keeps only the spread; q_dedup_minhash_md5 adds the
+    band and pair shuffles."""
+    plan = _df(spark, key)._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" not in plan, plan
+    assert plan.count("Exchange ") == exchanges, plan

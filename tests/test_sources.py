@@ -7,7 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from processor_spark.sources import TABLES, load, load_all, register_views, schema_for
+from processor_spark.sources import TABLES, load, load_all, register_views, row_key, schema_for
 from processor_spark.sources import sinks
 from tests.conftest import SF_SMALL
 
@@ -16,6 +16,23 @@ def test_all_tables_load_with_pinned_schemas(spark):
     for t, df in load_all(spark, SF_SMALL).items():
         assert df.schema == schema_for(t), f"{t}: {df.schema} != pinned"
         assert df.count() > 0
+
+
+def test_row_key_is_each_tables_id_column():
+    """load(spread=True) hash-partitions on row_key(table), the first
+    field of the pinned schema: pin that it is the id column."""
+    assert {t: row_key(t) for t in TABLES} == {
+        "region": "r_regionkey",
+        "nation": "n_nationkey",
+        "supplier": "s_suppkey",
+        "customer": "c_custkey",
+        "part": "p_partkey",
+        "orders": "o_orderkey",
+        "lineitem": "l_orderkey",
+        "events": "event_id",
+        "documents": "doc_id",
+        "embeddings": "vec_id",
+    }
 
 
 def test_events_ns_truncation_is_lossless(spark):

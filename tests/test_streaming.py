@@ -1318,6 +1318,81 @@ def test_stream_index_fresh_checkpoint_over_folded_index(
         assert before == want
 
 
+@pytest.mark.parametrize("index", ["text", "ivf"])
+def test_stream_index_ingest_heals_interrupted_swap(spark, tmp_path, index):
+    """A compaction that crashed between _swap_root's two renames leaves
+    no live root and one complete ``.old-*`` survivor.  The next ingest
+    must rename the survivor back before it reads the high-water mark:
+    otherwise it starts a fresh root (the IVF index even retrains its
+    centroids on the one new batch) and strands the earlier batches."""
+    import json
+    import os
+
+    chunks = tmp_path / "chunks"
+    chunks.mkdir()
+    path = str(tmp_path / "index")
+    ckpt = str(tmp_path / "ckpt")
+    if index == "text":
+        from processor_spark.operators.text import q_bm25
+
+        pdf = load(spark, SF_SMALL, "documents").toPandas().sort_values("doc_id")
+        step = len(pdf) // 3 + 1
+        parts = [pdf.iloc[lo : lo + step] for lo in range(0, len(pdf), step)]
+        swapped = gen_root = os.path.join(path, "postings")
+
+        def ingest(p, c):
+            P.stream_text_index_ingest(spark, str(chunks), p, c)
+
+        def served(p):
+            return sorted(tuple(r) for r in P.serve_text_stream_bm25(spark, p).collect())
+    else:
+        pdf, parts = _ivf_chunk_frames(spark, 3)
+        swapped, gen_root = path, os.path.join(path, "assignments")
+        qdf = _local_queries(spark)
+
+        def ingest(p, c):
+            P.stream_ivf_ingest(spark, str(chunks), p, c)
+
+        def served(p):
+            return sorted(
+                tuple(r) for r in P.serve_ivf_stream_index(spark, p, qdf).collect()
+            )
+
+    assert len(parts) == 3
+    for i, part in enumerate(parts[:2]):
+        part.to_parquet(chunks / f"chunk_{i:02d}.parquet", index=False)
+        ingest(path, ckpt)
+    os.replace(swapped, swapped + ".old-deadbeef")  # crash mid-swap
+    parts[2].to_parquet(chunks / "chunk_02.parquet", index=False)
+    ingest(path, ckpt)
+
+    assert sorted(g for g in os.listdir(gen_root) if g.startswith("gen=")) == [
+        "gen=0", "gen=1", "gen=2"
+    ]
+    parent = os.path.dirname(swapped)
+    assert not [d for d in os.listdir(parent) if ".old-" in d]
+    got = served(path)
+    assert len(got) > 0
+    if index == "text":
+        n_docs = 0
+        for g in ("gen=0", "gen=1", "gen=2"):
+            with open(os.path.join(gen_root, g, "_GEN_STATS.json")) as fh:
+                n_docs += json.load(fh)["n_docs"]
+        assert n_docs == len(pdf)
+        assert got == sorted(
+            tuple(r) for r in q_bm25.__wrapped__(spark, SF_SMALL).collect()
+        )
+    else:
+        n = spark.read.schema("vec_id bigint, vm array<bigint>, cell bigint").parquet(
+            gen_root
+        ).count()
+        assert n == len(pdf)
+        # the twin: the same three chunks ingested with no crash
+        twin = str(tmp_path / "twin")
+        ingest(twin, str(tmp_path / "ckpt_twin"))
+        assert got == served(twin)
+
+
 def _emb_schema():
     from pyspark.sql import types as T
 

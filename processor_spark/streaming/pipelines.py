@@ -1027,31 +1027,25 @@ def _publish_gen(root: str, batch_id: int, write) -> None:
     os.replace(stage, os.path.join(root, f"gen={batch_id}"))
 
 
-def _read_gens(spark: SparkSession, root: str, gens: list[int], schema: str) -> DataFrame:
-    """The union of generations ``gens`` under ``root``, each read with
-    ``schema`` (a partition column in it is inferred from the dirs)."""
-    import os
-    from functools import reduce
-
-    return reduce(
-        DataFrame.unionByName,
-        (spark.read.schema(schema).parquet(os.path.join(root, f"gen={g}")) for g in gens),
-    )
-
-
 def _fold_gens(
     spark: SparkSession, root: str, gens: list[int], schema: str, part: str, stage: str
 ) -> str:
     """Fold generations ``gens`` into one, written clustered by ``part``
     as ``stage/gen=<max(gens)>``: the high-water name, so a replay of
     any folded batch id stays at or below the mark and is skipped.
-    Returns the written generation dir."""
+    Each generation is read with ``schema`` (a partition column in it
+    is inferred from the dirs).  Returns the written generation dir."""
     import os
+    from functools import reduce
 
     from processor_spark.operators.similarity import write_partitioned
 
     out = os.path.join(stage, f"gen={gens[-1]}")
-    write_partitioned(_read_gens(spark, root, gens, schema), out, part)
+    folded = reduce(
+        DataFrame.unionByName,
+        (spark.read.schema(schema).parquet(os.path.join(root, f"gen={g}")) for g in gens),
+    )
+    write_partitioned(folded, out, part)
     return out
 
 
@@ -1221,25 +1215,38 @@ def _nearest_cells(Q, cids, C, nprobe: int):
 
 def serve_ivf_stream_index(spark: SparkSession, path: str, query_df: DataFrame) -> DataFrame:
     """k-NN against the stream-maintained IVF index: probe the frozen
-    centroids with the query batch, then read ONLY the probed cells
-    from every generation directory (an absent cell dir in a
-    generation means no vectors landed there — skip).  Same exact
-    integer ranking as the batch serve keys.
+    centroids with the query batch, then score ONLY the probed cells
+    of every generation directory (an absent cell dir in a generation
+    means no vectors landed there — skip).  Same exact integer ranking
+    as the batch serve keys.
 
     ``query_df`` needs (q_id, qm).  The probe runs on the driver: the
     query batch is collected ONCE through Arrow — O(nq·d) values, the
     same order as the nq·KNN_K result rows every caller collects — and
     scored in numpy against the centroids read with pyarrow
-    (similarity._cents_np_path, the index's local-filesystem contract:
-    generations are os.listdir'ed and swapped with os.replace under
-    the same root).  Distances are exact integers (micro-units under
-    the _assert_sub53 bound), and a stable argsort over cid-ascending
-    columns keeps the IVF_NPROBE nearest cells in (sq, cid) order —
-    the tie-break of the row_number window it replaces.  The probes
-    join the candidate scan as a local DataFrame, so a call costs the
-    query collect plus the final top-k plan (≤ 4 jobs for a local
-    query frame, pinned in tests/test_streaming.py).  An empty query
-    batch returns an empty frame with the same schema."""
+    (similarity._cents_np_path).  Distances are exact integers
+    (micro-units under the _assert_sub53 bound), and a stable argsort
+    over cid-ascending columns keeps the IVF_NPROBE nearest cells in
+    (sq, cid) order.
+
+    The candidate side is a per-task top-k.  The probed
+    ``gen=<g>/cell=<c>`` leaf files are listed with os.listdir (the
+    index's local-filesystem contract: generations are published and
+    swapped with os.replace under the same root) and handed to the
+    tasks as a local (path, cell) frame, so no InMemoryFileIndex
+    listing job runs however many dirs are probed.  One mapInPandas
+    reads each file with pyarrow and scores it against the queries
+    that probe its cell — the closure carries the query ids, vectors
+    and probed cells, O(nq·d) values — with the same exact integer
+    distances (float64 under _assert_sub53, score blocks of ~4M
+    entries).  A task drops ``vec_id == q_id`` and emits at most
+    KNN_K rows per query, ranked by (sq, vec_id), so the one exchange
+    left, the final row_number over q_id, moves at most
+    tasks·nq·KNN_K rows.  A call costs the query collect plus that
+    exchange and the result (≤ 3 jobs for a local query frame, pinned
+    in tests/test_streaming.py).  An empty query batch, an index with
+    no generation yet, or probed cells empty in every generation give
+    an empty frame with the same schema."""
     import os
 
     import numpy as np
@@ -1250,52 +1257,82 @@ def serve_ivf_stream_index(spark: SparkSession, path: str, query_df: DataFrame) 
         IVF_NPROBE,
         KNN_K,
         _cents_np_path,
-        _int_sqdist,
         heal_swapped_root,
     )
 
     heal_swapped_root(path)  # recover an interrupted compaction swap
     cids, C = _cents_np_path(os.path.join(path, "centroids"))
-    qsrc = query_df.select("q_id", "qm")
-    q = qsrc.toPandas()
+    q = query_df.select("q_id", "qm").toPandas()
+    q_ids = q["q_id"].to_numpy().astype(np.int64)
     Q = (
         np.stack(q["qm"].to_numpy()).astype(np.float64)
         if len(q)
         else np.zeros((0, C.shape[1]), dtype=np.float64)
     )
     near = _nearest_cells(Q, cids, C, IVF_NPROBE)
-    k = near.shape[1]
-    probes = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "q_id": np.repeat(q["q_id"].to_numpy(), k),
-                "qm": np.repeat(q["qm"].to_numpy(), k),
-                "cell": near.ravel(),
-            }
-        ),
-        T.StructType(
-            [*qsrc.schema.fields, T.StructField("cell", T.LongType())]
-        ),
-    )
-    cells = sorted(set(near.ravel().tolist()))
     root = os.path.join(path, "assignments")
-    assign = _read_gens(
-        spark, root, _gen_ids(root), "vec_id bigint, vm array<bigint>, cell bigint"
-    ).where(F.col("cell").isin(cells))
-    cand = assign.join(F.broadcast(probes), "cell").where(
-        F.col("vec_id") != F.col("q_id")
+    files = [
+        (f, c)
+        for g in _gen_ids(root)
+        for c in np.unique(near).tolist()
+        for f in _snapshot_parquet_files(os.path.join(root, f"gen={g}", f"cell={c}"))
+    ]
+
+    def topk(it):
+        import pyarrow.parquet as pq
+
+        from processor_spark.operators.similarity import _assert_sub53
+
+        q2 = (Q * Q).sum(axis=1)
+        # (query row, sq, vec_id) of the rows kept so far
+        a, b, v = np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64)
+        for pdf in it:
+            for f, c in zip(pdf["path"], pdf["cell"]):
+                qi = np.flatnonzero((near == c).any(axis=1))
+                with pq.ParquetFile(f) as pf:
+                    t = pf.read(columns=["vec_id", "vm"])
+                vid = t.column("vec_id").to_numpy().astype(np.int64)
+                V = (
+                    t.column("vm").combine_chunks().flatten()
+                    .to_numpy(zero_copy_only=False)
+                    .reshape(len(vid), Q.shape[1]).astype(np.float64)
+                )
+                _assert_sub53(V)
+                v2 = (V * V).sum(axis=1)
+                step = max(KNN_K, (1 << 22) // max(1, len(qi)))
+                for lo in range(0, len(vid), step):
+                    Vb, ib = V[lo : lo + step], vid[lo : lo + step]
+                    sq = q2[qi, None] + v2[None, lo : lo + len(ib)] - 2.0 * (Q[qi] @ Vb.T)
+                    sq[q_ids[qi, None] == ib[None, :]] = np.inf
+                    # each query's KNN_K-th smallest sq; ties at it all
+                    # survive to the (sq, vec_id) cut below
+                    cut = (
+                        np.partition(sq, KNN_K - 1, axis=1)[:, KNN_K - 1]
+                        if len(ib) > KNN_K
+                        else np.full(len(qi), np.inf)
+                    )
+                    r, j = np.nonzero((sq <= cut[:, None]) & np.isfinite(sq))
+                    a = np.concatenate([a, qi[r]])
+                    b = np.concatenate([b, sq[r, j]])
+                    v = np.concatenate([v, ib[j]])
+                    # keep the first KNN_K per query by (sq, vec_id)
+                    o = np.lexsort((v, b, a))
+                    a, b, v = a[o], b[o], v[o]
+                    keep = np.arange(len(a)) - np.searchsorted(a, a) < KNN_K
+                    a, b, v = a[keep], b[keep], v[keep]
+        yield pd.DataFrame({"q_id": q_ids[a], "vec_id": v, "sq": b.astype(np.int64)})
+
+    cand = spark.createDataFrame(files, "path string, cell bigint").mapInPandas(
+        topk, "q_id bigint, vec_id bigint, sq bigint"
     )
     wr = Window.partitionBy("q_id").orderBy("sq", "vec_id")
     return (
-        cand.select(
-            "q_id", "vec_id", _int_sqdist(F.col("qm"), F.col("vm")).alias("sq")
-        )
-        .withColumn("rank", F.row_number().over(wr))
+        cand.withColumn("rank", F.row_number().over(wr))
         .where(F.col("rank") <= KNN_K)
         .select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.col("sq").cast("long").alias("sq_micro2"),
+            F.col("sq").alias("sq_micro2"),
             F.col("rank").cast("long").alias("rank"),
         )
     )

@@ -2366,7 +2366,14 @@ def test_stream_ivf_ingest_and_serve_job_budget(spark, tmp_path):
     costs only write_partitioned's shuffle + write (the centroids are
     read with pyarrow and assigned in numpy — no count(), no schema
     inference, no crossJoin), and a serve of a local query frame costs
-    the query collect plus the final top-k plan."""
+    the query collect plus the exchange of the per-task top-k rows and
+    the result, also when more than 32 gen=/cell= dirs are probed."""
+    import os
+
+    import numpy as np
+
+    from processor_spark.operators.similarity import IVF_NPROBE, KNN_K, _cents_np_path
+
     next_job = spark.sparkContext._jsc.sc().dagScheduler().nextJobId
     chunks = tmp_path / "chunks"
     chunks.mkdir()
@@ -2384,8 +2391,30 @@ def test_stream_ivf_ingest_and_serve_job_budget(spark, tmp_path):
     qdf = _local_queries(spark)
     j0 = next_job()
     got = P.serve_ivf_stream_index(spark, path, qdf).collect()
-    assert next_job() - j0 <= 4
+    assert next_job() - j0 <= 3
     assert len(got) > 0
+
+    # past parallelPartitionDiscovery.threshold (32 paths): the probed
+    # files reach the tasks as a local frame, so no listing job appears
+    rng = np.random.default_rng(5)
+    cents = [(c, [int(x) for x in rng.integers(-40, 41, 4)]) for c in range(1, 9)]
+    rows = [
+        (g, c, 1000 * g + 10 * c + i, [int(x) for x in rng.integers(-40, 41, 4)])
+        for g in range(20)
+        for c in range(1, 9)
+        for i in range(5)
+    ]
+    wide = str(tmp_path / "wide")
+    _write_ivf_layout(wide, cents, rows)
+    queries = [(q, [int(x) for x in rng.integers(-40, 41, 4)]) for q in range(16)]
+    Q = np.asarray([qm for _, qm in queries], dtype=np.float64)
+    cids, C = _cents_np_path(os.path.join(wide, "centroids"))
+    assert 20 * len(np.unique(P._nearest_cells(Q, cids, C, IVF_NPROBE))) > 32
+    qdf = spark.createDataFrame(queries, "q_id bigint, qm array<bigint>")
+    j0 = next_job()
+    got = P.serve_ivf_stream_index(spark, wide, qdf).collect()
+    assert next_job() - j0 <= 3
+    assert len(got) == len(queries) * KNN_K
 
 
 def test_stream_ivf_ingest_refuses_degenerate_first_batch(spark, tmp_path):
@@ -2447,10 +2476,39 @@ def test_stream_ivf_ingest_empty_chunk_adds_no_generation(spark, tmp_path):
     assert n == len(pdf)
 
 
+def _write_ivf_layout(path, cents, rows):
+    """A stream IVF index written with pyarrow: ``cents`` as (cid, cm)
+    pairs and ``rows`` as (gen, cell, vec_id, vm), one file per
+    gen=/cell= dir — the layout stream_ivf_ingest publishes."""
+    import os
+    from collections import defaultdict
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(os.path.join(path, "centroids"))
+    pq.write_table(
+        pa.table({"cid": [c for c, _ in cents], "cm": [m for _, m in cents]}),
+        os.path.join(path, "centroids", "part-0.parquet"),
+    )
+    dirs = defaultdict(list)
+    for g, c, v, m in rows:
+        dirs[(g, c)].append((v, m))
+    for (g, c), vs in dirs.items():
+        d = os.path.join(path, "assignments", f"gen={g}", f"cell={c}")
+        os.makedirs(d)
+        pq.write_table(
+            pa.table({"vec_id": [v for v, _ in vs], "vm": [m for _, m in vs]}),
+            os.path.join(d, "part-0.parquet"),
+        )
+
+
 def _catalyst_serve(spark, path, query_df):
     """The pre-numpy serve, kept as the reference: the frozen centroids
     read by Spark, probed with a broadcast crossJoin + (sq, cid)
-    row_number window, then the same candidate join and top-k."""
+    row_number window, then a candidate join over every generation,
+    the interpreted integer distance per pair and a (sq, vec_id)
+    row_number top-k."""
     import os
 
     from processor_spark.operators.similarity import IVF_NPROBE, KNN_K, _int_sqdist
@@ -2466,7 +2524,7 @@ def _catalyst_serve(spark, path, query_df):
     )
     cells = sorted({r.cell for r in probes.select("cell").distinct().collect()})
     assign = spark.read.schema("vec_id bigint, vm array<bigint>, cell bigint").parquet(
-        os.path.join(path, "assignments", "gen=0")
+        os.path.join(path, "assignments")
     ).where(F.col("cell").isin(cells))
     wr = Window.partitionBy("q_id").orderBy("sq", "vec_id")
     return (
@@ -2489,8 +2547,10 @@ def test_serve_ivf_probe_equals_catalyst_probe(spark, tmp_path):
     Catalyst crossJoin + row_number((sq, cid)) probe it replaced:
     planted equal-distance and duplicate centroids stored out of cid
     order (ties resolve by cid), a table with fewer centroids than
-    IVF_NPROBE (every query probes all of them), and an empty query
-    batch (an empty frame with the serve's usual schema)."""
+    IVF_NPROBE (every query probes all of them), an empty query batch
+    (an empty frame with the serve's usual schema), and a
+    multi-generation index served against the reference over every
+    generation."""
     import os
 
     import numpy as np
@@ -2563,6 +2623,59 @@ def test_serve_ivf_probe_equals_catalyst_probe(spark, tmp_path):
         assert [(f.name, f.dataType) for f in empty.schema] == [
             (f.name, f.dataType) for f in ref.schema
         ]
+
+    # three generations, every probed cell file holding more than KNN_K
+    # candidates, a query (101) whose own vec_id sits in a probed cell,
+    # and sq = 9 ties at the KNN_K cut with ids interleaved over the
+    # generations: the lower vec_id wins wherever it landed
+    axes = [[3, 0, 0, 0], [0, 3, 0, 0], [-3, 0, 0, 0], [0, -3, 0, 0], [0, 0, 3, 0], [0, 0, -3, 0]]
+    rows = [(2, 2, 999, [1, 0, 0, 0])]  # the one vector nearer than the ties
+    for g in range(3):
+        for i in range(7):
+            rows.append((g, 1, 101 + 3 * i + g, axes[(i + g) % 6]))
+            for c in (2, 3):
+                far = [int(x) for x in rng.integers(10, 31, 4)]
+                rows.append((g, c, 300 * c + 10 * g + i, far))
+    path = str(tmp_path / "multi_gen")
+    _write_ivf_layout(path, [(1, [0, 0, 0, 0]), (2, [0, 0, 0, 8]), (3, [50, 50, 50, 50])], rows)
+    mq = spark.createDataFrame(
+        [(1, [0, 0, 0, 0]), (101, [0, 0, 0, 0]), (800, [45, 50, 55, 50])]
+        + [(700 + i, [int(x) for x in rng.integers(-12, 31, 4)]) for i in range(6)],
+        "q_id bigint, qm array<bigint>",
+    )
+    sc = spark.sparkContext
+    j0 = sc._jsc.sc().dagScheduler().nextJobId()
+    got = sorted(tuple(r) for r in P.serve_ivf_stream_index(spark, path, mq).collect())
+    tasks = [
+        sc.statusTracker().getStageInfo(st).numTasks
+        for j in range(j0, sc._jsc.sc().dagScheduler().nextJobId())
+        for st in sc.statusTracker().getJobInfo(j).stageIds
+    ]
+    assert max(tasks) >= min(2, sc.defaultParallelism), tasks
+    assert got == sorted(tuple(r) for r in _catalyst_serve(spark, path, mq).collect())
+    assert [r for r in got if r[0] in (1, 101)] == sorted([
+        (1, 999, 1, 1), (1, 101, 9, 2), (1, 102, 9, 3), (1, 103, 9, 4), (1, 104, 9, 5),
+        (101, 999, 1, 1), (101, 102, 9, 2), (101, 103, 9, 3), (101, 104, 9, 4), (101, 105, 9, 5),
+    ])
+    assert {r[0] for r in got} == {1, 101, 800, *range(700, 706)}
+
+
+def test_serve_ivf_stream_index_without_probed_files(spark, tmp_path):
+    """An index whose first batch crashed between the centroid publish
+    and its _publish_gen holds centroids but no gen= dir, and probed
+    cells can be absent from every generation.  Both serve an empty
+    frame with the serve's schema instead of failing."""
+    cents = [(1, [0, 0, 0, 0]), (2, [0, 0, 0, 8]), (3, [50, 50, 50, 50])]
+    qdf = spark.createDataFrame([(1, [0, 0, 0, 0])], "q_id bigint, qm array<bigint>")
+    full = str(tmp_path / "full")
+    _write_ivf_layout(full, cents, [(0, 1, 7, [1, 0, 0, 0])])
+    served = P.serve_ivf_stream_index(spark, full, qdf)
+    assert [tuple(r) for r in served.collect()] == [(1, 7, 1, 1)]
+    for name, rows in (("no_gen", []), ("unprobed", [(0, 3, 7, [50, 0, 0, 0]), (4, 3, 8, [0, 50, 0, 0])])):
+        path = str(tmp_path / name)
+        _write_ivf_layout(path, cents, rows)
+        out = P.serve_ivf_stream_index(spark, path, qdf)
+        assert out.collect() == [] and out.schema == served.schema, name
 
 
 def test_availablenow_timeout_raises_and_resumes(spark, tmp_path):

@@ -426,10 +426,40 @@ def write_partitioned(df: DataFrame, path: str, *cols: str) -> None:
     (q_semdedup_serve 65.2 s for a 15 s pair stage — SCALE.md r13).
     One repartition makes each directory exactly one task's output →
     one file per directory; at 100 TB file count stays dir-count ×
-    O(1) instead of dir-count × cluster-width."""
+    O(1) instead of dir-count × cluster-width.
+
+    A frame that is ONE task already has that layout: a single task's
+    partitioned write sorts by the partition columns and leaves one
+    file per directory, so it is written as is, one job instead of the
+    shuffle's two (a one-file stream micro-batch: scan → numpy assign).
+    The partition count is read only where reading it is free — a plan
+    with no exchange and no subquery (_rdd_starts_no_job).  On an
+    aggregated or joined frame (PySpark 4.1, AQE on)
+    ``df.rdd.getNumPartitions()`` runs the upstream stages eagerly and
+    the write then runs them again, so such frames always take the
+    repartition."""
+    if _rdd_starts_no_job(df) and df.rdd.getNumPartitions() <= 1:
+        df.write.partitionBy(*cols).parquet(path)
+        return
     df.repartition(*[F.col(c) for c in cols]).write.partitionBy(*cols).parquet(
         path
     )
+
+
+def _rdd_starts_no_job(df: DataFrame) -> bool:
+    """True when building ``df``'s RDD starts no Spark job: its executed
+    plan holds no exchange (shuffle, broadcast or reused), no subquery,
+    and is not adaptive — AQE wraps exactly the plans that hold one of
+    those, and materializing an adaptive plan runs its query stages."""
+    todo = [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        p = todo.pop()
+        name = p.nodeName()
+        if name == "AdaptiveSparkPlan" or name.endswith("Exchange") or not p.subqueries().isEmpty():
+            return False
+        kids = p.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return True
 
 
 def _index_is_current(meta_path: str, kind: str | None = None) -> bool:

@@ -21,6 +21,7 @@ def build_session(
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
@@ -75,6 +76,14 @@ def build_session(
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
         .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+        # Python workers import processor_spark inside tasks (the stream
+        # IVF serve, the streaming SemDeDup state fn): put the package's
+        # parent dir on their path, so a driver started outside the
+        # checkout works too; a caller's PYTHONPATH stays after it
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(filter(None, [pkg_parent, os.environ.get("PYTHONPATH")])),
+        )
     )
     return builder.getOrCreate()
 

@@ -1084,9 +1084,14 @@ def stream_ivf_ingest(
     State: NONE in the state store (the index IS the state); the
     checkpoint carries only source offsets.
 
-    Job budget: a steady-state micro-batch runs exactly
-    write_partitioned's two jobs (the cell shuffle and the write).
-    The frozen centroids are read with pyarrow as a numpy pair
+    Job budget: a steady-state micro-batch runs ONE job, the write.
+    A one-file micro-batch is one partition (up to the 4 MB
+    openCostInBytes split; a larger file splits into about
+    defaultParallelism partitions and keeps the cell shuffle, 2 jobs),
+    and its plan (scan → _micro_arr → the assign's mapInPandas) holds
+    no exchange, so write_partitioned writes it as is: one task sorts
+    by cell and leaves one file per cell dir.  The frozen centroids
+    are read with pyarrow as a numpy pair
     (similarity._cents_np_path: no Spark job, no schema inference) and
     every batch is assigned by the batch path's numpy policy,
     similarity._numpy_assign_auto — exact flat (value-identical to the
@@ -1172,13 +1177,14 @@ def stream_ivf_ingest(
             shutil.rmtree(stage, ignore_errors=True)
 
         def write(stage):
-            # write_partitioned, not raw partitionBy: without the
-            # repartition every micro-batch task sprays a file into
-            # every cell dir it holds rows for (the r13-measured
-            # 56,161-file class, similarity.write_partitioned) —
-            # post-retrain at derived nlist=512 each generation would
+            # write_partitioned, not raw partitionBy: a batch wider
+            # than one partition must be clustered first, or every task
+            # sprays a file into every cell dir it holds rows for (the
+            # r13-measured 56,161-file class, similarity.write_partitioned)
+            # — post-retrain at derived nlist=512 each generation would
             # multiply files by task-width and gens accumulate until
-            # compaction (VERDICT r13 weak #1).
+            # compaction (VERDICT r13 weak #1).  A one-file batch is one
+            # partition and is written without the shuffle.
             assigned = _numpy_assign_auto(vecs, _cents_np_path(cents_dir))
             write_partitioned(assigned, stage, "cell")
             return bool(_snapshot_parquet_files(stage))  # empty batch: none
@@ -1584,15 +1590,21 @@ def stream_text_index_ingest(
         gens = _gen_ids(root)
         if batch_id <= max(gens, default=-1):
             return  # published whole already: the replay is a no-op
-        n = batch_df.count()
-        if not n:
+        # one aggregate decides emptiness and the spread below, and is
+        # the generation's sealed stats (dl holds one row per document)
+        postings, dl = _postings_frame(batch_df)
+        st = dl.agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("tot_toks"),
+        ).collect()[0]
+        if not st.n_docs:
             return
         if len(gens) >= TEXT_FOLD_MAX_GENS:
             # in-stream fold (r15): every gen on disk is published whole
             # and below this batch id, so the compactor may fold all of
             # them; serving is layout-agnostic.
             compact_text_stream_index(batch_df.sparkSession, path)
-        if n >= TEXT_INGEST_SPREAD_MIN_DOCS:
+        if st.n_docs >= TEXT_INGEST_SPREAD_MIN_DOCS:
             # one chunk file = one partition: tokenize + posexplode
             # (the compute-dense stage BEFORE the postings agg's
             # shuffle) would run on one core — the text twin of the
@@ -1602,12 +1614,7 @@ def stream_text_index_ingest(
             # batches skip it: a raw-text shuffle only pays past the
             # gate (the q_ks_test rule — spread is for compute-dense
             # maps, and below the gate the map is cheap).
-            batch_df = batch_df.repartition("doc_id")
-        postings, dl = _postings_frame(batch_df)
-        st = dl.agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("tot_toks"),
-        ).collect()[0]
+            postings, _ = _postings_frame(batch_df.repartition("doc_id"))
 
         def write(stage):
             # Clustered per-generation write (VERDICT r13 weak #1): one
@@ -1615,7 +1622,7 @@ def stream_text_index_ingest(
             write_partitioned(postings, stage, "tbucket")
             with open(os.path.join(stage, "_GEN_STATS.json"), "w") as fh:
                 json.dump({"n_docs": st.n_docs, "tot_toks": st.tot_toks}, fh)
-            return True  # n > 0: the stats count even with no posting
+            return True  # n_docs > 0: the stats count even with no posting
 
         _publish_gen(root, batch_id, write)
 

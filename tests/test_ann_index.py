@@ -422,3 +422,70 @@ def test_write_partitioned_emits_one_file_per_directory(spark, tmp_path):
         assert len(files) == 1, (d, files)
     # and nothing was lost
     assert spark.read.parquet(out).count() == 2000
+
+
+def _partitioned_layout(spark, out, col):
+    """(sorted rows read back — the partition column comes last —,
+    files per ``col=`` dir) of a partitionBy output."""
+    files = [
+        len([f for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")])
+        for d in os.listdir(out)
+        if d.startswith(f"{col}=")
+    ]
+    rows = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    return rows, files
+
+
+def test_write_partitioned_one_partition_rule(spark, tmp_path):
+    """write_partitioned's job budget and layout, counted with the DAG
+    scheduler's job counter.  A one-partition frame with no exchange in
+    its plan is written as is: ONE job and still one file per dir.  A
+    multi-partition frame, an aggregated frame and a broadcast-joined
+    frame pay exactly what repartition + write pays — reading the
+    partition count never runs their upstream stages eagerly.  Every
+    path writes the frame's rows."""
+    from pyspark.sql import functions as F
+
+    from processor_spark.operators.similarity import write_partitioned
+
+    next_job = spark.sparkContext._jsc.sc().dagScheduler().nextJobId
+    src = str(tmp_path / "one.parquet")
+    spark.range(20000).select(
+        F.col("id").alias("vec_id"), (F.col("id") % 8).alias("cell")
+    ).coalesce(1).write.parquet(src)
+    one = spark.read.parquet(src)
+    assert one.rdd.getNumPartitions() == 1
+    frames = {
+        "one_partition": one,
+        "four_partitions": spark.range(0, 20000, 1, 4).select(
+            F.col("id").alias("vec_id"), (F.col("id") % 8).alias("cell")
+        ),
+        "aggregate": one.groupBy((F.col("vec_id") % 97).alias("vec_id")).agg(
+            F.max("cell").alias("cell")
+        ),
+        # an aggregated build side: an eager partition count would run
+        # its two jobs (shuffle, broadcast) once more than the
+        # repartition it saves
+        "broadcast_join": one.join(
+            F.broadcast(one.groupBy((F.col("vec_id") % 500).alias("vec_id")).count()),
+            "vec_id",
+        ).select("vec_id", "cell"),
+    }
+    for name, df in frames.items():
+        want = sorted(tuple(r) for r in df.select("vec_id", "cell").collect())
+        ref = str(tmp_path / f"{name}_repartition")
+        j0 = next_job()
+        df.repartition("cell").write.partitionBy("cell").parquet(ref)
+        ref_jobs = next_job() - j0
+        out = str(tmp_path / name)
+        j0 = next_job()
+        write_partitioned(df, out, "cell")
+        jobs = next_job() - j0
+        if name == "one_partition":
+            assert (jobs, ref_jobs) == (1, 2), name
+        else:
+            assert jobs == ref_jobs, (name, jobs, ref_jobs)
+        rows, files = _partitioned_layout(spark, out, "cell")
+        assert files and set(files) == {1}, (name, files)
+        assert rows == _partitioned_layout(spark, ref, "cell")[0], name
+        assert rows == want, name

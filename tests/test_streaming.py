@@ -1205,6 +1205,43 @@ def test_stream_text_index_bm25_equals_full_rebuild_and_replay_safe(spark, tmp_p
     ) == ["gen=2"]
 
 
+def test_stream_text_index_ingest_job_budget(spark, tmp_path, monkeypatch):
+    """A one-file text micro-batch's Spark jobs, counted with the DAG
+    scheduler's job counter: one stats aggregate (which also decides
+    emptiness and the spread) plus the postings write — the batch is
+    not counted a second time.  Below TEXT_INGEST_SPREAD_MIN_DOCS a
+    batch costs 6 jobs; with the spread forced it costs 7 (the doc_id
+    shuffle), and both write the same sealed stats and serve the same
+    BM25 rows."""
+    import json
+    import os
+
+    next_job = spark.sparkContext._jsc.sc().dagScheduler().nextJobId
+    pdf = load(spark, SF_SMALL, "documents").toPandas().sort_values("doc_id")
+    step = len(pdf) // 3 + 1
+    served, stats = {}, {}
+    for spread_min, budget in ((P.TEXT_INGEST_SPREAD_MIN_DOCS, 6), (1, 7)):
+        monkeypatch.setattr(P, "TEXT_INGEST_SPREAD_MIN_DOCS", spread_min)
+        chunks = tmp_path / f"docs{budget}"
+        chunks.mkdir()
+        path = str(tmp_path / f"text{budget}")
+        per_batch = []
+        for i, lo in enumerate(range(0, len(pdf), step)):
+            pdf.iloc[lo : lo + step].to_parquet(chunks / f"chunk_{i:02d}.parquet", index=False)
+            j0 = next_job()
+            P.stream_text_index_ingest(spark, str(chunks), path, str(tmp_path / f"ckpt{budget}"))
+            per_batch.append(next_job() - j0)
+        assert all(n <= budget for n in per_batch), (spread_min, per_batch)
+        root = os.path.join(path, "postings")
+        stats[budget] = [
+            json.load(open(os.path.join(root, f"gen={g}", "_GEN_STATS.json")))
+            for g in P._gen_ids(root)
+        ]
+        served[budget] = sorted(tuple(r) for r in P.serve_text_stream_bm25(spark, path).collect())
+    assert len(stats[6]) == 3 and stats[6] == stats[7]
+    assert served[6] and served[6] == served[7]
+
+
 def test_stream_text_index_autofold_bounds_generations(
     spark, tmp_path, monkeypatch
 ):
@@ -2362,10 +2399,12 @@ def _ivf_gens(path):
 
 def test_stream_ivf_ingest_and_serve_job_budget(spark, tmp_path):
     """The streaming IVF path's Spark job budget, counted with the DAG
-    scheduler's job counter: after the training batch, a micro-batch
-    costs only write_partitioned's shuffle + write (the centroids are
-    read with pyarrow and assigned in numpy — no count(), no schema
-    inference, no crossJoin), and a serve of a local query frame costs
+    scheduler's job counter: after the training batch, a one-file
+    micro-batch is one partition with no exchange in its plan, so it
+    costs one job — write_partitioned's write, with no cell shuffle (the
+    centroids are read with pyarrow and assigned in numpy — no count(),
+    no schema inference, no crossJoin) — and every gen=/cell= dir still
+    holds exactly one parquet file.  A serve of a local query frame costs
     the query collect plus the exchange of the per-task top-k rows and
     the result, also when more than 32 gen=/cell= dirs are probed."""
     import os
@@ -2386,7 +2425,12 @@ def test_stream_ivf_ingest_and_serve_job_budget(spark, tmp_path):
         P.stream_ivf_ingest(spark, str(chunks), path, ckpt)
         per_batch.append(next_job() - j0)
     assert len(_ivf_gens(path)) == 3
-    assert all(n <= 2 for n in per_batch[1:]), per_batch
+    assert all(n <= 1 for n in per_batch[1:]), per_batch
+    for g in _ivf_gens(path):
+        gdir = os.path.join(path, "assignments", g)
+        for cell in [c for c in os.listdir(gdir) if c.startswith("cell=")]:
+            leaves = os.listdir(os.path.join(gdir, cell))
+            assert len([f for f in leaves if f.endswith(".parquet")]) == 1, (g, cell)
 
     qdf = _local_queries(spark)
     j0 = next_job()
@@ -2676,6 +2720,41 @@ def test_serve_ivf_stream_index_without_probed_files(spark, tmp_path):
         _write_ivf_layout(path, cents, rows)
         out = P.serve_ivf_stream_index(spark, path, qdf)
         assert out.collect() == [] and out.schema == served.schema, name
+
+
+def test_serve_ivf_stream_index_outside_the_checkout(tmp_path):
+    """The serve's task imports processor_spark inside the Python
+    worker.  A driver started from a directory outside the checkout,
+    with the package put on its own sys.path and no PYTHONPATH, must
+    still serve: build_session puts the package's parent dir on the
+    workers' path."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = str(tmp_path / "ivf")
+    _write_ivf_layout(
+        path, [(1, [0, 0, 0, 0]), (2, [50, 50, 50, 50])], [(0, 1, 7, [1, 0, 0, 0])]
+    )
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from processor_spark.session import build_session
+from processor_spark.streaming.pipelines import serve_ivf_stream_index
+spark = build_session()
+qdf = spark.createDataFrame([(1, [0, 0, 0, 0])], "q_id bigint, qm array<bigint>")
+print([tuple(r) for r in serve_ivf_stream_index(spark, {path!r}, qdf).collect()])
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "2"
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().splitlines()[-1] == "[(1, 7, 1, 1)]"
 
 
 def test_availablenow_timeout_raises_and_resumes(spark, tmp_path):

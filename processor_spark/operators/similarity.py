@@ -1395,6 +1395,66 @@ def _assert_sub53(*mats) -> None:
             )
 
 
+def _ivf_files_topk(q_ids, Q, near, files) -> pd.DataFrame:
+    """Exact k-NN of the queries ``q_ids`` (micro-unit rows ``Q``) over
+    the IVF cell files ``files``, a list of (path, cell) parquet leaves
+    of (vec_id, vm) rows.  ``near`` holds each query's probed cells
+    (one row per query).  Each file is read ONCE with pyarrow and
+    scored against the queries that probe its cell, with exact integer
+    distances in float64 under _assert_sub53, in score blocks of about
+    4M entries.  A query's own vec_id is skipped.  The KNN_K nearest of
+    each query by (sq, vec_id) come back ranked, as (q_id, neighbor_id,
+    sq_micro2, rank); a query with no candidate has no row."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    q_ids = np.asarray(q_ids, dtype=np.int64)
+    q2 = (Q * Q).sum(axis=1)
+    # (query row, sq, vec_id) of the rows kept so far
+    a, b, v = np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64)
+    for f, c in files:
+        qi = np.flatnonzero((near == c).any(axis=1))
+        with pq.ParquetFile(f) as pf:
+            t = pf.read(columns=["vec_id", "vm"])
+        vid = t.column("vec_id").to_numpy().astype(np.int64)
+        V = (
+            t.column("vm").combine_chunks().flatten()
+            .to_numpy(zero_copy_only=False)
+            .reshape(len(vid), Q.shape[1]).astype(np.float64)
+        )
+        _assert_sub53(V)
+        v2 = (V * V).sum(axis=1)
+        step = max(KNN_K, (1 << 22) // max(1, len(qi)))
+        for lo in range(0, len(vid), step):
+            Vb, ib = V[lo : lo + step], vid[lo : lo + step]
+            sq = q2[qi, None] + v2[None, lo : lo + len(ib)] - 2.0 * (Q[qi] @ Vb.T)
+            sq[q_ids[qi, None] == ib[None, :]] = np.inf
+            # each query's KNN_K-th smallest sq; ties at it all survive
+            # to the (sq, vec_id) cut below
+            cut = (
+                np.partition(sq, KNN_K - 1, axis=1)[:, KNN_K - 1]
+                if len(ib) > KNN_K
+                else np.full(len(qi), np.inf)
+            )
+            r, j = np.nonzero((sq <= cut[:, None]) & np.isfinite(sq))
+            a = np.concatenate([a, qi[r]])
+            b = np.concatenate([b, sq[r, j]])
+            v = np.concatenate([v, ib[j]])
+            # keep the first KNN_K per query by (sq, vec_id)
+            o = np.lexsort((v, b, a))
+            a, b, v = a[o], b[o], v[o]
+            keep = np.arange(len(a)) - np.searchsorted(a, a) < KNN_K
+            a, b, v = a[keep], b[keep], v[keep]
+    return pd.DataFrame(
+        {
+            "q_id": q_ids[a],
+            "neighbor_id": v,
+            "sq_micro2": b.astype(np.int64),
+            "rank": np.arange(len(a)) - np.searchsorted(a, a) + 1,
+        }
+    )
+
+
 def _numpy_flat_assign(
     vecs: DataFrame, cents: DataFrame | tuple, keep: tuple[str, ...] = ("vm",)
 ) -> DataFrame:

@@ -14,8 +14,10 @@ the batch twin; these exist to prove the event side of the engine.
 
 Scale notes: streaming state (windows, dedup keys, session state,
 join buffers) lives in the per-partition StateStore, bounded by the
-watermark — at 100 TB/day the watermark delay directly sizes state;
-every stateful op below takes an explicit watermark for that reason.
+watermark where the state key carries event time — at 100 TB/day the
+watermark delay directly sizes state; every stateful op below takes an
+explicit watermark for that reason.  dedup_events is the exception:
+its keys exclude ts, so its state is unbounded.
 """
 
 from __future__ import annotations
@@ -97,7 +99,17 @@ def dynamic_session_counts(events: DataFrame, watermark: str = "1 hour") -> Data
 
 
 def dedup_events(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming dedup on event_id; watermark bounds the dedup state."""
+    """Streaming dedup on event_id behind a watermark on ts.  The
+    watermark only drops late rows: a row older than it never reaches
+    the dedup.  It does NOT bound the dedup state: the keys exclude
+    ts, so Spark never evicts a key and the state grows with every
+    distinct id.  dedup_events_within_watermark is the bounded form.
+
+    Across availableNow drains on one checkpoint, each drain's trailing
+    no-data micro-batch is load-bearing: it persists the watermark the
+    next drain's late filter uses.  With noDataMicroBatches off a drain
+    saves a job, but the next drain's late rows pass the filter
+    (pinned in tests/test_streaming.py)."""
     return events.withWatermark("ts", watermark).dropDuplicates(["event_id"])
 
 
@@ -1221,126 +1233,73 @@ def _nearest_cells(Q, cids, C, nprobe: int):
 
 def serve_ivf_stream_index(spark: SparkSession, path: str, query_df: DataFrame) -> DataFrame:
     """k-NN against the stream-maintained IVF index: probe the frozen
-    centroids with the query batch, then score ONLY the probed cells
-    of every generation directory (an absent cell dir in a generation
+    centroids with each query, then score ONLY the probed cells of
+    every generation directory (an absent cell dir in a generation
     means no vectors landed there — skip).  Same exact integer ranking
     as the batch serve keys.
 
-    ``query_df`` needs (q_id, qm).  The probe runs on the driver: the
-    query batch is collected ONCE through Arrow — O(nq·d) values, the
-    same order as the nq·KNN_K result rows every caller collects — and
-    scored in numpy against the centroids read with pyarrow
-    (similarity._cents_np_path).  Distances are exact integers
-    (micro-units under the _assert_sub53 bound), and a stable argsort
-    over cid-ascending columns keeps the IVF_NPROBE nearest cells in
-    (sq, cid) order.
+    ``query_df`` needs (q_id, qm).  The serve is one narrow mapInPandas
+    over it: each task probes, scores and ranks its own queries, so its
+    local top-k is already the answer and no exchange follows.  At call
+    time the driver reads the centroids with pyarrow
+    (similarity._cents_np_path) and takes one snapshot of the
+    generation ids (_gen_ids), which every task then serves; neither
+    runs a Spark job, so the call itself runs none and the caller's
+    collect is one job of one stage, with one task per query-frame
+    partition (pinned in tests/test_streaming.py).  A stateless map runs
+    as is on a streaming query frame, each micro-batch served against
+    the call-time snapshot.
 
-    The candidate side is a per-task top-k.  The probed
-    ``gen=<g>/cell=<c>`` leaf files are listed with os.listdir (the
-    index's local-filesystem contract: generations are published and
-    swapped with os.replace under the same root) and handed to the
-    tasks as a local (path, cell) frame, so no InMemoryFileIndex
-    listing job runs however many dirs are probed.  One mapInPandas
-    reads each file with pyarrow and scores it against the queries
-    that probe its cell — the closure carries the query ids, vectors
-    and probed cells, O(nq·d) values — with the same exact integer
-    distances (float64 under _assert_sub53, score blocks of ~4M
-    entries).  A task drops ``vec_id == q_id`` and emits at most
-    KNN_K rows per query, ranked by (sq, vec_id), so the one exchange
-    left, the final row_number over q_id, moves at most
-    tasks·nq·KNN_K rows.  A call costs the query collect plus that
-    exchange and the result (≤ 3 jobs for a local query frame, pinned
-    in tests/test_streaming.py).  An empty query batch, an index with
-    no generation yet, or probed cells empty in every generation give
-    an empty frame with the same schema."""
+    Per Arrow batch of queries a task runs the _nearest_cells probe
+    (exact integer distances, IVF_NPROBE cells in (sq, cid) order),
+    lists the probed ``gen=<g>/cell=<c>`` leaf files with os.listdir
+    (the index's local-filesystem contract: generations are published
+    and swapped with os.replace under the same root) and hands them to
+    similarity._ivf_files_topk, which reads each file once per batch,
+    drops ``vec_id == q_id`` and ranks the KNN_K nearest by
+    (sq, vec_id).  The floating-point work is the same as one global
+    scoring pass, but a cell probed by queries in k different tasks is
+    read k times.  A snapshotted generation that is gone was folded or
+    swapped by a compaction mid-serve: it raises rather than serve a
+    partial index.  An empty query frame, an index with no generation
+    yet, or probed cells empty in every generation give an empty frame
+    with the same schema."""
     import os
-
-    import numpy as np
-
-    from pyspark.sql import Window
 
     from processor_spark.operators.similarity import (
         IVF_NPROBE,
-        KNN_K,
         _cents_np_path,
+        _ivf_files_topk,
         heal_swapped_root,
     )
 
     heal_swapped_root(path)  # recover an interrupted compaction swap
     cids, C = _cents_np_path(os.path.join(path, "centroids"))
-    q = query_df.select("q_id", "qm").toPandas()
-    q_ids = q["q_id"].to_numpy().astype(np.int64)
-    Q = (
-        np.stack(q["qm"].to_numpy()).astype(np.float64)
-        if len(q)
-        else np.zeros((0, C.shape[1]), dtype=np.float64)
-    )
-    near = _nearest_cells(Q, cids, C, IVF_NPROBE)
     root = os.path.join(path, "assignments")
-    files = [
-        (f, c)
-        for g in _gen_ids(root)
-        for c in np.unique(near).tolist()
-        for f in _snapshot_parquet_files(os.path.join(root, f"gen={g}", f"cell={c}"))
-    ]
+    gens = _gen_ids(root)
 
-    def topk(it):
-        import pyarrow.parquet as pq
+    def serve(it):
+        import numpy as np
 
-        from processor_spark.operators.similarity import _assert_sub53
+        for q in it:
+            if not len(q):
+                continue
+            Q = np.stack(q["qm"].to_numpy()).astype(np.float64)
+            near = _nearest_cells(Q, cids, C, IVF_NPROBE)
+            files = []
+            for g in gens:
+                gdir = os.path.join(root, f"gen={g}")
+                if not os.path.isdir(gdir):
+                    raise FileNotFoundError(f"{gdir} vanished mid-serve: a compaction swapped the index")
+                files += [
+                    (f, c)
+                    for c in np.unique(near).tolist()
+                    for f in _snapshot_parquet_files(os.path.join(gdir, f"cell={c}"))
+                ]
+            yield _ivf_files_topk(q["q_id"].to_numpy(), Q, near, files)
 
-        q2 = (Q * Q).sum(axis=1)
-        # (query row, sq, vec_id) of the rows kept so far
-        a, b, v = np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64)
-        for pdf in it:
-            for f, c in zip(pdf["path"], pdf["cell"]):
-                qi = np.flatnonzero((near == c).any(axis=1))
-                with pq.ParquetFile(f) as pf:
-                    t = pf.read(columns=["vec_id", "vm"])
-                vid = t.column("vec_id").to_numpy().astype(np.int64)
-                V = (
-                    t.column("vm").combine_chunks().flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .reshape(len(vid), Q.shape[1]).astype(np.float64)
-                )
-                _assert_sub53(V)
-                v2 = (V * V).sum(axis=1)
-                step = max(KNN_K, (1 << 22) // max(1, len(qi)))
-                for lo in range(0, len(vid), step):
-                    Vb, ib = V[lo : lo + step], vid[lo : lo + step]
-                    sq = q2[qi, None] + v2[None, lo : lo + len(ib)] - 2.0 * (Q[qi] @ Vb.T)
-                    sq[q_ids[qi, None] == ib[None, :]] = np.inf
-                    # each query's KNN_K-th smallest sq; ties at it all
-                    # survive to the (sq, vec_id) cut below
-                    cut = (
-                        np.partition(sq, KNN_K - 1, axis=1)[:, KNN_K - 1]
-                        if len(ib) > KNN_K
-                        else np.full(len(qi), np.inf)
-                    )
-                    r, j = np.nonzero((sq <= cut[:, None]) & np.isfinite(sq))
-                    a = np.concatenate([a, qi[r]])
-                    b = np.concatenate([b, sq[r, j]])
-                    v = np.concatenate([v, ib[j]])
-                    # keep the first KNN_K per query by (sq, vec_id)
-                    o = np.lexsort((v, b, a))
-                    a, b, v = a[o], b[o], v[o]
-                    keep = np.arange(len(a)) - np.searchsorted(a, a) < KNN_K
-                    a, b, v = a[keep], b[keep], v[keep]
-        yield pd.DataFrame({"q_id": q_ids[a], "vec_id": v, "sq": b.astype(np.int64)})
-
-    cand = spark.createDataFrame(files, "path string, cell bigint").mapInPandas(
-        topk, "q_id bigint, vec_id bigint, sq bigint"
-    )
-    wr = Window.partitionBy("q_id").orderBy("sq", "vec_id")
-    return (
-        cand.withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= KNN_K)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("sq").alias("sq_micro2"),
-            F.col("rank").cast("long").alias("rank"),
-        )
+    return query_df.select("q_id", "qm").mapInPandas(
+        serve, "q_id bigint, neighbor_id bigint, sq_micro2 bigint, rank bigint"
     )
 
 

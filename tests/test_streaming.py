@@ -80,6 +80,48 @@ def test_stream_dedup(spark, events_chunks_dir):
     assert got.count() == batch.select("event_id").distinct().count()
 
 
+def test_stream_dedup_late_rows_across_drains(spark, tmp_path):
+    """dedup_events drained twice on one checkpoint.  The first drain's
+    trailing no-data micro-batch persists its watermark (08:00 − 1 h);
+    the second drain's late filter drops a row older than it (id 4).
+    The dedup state is never evicted, so id 1, whose first row is
+    older than that watermark, is still a duplicate when it comes back
+    on time.  The streamed ids equal the batch twin: the distinct ids
+    minus the late row."""
+    import pandas as pd
+
+    data = tmp_path / "events"
+    data.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    us = lambda s: int(pd.Timestamp(s).value // 1000)
+
+    def chunk(ids, stamps):
+        return pd.DataFrame(
+            {
+                "event_id": ids,
+                "ts": [us(f"2024-01-01 {t}") for t in stamps],
+                "user_id": [1] * len(ids),
+                "event_type": ["click"] * len(ids),
+                "value": [1.0] * len(ids),
+                "props": ["{}"] * len(ids),
+            }
+        )
+
+    first = chunk([1, 2, 3], ["00:10", "01:10", "08:00"])
+    second = chunk([1, 4, 5, 3], ["08:30", "00:20", "09:00", "08:10"])
+    got = []
+
+    def sink(batch_df, _):
+        got.extend(r.event_id for r in batch_df.select("event_id").collect())
+
+    for i, c in enumerate((first, second)):
+        c.to_parquet(data / f"c{i}.parquet", index=False)
+        stream = P.read_events_stream(spark, str(data))
+        P.run_foreach_batch_ckpt(P.dedup_events(stream), sink, ckpt, output_mode="append")
+    raw = pd.concat([first, second])["event_id"]
+    assert sorted(got) == sorted(set(raw) - {4}) == [1, 2, 3, 5]
+
+
 def test_stream_static_enrichment_matches_batch_join(spark, events_chunks_dir):
     dim = (
         load(spark, SF_SMALL, "events")
@@ -2404,9 +2446,10 @@ def test_stream_ivf_ingest_and_serve_job_budget(spark, tmp_path):
     costs one job — write_partitioned's write, with no cell shuffle (the
     centroids are read with pyarrow and assigned in numpy — no count(),
     no schema inference, no crossJoin) — and every gen=/cell= dir still
-    holds exactly one parquet file.  A serve of a local query frame costs
-    the query collect plus the exchange of the per-task top-k rows and
-    the result, also when more than 32 gen=/cell= dirs are probed."""
+    holds exactly one parquet file.  A serve of a local query frame is
+    one narrow map: the call runs no job, the collect runs one, and the
+    executed plan holds no exchange, also when more than 32 gen=/cell=
+    dirs are probed."""
     import os
 
     import numpy as np
@@ -2434,8 +2477,10 @@ def test_stream_ivf_ingest_and_serve_job_budget(spark, tmp_path):
 
     qdf = _local_queries(spark)
     j0 = next_job()
-    got = P.serve_ivf_stream_index(spark, path, qdf).collect()
-    assert next_job() - j0 <= 3
+    served = P.serve_ivf_stream_index(spark, path, qdf)
+    got = served.collect()
+    assert next_job() - j0 <= 1
+    assert "Exchange" not in served._jdf.queryExecution().executedPlan().toString()
     assert len(got) > 0
 
     # past parallelPartitionDiscovery.threshold (32 paths): the probed
@@ -2456,8 +2501,10 @@ def test_stream_ivf_ingest_and_serve_job_budget(spark, tmp_path):
     assert 20 * len(np.unique(P._nearest_cells(Q, cids, C, IVF_NPROBE))) > 32
     qdf = spark.createDataFrame(queries, "q_id bigint, qm array<bigint>")
     j0 = next_job()
-    got = P.serve_ivf_stream_index(spark, wide, qdf).collect()
-    assert next_job() - j0 <= 3
+    served = P.serve_ivf_stream_index(spark, wide, qdf)
+    got = served.collect()
+    assert next_job() - j0 <= 1
+    assert "Exchange" not in served._jdf.queryExecution().executedPlan().toString()
     assert len(got) == len(queries) * KNN_K
 
 
@@ -2682,11 +2729,12 @@ def test_serve_ivf_probe_equals_catalyst_probe(spark, tmp_path):
                 rows.append((g, c, 300 * c + 10 * g + i, far))
     path = str(tmp_path / "multi_gen")
     _write_ivf_layout(path, [(1, [0, 0, 0, 0]), (2, [0, 0, 0, 8]), (3, [50, 50, 50, 50])], rows)
-    mq = spark.createDataFrame(
-        [(1, [0, 0, 0, 0]), (101, [0, 0, 0, 0]), (800, [45, 50, 55, 50])]
-        + [(700 + i, [int(x) for x in rng.integers(-12, 31, 4)]) for i in range(6)],
-        "q_id bigint, qm array<bigint>",
+    mq_rows = (
+        [(1, [0, 0, 0, 0]), (800, [45, 50, 55, 50])]
+        + [(700 + i, [int(x) for x in rng.integers(-12, 31, 4)]) for i in range(6)]
+        + [(101, [0, 0, 0, 0])]
     )
+    mq = spark.createDataFrame(mq_rows, "q_id bigint, qm array<bigint>")
     sc = spark.sparkContext
     j0 = sc._jsc.sc().dagScheduler().nextJobId()
     got = sorted(tuple(r) for r in P.serve_ivf_stream_index(spark, path, mq).collect())
@@ -2703,16 +2751,44 @@ def test_serve_ivf_probe_equals_catalyst_probe(spark, tmp_path):
     ])
     assert {r[0] for r in got} == {1, 101, 800, *range(700, 706)}
 
+    # the same queries in a two-partition frame, 1 and 101 in different
+    # partitions: both probe cell 1, so every cell=1 file is read by two
+    # tasks, each of which ranks its own queries alone
+    mq2 = spark.createDataFrame(sc.parallelize(mq_rows, 2), "q_id bigint, qm array<bigint>")
+    part = {
+        r.q_id: r.p for r in mq2.select("q_id", F.spark_partition_id().alias("p")).collect()
+    }
+    assert part[1] != part[101] and len(set(part.values())) == 2, part
+    j0 = sc._jsc.sc().dagScheduler().nextJobId()
+    got2 = sorted(tuple(r) for r in P.serve_ivf_stream_index(spark, path, mq2).collect())
+    jobs = range(j0, sc._jsc.sc().dagScheduler().nextJobId())
+    assert [
+        sc.statusTracker().getStageInfo(st).numTasks
+        for j in jobs
+        for st in sc.statusTracker().getJobInfo(j).stageIds
+    ] == [2]
+    assert got2 == got == sorted(tuple(r) for r in _catalyst_serve(spark, path, mq2).collect())
+
 
 def test_serve_ivf_stream_index_without_probed_files(spark, tmp_path):
     """An index whose first batch crashed between the centroid publish
     and its _publish_gen holds centroids but no gen= dir, and probed
     cells can be absent from every generation.  Both serve an empty
-    frame with the serve's schema instead of failing."""
+    frame with the serve's schema instead of failing.  A generation of
+    the call-time snapshot that is gone by the time the tasks run (a
+    compaction folded it) fails the serve loudly."""
+    import os
+    import shutil
+
     cents = [(1, [0, 0, 0, 0]), (2, [0, 0, 0, 8]), (3, [50, 50, 50, 50])]
     qdf = spark.createDataFrame([(1, [0, 0, 0, 0])], "q_id bigint, qm array<bigint>")
     full = str(tmp_path / "full")
-    _write_ivf_layout(full, cents, [(0, 1, 7, [1, 0, 0, 0])])
+    _write_ivf_layout(full, cents, [(0, 1, 7, [1, 0, 0, 0]), (1, 3, 8, [50, 0, 0, 0])])
+    served = P.serve_ivf_stream_index(spark, full, qdf)
+    assert [tuple(r) for r in served.collect()] == [(1, 7, 1, 1)]
+    shutil.rmtree(os.path.join(full, "assignments", "gen=1"))
+    with pytest.raises(Exception, match="gen=1 vanished mid-serve"):
+        served.collect()
     served = P.serve_ivf_stream_index(spark, full, qdf)
     assert [tuple(r) for r in served.collect()] == [(1, 7, 1, 1)]
     for name, rows in (("no_gen", []), ("unprobed", [(0, 3, 7, [50, 0, 0, 0]), (4, 3, 8, [0, 50, 0, 0])])):
@@ -2720,6 +2796,49 @@ def test_serve_ivf_stream_index_without_probed_files(spark, tmp_path):
         _write_ivf_layout(path, cents, rows)
         out = P.serve_ivf_stream_index(spark, path, qdf)
         assert out.collect() == [] and out.schema == served.schema, name
+
+
+def test_serve_ivf_stream_index_on_a_query_stream(spark, tmp_path):
+    """The serve is a stateless map, so it runs as is on a streaming
+    query frame: query files read with readStream, one file per
+    micro-batch, drained with run_foreach_batch, serve the rows the
+    batch serve of the same queries over the same index serves."""
+    from processor_spark.operators.similarity import KNN_K, KNN_QUERIES, _micro_arr
+
+    chunks = tmp_path / "chunks"
+    chunks.mkdir()
+    path = str(tmp_path / "ivf")
+    pdf, parts = _ivf_chunk_frames(spark, 2)
+    for i, chunk in enumerate(parts):
+        chunk.to_parquet(chunks / f"chunk_{i:02d}.parquet", index=False)
+    P.stream_ivf_ingest(spark, str(chunks), path, str(tmp_path / "ckpt"))
+
+    qdir = tmp_path / "queries"
+    qdir.mkdir()
+    q = pdf[pdf["vec_id"] <= KNN_QUERIES].rename(columns={"vec_id": "q_id"})
+    q = q[["q_id", "embedding"]]
+    q.iloc[: len(q) // 2].to_parquet(qdir / "q_00.parquet", index=False)
+    q.iloc[len(q) // 2 :].to_parquet(qdir / "q_01.parquet", index=False)
+    schema = "q_id bigint, embedding array<float>"
+
+    def queries(reader):
+        return reader.schema(schema).parquet(str(qdir)).select(
+            "q_id", _micro_arr("embedding").alias("qm")
+        )
+
+    batches = []
+    P.run_foreach_batch(
+        P.serve_ivf_stream_index(
+            spark, path, queries(spark.readStream.option("maxFilesPerTrigger", 1))
+        ),
+        lambda df, _: batches.append([tuple(r) for r in df.collect()]),
+    )
+    assert len(batches) == 2
+    got = sorted(r for b in batches for r in b)
+    want = sorted(
+        tuple(r) for r in P.serve_ivf_stream_index(spark, path, queries(spark.read)).collect()
+    )
+    assert got == want and len(got) == len(q) * KNN_K
 
 
 def test_serve_ivf_stream_index_outside_the_checkout(tmp_path):

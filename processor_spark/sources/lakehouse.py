@@ -1165,7 +1165,7 @@ class LakeTable:
         delete_col: str | None = None,
         seq_col: str | None = None,
         timeout_s: int = 120,
-    ) -> None:
+    ) -> list:
         """CDC stream → ACID table: every micro-batch MERGEs into the
         table via foreachBatch (the Delta/Iceberg streaming-upsert
         shape).  ``seq_col`` names a monotonic ordering column used to
@@ -1175,7 +1175,10 @@ class LakeTable:
         micro-batch re-applied after a crash merges identical rows into
         an identical state, so checkpoint + deterministic merge give
         exactly-once table effects.  Batches apply sequentially
-        (foreachBatch contract), preserving CDC order."""
+        (foreachBatch contract), preserving CDC order.  A drain still
+        active at ``timeout_s`` raises ``TimeoutError`` and a re-call
+        with the same checkpoint resumes it; returns the drain's
+        progress entries (``pipelines.run_foreach_batch_ckpt``)."""
         key = self.manifest()["key"]
 
         def _apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -1192,15 +1195,11 @@ class LakeTable:
                 return
             self.merge(batch_df.sparkSession, batch_df, delete_col=delete_col)
 
-        q = (
-            stream_df.writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        from processor_spark.streaming.pipelines import run_foreach_batch_ckpt
+
+        return run_foreach_batch_ckpt(
+            stream_df, _apply, checkpoint, timeout_s=timeout_s, output_mode="append"
         )
-        q.awaitTermination(timeout_s)
-        if q.isActive:
-            q.stop()
 
 
 class LakeCatalog:

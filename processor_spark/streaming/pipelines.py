@@ -18,6 +18,13 @@ watermark where the state key carries event time — at 100 TB/day the
 watermark delay directly sizes state; every stateful op below takes an
 explicit watermark for that reason.  dedup_events is the exception:
 its keys exclude ts, so its state is unbounded.
+
+Drains: every availableNow query the engine starts goes through one
+helper, :func:`_drain` (the runners here and
+``LakeTable.merge_stream``).  It starts the query, waits, raises on an
+unfinished drain and returns the drain's progress entries.  A query
+whose only state is one plain dedup runs one micro-batch per input
+batch there, with no trailing no-data batch (see :func:`dedup_events`).
 """
 
 from __future__ import annotations
@@ -105,11 +112,24 @@ def dedup_events(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     ts, so Spark never evicts a key and the state grows with every
     distinct id.  dedup_events_within_watermark is the bounded form.
 
-    Across availableNow drains on one checkpoint, each drain's trailing
-    no-data micro-batch is load-bearing: it persists the watermark the
-    next drain's late filter uses.  With noDataMicroBatches off a drain
-    saves a job, but the next drain's late rows pass the filter
-    (pinned in tests/test_streaming.py)."""
+    Drained through a runner (:func:`_drain`), each availableNow drain
+    runs one micro-batch per input batch and no trailing no-data batch.
+    Spark's default late filter reads the previous batch's watermark,
+    so only a trailing no-data batch carried the watermark into the
+    next drain, and with noDataMicroBatches off alone late rows leaked
+    into that drain.  The runners start this query with
+    ``statefulOperator.allowMultiple=false``: the late filter then
+    reads the current batch's watermark, which a restart restores from
+    the commit log, so the trailing batch has nothing left to do (the
+    state is never evicted).  The late filter is stricter inside one
+    drain: a row older than the watermark set by that drain's earlier
+    micro-batches is dropped as late, where before it passed when it
+    was only one batch behind.  So the streamed ids no longer depend on
+    how chunks are grouped into drains (pinned in
+    tests/test_streaming.py).  Downgrade hazard: an engine without this
+    rule that resumes a checkpoint drained here filters its first
+    batch with the previous batch's watermark, which can let late rows
+    through."""
     return events.withWatermark("ts", watermark).dropDuplicates(["event_id"])
 
 
@@ -207,9 +227,11 @@ def _raise_if_unfinished(q, timeout_s: int, where: str) -> None:
     active at the deadline is an INCOMPLETE pass, and the pre-r14
     silent stop let every downstream consumer see partial results
     (the file-spray probe lost 3 of 4 post-retrain chunks to it —
-    SCALE.md r14).  Uniform across all four runners: stop, then raise
-    loudly.  Checkpointed runners resume on re-call; un-checkpointed
-    ones must re-run from scratch."""
+    SCALE.md r14).  Every availableNow drain in the engine goes through
+    :func:`_drain`, which calls this: the four runners below and
+    ``LakeTable.merge_stream``.  Stop, then raise loudly.  Checkpointed
+    drains resume on re-call; un-checkpointed ones must re-run from
+    scratch."""
     if q.isActive:
         q.stop()
         raise TimeoutError(
@@ -219,45 +241,110 @@ def _raise_if_unfinished(q, timeout_s: int, where: str) -> None:
         )
 
 
+def _plain_dedup_only(df: DataFrame) -> bool:
+    """True when the analyzed plan's only stateful node is exactly one
+    plain ``Deduplicate`` and every other node is a stateless one on a
+    short allowlist.  ``DeduplicateWithinWatermark``, aggregates,
+    stream-stream joins, grouped state and any node not on the list
+    keep Spark's default drain."""
+    allowed = {
+        "EventTimeWatermark",
+        "Project",
+        "Filter",
+        "SubqueryAlias",
+        "StreamingRelation",
+        "StreamingRelationV2",
+    }
+    names, stack = [], [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names.count("Deduplicate") == 1 and all(
+        n in allowed for n in names if n != "Deduplicate"
+    )
+
+
+def _drain(df: DataFrame, writer, timeout_s: int, where: str) -> list:
+    """Start ``writer`` (built on ``df.writeStream``) as an availableNow
+    query, wait up to ``timeout_s`` and raise if it is unfinished
+    (:func:`_raise_if_unfinished`).  Returns the query's
+    ``recentProgress``: one entry per micro-batch, the last
+    ``spark.sql.streaming.numRecentProgressUpdates`` (default 100) of
+    them, so its length says which drain path ran.
+
+    One micro-batch per drain for a plain dedup
+    (:func:`_plain_dedup_only`): such a query starts with
+    ``statefulOperator.allowMultiple=false``, so its late filter reads
+    the current batch's watermark (restored after a restart from the
+    commit log), and with ``noDataMicroBatches.enabled=false``, so no
+    trailing no-data batch runs.  A plain ``Deduplicate`` emits a row
+    the first time it sees it, so a no-data batch could only evict
+    state: never when the keys exclude the event time, and one batch
+    later when they include it.  The query keeps the clone of the
+    session conf taken at ``start()``; the caller's two values are
+    restored right after it, also when ``start()`` raises.  Neither key
+    is in the checkpoint's offset metadata, so they are set on every
+    start."""
+    spark = df.sparkSession
+    one_batch = (
+        {
+            "spark.sql.streaming.statefulOperator.allowMultiple": "false",
+            "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+        }
+        if _plain_dedup_only(df)
+        else {}
+    )
+    saved = {k: spark.conf.get(k, None) for k in one_batch}
+    try:
+        for k, v in one_batch.items():
+            spark.conf.set(k, v)
+        q = writer.trigger(availableNow=True).start()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    q.awaitTermination(timeout_s)
+    _raise_if_unfinished(q, timeout_s, where)
+    return q.recentProgress
+
+
 def run_to_memory(
     df: DataFrame, name: str, output_mode: str = "append", timeout_s: int = 120
-) -> None:
+) -> list:
     """Drain a streaming DataFrame into a memory sink deterministically
-    (availableNow processes all available input then stops)."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    _raise_if_unfinished(q, timeout_s, name)
+    (availableNow processes all available input then stops).  Returns
+    the drain's progress entries (:func:`_drain`)."""
+    writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    return _drain(df, writer, timeout_s, name)
 
 
-def write_parquet_stream(df: DataFrame, path: str, checkpoint: str, timeout_s: int = 120):
-    """Parquet sink with checkpointing (exactly-once file sink)."""
-    q = (
+def write_parquet_stream(
+    df: DataFrame, path: str, checkpoint: str, timeout_s: int = 120
+) -> list:
+    """Parquet sink with checkpointing (exactly-once file sink).
+    Returns the drain's progress entries (:func:`_drain`)."""
+    writer = (
         df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(timeout_s)
-    _raise_if_unfinished(q, timeout_s, checkpoint)
+    return _drain(df, writer, timeout_s, checkpoint)
 
 
-def run_foreach_batch(df: DataFrame, batch_fn, timeout_s: int = 120) -> None:
+def run_foreach_batch(df: DataFrame, batch_fn, timeout_s: int = 120) -> list:
     """foreachBatch sink: arbitrary batch-DataFrame logic per micro-batch
     (the escape hatch for sinks Spark lacks — upserts, multi-table
     writes).  batch_fn(batch_df, batch_id) runs on the driver with full
     batch-DataFrame powers; idempotency across retries is on the caller
-    (batch_id is the dedup token)."""
-    q = df.writeStream.foreachBatch(batch_fn).trigger(availableNow=True).start()
-    q.awaitTermination(timeout_s)
-    _raise_if_unfinished(q, timeout_s, "<un-checkpointed foreachBatch>")
+    (batch_id is the dedup token).  Returns the drain's progress
+    entries (:func:`_drain`)."""
+    writer = df.writeStream.foreachBatch(batch_fn)
+    return _drain(df, writer, timeout_s, "<un-checkpointed foreachBatch>")
 
 
 def run_foreach_batch_ckpt(
@@ -266,12 +353,13 @@ def run_foreach_batch_ckpt(
     checkpoint: str,
     timeout_s: int = 120,
     output_mode: str = "update",
-) -> None:
+) -> list:
     """Checkpointed foreachBatch: like :func:`run_foreach_batch` but the
     query's offsets AND stateful-operator state live in ``checkpoint``,
     so a later call with the same location resumes exactly where the
     previous run stopped (the restart half of the stateful-sketch
-    equivalence tests).
+    equivalence tests).  Returns the drain's progress entries
+    (:func:`_drain`).
 
     A drain that is still active at ``timeout_s`` RAISES (r14): the
     r14 file-spray probe's post-retrain ingest hit the old silent
@@ -282,15 +370,12 @@ def run_foreach_batch_ckpt(
     available"; not finishing is an error the caller must hear.  The
     checkpoint is intact after the raise — re-calling resumes and
     completes the drain."""
-    q = (
+    writer = (
         df.writeStream.foreachBatch(batch_fn)
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(timeout_s)
-    _raise_if_unfinished(q, timeout_s, checkpoint)
+    return _drain(df, writer, timeout_s, checkpoint)
 
 
 def type_totals_complete(events: DataFrame) -> DataFrame:

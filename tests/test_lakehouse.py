@@ -231,6 +231,45 @@ def test_merge_stream_applies_cdc_batches_in_order(table, spark, tmp_path):
     assert ops.count("merge") >= 1
 
 
+def test_merge_stream_timeout_raises_and_resumes(table, spark, tmp_path, monkeypatch):
+    """merge_stream drains through the engine's one availableNow path:
+    a drain still active at timeout_s raises (it used to stop the
+    query and return as if complete), and a re-call on the same
+    checkpoint resumes and applies every CDC batch."""
+    import time as _t
+
+    import pandas as pd
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    for i in range(3):
+        pd.DataFrame({"k": [i], "v": [f"U{i}"]}).to_parquet(feed / f"c{i}.parquet", index=False)
+    stream = (
+        spark.readStream.schema("k bigint, v string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(feed))
+    )
+    merge = LakeTable.merge
+    applied: list[int] = []
+
+    def slow_merge(self, spark_, source, **kw):
+        applied.extend(r.k for r in source.collect())
+        _t.sleep(4)
+        return merge(self, spark_, source, **kw)
+
+    ckpt = str(tmp_path / "ckpt")
+    monkeypatch.setattr(LakeTable, "merge", slow_merge)
+    with pytest.raises(TimeoutError, match="INCOMPLETE"):
+        table.merge_stream(stream, checkpoint=ckpt, timeout_s=5)
+    assert 0 < len(applied) < 3
+    monkeypatch.setattr(LakeTable, "merge", merge)
+    progress = table.merge_stream(stream, checkpoint=ckpt, timeout_s=60)
+    assert progress and sum(p["numInputRows"] for p in progress) >= 3 - len(applied)
+    got = _as_dict(table.read(spark))
+    assert {k: got[k] for k in range(3)} == {0: "U0", 1: "U1", 2: "U2"}
+    assert len(got) == 100
+
+
 def test_merge_schema_evolution_adds_column(table, spark):
     """A source column the table lacks widens the schema: updated rows
     carry it, carried-forward rows read it as NULL (manifest schema is

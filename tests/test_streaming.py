@@ -122,6 +122,130 @@ def test_stream_dedup_late_rows_across_drains(spark, tmp_path):
     assert sorted(got) == sorted(set(raw) - {4}) == [1, 2, 3, 5]
 
 
+def _event_chunk(ids, stamps):
+    """Event rows of user 1 on 2024-01-01 at the given HH:MM stamps,
+    ts as µs longs (the chunk-file layout read_events_stream reads)."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "event_id": ids,
+            "ts": [pd.Timestamp(f"2024-01-01 {t}").value // 1000 for t in stamps],
+            "user_id": [1] * len(ids),
+            "event_type": ["click"] * len(ids),
+            "value": [1.0] * len(ids),
+            "props": ["{}"] * len(ids),
+        }
+    )
+
+
+def _dedup_drains(spark, data, ckpt, groups):
+    """Land each group of chunks in ``data`` and drain dedup_events
+    once per group on one checkpoint; (streamed ids, progress entries
+    per drain)."""
+    got, progress = [], []
+
+    def sink(batch_df, _):
+        got.extend(r.event_id for r in batch_df.select("event_id").collect())
+
+    for group in groups:
+        for c in group:
+            c.to_parquet(data / f"c{len(list(data.iterdir()))}.parquet", index=False)
+        stream = P.read_events_stream(spark, str(data))
+        progress.append(
+            P.run_foreach_batch_ckpt(P.dedup_events(stream), sink, ckpt, output_mode="append")
+        )
+    return got, progress
+
+
+def test_stream_dedup_resume_is_one_batch_one_job(spark, tmp_path):
+    """A resumed dedup_events drain with one new chunk runs one
+    micro-batch and one Spark job (the sink's collect): no trailing
+    no-data batch.  The default drain runs two of each."""
+    data = tmp_path / "events"
+    data.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    _dedup_drains(spark, data, ckpt, [[_event_chunk([1, 2], ["00:00", "01:00"])]])
+    next_job = spark.sparkContext._jsc.sc().dagScheduler().nextJobId
+    j0 = next_job()
+    got, (progress,) = _dedup_drains(
+        spark, data, ckpt, [[_event_chunk([3, 1], ["02:00", "02:30"])]]
+    )
+    assert next_job() - j0 == 1
+    assert len(progress) == 1 and progress[0]["numInputRows"] == 2
+    assert got == [3]
+
+
+def test_stream_drain_restores_session_conf(spark, tmp_path):
+    """The one-batch drain sets its two streaming confs only for the
+    query's start: the caller's values (one set, one unset) are back
+    after the drain, and also after a start() that raises."""
+    from pyspark.errors import AnalysisException
+
+    multi = "spark.sql.streaming.statefulOperator.allowMultiple"
+    nodata = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = {k: spark.conf.get(k, None) for k in (multi, nodata)}
+    try:
+        spark.conf.unset(multi)
+        spark.conf.set(nodata, "true")
+        data = tmp_path / "events"
+        data.mkdir()
+        _event_chunk([1], ["00:00"]).to_parquet(data / "c0.parquet", index=False)
+        stream = P.dedup_events(P.read_events_stream(spark, str(data)))
+        progress = P.run_foreach_batch_ckpt(
+            stream, lambda b, i: b.collect(), str(tmp_path / "ckpt"), output_mode="append"
+        )
+        assert len(progress) == 1
+        assert spark.conf.get(multi, None) is None
+        assert spark.conf.get(nodata, None) == "true"
+        with pytest.raises(AnalysisException):
+            P.run_to_memory(stream, "t_conf_complete", output_mode="complete")
+        assert spark.conf.get(multi, None) is None
+        assert spark.conf.get(nodata, None) == "true"
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_stream_dedup_ids_independent_of_drain_grouping(spark, tmp_path):
+    """Three chunks drained once or as three drains stream the same
+    ids.  Row 5 (10:30) is older than the 11:00 watermark set by the
+    chunk before it, so it is late either way; Spark's default late
+    filter, one batch behind, let it through in the single drain."""
+    chunks = [
+        _event_chunk([1, 2, 3], ["00:00", "05:00", "10:00"]),
+        _event_chunk([4], ["12:00"]),
+        _event_chunk([5, 6], ["10:30", "13:00"]),
+    ]
+    runs = {}
+    for name, groups in (("once", [chunks]), ("thrice", [[c] for c in chunks])):
+        data = tmp_path / name
+        data.mkdir()
+        runs[name], _ = _dedup_drains(spark, data, str(tmp_path / f"ckpt_{name}"), groups)
+    assert sorted(runs["once"]) == sorted(runs["thrice"]) == [1, 2, 3, 4, 6]
+
+
+def test_one_batch_rule_only_for_a_plain_dedup(spark, events_chunks_dir):
+    """The one-batch drain fires only for a plain dropDuplicates: not
+    for the watermark-bounded dedup, a windowed aggregate or a
+    stream-stream join.  A tumbling drain keeps its trailing no-data
+    batch: one progress entry per chunk file plus one."""
+    stream = P.read_events_stream(spark, events_chunks_dir)
+    assert P._plain_dedup_only(P.dedup_events(stream))
+    for build in (
+        P.dedup_events_within_watermark,
+        P.tumbling_counts,
+        P.purchases_with_recent_clicks,
+    ):
+        assert not P._plain_dedup_only(build(stream)), build.__name__
+    progress = P.run_to_memory(P.tumbling_counts(stream), "t_tumbling_progress")
+    assert len(progress) == N_CHUNKS + 1
+    assert progress[-1]["numInputRows"] == 0
+
+
 def test_stream_static_enrichment_matches_batch_join(spark, events_chunks_dir):
     dim = (
         load(spark, SF_SMALL, "events")

@@ -1115,17 +1115,20 @@ NUMPY_FLAT_MAX_NLIST = 8192
 # to a ~65M-vector partition of the problem.
 ROUTED_DRIVER_MAX_NLIST = 262144
 
-# Centroid-column block width for the numpy flat matmul (r14 close):
-# the distance matrix is computed NUMPY_CENT_BLOCK centroids at a time
-# with a running (sq, cid) min across blocks, keeping the per-chunk
-# working set cache-sized and per-task memory flat in nlist.  Width is
+# Tile width of _sq_tiles, the one exact-distance kernel under every
+# numpy distance path, and the one tile rule: a tile is
+# 2·NUMPY_CENT_BLOCK rows × NUMPY_CENT_BLOCK columns, and the top-k
+# reducer keeps a running (sq, id) best across column tiles, so the
+# working set stays cache-sized and per-task memory is flat in the
+# column count (nlist, a cell file, a cell's band).  Width is
 # MEASURED, not a guess: at nlist=8192 the flat assign walls 42–48 s
 # single-block, 13.0–17.8 s at width 2048, 4.7–7.6 s at width 1024,
-# 6.5–7.7 s at 512 (tools/flat_crossover_probe.py --blkwidth rows,
+# 6.5–7.7 s at 512 (2048-row chunks; tools/flat_blkwidth_probe.py@dbad5c1,
 # SCALE.md r14 close) — the apparent "matmul cliff" past nlist≈4096
 # was memory traffic (2048×nlist×8 B temporaries thrashing cache),
 # not distance work; 2048×1024×8 B ≈ 16 MB fits L2/L3 and restored
-# the BLAS-bound wall.
+# the BLAS-bound wall.  tools/flat_blkwidth_probe.py sweeps the width
+# under the tile rule.
 NUMPY_CENT_BLOCK = 1024
 
 _NVEC_CACHE: dict[str, int] = {}
@@ -1369,16 +1372,17 @@ def _cents_sorted(cids, C):
 
 
 def _assert_sub53(*mats) -> None:
-    """Loud guard for the decomposed-float64 exactness contract every
-    numpy distance path in this module relies on: all terms of
-    x² + c² − 2·x·c are integers and every intermediate (the largest
-    is the x²+c² partial-sum chain, ≤ 2·d·M²) stays below 2^53, so
-    the float64 arithmetic is EXACT.  The sufficient condition is
-    2·d·M² < 2^53 (|coord| ≤ ~8.39e6 at d=64, ~4.19e6 at d=256 —
+    """Loud guard for the decomposed-float64 exactness contract of
+    _sq_tiles, the one kernel every numpy distance path goes through:
+    all terms of x² + c² − 2·x·c are integers and every intermediate
+    (the largest is the x²+c² partial-sum chain, ≤ 2·d·M²) stays below
+    2^53, so the float64 arithmetic is EXACT.  The sufficient condition
+    is 2·d·M² < 2^53 (|coord| ≤ ~8.39e6 at d=64, ~4.19e6 at d=256 —
     micro-unit vectors sit at ≤ ~4.3e6); the r14 docstring overclaimed
     256·M² < 2^53, which the intermediate can exceed at d=256
-    (ADVICE r14 medium).  Raises instead of silently returning
-    non-reference cells."""
+    (ADVICE r14 medium).  The kernel checks both operands once per
+    call, and _cents_sorted checks a centroid table read from disk.
+    Raises instead of silently returning non-reference cells."""
     import numpy as np
 
     for M in mats:
@@ -1395,23 +1399,115 @@ def _assert_sub53(*mats) -> None:
             )
 
 
+def _sq_tiles(X, Y, rows: int | None = None, cols: int | None = None, band=None):
+    """The exact-distance kernel of every numpy path: yields
+    (row slice, col slice, sq) tiles of the squared distances between
+    the rows of ``X`` and ``Y`` (float64 of integer coordinates),
+    computed as x² + y² − 2·x·yᵀ, exact under _assert_sub53, which
+    checks both operands before the first tile.  One tile rule:
+    ``cols`` = NUMPY_CENT_BLOCK and ``rows`` = 2·cols unless given.
+    ``band(rs)`` -> (lo, hi) narrows a row tile to the columns lo:hi."""
+    _assert_sub53(X, Y)
+    cols = NUMPY_CENT_BLOCK if cols is None else cols
+    rows = 2 * cols if rows is None else rows
+    x2, y2 = (X * X).sum(axis=1), (Y * Y).sum(axis=1)
+    for r in range(0, len(X), rows):
+        rs = slice(r, min(r + rows, len(X)))
+        lo, hi = (0, len(Y)) if band is None else band(rs)
+        for c in range(lo, hi, cols):
+            cs = slice(c, min(c + cols, hi))
+            yield rs, cs, x2[rs, None] + y2[None, cs] - 2.0 * (X[rs] @ Y[cs].T)
+
+
+def _topk(X, Y, ids, k: int, best=None, skip=None, rows=None, cols=None):
+    """The ``k`` nearest rows of ``Y`` (named by ``ids``) to each row
+    of ``X`` by (sq, id), over _sq_tiles: (sq, id) arrays of shape
+    (len(X), k), nearest first, a row with fewer than k candidates
+    padded with (inf, -1).  A pair whose id equals the row's ``skip``
+    entry is excluded.  ``best``, an earlier result for the same rows
+    of X, is merged in and updated in place, so one top-k runs across
+    calls (cell files, router groups) as it runs across tiles.
+    ``rows``/``cols`` override the tile (tests, probes)."""
+    import numpy as np
+
+    ids = np.asarray(ids, dtype=np.int64)
+    if (ids[1:] < ids[:-1]).any():
+        # ascending columns: a first-occurrence argmin is the id tie-break
+        o = np.argsort(ids, kind="stable")
+        ids, Y = ids[o], Y[o]
+    if best is None:
+        best = (np.full((len(X), k), np.inf), np.full((len(X), k), -1, np.int64))
+    S, I = best
+    for rs, cs, sq in _sq_tiles(X, Y, rows, cols):
+        cid = ids[cs]
+        if skip is not None:
+            sq[skip[rs, None] == cid[None, :]] = np.inf
+        s, i = S[rs], I[rs]
+        if k == 1:
+            loc = sq.argmin(axis=1)
+            v, c = sq[np.arange(len(sq)), loc], cid[loc]
+            upd = (v < s[:, 0]) | ((v == s[:, 0]) & (c < i[:, 0]) & (v < np.inf))
+            s[upd, 0], i[upd, 0] = v[upd], c[upd]
+            continue
+        # every entry tied with a row's k-th smallest survives the cut;
+        # the (row, sq, id) sort then keeps the first k per row
+        cut = (
+            np.partition(sq, k - 1, axis=1)[:, k - 1]
+            if sq.shape[1] > k
+            else np.full(len(sq), np.inf)
+        )
+        r, j = np.nonzero(sq <= np.minimum(cut, s[:, -1])[:, None])
+        v = sq[r, j]
+        f = np.isfinite(v)
+        rr, kk = np.nonzero(np.isfinite(s))
+        r = np.concatenate([rr, r[f]])
+        v = np.concatenate([s[rr, kk], v[f]])
+        c = np.concatenate([i[rr, kk], cid[j[f]]])
+        o = np.lexsort((c, v, r))
+        r, v, c = r[o], v[o], c[o]
+        p = np.arange(len(r)) - np.searchsorted(r, r)
+        keep = p < k
+        s[:], i[:] = np.inf, -1
+        s[r[keep], p[keep]], i[r[keep], p[keep]] = v[keep], c[keep]
+    return S, I
+
+
+def _eps_hits(X, Y, xids, yids, eps: int, band=None):
+    """ε-hits over _sq_tiles: yields, tile by tile, the (i, j) index
+    arrays of the pairs of rows X[i], Y[j] with sq ≤ ``eps`` (the ball
+    is inclusive) and yids[j] < xids[i] — each row meets only its
+    lower-id neighbours, which names every pair once when X is Y.
+    ``band`` is _sq_tiles'."""
+    import numpy as np
+
+    for rs, cs, sq in _sq_tiles(X, Y, band=band):
+        i, j = np.nonzero((sq <= eps) & (yids[None, cs] < xids[rs, None]))
+        yield i + rs.start, j + cs.start
+
+
+def _nearest_cells(Q, cids, C, nprobe: int):
+    """(nq, min(nprobe, nlist)) cids of each query row's nearest
+    centroids, nearest first in (sq, cid) order — the row_number
+    window's tie-break — by the top-k reducer over the cid-ascending
+    centroids _cents_np / _cents_np_path return."""
+    return _topk(Q, C, cids, min(nprobe, len(cids)))[1]
+
+
 def _ivf_files_topk(q_ids, Q, near, files) -> pd.DataFrame:
     """Exact k-NN of the queries ``q_ids`` (micro-unit rows ``Q``) over
     the IVF cell files ``files``, a list of (path, cell) parquet leaves
     of (vec_id, vm) rows.  ``near`` holds each query's probed cells
     (one row per query).  Each file is read ONCE with pyarrow and
-    scored against the queries that probe its cell, with exact integer
-    distances in float64 under _assert_sub53, in score blocks of about
-    4M entries.  A query's own vec_id is skipped.  The KNN_K nearest of
-    each query by (sq, vec_id) come back ranked, as (q_id, neighbor_id,
-    sq_micro2, rank); a query with no candidate has no row."""
+    scored against the queries that probe its cell by the top-k
+    reducer, which skips a query's own vec_id and keeps one running
+    KNN_K-nearest by (sq, vec_id) per query across files.  The result
+    comes back ranked, as (q_id, neighbor_id, sq_micro2, rank); a query
+    with no candidate has no row."""
     import numpy as np
     import pyarrow.parquet as pq
 
     q_ids = np.asarray(q_ids, dtype=np.int64)
-    q2 = (Q * Q).sum(axis=1)
-    # (query row, sq, vec_id) of the rows kept so far
-    a, b, v = np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64)
+    S, I = np.full((len(Q), KNN_K), np.inf), np.full((len(Q), KNN_K), -1, np.int64)
     for f, c in files:
         qi = np.flatnonzero((near == c).any(axis=1))
         with pq.ParquetFile(f) as pf:
@@ -1422,35 +1518,14 @@ def _ivf_files_topk(q_ids, Q, near, files) -> pd.DataFrame:
             .to_numpy(zero_copy_only=False)
             .reshape(len(vid), Q.shape[1]).astype(np.float64)
         )
-        _assert_sub53(V)
-        v2 = (V * V).sum(axis=1)
-        step = max(KNN_K, (1 << 22) // max(1, len(qi)))
-        for lo in range(0, len(vid), step):
-            Vb, ib = V[lo : lo + step], vid[lo : lo + step]
-            sq = q2[qi, None] + v2[None, lo : lo + len(ib)] - 2.0 * (Q[qi] @ Vb.T)
-            sq[q_ids[qi, None] == ib[None, :]] = np.inf
-            # each query's KNN_K-th smallest sq; ties at it all survive
-            # to the (sq, vec_id) cut below
-            cut = (
-                np.partition(sq, KNN_K - 1, axis=1)[:, KNN_K - 1]
-                if len(ib) > KNN_K
-                else np.full(len(qi), np.inf)
-            )
-            r, j = np.nonzero((sq <= cut[:, None]) & np.isfinite(sq))
-            a = np.concatenate([a, qi[r]])
-            b = np.concatenate([b, sq[r, j]])
-            v = np.concatenate([v, ib[j]])
-            # keep the first KNN_K per query by (sq, vec_id)
-            o = np.lexsort((v, b, a))
-            a, b, v = a[o], b[o], v[o]
-            keep = np.arange(len(a)) - np.searchsorted(a, a) < KNN_K
-            a, b, v = a[keep], b[keep], v[keep]
+        S[qi], I[qi] = _topk(Q[qi], V, vid, KNN_K, best=(S[qi], I[qi]), skip=q_ids[qi])
+    r, p = np.nonzero(np.isfinite(S))
     return pd.DataFrame(
         {
-            "q_id": q_ids[a],
-            "neighbor_id": v,
-            "sq_micro2": b.astype(np.int64),
-            "rank": np.arange(len(a)) - np.searchsorted(a, a) + 1,
+            "q_id": q_ids[r],
+            "neighbor_id": I[r, p],
+            "sq_micro2": S[r, p].astype(np.int64),
+            "rank": p + 1,
         }
     )
 
@@ -1467,23 +1542,23 @@ def _numpy_flat_assign(
     arithmetic).  ``cents`` is a (cid, cm) DataFrame or the (cids, C)
     pair _cents_np / _cents_np_path return.  Centroids collect
     driver-side (nlist ≤ NUMPY_FLAT_MAX_NLIST rows — the sanctioned
-    bounded-collect class) and the matmul is CHUNKED at 2048 rows AND
-    BLOCKED at NUMPY_CENT_BLOCK centroid columns with a running
-    (sq, cid) min across blocks (r14 close), so a task's distance
-    matrix peaks at 2048 × 8192 × 8 B ≈ 134 MB at ANY nlist — what
-    bounds this path is distance WORK (O(n·nlist), quadratic in the
-    corpus under the n/250 derivation), not task memory.  Blocks
-    iterate in ascending-cid order and the running min updates on
-    strict <, so an across-block tie keeps the earlier (lower) cid —
-    blocking preserves the exact (sq, cid) tie-break bit-for-bit
-    (test_numpy_flat_blocked_equality).  Measured at 64×/nlist=512:
+    bounded-collect class) and the argmin is the top-k reducer at
+    k = 1 over _sq_tiles, whose one tile rule (2·NUMPY_CENT_BLOCK rows
+    × NUMPY_CENT_BLOCK centroid columns, the width read on the driver
+    when the assign is built) keeps a running (sq, cid) min across
+    column tiles, so a task's distance tile is 16 MB at ANY nlist —
+    what bounds this path is distance WORK (O(n·nlist), quadratic in
+    the corpus under the n/250 derivation), not task memory.  An
+    across-tile tie keeps the lower cid, so tiling preserves the exact
+    (sq, cid) tie-break bit-for-bit (test_numpy_flat_blocked_equality).
+    Measured at 64×/nlist=512:
     the SemDeDup default end-to-end fell 28.6–35.8 s (routed rp3) →
     13.3–13.4 s with EXACT cells (SCALE.md r14)."""
     import numpy as np
 
     # Arrow, not python rows (r15)
     cids, C = cents if isinstance(cents, tuple) else _cents_np(cents)
-    c2 = (C * C).sum(axis=1)
+    blk = NUMPY_CENT_BLOCK  # the driver's width, so a set width reaches the tasks
     in_cols = list(dict.fromkeys(("vec_id", "vm") + tuple(keep)))
     src = vecs.select(*in_cols)
     out_fields = [
@@ -1496,25 +1571,7 @@ def _numpy_flat_assign(
             if not len(pdf):
                 continue
             X = np.stack(pdf["vm"].to_numpy()).astype(np.float64)
-            cell = np.empty(len(X), dtype=np.int64)
-            for lo in range(0, len(X), 2048):
-                Xc = X[lo : lo + 2048]
-                x2 = (Xc * Xc).sum(axis=1)[:, None]
-                best_sq = np.full(len(Xc), np.inf)
-                bcell = np.empty(len(Xc), dtype=np.int64)
-                for cl in range(0, len(C), NUMPY_CENT_BLOCK):
-                    Cb = C[cl : cl + NUMPY_CENT_BLOCK]
-                    sq = (
-                        x2
-                        + c2[None, cl : cl + len(Cb)]
-                        - 2.0 * (Xc @ Cb.T)
-                    )
-                    loc = sq.argmin(axis=1)
-                    v = sq[np.arange(len(Xc)), loc]
-                    upd = v < best_sq
-                    best_sq[upd] = v[upd]
-                    bcell[upd] = cids[cl + loc[upd]]
-                cell[lo : lo + len(Xc)] = bcell
+            cell = _topk(X, C, cids, 1, cols=blk)[1][:, 0]
             out = {
                 "vec_id": pdf["vec_id"].astype("int64"),
                 "cell": pd.Series(cell, index=pdf.index),
@@ -1528,18 +1585,19 @@ def _numpy_flat_assign(
 
 def _router_groups_np(C, blk: int | None = None):
     """numpy core of the two-level router construction: given the
-    cid-ASCENDING fine-centroid matrix (float64 of exact integers,
-    caller asserts the sub-2^53 contract), route every fine row to
-    its (gsq, gid)-min seed among the first ncoarse = isqrt(n) rows.
+    cid-ASCENDING fine-centroid matrix (float64 of exact integers),
+    route every fine row to its (gsq, gid)-min seed among the first
+    ncoarse = isqrt(n) rows.
     Returns (ncoarse, assign) with assign[i] = seed POSITION (0-based
     row index into the first ncoarse rows).  The SAME groups the
     Catalyst routed branch computes Spark-side (router seeds = the
     isqrt(nlist) lowest-cid centroids, each fine centroid routed to
-    its (gsq, gid)-min seed): the float64 matmul identity is exact
-    under _assert_sub53, and the row argmin keeps the lowest seed on
-    equal distance, the (gsq, gid) tie-break, because seeds are
-    cid-ascending.  The only router: _numpy_routed_assign builds its
-    groups here, for batch and stream alike.  Vectorized at r14-opt:
+    its (gsq, gid)-min seed): the top-k reducer at k = 1 over seed
+    positions, which are cid-ascending, so the (sq, position)
+    tie-break is the (gsq, gid) one.  ``blk`` overrides the row tile
+    (tests pin the multi-tile path with it).  The only router:
+    _numpy_routed_assign builds its groups here, for batch and stream
+    alike.  Vectorized at r14-opt:
     the pure-python loop it replaced cost 42.2 s at nlist=32768 and
     was the real cliff behind the routed ladder's 41–46 s wall; this
     build runs 1.6 s on the identical inputs, group-for-group equal
@@ -1549,23 +1607,8 @@ def _router_groups_np(C, blk: int | None = None):
 
     import numpy as np
 
-    n = len(C)
-    ncoarse = max(1, math.isqrt(n))
-    S = C[:ncoarse]
-    ssq = (S * S).sum(axis=1)
-    assign = np.empty(n, dtype=np.int64)
-    # Block fine rows so the distance matrix stays ~128 MB even at
-    # very large ncoarse; within a block the matmul is one BLAS call.
-    # ``blk`` is overridable so tests can pin the multi-block path
-    # (ADVICE r14 low: every production layout below ~63k cells runs
-    # single-block, leaving s > 0 untested otherwise).
-    if blk is None:
-        blk = max(256, 16_000_000 // ncoarse)
-    for s in range(0, n, blk):
-        Cb = C[s : s + blk]
-        sq = (Cb * Cb).sum(axis=1)[:, None] + ssq[None, :] - 2.0 * (Cb @ S.T)
-        assign[s : s + blk] = sq.argmin(axis=1)
-    return ncoarse, assign
+    ncoarse = max(1, math.isqrt(len(C)))
+    return ncoarse, _topk(C, C[:ncoarse], np.arange(ncoarse), 1, rows=blk)[1][:, 0]
 
 
 def _numpy_routed_assign(
@@ -1579,15 +1622,15 @@ def _numpy_routed_assign(
     both streaming consumers (``cents`` as for _numpy_flat_assign),
     with keep-column pass-through and a bigint cell.  Cell-for-
     cell equal to the Catalyst routed branch of _assign_cells at the
-    same rprobe (same _router_groups_np, exact integer distances in
-    float64, stable argsort = the (gsq, gid) router tie-break, running
-    strict-<-or-lower-cid min across probed groups = the union's
-    (sq, cid) min_by) — pinned by test_numpy_routed_equals_catalyst_
-    routed.  This replaces the Catalyst router on the AUTO past-
-    ceiling path: measured at 128k vectors, numpy routing walls
-    7.6–8.7 s vs Catalyst 26.4–31.8 s at nlist=8192 and 41–46 s vs
-    57–61 s at 32768 (tools/flat_crossover_probe.py, SCALE.md r14
-    close); after _router_groups_np went vectorized (r14-opt — the 32768
+    same rprobe (same _router_groups_np; the top-k reducer at
+    k = rprobe over seed positions = the (gsq, gid) router tie-break,
+    and at k = 1 with one running (sq, cid) min across probed groups =
+    the union's (sq, cid) min_by) — pinned by
+    test_numpy_routed_equals_catalyst_routed.  This replaces the
+    Catalyst router on the AUTO past-ceiling path: measured at 128k
+    vectors, numpy routing walls 7.6–8.7 s vs Catalyst 26.4–31.8 s at
+    nlist=8192 and 41–46 s vs 57–61 s at 32768
+    (tools/flat_crossover_probe.py, SCALE.md r14 close); after _router_groups_np went vectorized (r14-opt — the 32768
     wall was 42.2 s of driver-side router construction) the same legs
     read 1.9–2.2 s at 8192 and 3.5–4.2 s at 32768
     (tools/router_groups_vec_probe.py).  Forced two_level=True keeps
@@ -1626,36 +1669,13 @@ def _numpy_routed_assign(
             if not len(pdf):
                 continue
             X = np.stack(pdf["vm"].to_numpy()).astype(np.float64)
-            gsq = (
-                (X * X).sum(axis=1)[:, None]
-                + (G * G).sum(axis=1)[None, :]
-                - 2.0 * (X @ G.T)
-            )
-            probed = np.argsort(gsq, axis=1, kind="stable")[:, :rp]
-            best_sq = np.full(len(X), np.inf)
-            cell = np.zeros(len(X), dtype=np.int64)
-            for j in range(ncoarse):
-                if j not in fine:
-                    continue
-                mask = (probed == j).any(axis=1)
-                if not mask.any():
-                    continue
-                mcids, M = fine[j]
-                Xm = X[mask]
-                msq = (
-                    (Xm * Xm).sum(axis=1)[:, None]
-                    + (M * M).sum(axis=1)[None, :]
-                    - 2.0 * (Xm @ M.T)
-                )
-                loc = msq.argmin(axis=1)
-                gsqm = msq[np.arange(len(Xm)), loc]
-                gcid = mcids[loc]
-                idx = np.flatnonzero(mask)
-                upd = (gsqm < best_sq[idx]) | (
-                    (gsqm == best_sq[idx]) & (gcid < cell[idx])
-                )
-                best_sq[idx[upd]] = gsqm[upd]
-                cell[idx[upd]] = gcid[upd]
+            probed = _topk(X, G, np.arange(ncoarse), rp)[1]
+            S, I = np.full((len(X), 1), np.inf), np.full((len(X), 1), -1, np.int64)
+            for j, (mcids, M) in fine.items():
+                idx = np.flatnonzero((probed == j).any(axis=1))
+                if len(idx):
+                    S[idx], I[idx] = _topk(X[idx], M, mcids, 1, best=(S[idx], I[idx]))
+            cell = I[:, 0]
             out = {
                 "vec_id": pdf["vec_id"].astype("int64"),
                 "cell": pd.Series(cell, index=pdf.index),
@@ -5835,11 +5855,10 @@ def _cell_pair_kernel(eps: int, mode: str):
     """Per-cell ε-pair scan as a grouped numpy kernel (r15, VERDICT
     r14 next #3 — the most expensive surviving path: the Catalyst
     pair join evaluates a d-dim zip_with fold per candidate pair,
-    ~Σocc² of them).  Exactness: distances use the decomposed float64
-    form whose every intermediate is an integer below 2^53
-    (_assert_sub53 — the same proof as every numpy assign path), so
+    ~Σocc² of them).  The distances and the id mask are the ε-hit
+    reducer's (_eps_hits over _sq_tiles: exact under _assert_sub53), so
     the pair SET is bit-identical to _int_sqdist's.  Norm-band
-    pruning: rows sort by ‖x‖ and a row block only meets columns
+    pruning: rows sort by ‖x‖ and a row tile only meets columns
     within sqrt(eps) of its norm range — |‖x‖−‖y‖| > sqrt(eps) ⟹
     ‖x−y‖² > eps (reverse triangle inequality), so pruned pairs are
     provably outside the ball; the float margin (+1e-3 micro-units on
@@ -5865,38 +5884,28 @@ def _cell_pair_kernel(eps: int, mode: str):
             return pd.DataFrame({c: pd.Series([], dtype="int64") for c in cols})
         ids = pdf["vec_id"].to_numpy().astype(np.int64)
         X = np.stack(pdf["vm"].to_numpy()).astype(np.float64)
-        _assert_sub53(X)
-        x2 = (X * X).sum(axis=1)
-        s = np.sqrt(x2)
+        s = np.sqrt((X * X).sum(axis=1))
         o = np.argsort(s, kind="stable")
-        ids, X, x2, s = ids[o], X[o], x2[o], s[o]
-        lo_parts, hi_parts = [], []
-        dup = np.full(n, np.iinfo(np.int64).max) if mode == "min" else None
-        for a in range(0, n, 1024):
-            b = min(a + 1024, n)
-            lo = int(np.searchsorted(s, s[a] - thr, side="left"))
-            hi = int(np.searchsorted(s, s[b - 1] + thr, side="right"))
-            D = (
-                x2[a:b, None]
-                + x2[None, lo:hi]
-                - 2.0 * (X[a:b] @ X[lo:hi].T)
+        ids, X, s = ids[o], X[o], s[o]
+
+        def band(rs):
+            return (
+                int(np.searchsorted(s, s[rs.start] - thr, side="left")),
+                int(np.searchsorted(s, s[rs.stop - 1] + thr, side="right")),
             )
-            ii, jj = np.nonzero(D <= eps)
-            gi, gj = ii + a, jj + lo
-            m = ids[gi] < ids[gj]  # one orientation per pair, no self
-            gi, gj = gi[m], gj[m]
-            if mode == "min":
-                np.minimum.at(dup, gj, ids[gi])
-            else:
-                lo_parts.append(ids[gi])
-                hi_parts.append(ids[gj])
+
+        hits = _eps_hits(X, X, ids, ids, eps, band)
         if mode == "min":
+            dup = np.full(n, np.iinfo(np.int64).max)
+            for i, j in hits:
+                np.minimum.at(dup, i, ids[j])
             hit = dup < np.iinfo(np.int64).max
             return pd.DataFrame(
                 {"vec_id": ids[hit], "dup_of": dup[hit]}
             ).astype("int64")
-        src = np.concatenate(lo_parts) if lo_parts else np.empty(0, np.int64)
-        dst = np.concatenate(hi_parts) if hi_parts else np.empty(0, np.int64)
+        ij = list(hits)  # n ≥ 2: every row tile meets its own rows
+        src = np.concatenate([ids[j] for _, j in ij])
+        dst = np.concatenate([ids[i] for i, _ in ij])
         return pd.DataFrame({"src": src, "dst": dst}).astype("int64")
 
     return fn

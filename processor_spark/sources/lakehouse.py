@@ -80,6 +80,7 @@ import os
 import shutil
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -456,9 +457,13 @@ class LakeTable:
 
     def _write_data(
         self, spark: SparkSession, df: DataFrame, key: str, num_buckets: int
-    ) -> tuple[dict[str, list[str]], str, str]:
+    ) -> tuple[dict[str, list[str]], str, str, int]:
         """Write ``df`` hash-bucketed on ``key`` into a fresh immutable
-        commit dir; return (bucket -> [dir]) and the logical schema DDL.
+        commit dir; return (bucket -> [dir]), the logical schema DDL,
+        the commit dir and the number of rows written.  The row count
+        is summed from the parquet footers under the commit dir (the
+        table lives on a local filesystem), so it runs no Spark job and
+        does not execute ``df`` a second time.
 
         The bucket is a partition DIRECTORY, not a data column — it is
         derivable (pmod(key, B)) so storing it would be redundant; the
@@ -474,11 +479,17 @@ class LakeTable:
             .parquet(commit_dir)
         )
         buckets: dict[str, list[str]] = {}
+        rows = 0
         for name in sorted(os.listdir(commit_dir)):
             if name.startswith(f"{_BUCKET}="):
                 b = name.split("=", 1)[1]
                 buckets[b] = [os.path.join(commit_dir, name)]
-        return buckets, schema_ddl, commit_dir
+                rows += sum(
+                    pq.read_metadata(os.path.join(buckets[b][0], f)).num_rows
+                    for f in os.listdir(buckets[b][0])
+                    if not f.startswith(("_", "."))
+                )
+        return buckets, schema_ddl, commit_dir, rows
 
     def create(
         self,
@@ -510,15 +521,7 @@ class LakeTable:
             if mode != "overwrite":
                 raise FileExistsError(f"lakehouse table exists at {self.path}")
             shutil.rmtree(self.path)
-        buckets, ddl, commit_dir = self._write_data(spark, df, key, num_buckets)
-        total = int(
-            spark.read.schema(ddl)
-            .parquet(*(p for ps in buckets.values() for p in ps))
-            .groupBy()
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()[0]
-            .cnt
-        )
+        buckets, ddl, commit_dir, total = self._write_data(spark, df, key, num_buckets)
         self._commit(
             {
                 "version": 1,
@@ -872,7 +875,7 @@ class LakeTable:
         if deletes is not None:
             merged = merged.join(deletes, key, "left_anti")
 
-        new_buckets, _, commit_dir = self._write_data(spark, merged, key, nb)
+        new_buckets, _, commit_dir, delta = self._write_data(spark, merged, key, nb)
         out_buckets = {
             b: ps for b, ps in m["buckets"].items() if b not in touched
         }
@@ -885,7 +888,6 @@ class LakeTable:
 
         # exact new total: carried-forward buckets keep their rows; the
         # touched buckets swap their old count for the merged count
-        delta = merged.groupBy().agg(F.count(F.lit(1)).alias("cnt")).collect()[0].cnt
         old_touched_rows = (
             target_touched.groupBy().agg(F.count(F.lit(1)).alias("cnt")).collect()[0].cnt
             if touched
@@ -990,7 +992,7 @@ class LakeTable:
         )
         out_deletes = {b: list(es) for b, es in m.get("deletes", {}).items()}
         if mode == "mor":
-            del_buckets, _, _ = self._write_data(spark, keys, key, nb)
+            del_buckets, _, _, _ = self._write_data(spark, keys, key, nb)
             out_buckets = m["buckets"]
             for b, ps in del_buckets.items():
                 if b not in touched:
@@ -1000,7 +1002,7 @@ class LakeTable:
                 )
         else:  # cow: rewrite touched buckets minus the keys, vectors cleared
             remaining = target.join(keys, key, "left_anti")
-            new_buckets, _, cow_commit_dir = self._write_data(spark, remaining, key, nb)
+            new_buckets, _, cow_commit_dir, _ = self._write_data(spark, remaining, key, nb)
             out_buckets = {
                 b: ps for b, ps in m["buckets"].items() if b not in touched
             }
@@ -1042,11 +1044,10 @@ class LakeTable:
             f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
         )
         widened_ddl = _widen_ddl(spark, m["schema"], df_ddl)  # raises on type change
-        new_buckets, _, commit_dir = self._write_data(spark, df, m["key"], m["num_buckets"])
+        new_buckets, _, commit_dir, added = self._write_data(spark, df, m["key"], m["num_buckets"])
         out = {b: list(ps) for b, ps in m["buckets"].items()}
         for b, ps in new_buckets.items():
             out.setdefault(b, []).extend(ps)
-        added = df.groupBy().agg(F.count(F.lit(1)).alias("cnt")).collect()[0].cnt
         version = m["version"] + 1
         self._commit(
             {
@@ -1093,7 +1094,7 @@ class LakeTable:
         if not multi:
             return m["version"]
         compacted = self._read_buckets(spark, m, multi)
-        new_buckets, _, commit_dir = self._write_data(spark, compacted, m["key"], m["num_buckets"])
+        new_buckets, _, commit_dir, _ = self._write_data(spark, compacted, m["key"], m["num_buckets"])
         out = {b: ps for b, ps in m["buckets"].items() if b not in multi}
         out.update(new_buckets)
         version = m["version"] + 1

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from processor_spark.operators.similarity import _nearest_cells
 from processor_spark.sources.fixtures import schema_for
 
 
@@ -1292,30 +1293,6 @@ def stream_ivf_ingest(
     return path
 
 
-def _nearest_cells(Q, cids, C, nprobe: int):
-    """(nq, min(nprobe, nlist)) cids of each query row's nearest
-    centroids, nearest first: exact integer distances in float64 (the
-    _assert_sub53 contract, checked here for Q; ``cids``/``C`` come
-    cid-ascending from _cents_np / _cents_np_path), and a STABLE
-    argsort over those cid-ascending columns orders equal distances
-    by cid — the (sq, cid) row_number window's tie-break.  Rows go in
-    chunks so a distance block stays near 16M entries at any nlist."""
-    import numpy as np
-
-    from processor_spark.operators.similarity import _assert_sub53
-
-    _assert_sub53(Q)
-    k = min(nprobe, len(cids))
-    c2 = (C * C).sum(axis=1)
-    near = np.empty((len(Q), k), dtype=np.int64)
-    step = max(1, (1 << 24) // max(1, len(cids)))
-    for lo in range(0, len(Q), step):
-        Qc = Q[lo : lo + step]
-        sq = (Qc * Qc).sum(axis=1)[:, None] + c2[None, :] - 2.0 * (Qc @ C.T)
-        near[lo : lo + len(Qc)] = cids[np.argsort(sq, axis=1, kind="stable")[:, :k]]
-    return near
-
-
 def serve_ivf_stream_index(spark: SparkSession, path: str, query_df: DataFrame) -> DataFrame:
     """k-NN against the stream-maintained IVF index: probe the frozen
     centroids with each query, then score ONLY the probed cells of
@@ -1812,14 +1789,13 @@ def _semdedup_state_fn(key, pdfs: Iterator[pd.DataFrame], state):
     order-free — dup_of(v) = min{id : id < v, dist ≤ eps} over
     (state ∪ batch) — because candidates are exactly the lower-id
     rows regardless of processing order, so it vectorizes as the
-    pair kernel's blocked decomposed-distance matmul with an id
-    mask: float64 over integers below 2^53 (the module-wide
-    exactness proof), bit-identical verdicts (equality pinned by
-    the streamed-equals-batch-twin tests and
+    pair kernel's ε-hit reducer (similarity._eps_hits: exact integer
+    distances over _sq_tiles, lower-id mask), bit-identical verdicts
+    (equality pinned by the streamed-equals-batch-twin tests and
     test_semdedup_state_fn_hot_cell_vectorized)."""
     import numpy as np
 
-    from processor_spark.operators.similarity import SEMDEDUP_EPS, _assert_sub53
+    from processor_spark.operators.similarity import SEMDEDUP_EPS, _eps_hits
 
     cell = int(key[0])
     parts = [pdf for pdf in pdfs if len(pdf)]
@@ -1856,28 +1832,13 @@ def _semdedup_state_fn(key, pdfs: Iterator[pd.DataFrame], state):
     # candidate pool = state ∪ batch; per new row v the id mask keeps
     # exactly {id < v} — the same set the sequential loop probed
     all_ids = np.concatenate([mem_ids, ids_new])
-    A = np.concatenate([mem, X_new]).astype(np.float64)
-    dup = np.full(n, -1, dtype=np.int64)
-    if len(all_ids) > 1 and d:
-        _assert_sub53(A)
-        X = X_new.astype(np.float64)
-        a2 = (A * A).sum(axis=1)
-        x2 = a2[len(mem_ids) :]
-        best = np.full(n, np.iinfo(np.int64).max)
-        for s in range(0, n, 1024):
-            e = min(s + 1024, n)
-            D = x2[s:e, None] + a2[None, :] - 2.0 * (X[s:e] @ A.T)
-            hit = (D <= SEMDEDUP_EPS) & (all_ids[None, :] < ids_new[s:e, None])
-            ii, jj = np.nonzero(hit)
-            np.minimum.at(best, ii + s, all_ids[jj])
-        found = best < np.iinfo(np.int64).max
-        dup[found] = best[found]
-    state.update(
-        (
-            np.concatenate([mem_ids, ids_new]).tolist(),
-            np.concatenate([mem, X_new]).flatten().tolist(),
-        )
-    )
+    pool = np.concatenate([mem, X_new])
+    A = pool.astype(np.float64)
+    best = np.full(n, np.iinfo(np.int64).max)
+    for i, j in _eps_hits(A[len(mem_ids) :], A, ids_new, all_ids, SEMDEDUP_EPS):
+        np.minimum.at(best, i, all_ids[j])
+    dup = np.where(best < np.iinfo(np.int64).max, best, -1)
+    state.update((all_ids.tolist(), pool.flatten().tolist()))
     yield pd.DataFrame(
         {
             "vec_id": pd.Series(ids_new, dtype="int64"),

@@ -1,0 +1,84 @@
+"""Every numpy distance path goes through one exact-distance kernel.
+
+``operators.similarity._sq_tiles`` computes the decomposed squared
+distance x² + y² − 2·x·yᵀ in float64, checks the sub-2^53 exactness
+contract (``_assert_sub53``) on both operands and tiles by one rule; the
+top-k and ε-hit reducers on top of it own the (sq, id) tie-break and the
+id masks.  A hand-written copy of the decomposition elsewhere would be a
+separate place to get the exactness proof, the tile or the tie-break
+wrong.  Each module under ``processor_spark/`` is parsed with ``ast``:
+a subtraction whose right operand is ``2.0 * (A @ B.T)`` may appear only
+in the kernel, and ``_assert_sub53`` may be called only by the kernel
+and by ``_cents_sorted``, which guards a centroid table read from disk.
+The Gram and pixel matmuls elsewhere are not distance blocks and do not
+match the pattern.
+"""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
+ENGINE = pathlib.Path(__file__).resolve().parent.parent / "processor_spark"
+KERNEL = "_sq_tiles"
+GUARD = "_assert_sub53"
+
+
+def _is_two_times_gram(node: ast.AST) -> bool:
+    """``2.0 * (A @ B.T)``."""
+    return (
+        isinstance(node, ast.BinOp)
+        and isinstance(node.op, ast.Mult)
+        and isinstance(node.left, ast.Constant)
+        and node.left.value == 2.0
+        and isinstance(node.right, ast.BinOp)
+        and isinstance(node.right.op, ast.MatMult)
+        and isinstance(node.right.right, ast.Attribute)
+        and node.right.right.attr == "T"
+    )
+
+
+def _sites(tree: ast.Module):
+    """(line, enclosing function, kind) of every decomposed-distance
+    expression and every exactness-guard call in a module."""
+    found = []
+
+    def visit(node, func):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if (
+            isinstance(node, ast.BinOp)
+            and isinstance(node.op, ast.Sub)
+            and _is_two_times_gram(node.right)
+        ):
+            found.append((node.right.lineno, func, "distance"))
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name == GUARD:
+                found.append((node.lineno, func, "guard"))
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(tree, None)
+    return found
+
+
+def scan(root: pathlib.Path = ENGINE) -> dict[str, list[str]]:
+    """``{"distance": [...], "guard": [...]}`` of
+    ``path:line (function)`` sites under ``root``."""
+    out: dict[str, list[str]] = {"distance": [], "guard": []}
+    for path in sorted(root.rglob("*.py")):
+        for line, func, kind in _sites(ast.parse(path.read_text())):
+            out[kind].append(f"{path.relative_to(root.parent)}:{line} ({func})")
+    return out
+
+
+def test_one_decomposed_distance_site():
+    sites = scan()["distance"]
+    assert [s.rsplit(" ", 1)[1] for s in sites] == [f"({KERNEL})"], "\n".join(sites)
+
+
+def test_exactness_guard_called_by_kernel_and_centroid_read_only():
+    callers = sorted(s.rsplit(" ", 1)[1] for s in scan()["guard"])
+    assert callers == ["(_cents_sorted)", f"({KERNEL})"], "\n".join(scan()["guard"])

@@ -99,10 +99,11 @@ def test_kernel_eps_boundary_and_band_prune(spark):
 
 
 def test_kernel_multiblock_rows_match_catalyst(spark):
-    """>1024 rows in one cell forces the kernel's row-block loop
-    (a > 0) AND cross-block pairs; a lattice of 1500 vectors spaced
-    so each has in-ball neighbors both inside and outside its block
-    must match the Catalyst join exactly."""
+    """1500 rows in one cell sit in one 2048-row tile of the distance
+    kernel but span two 1024-column tiles, so in-ball pairs cross a
+    column-tile boundary; a lattice of 1500 vectors spaced so each has
+    in-ball neighbors both inside and outside its tile must match the
+    Catalyst join exactly."""
     from pyspark.sql import functions as F
 
     from processor_spark.operators import similarity as S

@@ -81,9 +81,10 @@ def test_stream_dedup(spark, events_chunks_dir):
 
 
 def test_stream_dedup_late_rows_across_drains(spark, tmp_path):
-    """dedup_events drained twice on one checkpoint.  The first drain's
-    trailing no-data micro-batch persists its watermark (08:00 − 1 h);
-    the second drain's late filter drops a row older than it (id 4).
+    """dedup_events drained twice on one checkpoint.  The first drain
+    runs one micro-batch, and the commit of that batch persists the
+    watermark it computed (08:00 − 1 h); the second drain's late filter
+    drops a row older than it (id 4).
     The dedup state is never evicted, so id 1, whose first row is
     older than that watermark, is still a duplicate when it comes back
     on time.  The streamed ids equal the batch twin: the distinct ids

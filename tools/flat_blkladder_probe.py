@@ -3,9 +3,11 @@
 blocked exact flat vs numpy-routed rp3 at nlist in {2048, 8192,
 32768} - flat wins the whole span (2.4/1.9, 5.5/6.6, 11.5/41-46 s),
 so NUMPY_FLAT_MAX_NLIST rose to 32768 (the routed impl's per-group
-gather loop degrades with ncoarse).  Companion to
-flat_crossover_probe.py / _probe2.py; requires the ann-bits 64x
-layout."""
+gather loop degrades with ncoarse).  Width 1024 is the default tile of
+similarity._sq_tiles.  Companion to flat_crossover_probe.py
+(its nlist 512-4096 twin, which located the crossover of the untiled
+flat assign, is tools/flat_crossover_probe2.py@dbad5c1); requires the
+ann-bits 64x layout."""
 import json, os, sys, time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from processor_spark.session import build_session

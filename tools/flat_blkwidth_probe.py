@@ -1,10 +1,16 @@
 #!/usr/bin/env python3
-"""Block-width sweep for the numpy flat assign at nlist=8192 (r14
-close): the flat "cliff" flat_crossover_probe.py measured past
-nlist=4096 was MEMORY TRAFFIC, not distance work - walls 42-48 s
-single-block, 13.0-17.8 s at width 2048, 4.7-7.6 s at 1024, 6.5-7.7 s
-at 512.  Basis for similarity.NUMPY_CENT_BLOCK = 1024.  Requires the
-ann-bits 64x layout (tools/ann_bits_probe.py)."""
+"""Tile-width sweep for the numpy flat assign at nlist=8192 under the
+one tile rule of similarity._sq_tiles: a width w gives 2·w-row × w-column
+distance tiles, and similarity.NUMPY_CENT_BLOCK = 1024 (2048 × 1024,
+16 MB) is the measured choice.  The r14-close rows (2048-row chunks:
+42-48 s single-block, 13.0-17.8 s at width 2048, 4.7-7.6 s at 1024,
+6.5-7.7 s at 512) came from tools/flat_blkwidth_probe.py@dbad5c1; its
+single-block leg has no tile-rule twin (an 8192-wide tile spans a
+whole 10,000-row Arrow batch: ~2 GB of temporaries per task), so the
+sweep stops at 2048.  Requires the ann-bits 64x layout
+(tools/ann_bits_probe.py).
+
+Usage: python3 tools/flat_blkwidth_probe.py [width ...]   (default 512 1024 2048)"""
 import json, os, sys, time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from processor_spark.session import build_session
@@ -18,8 +24,9 @@ rows = [(1 + i, [int(x) for x in r.vm]) for i, r in enumerate(vecs.orderBy("vec_
 cents = spark.createDataFrame(rows, "cid long, cm array<bigint>")
 _ = S._numpy_flat_assign(vecs, spark.createDataFrame(rows[:80], "cid long, cm array<bigint>")).select("vec_id","cell").toPandas()
 out = {}
+WIDTHS = [int(a) for a in sys.argv[1:]] or [512, 1024, 2048]
 for rnd in (1, 2):
-    for width in (512, 1024, 2048, 8192):
+    for width in WIDTHS:
         S.NUMPY_CENT_BLOCK = width
         spark.catalog.clearCache()
         t0 = time.perf_counter()

@@ -1375,16 +1375,18 @@ def _assert_sub53(*mats) -> None:
     """Loud guard for the decomposed-float64 exactness contract of
     _sq_tiles, the one kernel every numpy distance path goes through:
     all terms of x² + c² − 2·x·c are integers and every intermediate
-    (the largest is the x²+c² partial-sum chain, ≤ 2·d·M²) stays below
-    2^53, so the float64 arithmetic is EXACT.  The sufficient condition
-    is 2·d·M² < 2^53 (|coord| ≤ ~8.39e6 at d=64, ~4.19e6 at d=256 —
-    micro-unit vectors sit at ≤ ~4.3e6); the r14 docstring overclaimed
-    256·M² < 2^53, which the intermediate can exceed at d=256
-    (ADVICE r14 medium).  The kernel checks both operands once per
-    call, and _cents_sorted checks a centroid table read from disk.
-    Raises instead of silently returning non-reference cells."""
+    and the result stay below 2^53, so the float64 arithmetic is EXACT.
+    Each operand needs 2·d·M² < 2^53 (the x²+c² partial-sum chain;
+    |coord| ≤ ~8.39e6 at d=64, ~4.19e6 at d=256 — micro-unit vectors
+    sit at ≤ ~4.3e6).  Between non-negative operands that also bounds
+    the distance itself (sq ≤ d·M²); once any coordinate is negative
+    the distance reaches d·(Mx+My)², which must stay below 2^53 too.
+    The kernel checks both operands once per call, and _cents_sorted
+    checks a centroid table read from disk.  Raises instead of
+    silently returning non-reference cells."""
     import numpy as np
 
+    mxs, neg = [], False
     for M in mats:
         if M.size == 0:
             continue
@@ -1397,6 +1399,14 @@ def _assert_sub53(*mats) -> None:
                 f"numpy distance paths (max |coord| allowed: "
                 f"{(2.0 ** 52 / d) ** 0.5:.3g})"
             )
+        mxs.append(mx)
+        neg = neg or bool(M.min() < 0)
+    if neg and d * sum(mxs) ** 2 >= 2.0**53:
+        raise ValueError(
+            f"signed coordinates up to {max(mxs):.3g} at d={d} break the "
+            f"d*(Mx+My)^2 < 2^53 float64-exactness contract of the "
+            f"numpy distance paths"
+        )
 
 
 def _sq_tiles(X, Y, rows: int | None = None, cols: int | None = None, band=None):
@@ -1493,23 +1503,22 @@ def _nearest_cells(Q, cids, C, nprobe: int):
     return _topk(Q, C, cids, min(nprobe, len(cids)))[1]
 
 
-def _ivf_files_topk(q_ids, Q, near, files) -> pd.DataFrame:
-    """Exact k-NN of the queries ``q_ids`` (micro-unit rows ``Q``) over
-    the IVF cell files ``files``, a list of (path, cell) parquet leaves
-    of (vec_id, vm) rows.  ``near`` holds each query's probed cells
-    (one row per query).  Each file is read ONCE with pyarrow and
-    scored against the queries that probe its cell by the top-k
-    reducer, which skips a query's own vec_id and keeps one running
-    KNN_K-nearest by (sq, vec_id) per query across files.  The result
-    comes back ranked, as (q_id, neighbor_id, sq_micro2, rank); a query
-    with no candidate has no row."""
+def _ivf_files_topk(keys: pd.DataFrame, Q, pairs) -> pd.DataFrame:
+    """Exact k-NN of the queries ``keys`` (a q_id column plus whatever
+    the caller carries, one row per micro-unit row of ``Q``) over
+    ``pairs``, (path, query rows) for each IVF leaf file of (vec_id, vm)
+    rows and the rows of ``Q`` it is scored against.  Each file is read
+    once with pyarrow and merged by the top-k reducer, which skips a
+    query's own vec_id and keeps one running KNN_K-nearest by
+    (sq, vec_id) per query across files.  The result comes back ranked:
+    the rows of ``keys`` with (neighbor_id, sq_micro2, rank) appended; a
+    query with no candidate has no row."""
     import numpy as np
     import pyarrow.parquet as pq
 
-    q_ids = np.asarray(q_ids, dtype=np.int64)
+    q_ids = keys["q_id"].to_numpy().astype(np.int64)
     S, I = np.full((len(Q), KNN_K), np.inf), np.full((len(Q), KNN_K), -1, np.int64)
-    for f, c in files:
-        qi = np.flatnonzero((near == c).any(axis=1))
+    for f, qi in pairs:
         with pq.ParquetFile(f) as pf:
             t = pf.read(columns=["vec_id", "vm"])
         vid = t.column("vec_id").to_numpy().astype(np.int64)
@@ -1520,13 +1529,88 @@ def _ivf_files_topk(q_ids, Q, near, files) -> pd.DataFrame:
         )
         S[qi], I[qi] = _topk(Q[qi], V, vid, KNN_K, best=(S[qi], I[qi]), skip=q_ids[qi])
     r, p = np.nonzero(np.isfinite(S))
-    return pd.DataFrame(
-        {
-            "q_id": q_ids[r],
-            "neighbor_id": I[r, p],
-            "sq_micro2": S[r, p].astype(np.int64),
-            "rank": p + 1,
-        }
+    return keys.iloc[r].reset_index(drop=True).assign(
+        neighbor_id=I[r, p], sq_micro2=S[r, p].astype(np.int64), rank=p + 1
+    )
+
+
+def _knn_queries(spark: SparkSession, sf_dir: str, *cols: Column) -> DataFrame:
+    """The ANN keys' query batch, vec_id 1..KNN_QUERIES, as
+    (q_id, *cols, qm) micro-unit rows."""
+    return (
+        load(spark, sf_dir, "embeddings")
+        .where(F.col("vec_id") <= KNN_QUERIES)
+        .select(F.col("vec_id").alias("q_id"), *cols, _micro_arr("embedding").alias("qm"))
+    )
+
+
+def serve_ivf_index(path: str, query_df: DataFrame, nprobe: int) -> DataFrame:
+    """Exact k-NN of ``query_df`` (q_id, qm) against a persisted IVF
+    index: the one serve of every cell layout the engine writes —
+    ``assignments/gen=<g>/cell=<c>`` (the stream index and the
+    two-generation append index) and ``assignments/cell=<c>/label=<l>``
+    (build_ivf_kmeans_index).  A query frame that carries ``q_label``
+    is a filtered serve: each query is scored only against the
+    ``label=<its label>`` leaves of its probed cells, and its label is
+    carried into the output as ``label``.
+
+    At call time the driver heals an interrupted swap of either root a
+    compaction replaces (the whole index, the assignments tree), reads
+    the centroids with pyarrow (_cents_np_path) and snapshots the leaf
+    roots — the ``gen=`` dirs, or ``assignments`` itself for the
+    one-generation layout — with no Spark job.  The serve is one narrow
+    mapInPandas over the query frame: each task, per Arrow batch of
+    queries, probes the ``nprobe`` nearest centroids (_nearest_cells,
+    exact integer distances, (sq, cid) order), lists the probed leaves
+    with os.walk (the indexes' local-filesystem contract: they are
+    published and swapped with os.replace) and ranks them with
+    _ivf_files_topk.  Each query's local top-k is the answer, so no
+    exchange follows and the caller's collect is one job; a cell probed
+    by queries in k tasks is read k times.  A snapshotted leaf root that
+    is gone by the time a task runs was swapped by a compaction: it
+    raises rather than serve a partial index.  An empty query frame, an
+    index with no generation yet, or probed cells empty everywhere give
+    an empty frame with the same schema.  A stateless map runs as is on
+    a streaming query frame, each micro-batch served against the
+    call-time snapshot."""
+    import os
+
+    root = os.path.join(path, "assignments")
+    heal_swapped_root(path)  # the stream retrain swaps the whole index
+    heal_swapped_root(root)  # the append compaction swaps its assignments
+    cids, C = _cents_np_path(os.path.join(path, "centroids"))
+    roots = [os.path.join(root, f"gen={g}") for g in _gen_ids(root)] or (
+        [root] if os.path.isdir(root) else []
+    )
+    labelled = "q_label" in query_df.columns
+
+    def serve(it):
+        import numpy as np
+
+        for q in it:
+            if not len(q):
+                continue
+            Q = np.stack(q.pop("qm").to_numpy()).astype(np.float64)
+            near = _nearest_cells(Q, cids, C, nprobe)
+            # what each query reads under a probed cell=<c>: all of it,
+            # or its own label's dir
+            sub = np.asarray([f"label={l}" for l in q["q_label"]] if labelled else [""] * len(q))
+            pairs = []
+            for r in roots:
+                if not os.path.isdir(r):
+                    raise FileNotFoundError(f"{r} vanished mid-serve: a compaction swapped the index")
+                for c in np.unique(near).tolist():
+                    hit = (near == c).any(axis=1)
+                    for s in np.unique(sub[hit]).tolist():
+                        rows = np.flatnonzero(hit & (sub == s))
+                        leaf = os.path.join(r, f"cell={c}", s)
+                        pairs += [(f, rows) for f in _snapshot_parquet_files(leaf)]
+            yield _ivf_files_topk(q.rename(columns={"q_label": "label"}), Q, pairs)
+
+    keys = ["q_id", "q_label"] if labelled else ["q_id"]
+    out = "q_id bigint, label int" if labelled else "q_id bigint"
+    return query_df.select(*keys, "qm").mapInPandas(
+        serve, out + ", neighbor_id bigint, sq_micro2 bigint, rank bigint"
     )
 
 
@@ -2020,8 +2104,8 @@ def build_ivf_kmeans_index(
     )
     cents.write.parquet(os.path.join(path, "centroids"))
     # (cell, label) two-level partitioning (fmt 3): the unfiltered
-    # serve prunes on cell alone (label dirs are transparent to it —
-    # pinned read schema), the filtered serve prunes BOTH levels, so a
+    # serve reads every label dir of a probed cell, the filtered serve
+    # only its query's label dir (serve_ivf_index), so a
     # selective predicate skips whole directories instead of filtering
     # rows inside probed cells.  Cost: nlist x |labels| directories —
     # the knob is only worth promoting for low-cardinality filter
@@ -2041,64 +2125,15 @@ def build_ivf_kmeans_index(
 
 @register("q_ann_ivf_kmeans_serve", sql=_IVFK_SQL)
 def q_ann_ivf_kmeans_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serving path of the trained-centroid IVF: load the persisted
-    Lloyd centroids + cell assignments (build_ivf_kmeans_index),
-    score the query batch against the broadcast centroid table
-    (|Q| × nlist exact-integer distances), directory-prune to the
-    nprobe probed cells, and rank candidates by the same exact
-    integer squared-L2.  Shares the rebuild twin's oracle — the hash
-    match certifies the index round trip through parquet, including
-    the integerized vectors stored IN the assignments (serving never
+    """Serving path of the trained-centroid IVF: the persisted Lloyd
+    centroids + cell assignments (build_ivf_kmeans_index) served by
+    serve_ivf_index at IVF_NPROBE, which reads every label dir of the
+    probed cells.  Shares the rebuild twin's oracle — the hash match
+    certifies the index round trip through parquet, including the
+    integerized vectors stored IN the assignments (serving never
     touches the fixture corpus except for the query batch read)."""
-    import os
-
     path = build_ivf_kmeans_index(spark, sf_dir)
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
-    qv = (
-        load(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") <= KNN_QUERIES)
-        .select(F.col("vec_id").alias("q_id"), _micro_arr("embedding").alias("qm"))
-    )
-    qd = qv.crossJoin(F.broadcast(cents)).select(
-        "q_id", "qm", "cid", _int_sqdist(F.col("qm"), F.col("cm")).alias("sq")
-    )
-    wp = Window.partitionBy("q_id").orderBy("sq", "cid")
-    # persist: the probe frame (|Q| x nprobe rows) feeds BOTH the
-    # driver-side cell-pruning collect and the broadcast candidate
-    # join — without it the query batch is re-scored against the
-    # centroid table in a second job (ADVICE r8)
-    probes = (
-        qd.withColumn("rn", F.row_number().over(wp))
-        .where(F.col("rn") <= IVF_NPROBE)
-        .select("q_id", "qm", F.col("cid").alias("cell"))
-        .transform(scoped_persist)
-    )
-    cells = sorted({r.cell for r in probes.select("cell").distinct().collect()})
-    # pin the read schema: fmt 2 assignments carry a label column the
-    # unfiltered serve never uses — old consumers pin what they read
-    # (same rule q_bm25_serve follows for positions; ADVICE r9)
-    assign = (
-        spark.read.schema("vec_id bigint, vm array<bigint>, cell int")
-        .parquet(os.path.join(path, "assignments"))
-        .where(F.col("cell").isin(cells))
-    )
-    cand = assign.join(F.broadcast(probes), "cell").where(
-        F.col("vec_id") != F.col("q_id")
-    )
-    wr = Window.partitionBy("q_id").orderBy("sq", "vec_id")
-    return (
-        cand.select(
-            "q_id", "vec_id", _int_sqdist(F.col("qm"), F.col("vm")).alias("sq")
-        )
-        .withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= KNN_K)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("sq").cast("long").alias("sq_micro2"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return serve_ivf_index(path, _knn_queries(spark, sf_dir), IVF_NPROBE)
 
 
 # ------------------------------------------------ filtered ANN serving (r9)
@@ -2240,78 +2275,21 @@ def q_ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("q_ann_filtered_serve", sql=_IVFK_FILTERED_SQL)
 def q_ann_filtered_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serving path of filtered ANN: the label predicate runs INSIDE
-    the persisted index scan — cells are directory-pruned to the
-    nprobe probed ones (plan-asserted), then the label filter cuts
-    the candidate stream BEFORE any distance is computed, so the
-    re-rank pays only |filtered candidates| int64 distances.  The
-    index carries the filter column in its cell-partitioned
-    assignments (build_ivf_kmeans_index fmt 2) — serving never joins
-    back to the corpus for metadata.  Shares the rebuild twin's
-    oracle: the hash match certifies the label round trip through
-    parquet alongside the vectors.  fmt 3 (r11) promotes the filter
-    column INTO the partitioning — (cell, label)-sharded assignments
-    — so the query batch's labels prune DIRECTORIES (plan-asserted
-    two-level PartitionFilters) and a selective predicate's serve
-    cost drops to |probed cells ∩ query labels| instead of scanning
-    whole cells and filtering rows; at 100 TB this is the difference
-    between reading nprobe/nlist of the corpus and nprobe/(nlist·L)
-    of it.  A highly-selective predicate beyond the label sharding
-    still wants nprobe raised (the measured ladder in SCALE.md
-    r10)."""
-    import os
-
+    """Serving path of filtered ANN: the query batch carries each
+    query's label, so serve_ivf_index at IVFK_NPROBE_F reads only the
+    ``cell=<probed>/label=<query's label>`` dirs of the (cell, label)-
+    partitioned assignments (build_ivf_kmeans_index fmt 3) — a
+    selective predicate skips whole directories, and every distance is
+    computed against a candidate that already passes it.  At 100 TB
+    that is the difference between reading nprobe/nlist of the corpus
+    and nprobe/(nlist·L) of it; serving never joins back to the corpus
+    for metadata.  Shares the rebuild twin's oracle: the hash match
+    certifies the label round trip through parquet alongside the
+    vectors.  A highly-selective predicate beyond the label sharding
+    still wants nprobe raised (the measured ladder in SCALE.md r10)."""
     path = build_ivf_kmeans_index(spark, sf_dir)
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
-    qv = (
-        load(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") <= KNN_QUERIES)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("label").alias("q_label"),
-            _micro_arr("embedding").alias("qm"),
-        )
-    )
-    qd = qv.crossJoin(F.broadcast(cents)).select(
-        "q_id", "q_label", "qm", "cid",
-        _int_sqdist(F.col("qm"), F.col("cm")).alias("sq"),
-    )
-    wp = Window.partitionBy("q_id").orderBy("sq", "cid")
-    # persist: feeds the driver-side cell-pruning collect AND the
-    # broadcast candidate join (the q_ann_ivf_kmeans_serve rule)
-    probes = (
-        qd.withColumn("rn", F.row_number().over(wp))
-        .where(F.col("rn") <= IVFK_NPROBE_F)
-        .select("q_id", "q_label", "qm", F.col("cid").alias("cell"))
-        .transform(scoped_persist)
-    )
-    pruned = probes.select("cell", "q_label").distinct().collect()
-    cells = sorted({r.cell for r in pruned})
-    labels = sorted({r.q_label for r in pruned})
-    # two-level directory pruning (fmt 3): probed cells AND the query
-    # batch's labels — both partition columns, both scan-pushed
-    assign = spark.read.parquet(os.path.join(path, "assignments")).where(
-        F.col("cell").isin(cells) & F.col("label").isin(labels)
-    )
-    cand = assign.join(F.broadcast(probes), "cell").where(
-        (F.col("vec_id") != F.col("q_id")) & (F.col("label") == F.col("q_label"))
-    )
-    wr = Window.partitionBy("q_id").orderBy("sq", "vec_id")
-    return (
-        cand.select(
-            "q_id", "label", "vec_id",
-            _int_sqdist(F.col("qm"), F.col("vm")).alias("sq"),
-        )
-        .withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= KNN_K)
-        .select(
-            "q_id",
-            "label",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("sq").cast("long").alias("sq_micro2"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    qv = _knn_queries(spark, sf_dir, F.col("label").alias("q_label"))
+    return serve_ivf_index(path, qv, IVFK_NPROBE_F)
 
 
 # Product-quantization parameters: 64-dim vectors → 4 subspaces of 16
@@ -2849,11 +2827,7 @@ def q_knn_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     full hash oracle."""
     e = load(spark, sf_dir, "embeddings", spread=True)
     vecs = e.select("vec_id", _micro_arr("embedding").alias("vm"))
-    qv = (
-        load(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") <= KNN_QUERIES)
-        .select(F.col("vec_id").alias("q_id"), _micro_arr("embedding").alias("qm"))
-    )
+    qv = _knn_queries(spark, sf_dir)
     wr = Window.partitionBy("q_id").orderBy("sq", "vec_id")
     return (
         vecs.crossJoin(F.broadcast(qv))
@@ -3264,11 +3238,7 @@ def _ivfpq_res_query_frames(
     the defining asymmetry of residual IVF-PQ), and the ADT is
     |Q| x nprobe x M x K integer rows, broadcast; qv keeps the raw
     micro-unit query vectors for the refine twin."""
-    qv = (
-        load(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") <= KNN_QUERIES)
-        .select(F.col("vec_id").alias("q_id"), _micro_arr("embedding").alias("qm"))
-    )
+    qv = _knn_queries(spark, sf_dir)
     wp = Window.partitionBy("q_id").orderBy("sq", "cid")
     probes = (
         qv.crossJoin(F.broadcast(cents))
@@ -4155,6 +4125,44 @@ def _swap_root(stage: str, root: str) -> None:
         os.replace(stage, root)
 
 
+def _gen_ids(root: str) -> list[int]:
+    """Ascending batch ids of the generations published under ``root``
+    ([] before the first); the last is the high-water mark."""
+    import os
+
+    if not os.path.isdir(root):
+        return []
+    return sorted(int(g[4:]) for g in os.listdir(root) if g.startswith("gen="))
+
+
+def _snapshot_parquet_files(root: str) -> list[str]:
+    """Explicit sorted leaf-file snapshot of a GROWING parquet log or
+    index dir (recursive).  Reading ``.parquet(*files)`` makes the
+    logical plan a function of the file SET: a retrain after new files
+    land builds a DIFFERENT plan, so the persisted training
+    (_ivfa_cents) can never hit the CacheManager's identical-plan cache
+    and silently train on the prior epoch's cached rows — the r12
+    stale-centroid trap, now closed on BOTH retrain paths.
+
+    Hidden/temporary path components (leading '_' or '.': Spark's
+    _temporary commit dirs, this module's own .stage-* swap debris
+    from a crashed write) are skipped, matching Spark's directory-
+    listing convention — otherwise a retrain after an interrupted
+    write could silently fold partial/duplicate rows into training
+    (ADVICE r13)."""
+    import os
+
+    out: list[str] = []
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        out.extend(
+            os.path.join(dirpath, f)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+    return sorted(out)
+
+
 def compact_ivf_append_index(spark: SparkSession, sf_dir: str, path: str | None = None) -> str:
     """LSM-style maintenance for the generational IVF index: fold every
     generation's assignments into a single rewritten gen=0 (same
@@ -4195,10 +4203,8 @@ def compact_ivf_append_index(spark: SparkSession, sf_dir: str, path: str | None 
     stage = os.path.join(path, ".stage-compact")
     shutil.rmtree(stage, ignore_errors=True)
     merged = None
-    for g in range(meta["gens"]):
+    for g in _gen_ids(assign_root):
         gdir = os.path.join(assign_root, f"gen={g}")
-        if not os.path.isdir(gdir):
-            continue
         gf = spark.read.schema("vec_id bigint, vm array<bigint>, cell bigint").parquet(gdir)
         merged = gf if merged is None else merged.unionByName(gf)
     write_partitioned(merged, os.path.join(stage, "gen=0"), "cell")
@@ -4214,65 +4220,17 @@ def compact_ivf_append_index(spark: SparkSession, sf_dir: str, path: str | None 
 @register("q_ann_ivf_append", sql=_IVFA_SQL)
 def q_ann_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-NN served from the GENERATIONAL IVF index (base build + delta
-    append under frozen centroids): probes from the persisted centroid
-    table, candidates from the probed cells of BOTH generation
-    directories (partition-pruned reads; an absent cell dir in a
-    generation means that generation holds no vectors in the cell —
-    skip, don't crash).  The oracle is the FULL-corpus assignment
-    under the same frozen base-trained centroids, so the hash match
-    proves base-build + delta-append answers bit-identically to a
-    from-scratch rebuild over the unioned corpus — the strongest
-    incremental-correctness oracle available (the text-append
-    contract, applied to vectors)."""
-    import os
-
+    append under frozen centroids) by serve_ivf_index at IVF_NPROBE:
+    the probed cells of every generation directory (an absent cell dir
+    in a generation means that generation holds no vectors in the
+    cell), whether the index holds both generations or one compacted
+    gen=0.  The oracle is the FULL-corpus assignment under the same
+    frozen base-trained centroids, so the hash match proves base-build
+    + delta-append answers bit-identically to a from-scratch rebuild
+    over the unioned corpus — the strongest incremental-correctness
+    oracle available (the text-append contract, applied to vectors)."""
     path = build_ivf_append_index(spark, sf_dir)
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
-    qv = (
-        load(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") <= KNN_QUERIES)
-        .select(F.col("vec_id").alias("q_id"), _micro_arr("embedding").alias("qm"))
-    )
-    wp = Window.partitionBy("q_id").orderBy("sq", "cid")
-    # persist: feeds both the cell-pruning collect and the candidate join
-    probes = (
-        qv.crossJoin(F.broadcast(cents))
-        .select("q_id", "qm", "cid", _int_sqdist(F.col("qm"), F.col("cm")).alias("sq"))
-        .withColumn("rn", F.row_number().over(wp))
-        .where(F.col("rn") <= IVF_NPROBE)
-        .select("q_id", "qm", F.col("cid").alias("cell"))
-        .transform(scoped_persist)
-    )
-    cells = sorted({r.cell for r in probes.select("cell").distinct().collect()})
-    gen_frames = []
-    for g in range(2):
-        gdir = os.path.join(path, "assignments", f"gen={g}")
-        if os.path.isdir(gdir):
-            gen_frames.append(
-                spark.read.schema("vec_id bigint, vm array<bigint>, cell bigint")
-                .parquet(gdir)
-                .where(F.col("cell").isin(cells))
-            )
-    assign = gen_frames[0]
-    for gf in gen_frames[1:]:
-        assign = assign.unionByName(gf)
-    cand = assign.join(F.broadcast(probes), "cell").where(
-        F.col("vec_id") != F.col("q_id")
-    )
-    wr = Window.partitionBy("q_id").orderBy("sq", "vec_id")
-    return (
-        cand.select(
-            "q_id", "vec_id", _int_sqdist(F.col("qm"), F.col("vm")).alias("sq")
-        )
-        .withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= KNN_K)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("sq").cast("long").alias("sq_micro2"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return serve_ivf_index(path, _knn_queries(spark, sf_dir), IVF_NPROBE)
 
 
 # --------------------- residual IVF-PQ generational append (r11): the

@@ -37,7 +37,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from processor_spark.operators.similarity import _nearest_cells
+from processor_spark.operators.similarity import (
+    _gen_ids,
+    _nearest_cells,
+    _snapshot_parquet_files,
+)
 from processor_spark.sources.fixtures import schema_for
 
 
@@ -1096,16 +1100,6 @@ def quality_model_stats(docs: DataFrame) -> DataFrame:
 # on a foreachBatch frame.
 
 
-def _gen_ids(root: str) -> list[int]:
-    """Ascending batch ids of the generations published under ``root``
-    ([] before the first); the last is the high-water mark."""
-    import os
-
-    if not os.path.isdir(root):
-        return []
-    return sorted(int(g[4:]) for g in os.listdir(root) if g.startswith("gen="))
-
-
 def _publish_gen(root: str, batch_id: int, write) -> None:
     """Publish micro-batch ``batch_id`` as ``root/gen=<batch_id>``.
     ``write(stage)`` fills a stage dir beside ``root`` and returns
@@ -1294,75 +1288,15 @@ def stream_ivf_ingest(
 
 
 def serve_ivf_stream_index(spark: SparkSession, path: str, query_df: DataFrame) -> DataFrame:
-    """k-NN against the stream-maintained IVF index: probe the frozen
-    centroids with each query, then score ONLY the probed cells of
-    every generation directory (an absent cell dir in a generation
-    means no vectors landed there — skip).  Same exact integer ranking
-    as the batch serve keys.
+    """k-NN of ``query_df`` (q_id, qm) against the stream-maintained IVF
+    index at IVF_NPROBE: similarity.serve_ivf_index, the serve of every
+    persisted cell layout, over the ``gen=<g>/cell=<c>`` generations
+    stream_ivf_ingest publishes.  The call runs no Spark job and the
+    caller's collect is one job of one stage, with one task per
+    query-frame partition (pinned in tests/test_streaming.py)."""
+    from processor_spark.operators.similarity import IVF_NPROBE, serve_ivf_index
 
-    ``query_df`` needs (q_id, qm).  The serve is one narrow mapInPandas
-    over it: each task probes, scores and ranks its own queries, so its
-    local top-k is already the answer and no exchange follows.  At call
-    time the driver reads the centroids with pyarrow
-    (similarity._cents_np_path) and takes one snapshot of the
-    generation ids (_gen_ids), which every task then serves; neither
-    runs a Spark job, so the call itself runs none and the caller's
-    collect is one job of one stage, with one task per query-frame
-    partition (pinned in tests/test_streaming.py).  A stateless map runs
-    as is on a streaming query frame, each micro-batch served against
-    the call-time snapshot.
-
-    Per Arrow batch of queries a task runs the _nearest_cells probe
-    (exact integer distances, IVF_NPROBE cells in (sq, cid) order),
-    lists the probed ``gen=<g>/cell=<c>`` leaf files with os.listdir
-    (the index's local-filesystem contract: generations are published
-    and swapped with os.replace under the same root) and hands them to
-    similarity._ivf_files_topk, which reads each file once per batch,
-    drops ``vec_id == q_id`` and ranks the KNN_K nearest by
-    (sq, vec_id).  The floating-point work is the same as one global
-    scoring pass, but a cell probed by queries in k different tasks is
-    read k times.  A snapshotted generation that is gone was folded or
-    swapped by a compaction mid-serve: it raises rather than serve a
-    partial index.  An empty query frame, an index with no generation
-    yet, or probed cells empty in every generation give an empty frame
-    with the same schema."""
-    import os
-
-    from processor_spark.operators.similarity import (
-        IVF_NPROBE,
-        _cents_np_path,
-        _ivf_files_topk,
-        heal_swapped_root,
-    )
-
-    heal_swapped_root(path)  # recover an interrupted compaction swap
-    cids, C = _cents_np_path(os.path.join(path, "centroids"))
-    root = os.path.join(path, "assignments")
-    gens = _gen_ids(root)
-
-    def serve(it):
-        import numpy as np
-
-        for q in it:
-            if not len(q):
-                continue
-            Q = np.stack(q["qm"].to_numpy()).astype(np.float64)
-            near = _nearest_cells(Q, cids, C, IVF_NPROBE)
-            files = []
-            for g in gens:
-                gdir = os.path.join(root, f"gen={g}")
-                if not os.path.isdir(gdir):
-                    raise FileNotFoundError(f"{gdir} vanished mid-serve: a compaction swapped the index")
-                files += [
-                    (f, c)
-                    for c in np.unique(near).tolist()
-                    for f in _snapshot_parquet_files(os.path.join(gdir, f"cell={c}"))
-                ]
-            yield _ivf_files_topk(q["q_id"].to_numpy(), Q, near, files)
-
-    return query_df.select("q_id", "qm").mapInPandas(
-        serve, "q_id bigint, neighbor_id bigint, sq_micro2 bigint, rank bigint"
-    )
+    return serve_ivf_index(path, query_df, IVF_NPROBE)
 
 
 # --------- shared retrain kernel (r13, VERDICT r12 next #5): the IVF
@@ -1371,34 +1305,6 @@ def serve_ivf_stream_index(spark: SparkSession, path: str, query_df: DataFrame) 
 # choreography with drift hazard — and only the SemDeDup one had the
 # explicit-file-list snapshot that defuses the CacheManager
 # identical-plan trap (ADVICE r12 medium).  One kernel now serves both.
-
-
-def _snapshot_parquet_files(root: str) -> list[str]:
-    """Explicit sorted leaf-file snapshot of a GROWING parquet log or
-    index dir (recursive).  Reading ``.parquet(*files)`` makes the
-    logical plan a function of the file SET: a retrain after new files
-    land builds a DIFFERENT plan, so the persisted training
-    (_ivfa_cents) can never hit the CacheManager's identical-plan cache
-    and silently train on the prior epoch's cached rows — the r12
-    stale-centroid trap, now closed on BOTH retrain paths.
-
-    Hidden/temporary path components (leading '_' or '.': Spark's
-    _temporary commit dirs, this module's own .stage-* swap debris
-    from a crashed write) are skipped, matching Spark's directory-
-    listing convention — otherwise a retrain after an interrupted
-    write could silently fold partial/duplicate rows into training
-    (ADVICE r13)."""
-    import os
-
-    out: list[str] = []
-    for dirpath, dirs, files in os.walk(root):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        out.extend(
-            os.path.join(dirpath, f)
-            for f in files
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-    return sorted(out)
 
 
 def _retrain_cents(vecs: DataFrame) -> tuple[int, int, DataFrame]:

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from processor_spark.operators.similarity import build_ivf_index
 from tests.conftest import SF_SMALL
 
@@ -396,6 +398,41 @@ def test_compaction_heals_interrupted_swap(spark, tmp_path):
     except RuntimeError:
         raised = True
     assert raised
+
+
+def test_ivf_append_serve_heals_interrupted_swap(spark, tmp_path, monkeypatch):
+    """A compaction that crashed between its two renames leaves the
+    append index with no assignments root and one ``.old-*`` survivor.
+    The serve heals the root on entry and answers as the unbroken
+    index does."""
+    import processor_spark.operators.similarity as S
+
+    monkeypatch.setattr(S, "ANN_INDEX_ROOT", str(tmp_path))
+    want = sorted(tuple(r) for r in S.q_ann_ivf_append.__wrapped__(spark, SF_SMALL).collect())
+    root = os.path.join(str(tmp_path), os.path.basename(SF_SMALL), "ivf_append", "assignments")
+    os.replace(root, root + ".old-0123abcd")
+    got = sorted(tuple(r) for r in S.q_ann_ivf_append.__wrapped__(spark, SF_SMALL).collect())
+    assert got == want and want
+    assert os.path.isdir(root) and not os.path.exists(root + ".old-0123abcd")
+
+
+@pytest.mark.parametrize("key", ["q_ann_ivf_append", "q_ann_ivf_kmeans_serve", "q_ann_filtered_serve"])
+def test_ivf_serve_key_job_budget(spark, key):
+    """A persisted-index serve key is one narrow map over its query
+    batch: on a warm index, Engine.run(key), with the builder's eager
+    checks, plus toPandas() runs one Spark job, and the executed plan
+    holds no exchange.  Counted with the DAG scheduler's job counter
+    at sf0.01."""
+    from processor_spark.api import Engine
+
+    eng = Engine(spark, os.path.join(os.path.dirname(SF_SMALL), "sf0.01"))
+    eng.run(key).toPandas()  # builds the index if it is missing
+    next_job = spark.sparkContext._jsc.sc().dagScheduler().nextJobId
+    j0 = next_job()
+    df = eng.run(key)
+    df.toPandas()
+    assert next_job() - j0 == 1
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_write_partitioned_emits_one_file_per_directory(spark, tmp_path):

@@ -162,3 +162,29 @@ def test_out_of_range_coordinate_raises_before_the_first_tile(tiny_tile):
             S._topk(X, Y, np.arange(len(Y)), 1)
         with pytest.raises(ValueError, match="2\\*d\\*M\\^2"):
             list(S._eps_hits(X, Y, np.arange(len(X)), np.arange(len(Y)), 1))
+
+
+def test_signed_operands_bound_the_distance_itself(tiny_tile):
+    """Coordinates within 1000 of ±8,388,607 pass each operand's
+    2·d·M² < 2^53 at d = 64, but between operands of opposite sign the
+    distance reaches d·(Mx+My)² > 2^53 and the decomposed float64 form
+    rounds it.  The guard must refuse that pair before the first tile,
+    and keep accepting non-negative operands of the same magnitude
+    (sq ≤ d·M², exact) and micro-unit vectors at d = 64 and d = 256."""
+    rng = np.random.default_rng(11)
+    M = 8_388_607
+    assert 2.0 * 64 * M * M < 2.0**53
+    hi = (M - rng.integers(0, 1000, (8, 64))).astype(np.float64)
+    lo = -(M - rng.integers(0, 1000, (8, 64))).astype(np.float64)
+    raw = (hi * hi).sum(1)[:, None] + (lo * lo).sum(1)[None, :] - 2.0 * (hi @ lo.T)
+    assert (raw.astype(np.int64) != _sq_ref(hi, lo)).any()  # a real counterexample
+    for X, Y in ((hi, lo), (lo, hi), (lo, lo)):
+        with pytest.raises(ValueError, match="d\\*\\(Mx\\+My\\)\\^2"):
+            next(S._sq_tiles(X, Y))
+    same = (M - rng.integers(0, 1000, (8, 64))).astype(np.float64)
+    micro = [rng.integers(1_000_000, 3_000_001, (6, d)).astype(np.float64) for d in (64, 256)]
+    for X, Y in ((hi, same), (micro[0], micro[0][::-1]), (micro[1], micro[1][::-1])):
+        got = np.full((len(X), len(Y)), -1, np.int64)
+        for rs, cs, sq in S._sq_tiles(X, Y):
+            got[rs, cs] = sq
+        assert (got == _sq_ref(X, Y)).all()

@@ -427,24 +427,6 @@ def test_ann_serve_scan_is_partition_pruned_to_probed_cells(spark):
     assert "cell" in seg and "IN" in seg.upper()
 
 
-def test_ann_filtered_serve_scan_is_partition_pruned(spark):
-    """r9: the FILTERED serve twin must keep the cell partition pruning
-    intact.  r11 (fmt 3): assignments are (cell, label)-sharded, so
-    the scan must prune BOTH levels — probed cells AND the query
-    batch's labels as PartitionFilters — turning a selective metadata
-    predicate into skipped directories instead of filtered rows."""
-    plan = explain_str(_df(spark, "q_ann_filtered_serve"))
-    assert "PartitionFilters" in plan
-    seg = plan.split("PartitionFilters")[1].split("]")[0]
-    assert "cell" in seg and "IN" in seg.upper()
-    assert "label" in seg, seg  # two-level pruning (label-sharded cells)
-    # the per-candidate label == q_label equality still runs on the
-    # candidate stream (a query batch holds several labels; the dir
-    # pruning is the union of them), which the shared-oracle hash
-    # certifies semantically; here we pin the pruning shape
-    assert plan.count("Scan parquet") >= 2  # centroids + assignments
-
-
 def test_ann_ivfpq_serve_scan_is_partition_pruned(spark):
     """r10: the IVF-PQ serve twin's ADC scan must open ONLY the probed
     cells' code directories — the property that makes the composite

@@ -2692,10 +2692,12 @@ def test_stream_ivf_ingest_empty_chunk_adds_no_generation(spark, tmp_path):
     assert n == len(pdf)
 
 
-def _write_ivf_layout(path, cents, rows):
+def _write_ivf_layout(path, cents, rows, leaf="gen={}/cell={}"):
     """A stream IVF index written with pyarrow: ``cents`` as (cid, cm)
     pairs and ``rows`` as (gen, cell, vec_id, vm), one file per
-    gen=/cell= dir — the layout stream_ivf_ingest publishes."""
+    gen=/cell= dir — the layout stream_ivf_ingest publishes.  With
+    ``leaf="cell={}/label={}"`` the rows are (cell, label, vec_id, vm)
+    in build_ivf_kmeans_index's one-generation layout."""
     import os
     from collections import defaultdict
 
@@ -2711,7 +2713,7 @@ def _write_ivf_layout(path, cents, rows):
     for g, c, v, m in rows:
         dirs[(g, c)].append((v, m))
     for (g, c), vs in dirs.items():
-        d = os.path.join(path, "assignments", f"gen={g}", f"cell={c}")
+        d = os.path.join(path, "assignments", leaf.format(g, c))
         os.makedirs(d)
         pq.write_table(
             pa.table({"vec_id": [v for v, _ in vs], "vm": [m for _, m in vs]}),
@@ -2758,15 +2760,41 @@ def _catalyst_serve(spark, path, query_df):
     )
 
 
+# build_ivf_kmeans_index's (cell, label) layout for the serve tests:
+# queries at the origin probe cells 1 and 2 at IVF_NPROBE, and nine
+# vectors tie at sq = 9 over four label files, so the KNN_K cut falls
+# inside a tie split across label=0 and label=1 (unfiltered) and across
+# cell=1/label=1 and cell=2/label=1 (label 1 filtered)
+_LABEL_CENTS = [(1, [0, 0, 0, 0]), (2, [0, 0, 0, 8]), (3, [50, 50, 50, 50])]
+_LABEL_ROWS = [  # (cell, label, vec_id, vm)
+    (1, 0, 999, [1, 0, 0, 0]),
+    (1, 0, 102, [0, 3, 0, 0]),
+    (1, 0, 104, [3, 0, 0, 0]),
+    (1, 1, 101, [-3, 0, 0, 0]),
+    (1, 1, 103, [0, -3, 0, 0]),
+    (1, 1, 105, [0, 0, 3, 0]),
+    (2, 0, 108, [0, 0, 0, 4]),
+    (2, 1, 106, [0, 0, 0, 3]),
+    (2, 1, 107, [0, 0, -3, 0]),
+    (2, 1, 109, [0, 3, 0, 0]),
+    (2, 1, 110, [0, 0, 0, -3]),
+    (3, 0, 500, [50, 50, 50, 50]),
+    (3, 1, 501, [49, 50, 50, 50]),
+]
+_LABEL_Q1 = [(1, 999, 1, 1), (1, 101, 9, 2), (1, 102, 9, 3), (1, 103, 9, 4), (1, 104, 9, 5)]
+_LABEL_Q1_FILTERED = [(1, 0, 999, 1, 1), (1, 0, 102, 9, 2), (1, 0, 104, 9, 3), (1, 0, 108, 16, 4)]
+
+
 def test_serve_ivf_probe_equals_catalyst_probe(spark, tmp_path):
     """The driver-side numpy probe must pick exactly the cells of the
     Catalyst crossJoin + row_number((sq, cid)) probe it replaced:
     planted equal-distance and duplicate centroids stored out of cid
     order (ties resolve by cid), a table with fewer centroids than
     IVF_NPROBE (every query probes all of them), an empty query batch
-    (an empty frame with the serve's usual schema), and a
+    (an empty frame with the serve's usual schema), a
     multi-generation index served against the reference over every
-    generation."""
+    generation, and the one-generation (cell, label) layout, unfiltered
+    and filtered by each query's label."""
     import os
 
     import numpy as np
@@ -2893,6 +2921,62 @@ def test_serve_ivf_probe_equals_catalyst_probe(spark, tmp_path):
         for st in sc.statusTracker().getJobInfo(j).stageIds
     ] == [2]
     assert got2 == got == sorted(tuple(r) for r in _catalyst_serve(spark, path, mq2).collect())
+
+    # the (cell, label) layout: the unfiltered serve reads every label
+    # dir of a probed cell, a q_label column narrows each query to its
+    # own label's dirs and is carried out as label
+    from processor_spark.operators.similarity import serve_ivf_index
+
+    path = str(tmp_path / "cell_label")
+    _write_ivf_layout(path, _LABEL_CENTS, _LABEL_ROWS, leaf="cell={}/label={}")
+    lq = spark.createDataFrame(
+        [(1, 0, [0, 0, 0, 0]), (101, 1, [0, 0, 0, 0])], "q_id bigint, q_label int, qm array<bigint>"
+    )
+    uq = lq.drop("q_label")
+    got = sorted(tuple(r) for r in P.serve_ivf_stream_index(spark, path, uq).collect())
+    assert got == sorted(tuple(r) for r in _catalyst_serve(spark, path, uq).collect())
+    assert got == sorted(_LABEL_Q1 + [
+        (101, 999, 1, 1), (101, 102, 9, 2), (101, 103, 9, 3), (101, 104, 9, 4), (101, 105, 9, 5),
+    ])
+    filtered = serve_ivf_index(path, lq, IVF_NPROBE)
+    assert filtered.columns == ["q_id", "label", "neighbor_id", "sq_micro2", "rank"]
+    assert sorted(tuple(r) for r in filtered.collect()) == sorted(_LABEL_Q1_FILTERED + [
+        (101, 1, 103, 9, 1), (101, 1, 105, 9, 2), (101, 1, 106, 9, 3),
+        (101, 1, 107, 9, 4), (101, 1, 109, 9, 5),
+    ])
+
+
+def test_serve_ivf_index_lists_only_probed_leaves(spark, tmp_path):
+    """The serve lists only the leaves its queries probe: on the
+    (cell, label) layout an unfiltered batch reads every label dir of
+    its probed cells and nothing of the unprobed one, and a filtered
+    batch reads only cell=<probed>/label=<its label>.  Every leaf that
+    must stay unread gets a file that is not parquet, so listing it
+    fails the serve."""
+    import os
+
+    from processor_spark.operators.similarity import IVF_NPROBE, serve_ivf_index
+
+    path = str(tmp_path / "cell_label")
+    _write_ivf_layout(path, _LABEL_CENTS, _LABEL_ROWS, leaf="cell={}/label={}")
+
+    def poison(*leaves):
+        for c, label in leaves:
+            leaf = os.path.join(path, "assignments", f"cell={c}", f"label={label}")
+            with open(os.path.join(leaf, "part-bad.parquet"), "wb") as fh:
+                fh.write(b"not parquet")
+
+    qdf = spark.createDataFrame(
+        [(1, 0, [0, 0, 0, 0])], "q_id bigint, q_label int, qm array<bigint>"
+    )
+    poison((3, 0), (3, 1))
+    unfiltered = serve_ivf_index(path, qdf.drop("q_label"), IVF_NPROBE)
+    assert sorted(tuple(r) for r in unfiltered.collect()) == sorted(_LABEL_Q1)
+    poison((1, 1), (2, 1))
+    filtered = serve_ivf_index(path, qdf, IVF_NPROBE)
+    assert sorted(tuple(r) for r in filtered.collect()) == sorted(_LABEL_Q1_FILTERED)
+    with pytest.raises(Exception, match="magic bytes"):
+        unfiltered.collect()  # a listed poison file is read, and fails
 
 
 def test_serve_ivf_stream_index_without_probed_files(spark, tmp_path):

@@ -1,14 +1,19 @@
 #!/usr/bin/env python3
-"""fmt-4 persisted-index serve keys at the 64x jittered layout: index build wall, ANN serve recall vs exact integer-L2 truth, q_semdedup_serve / q_semdedup_clusters_serve walls (SCALE.md r13)."""
+"""fmt-4 persisted-index serve keys at the 64x jittered layout: index build wall, ANN serve recall vs exact integer-L2 truth, per-key wall and Spark jobs (build + toPandas, counted with the DAG scheduler's job id) of q_ann_ivf_kmeans_serve / q_semdedup_serve / q_semdedup_clusters_serve (SCALE.md r13).  Writes the layout first if it is missing (tools/jittered_layout.py).
+
+    python3 tools/ivf_serve_scale_probe.py
+"""
 
 import json, os, sys, time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from processor_spark.session import build_session
 from processor_spark.operators import similarity as S
 from processor_spark import registry
+from tools.jittered_layout import build_layout
 registry.load_all_modules()
-DST = "/tmp/processor_spark-ann-bits-probe-64x"
 spark = build_session(app_name="serve-fmt4-probe")
+DST = build_layout(spark, 64)
+next_job = spark.sparkContext._jsc.sc().dagScheduler().nextJobId
 out = {}
 
 t0 = time.perf_counter()
@@ -33,9 +38,9 @@ truth = {(r.q_id, r.vec_id) for r in (
 for key in ("q_ann_ivf_kmeans_serve", "q_semdedup_serve", "q_semdedup_clusters_serve"):
     spark.catalog.clearCache()
     fn = registry.get(key).fn
-    t0 = time.perf_counter()
+    t0, j0 = time.perf_counter(), next_job()
     pdf = fn(spark, DST).toPandas()
-    row = {"wall_s": round(time.perf_counter() - t0, 1), "rows": int(len(pdf))}
+    row = {"wall_s": round(time.perf_counter() - t0, 2), "jobs": next_job() - j0, "rows": int(len(pdf))}
     if key == "q_ann_ivf_kmeans_serve":
         got = {(int(r.q_id), int(r.neighbor_id)) for r in pdf.itertuples()}
         row["recall"] = round(len(got & truth) / len(truth), 4)

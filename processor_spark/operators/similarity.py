@@ -27,7 +27,7 @@ from pyspark.sql import types as T
 from processor_spark.caching import scoped_persist
 from processor_spark.operators.timeseries import chi2_drift_contribs
 from processor_spark.registry import register
-from processor_spark.sources import load
+from processor_spark.sources import is_one_task, load
 
 QUERY_VEC_ID = 1
 TOP_K = 10
@@ -432,34 +432,15 @@ def write_partitioned(df: DataFrame, path: str, *cols: str) -> None:
     partitioned write sorts by the partition columns and leaves one
     file per directory, so it is written as is, one job instead of the
     shuffle's two (a one-file stream micro-batch: scan → numpy assign).
-    The partition count is read only where reading it is free — a plan
-    with no exchange and no subquery (_rdd_starts_no_job).  On an
-    aggregated or joined frame (PySpark 4.1, AQE on)
-    ``df.rdd.getNumPartitions()`` runs the upstream stages eagerly and
-    the write then runs them again, so such frames always take the
-    repartition."""
-    if _rdd_starts_no_job(df) and df.rdd.getNumPartitions() <= 1:
+    ``is_one_task`` reads the partition count only where reading it is
+    free; an aggregated or joined frame always takes the repartition,
+    since counting its partitions would run its upstream stages twice."""
+    if is_one_task(df):
         df.write.partitionBy(*cols).parquet(path)
         return
     df.repartition(*[F.col(c) for c in cols]).write.partitionBy(*cols).parquet(
         path
     )
-
-
-def _rdd_starts_no_job(df: DataFrame) -> bool:
-    """True when building ``df``'s RDD starts no Spark job: its executed
-    plan holds no exchange (shuffle, broadcast or reused), no subquery,
-    and is not adaptive — AQE wraps exactly the plans that hold one of
-    those, and materializing an adaptive plan runs its query stages."""
-    todo = [df._jdf.queryExecution().executedPlan()]
-    while todo:
-        p = todo.pop()
-        name = p.nodeName()
-        if name == "AdaptiveSparkPlan" or name.endswith("Exchange") or not p.subqueries().isEmpty():
-            return False
-        kids = p.children()
-        todo.extend(kids.apply(i) for i in range(kids.size()))
-    return True
 
 
 def _index_is_current(meta_path: str, kind: str | None = None) -> bool:
@@ -5287,10 +5268,15 @@ def q_mutual_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-source alignment use (a pair counts only if each side is
     the OTHER's top-1, which suppresses hub vectors that are
     everyone's neighbor but nobody's match).  Same rounded-cosine /
-    (sim DESC, id) arg-max contract as the k-NN family; mutuality is
-    one self-join of the top-1 table.  At corpus scale the top-1
-    table comes from any ANN path (LSH/IVF/PQ) — the mutual join
-    itself is key-key and cheap."""
+    (sim DESC, id) arg-max contract as the k-NN family.  Each vector
+    has exactly one top-1 row, so a pair is mutual iff its unordered
+    key {vec_id, nb} holds two rows: mutuality is one count over the
+    top-1 table, not a self-join (cosine is symmetric, so both rows
+    carry the same rounded cs).  A self-join of the top-1 table would
+    be a join over a cross-join-sized estimate, which Spark
+    re-shuffles on both sides even when both are one partition.  At
+    corpus scale the top-1 table comes from any ANN path
+    (LSH/IVF/PQ) — the count itself is key-key and cheap."""
     e = load(spark, sf_dir, "embeddings")
     qs = (
         e.where(F.col("vec_id") <= KNN_QUERIES)
@@ -5317,17 +5303,14 @@ def q_mutual_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     top1 = sim.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).select(
         "vec_id", "nb", "cs"
     )
-    rev = top1.select(
-        F.col("vec_id").alias("nb"), F.col("nb").alias("vec_id_rev")
-    )
     return (
-        top1.join(rev, (top1.nb == rev.nb) & (top1.vec_id == rev.vec_id_rev))
-        .where(F.col("vec_id") < top1.nb)
-        .select(
-            F.col("vec_id").alias("vec_a"),
-            top1.nb.alias("vec_b"),
-            F.col("cs").alias("cos_sim"),
+        top1.groupBy(
+            F.least("vec_id", "nb").alias("vec_a"),
+            F.greatest("vec_id", "nb").alias("vec_b"),
         )
+        .agg(F.count(F.lit(1)).alias("n"), F.max("cs").alias("cos_sim"))
+        .where(F.col("n") == 2)
+        .select("vec_a", "vec_b", "cos_sim")
         .orderBy("vec_a")
     )
 

@@ -1,5 +1,6 @@
 from processor_spark.sources.fixtures import (
     TABLES,
+    is_one_task,
     load,
     load_all,
     register_views,
@@ -10,6 +11,7 @@ from processor_spark.sources.lakehouse import CommitConflict, LakeCatalog, LakeT
 
 __all__ = [
     "TABLES",
+    "is_one_task",
     "load",
     "load_all",
     "register_views",

@@ -137,12 +137,58 @@ def row_key(table: str) -> str:
     return _SCHEMAS[table].fields[0].name
 
 
+def _starts_no_job(df: DataFrame) -> bool:
+    """True when building ``df``'s RDD starts no Spark job: its executed
+    plan holds no exchange (shuffle, broadcast or reused), no subquery,
+    and is not adaptive — AQE wraps exactly the plans that hold one of
+    those, and materializing an adaptive plan runs its query stages."""
+    todo = [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        p = todo.pop()
+        name = p.nodeName()
+        if name == "AdaptiveSparkPlan" or name.endswith("Exchange") or not p.subqueries().isEmpty():
+            return False
+        kids = p.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return True
+
+
+def is_one_task(df: DataFrame) -> bool:
+    """True when ``df`` runs as ONE task, read without running a job.
+
+    The partition count is read only where reading it is free — a plan
+    with no exchange and no subquery (``_starts_no_job``): there it is
+    the scan's own split count, planned on the driver from the file
+    listing under the calling session's split settings
+    (``spark.sql.files.maxPartitionBytes``, ``openCostInBytes``, the
+    default parallelism).  On an aggregated or joined frame (AQE on)
+    ``df.rdd.getNumPartitions()`` would run the upstream stages
+    eagerly, so such frames count as more than one task."""
+    return _starts_no_job(df) and df.rdd.getNumPartitions() <= 1
+
+
 def load(
     spark: SparkSession, sf_dir: str, table: str, spread: bool = False
 ) -> DataFrame:
     """Load one fixture table as a batch DataFrame with its pinned schema.
 
-    ``spread=True`` hash-partitions the rows on the table's row key
+    A table that the calling session reads as ONE file split
+    (``is_one_task`` on the bare scan: Spark's own split count, planned
+    on the driver with no job) is returned as ``coalesce(1)`` of that
+    scan.  The coalesce is narrow — it moves no row — but it declares
+    the scan's one partition as ``SinglePartition``, which satisfies
+    every clustered, ordered and all-tuples distribution.  So the first
+    grouping, window, global sort or unpartitioned total over such a
+    table plans no exchange, and under AQE the query runs as one job
+    where it ran one per query stage.  The deciding size is the split
+    count alone.  Spark cuts a file into splits of
+    ``min(maxPartitionBytes, max(openCostInBytes, bytes / parallelism))``,
+    so under the defaults a one-file table up to 4 MiB is one split,
+    and a larger one — sf0.1 lineitem, any lake table — keeps the
+    scan's own partitions and every scale plan is unchanged.
+
+    ``spread=True`` bypasses the gate, because its whole point is the
+    opposite: it hash-partitions the rows on the table's row key
     (``row_key(table)``: the first field of the pinned schema, its id
     column) across the session's default parallelism straight off the
     scan. Use it ONLY ahead of compute-dense per-row/per-pair stages
@@ -183,6 +229,8 @@ def load(
         df = df.repartition(
             spark.sparkContext.defaultParallelism, F.col(row_key(table))
         )
+    elif is_one_task(df):
+        df = df.coalesce(1)
     if table == "events":
         # normalize ts to the pinned TimestampType whatever the layout:
         # - driver fixture: TIMESTAMP(NANOS) surfaced as long nanos via

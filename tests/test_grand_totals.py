@@ -5,8 +5,9 @@ grand total as an unpartitioned window over the grouped frame instead
 of a second aggregate broadcast back with a crossJoin.  These tests
 pin the edge cases of that rewrite against the DuckDB oracle on small
 hand-built tables, and the Spark job count of every key the
-`collections` benchmark workload runs plus the three siblings and
-q_simhash_md5, so a structural regression fails here without a
+`collections` benchmark workload runs plus the three siblings,
+q_simhash_md5 and keys whose plans lost their exchanges to the
+one-split load, so a structural regression fails here without a
 benchmark run.
 """
 
@@ -96,19 +97,39 @@ def test_corpus_mixture_edge_cases(spark, tmp_path, sources, emitted):
 
 
 # Execution jobs of Engine.run(key).toPandas() on sf0.01: the first six
-# are the `collections` benchmark workload.  The two md5 keys spread
-# documents on doc_id, and their per-doc aggregate reuses that exchange.
+# are the `collections` benchmark workload.  Every sf0.01 table reads as
+# one split, so `load` hands each key one partition and a grouping,
+# window, sort or grand total over it plans no exchange.  q_grouping_sets
+# keeps its shuffle (Expand drops the partitioning); the two md5 keys
+# spread documents on doc_id, and their per-doc aggregate reuses that
+# exchange.  The rows from q_fk_integrity on are keys whose count fell
+# with the one-split gate and repeated exactly over three registry runs;
+# q_mutual_nn finds its mutual pairs with a count instead of a self-join.
 JOB_BUDGET = {
-    "q_pricing_summary": 2,
-    "q_window_rank": 2,
+    "q_pricing_summary": 1,
+    "q_window_rank": 1,
     "q_grouping_sets": 2,
     "q_dedup_minhash_md5": 4,
-    "q_phrase_search": 3,
-    "q_corpus_mixture": 3,
-    "q_benford": 3,
-    "q_chi2_drift": 3,
+    "q_phrase_search": 1,
+    "q_corpus_mixture": 1,
+    "q_benford": 1,
+    "q_chi2_drift": 1,
     "q_embed_drift": 3,
     "q_simhash_md5": 2,
+    "q_fk_integrity": 5,
+    "q_kmv_sketch": 2,
+    "q_skyline": 2,
+    "q_hhi_concentration": 2,
+    "q_seasonal_decompose": 1,
+    "q_transition_matrix": 1,
+    "q_conversion_ci": 1,
+    "q_cumulative_distinct": 1,
+    "q_gap_fill": 3,
+    "q_dss_parts_suppliers": 3,
+    "q_cohort_retention": 2,
+    "q_join_full": 1,
+    "q_sort_multi": 1,
+    "q_mutual_nn": 2,
 }
 
 

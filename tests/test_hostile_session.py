@@ -15,6 +15,7 @@ from __future__ import annotations
 import pytest
 
 from processor_spark import registry
+from processor_spark.sources import load
 from tests.conftest import SF_SMALL
 from tests.oracle_utils import compare, run_oracle
 
@@ -94,3 +95,23 @@ def test_parity_under_hostile_session(hostile_spark, key):
     res = compare(q.fn(hostile_spark, SF_SMALL), run_oracle(q.sql, SF_SMALL))
     assert res["rows_match"], f"{key}: rows {res['rows_spark']} != {res['rows_oracle']}"
     assert res["values_match"], f"{key}: value mismatch {res.get('first_diffs')}"
+
+
+@pytest.mark.parametrize("split, one_partition", [("16k", False), ("128m", True)])
+@pytest.mark.parametrize("key", ["q_pricing_summary", "q_window_rank", "q_corpus_mixture"])
+def test_one_split_gate_follows_the_caller_session(hostile_spark, split, one_partition, key):
+    """``load`` plans a one-split table as one partition, and the split
+    count it reads is the CALLER's: under 16 KiB splits sf0.001
+    lineitem is several splits and keeps them, though
+    ``build_session`` would read it as one.  Parity holds either way."""
+    conf = "spark.sql.files.maxPartitionBytes"
+    saved = hostile_spark.conf.get(conf)
+    hostile_spark.conf.set(conf, split)
+    try:
+        plan = load(hostile_spark, SF_SMALL, "lineitem")._jdf.queryExecution().executedPlan()
+        assert ("Coalesce 1" in plan.toString()) == one_partition, plan.toString()
+        q = registry.get(key)
+        res = compare(q.fn(hostile_spark, SF_SMALL), run_oracle(q.sql, SF_SMALL))
+    finally:
+        hostile_spark.conf.set(conf, saved)
+    assert res["rows_match"] and res["values_match"], (key, res)

@@ -15,7 +15,7 @@ import pytest
 
 from processor_spark import registry
 from processor_spark.plans import assert_in_plan, assert_not_in_plan, explain_str
-from processor_spark.sources import TABLES, load, row_key
+from processor_spark.sources import TABLES, load, row_key, schema_for
 from tests.conftest import SF_SMALL
 
 registry.load_all_modules()
@@ -23,6 +23,19 @@ registry.load_all_modules()
 
 def _df(spark, key):
     return registry.get(key).fn(spark, SF_SMALL)
+
+
+@pytest.fixture()
+def multi_split(spark):
+    """The session with 16 KiB file splits, so every sf0.001 fact table
+    reads as several splits.  ``load`` plans a one-split table as one
+    partition, which needs no exchange at all; shapes pinned for
+    scale-size tables are checked on this multi-split read."""
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    yield spark
+    spark.conf.set(key, saved)
 
 
 def test_pruned_scan_pushes_filters_and_prunes_columns(spark):
@@ -151,6 +164,7 @@ def test_dynamic_partition_pruning_on_partitioned_layout(spark, tmp_path_factory
     assert joined.count() == want
 
 
+@pytest.mark.usefixtures("multi_split")
 def test_runtime_bloom_filter_prunes_probe_side(spark):
     """Catalyst's runtime row-level Bloom filter: a selective build
     side injects might_contain(...) into the probe-side scan of a
@@ -281,6 +295,7 @@ def test_dedup_family_never_plans_pair_explosion(spark):
         assert "BroadcastNestedLoopJoin" not in plan, (key, plan)
 
 
+@pytest.mark.usefixtures("multi_split")
 def test_corpus_mixture_is_one_linear_plan(spark):
     """The mixture's grand total is a window inside the plan that holds
     the ranked rows: one documents scan, one hash exchange on source
@@ -315,6 +330,7 @@ def test_scan_partitioned_prunes_statically_and_dynamically(spark):
     assert "dynamicpruning" in plan.lower(), plan
 
 
+@pytest.mark.usefixtures("multi_split")
 def test_zorder_layout_single_agg_no_sort(spark):
     # the Morton interleave must fold into the scan's codegen stage and
     # feed ONE two-phase hash aggregate — a z-order rewrite never needs
@@ -517,6 +533,7 @@ def test_bpe_pair_counts_are_two_phase_partial_sum(spark):
     assert "partial_sum" in plan, plan
 
 
+@pytest.mark.usefixtures("multi_split")
 def test_lttb_windows_share_one_hash_exchange(spark):
     """All three LTTB windows (lag/lead, bucket count, arg-max) must
     share the single (bucket, type) hash exchange — the only other
@@ -756,3 +773,38 @@ def test_spread_exchange_is_reused_by_the_first_doc_id_shuffle(spark, key, excha
     plan = _df(spark, key)._jdf.queryExecution().executedPlan().toString()
     assert "RoundRobinPartitioning" not in plan, plan
     assert plan.count("Exchange ") == exchanges, plan
+
+
+@pytest.mark.parametrize("key", ["q_pricing_summary", "q_corpus_mixture"])
+def test_one_split_plan_holds_no_exchange(spark, key):
+    """Every fixture table reads as one split under the default session:
+    ``load`` coalesces the scan to one partition, whose SinglePartition
+    satisfies the grouping, the window, the global sort and the
+    unpartitioned total, so the executed plan holds no exchange and the
+    query runs as one job."""
+    plan = _df(spark, key)._jdf.queryExecution().executedPlan().toString()
+    assert "Coalesce 1" in plan, plan
+    assert "Exchange" not in plan, plan
+
+
+def _scan_partitions(spark, table):
+    path = f"{SF_SMALL}/{table}.parquet"
+    return spark.read.schema(schema_for(table)).parquet(path).rdd.getNumPartitions()
+
+
+def test_multi_split_load_keeps_the_scans_partitions(multi_split):
+    spark = multi_split
+    n = _scan_partitions(spark, "lineitem")
+    assert n > 1
+    df = load(spark, SF_SMALL, "lineitem")
+    assert "Coalesce" not in df._jdf.queryExecution().executedPlan().toString()
+    assert df.rdd.getNumPartitions() == n
+
+
+def test_spread_load_keeps_the_scans_partitions(spark):
+    """``spread=True`` bypasses the one-split gate: the hash exchange
+    runs straight off the scan, never off a one-partition coalesce."""
+    assert _scan_partitions(spark, "documents") == 1
+    plan = explain_str(load(spark, SF_SMALL, "documents", spread=True))
+    assert "Coalesce" not in plan, plan
+    assert f", {spark.sparkContext.defaultParallelism}), REPARTITION_BY_NUM" in plan, plan

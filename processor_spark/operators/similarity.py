@@ -1042,7 +1042,7 @@ TWOLEVEL_RPROBE_PAIR = 3
 # exact-flat figure, vs 124,173 under rp3's boundary loss): exactness
 # is FASTER here, strictly better dedup quality, perfectly balanced
 # cells, and the result matches the flat SQL oracle at any scale
-# (tools/batch_numpy_flat_probe.py, SCALE.md r14).
+# (tools/batch_numpy_flat_probe.py@13f5a1e, SCALE.md r14).
 #
 # Ceiling history: raised 8192 → 32768 at r14 close (blocked-flat vs
 # numpy-routed-rp3 walls 2.4/1.9 s at nlist=2048, 5.5/6.6 s at 8192,
@@ -1267,28 +1267,40 @@ def _ivfk_cents(
         seeds = vecs.where(F.col("vec_id") < nlist).select(
             F.col("vec_id").alias("cid"), F.col("vm").alias("cm")
         )
-    # callers with no guaranteed id range (the streaming retrain
-    # kernel) pass their own rank-based (cid, cm) seed frame — the
-    # Lloyd round and routing are identical from there (r13)
+    # callers with no guaranteed id range (the streaming first batch
+    # and retrain kernel) or another id rule (the append builders,
+    # _append_seeds) pass their own (cid, cm) seed frame — the Lloyd
+    # round and routing are identical from there (r13)
     a0 = _assign_cells(
         vecs.select("vec_id", "vm"), seeds, nlist, two_level, rprobe=rprobe
     ).select(F.col("cell").alias("cid"), "vm")
-    cents = (
-        a0.select("cid", F.posexplode("vm").alias("pos", "m"))
-        .groupBy("cid", "pos")
-        .agg(F.sum("m").alias("s"), F.count(F.lit(1)).alias("n"))
-        .select("cid", "pos", F.expr("s div n").alias("nm"))
-        .groupBy("cid")
+    # the trained centroid table feeds BOTH the corpus assignment and
+    # the query probes — nlist x d integers, cheap to cache, expensive
+    # to recompute (it embeds the full Lloyd pass)
+    return scoped_persist(_cell_means(a0))
+
+
+def _cell_means(assigned: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
+    """The Lloyd update every trainer shares: (*keys, cid, vm) member
+    rows → (*keys, cid, cm), each coordinate the members' integer sum
+    ``div`` their count.  Spark's ``div`` truncates toward zero (a
+    residual cell summing to −7 over 2 members gives −3, not −4), as
+    the oracles' DuckDB ``//`` does on the same operands — the r7s2
+    negative-numerator bridge the residual codebooks rely on.
+    ``keys=("m",)`` is the per-subspace PQ codebook."""
+    k = (*keys, "cid")
+    return (
+        assigned.select(*k, F.posexplode("vm").alias("pos", "v"))
+        .groupBy(*k, "pos")
+        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
+        .select(*k, "pos", F.expr("s div n").alias("nm"))
+        .groupBy(*k)
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "nm"))), lambda s: s["nm"]
             ).alias("cm")
         )
     )
-    # the trained centroid table feeds BOTH the corpus assignment and
-    # the query probes — nlist x d integers, cheap to cache, expensive
-    # to recompute (it embeds the full Lloyd pass)
-    return scoped_persist(cents)
 
 
 def _cents_np(cents: DataFrame):
@@ -2726,8 +2738,9 @@ def build_ivfpq_index(
         json.dump(
             {"kind": "ivfpq", "fmt": ANN_INDEX_FMT,
              # the REAL (derived) cell count, not the floor constant —
-             # at 64x this reads 512, matching the layout on disk (r14)
-             "nlist": cents.count(),
+             # at 64x this reads 512, matching the layout on disk (r14);
+             # counted from the written files (pyarrow, no Spark job)
+             "nlist": len(_cents_np_path(os.path.join(path, "centroids"))[0]),
              "nprobe": IVF_NPROBE, "m": PQ_M, "k": PQ_K, "source": sf_dir},
             fh,
         )
@@ -3160,6 +3173,19 @@ def _res_subvectors(
     ).select(*keep, "s.m", "s.sv")
 
 
+def _residual_subs(
+    vecs: DataFrame, cents: DataFrame, nlist: int, m_sub: int = PQ_M
+) -> DataFrame:
+    """(vec_id, cell, m, sv): each vector's residual against its IVF
+    cell's centroid (vm − cm), sliced per subspace — the frame the
+    residual codebook trains on and every residual encode reads.
+    ``vecs`` needs (vec_id, vm)."""
+    res = _assign_cells(vecs, cents, nlist).join(
+        F.broadcast(cents.select(F.col("cid").alias("cell"), "cm")), "cell"
+    ).select("vec_id", "cell", F.zip_with("vm", "cm", lambda a, b: a - b).alias("rv"))
+    return _res_subvectors(res, m_sub=m_sub)
+
+
 def _ivfpq_res_frames(
     spark: SparkSession, sf_dir: str, nlist: int | None = None,
     m_sub: int = PQ_M,
@@ -3167,12 +3193,12 @@ def _ivfpq_res_frames(
     """(cents, rtcents, codes) for the residual chain: trained integer
     IVF centroids; a TRAINED residual codebook — one exact-integer
     Lloyd round per subspace over residual subvectors, seeded by the
-    PQ_K lowest vec_ids' residual subvectors (the _pqt_trained_cents
-    machinery applied in residual space: integer headroom holds, a
-    residual element is in ±4e6 so a subspace diff ≤ 8e6 → the
-    16-dim fold ≤ 1.0e15, inside int64; negative sums divide
-    identically on both engines — the r7s2 negative-numerator
-    bridge); and per-vector subspace codes carrying the IVF cell."""
+    PQ_K lowest vec_ids' residual subvectors (_pqt_trained_cents over
+    the _residual_subs frame: integer headroom holds, a residual
+    element is in ±4e6 so a subspace diff ≤ 8e6 → the 16-dim fold ≤
+    1.0e15, inside int64; negative sums divide identically on both
+    engines — _cell_means' truncating div); and per-vector subspace
+    codes carrying the IVF cell (_pqt_encode, keep=("cell",))."""
     e = load(spark, sf_dir, "embeddings", spread=True)
     base = e.select("vec_id", _micro_arr("embedding").alias("vm"))
     # r14: nlist DERIVES like every other trained-IVF family (the
@@ -3187,27 +3213,9 @@ def _ivfpq_res_frames(
     # single-exchange hazard every other family already left behind.
     nlist = nlist or derived_nlist(spark, sf_dir)
     cents = _ivfk_cents(base, nlist)
-    assign = _assign_cells(base, cents, nlist, keep=("vm",)).select(
-        "vec_id", "cell", "vm"
-    )
-    res = assign.join(
-        F.broadcast(cents.select(F.col("cid").alias("cell"), "cm")), "cell"
-    ).select("vec_id", "cell", F.zip_with("vm", "cm", lambda a, b: a - b).alias("rv"))
-    rsub = _res_subvectors(res, m_sub=m_sub)
-    rtcents = _pqt_trained_cents(rsub.select("vec_id", "m", "sv"))
-    codes = (
-        rsub.join(F.broadcast(rtcents), "m")
-        .select(
-            "vec_id", "cell", "m", "cid",
-            _int_sqdist(F.col("sv"), F.col("cm")).alias("sq"),
-        )
-        .groupBy("vec_id", "m")
-        .agg(
-            F.min_by("cid", F.struct(F.col("sq"), F.col("cid"))).alias("cid"),
-            F.first("cell").alias("cell"),
-        )
-    )
-    return cents, rtcents, codes
+    rsub = _residual_subs(base, cents, nlist, m_sub)
+    rtcents = _pqt_trained_cents(rsub)
+    return cents, rtcents, _pqt_encode(rsub, rtcents, keep=("cell",))
 
 
 def _ivfpq_res_query_frames(
@@ -3388,7 +3396,8 @@ def build_ivfpq_res_index(
     with open(tmp, "w") as fh:
         json.dump(
             {"kind": "ivfpq_res", "fmt": ANN_INDEX_FMT,
-             "nlist": cents.count(),  # derived (r14), not the floor
+             # derived (r14), not the floor; pyarrow, no Spark job
+             "nlist": len(_cents_np_path(os.path.join(path, "centroids"))[0]),
              "nprobe": IVF_NPROBE, "m": PQ_M, "k": PQ_K, "source": sf_dir},
             fh,
         )
@@ -3642,49 +3651,37 @@ def _pqt_sub_frame(
 
 def _pqt_trained_cents(sub: DataFrame) -> DataFrame:
     """One exact-integer Lloyd round per subspace from deterministic
-    seeds (the K lowest vec_ids' subvectors) -> (m, cid, cm)."""
+    seeds (the K lowest vec_ids' subvectors) -> (m, cid, cm).  ``sub``
+    needs (vec_id, m, sv); extra columns are ignored."""
     seeds = sub.where(F.col("vec_id") < PQ_K).select(
         "m", F.col("vec_id").alias("cid"), F.col("sv").alias("cm")
     )
-    a0 = (
-        sub.join(F.broadcast(seeds), "m")
+    a0 = _pqt_encode(sub, seeds, keep=("sv",)).select(
+        "m", "cid", F.col("sv").alias("vm")
+    )
+    # K*M rows of d integers embedding a full Lloyd pass — the
+    # expensive-to-rebuild / cheap-to-store persist profile
+    return scoped_persist(_cell_means(a0, keys=("m",)))
+
+
+def _pqt_encode(
+    sub: DataFrame, tcents: DataFrame, keep: tuple[str, ...] = ()
+) -> DataFrame:
+    """(vec_id, m, cid, *keep): argmin (sq, cid) code per subspace
+    against the (m, cid, cm) codebook ``tcents`` — the one keyed
+    encode under the PQ trainer's Lloyd argmin, the trained-PQ codes
+    and the residual codes (keep=("cell",))."""
+    return (
+        sub.join(F.broadcast(tcents), "m")
         .select(
-            "vec_id", "m", "sv", "cid",
+            "vec_id", "m", *keep, "cid",
             _int_sqdist(F.col("sv"), F.col("cm")).alias("sq"),
         )
         .groupBy("vec_id", "m")
         .agg(
             F.min_by("cid", F.struct(F.col("sq"), F.col("cid"))).alias("cid"),
-            F.first("sv").alias("sv"),
+            *[F.first(k).alias(k) for k in keep],
         )
-    )
-    return (
-        a0.select("m", "cid", F.posexplode("sv").alias("pos", "v"))
-        .groupBy("m", "cid", "pos")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-        .select("m", "cid", "pos", F.expr("s div n").alias("nv"))
-        .groupBy("m", "cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "nv"))), lambda x: x["nv"]
-            ).alias("cm")
-        )
-        # K*M rows of d integers embedding a full Lloyd pass — the
-        # expensive-to-rebuild / cheap-to-store persist profile
-        .transform(scoped_persist)
-    )
-
-
-def _pqt_encode(sub: DataFrame, tcents: DataFrame) -> DataFrame:
-    """(vec_id, m, cid): argmin trained-centroid code per subspace."""
-    return (
-        sub.join(F.broadcast(tcents), "m")
-        .select(
-            "vec_id", "m", "cid",
-            _int_sqdist(F.col("sv"), F.col("cm")).alias("sq"),
-        )
-        .groupBy("vec_id", "m")
-        .agg(F.min_by("cid", F.struct(F.col("sq"), F.col("cid"))).alias("cid"))
     )
 
 
@@ -3860,7 +3857,7 @@ def q_ann_pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Split convention: base = vec_id % 10 != 0, delta = vec_id % 10 == 0
 # (the q_dedup_incremental / text-append ingest split).  Seeds are the
 # nlist lowest BASE vec_ids — ids 1..8 (0 is delta), a fixed literal
-# on both engines.
+# on both engines (_append_seeds).
 
 _IVFA_SQL = f"""
     WITH vecs AS (
@@ -3923,52 +3920,12 @@ _IVFA_SQL = f"""
     """
 
 
-def _ivfa_cents(vecs_base: DataFrame, seeds: DataFrame | None = None) -> DataFrame:
-    """Frozen centroids for the generational index: one exact-integer
-    Lloyd round over the BASE split, seeded by base vec_ids 1..nlist
-    (0 is in the delta split).  Callers whose input has no guaranteed
-    id range (the streaming first batch — file listing order is not
-    contractual) pass their own (cid, cm) seed frame instead; absolute
-    id seeding there silently trains an EMPTY centroid table and every
-    later assign emits zero rows (ADVICE r10)."""
-    if seeds is None:
-        seeds = vecs_base.where(
-            F.col("vec_id").between(1, IVFK_NLIST)
-        ).select(F.col("vec_id").alias("cid"), F.col("vm").alias("cm"))
-    a0 = (
-        vecs_base.crossJoin(F.broadcast(seeds))
-        .select("vec_id", "vm", "cid", _int_sqdist(F.col("vm"), F.col("cm")).alias("sq"))
-        .groupBy("vec_id")
-        .agg(
-            F.min_by("cid", F.struct(F.col("sq"), F.col("cid"))).alias("cid"),
-            F.first("vm").alias("vm"),
-        )
-    )
-    return scoped_persist(
-        a0.select("cid", F.posexplode("vm").alias("pos", "m"))
-        .groupBy("cid", "pos")
-        .agg(F.sum("m").alias("s"), F.count(F.lit(1)).alias("n"))
-        .select("cid", "pos", F.expr("s div n").alias("nm"))
-        .groupBy("cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "nm"))), lambda s: s["nm"]
-            ).alias("cm")
-        )
-    )
-
-
-def _ivfa_assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, cell, vm) against FROZEN centroids — map-side min_by,
-    one row per vector across the shuffle."""
-    return (
-        vecs.crossJoin(F.broadcast(cents))
-        .select("vec_id", "vm", "cid", _int_sqdist(F.col("vm"), F.col("cm")).alias("sq"))
-        .groupBy("vec_id")
-        .agg(
-            F.min_by("cid", F.struct(F.col("sq"), F.col("cid"))).alias("cell"),
-            F.first("vm").alias("vm"),
-        )
+def _append_seeds(base: DataFrame) -> DataFrame:
+    """The append builders' seed rule (the seeds CTE of _IVFA_SQL and
+    _IVFPQ_RES_APPEND_SQL): base vec_ids 1..IVFK_NLIST — 0 is in the
+    delta split — as the (cid, cm) frame _ivfk_cents takes."""
+    return base.where(F.col("vec_id").between(1, IVFK_NLIST)).select(
+        F.col("vec_id").alias("cid"), F.col("vm").alias("cm")
     )
 
 
@@ -4021,10 +3978,10 @@ def build_ivf_append_index(
         base = e.where(F.col("vec_id") % 10 != 0).select(
             "vec_id", _micro_arr("embedding").alias("vm")
         )
-        cents = _ivfa_cents(base)
+        cents = _ivfk_cents(base, IVFK_NLIST, seeds=_append_seeds(base))
         cents.write.parquet(os.path.join(path, "centroids"))
         write_partitioned(
-            _ivfa_assign(base, cents),
+            _assign_cells(base, cents, IVFK_NLIST),
             os.path.join(path, "assignments", "gen=0"), "cell",
         )
         meta = {
@@ -4051,7 +4008,7 @@ def build_ivf_append_index(
     delta = e.where(F.col("vec_id") % 10 == 0).select(
         "vec_id", _micro_arr("embedding").alias("vm")
     )
-    write_partitioned(_ivfa_assign(delta, cents), stage, "cell")
+    write_partitioned(_assign_cells(delta, cents, IVFK_NLIST), stage, "cell")
     os.replace(stage, gen1)  # atomic: readers see all of gen 1 or none
     meta = dict(meta, gens=2)
     tmp = meta_path + f".tmp-{uuid.uuid4().hex[:8]}"
@@ -4121,7 +4078,7 @@ def _snapshot_parquet_files(root: str) -> list[str]:
     index dir (recursive).  Reading ``.parquet(*files)`` makes the
     logical plan a function of the file SET: a retrain after new files
     land builds a DIFFERENT plan, so the persisted training
-    (_ivfa_cents) can never hit the CacheManager's identical-plan cache
+    (_ivfk_cents) can never hit the CacheManager's identical-plan cache
     and silently train on the prior epoch's cached rows — the r12
     stale-centroid trap, now closed on BOTH retrain paths.
 
@@ -4340,11 +4297,12 @@ def build_ivfpq_res_append_index(
     trained on the base alone; the delta split (vec_id % 10 = 0) is
     assigned to the frozen centroids, residual-encoded against the
     frozen codebooks, and appended as ``codes/gen=1`` — only the delta
-    is ever scored at append time.  Crash safety is the
-    build_ivf_append_index marker contract: staged writes, atomic
-    renames, marker (which alone advertises ``gens: 2``) replaced
-    LAST; a retry wipes any unadvertised gen=1 before redoing the
-    append."""
+    is ever scored at append time, through the same _residual_subs +
+    _pqt_encode frames as the rebuild (_ivfpq_res_frames).  Crash
+    safety is the build_ivf_append_index marker contract: staged
+    writes, atomic renames, marker (which alone advertises ``gens:
+    2``) replaced LAST; a retry wipes any unadvertised gen=1 before
+    redoing the append."""
     import json
     import os
     import shutil
@@ -4375,26 +4333,10 @@ def build_ivfpq_res_append_index(
         e = load(spark, sf_dir, "embeddings", spread=True)
         all_vecs = e.select("vec_id", _micro_arr("embedding").alias("vm"))
         base = all_vecs.where(F.col("vec_id") % 10 != 0)
-        cents = _ivfa_cents(base)
-        res_b = _ivfa_assign(base, cents).join(
-            F.broadcast(cents.select(F.col("cid").alias("cell"), "cm")), "cell"
-        ).select(
-            "vec_id", "cell", F.zip_with("vm", "cm", lambda a, b: a - b).alias("rv")
-        )
-        rsub_b = _res_subvectors(res_b)
-        rtcents = _pqt_trained_cents(rsub_b.select("vec_id", "m", "sv"))
-        codes_b = (
-            rsub_b.join(F.broadcast(rtcents), "m")
-            .select(
-                "vec_id", "cell", "m", "cid",
-                _int_sqdist(F.col("sv"), F.col("cm")).alias("sq"),
-            )
-            .groupBy("vec_id", "m")
-            .agg(
-                F.min_by("cid", F.struct(F.col("sq"), F.col("cid"))).alias("cid"),
-                F.first("cell").alias("cell"),
-            )
-        )
+        cents = _ivfk_cents(base, IVFK_NLIST, seeds=_append_seeds(base))
+        rsub_b = _residual_subs(base, cents, IVFK_NLIST)
+        rtcents = _pqt_trained_cents(rsub_b)
+        codes_b = _pqt_encode(rsub_b, rtcents, keep=("cell",))
         cents.write.parquet(os.path.join(path, "centroids"))
         rtcents.write.parquet(os.path.join(path, "rcodebook"))
         write_partitioned(codes_b, os.path.join(path, "codes", "gen=0"), "cell")
@@ -4422,22 +4364,8 @@ def build_ivfpq_res_append_index(
     delta = e.where(F.col("vec_id") % 10 == 0).select(
         "vec_id", _micro_arr("embedding").alias("vm")
     )
-    res_d = _ivfa_assign(delta, cents).join(
-        F.broadcast(cents.select(F.col("cid").alias("cell"), "cm")), "cell"
-    ).select(
-        "vec_id", "cell", F.zip_with("vm", "cm", lambda a, b: a - b).alias("rv")
-    )
-    codes_d = (
-        _res_subvectors(res_d).join(F.broadcast(rtcents), "m")
-        .select(
-            "vec_id", "cell", "m", "cid",
-            _int_sqdist(F.col("sv"), F.col("cm")).alias("sq"),
-        )
-        .groupBy("vec_id", "m")
-        .agg(
-            F.min_by("cid", F.struct(F.col("sq"), F.col("cid"))).alias("cid"),
-            F.first("cell").alias("cell"),
-        )
+    codes_d = _pqt_encode(
+        _residual_subs(delta, cents, IVFK_NLIST), rtcents, keep=("cell",)
     )
     stage = os.path.join(path, f".stage-gen1-{uuid.uuid4().hex[:8]}")
     write_partitioned(codes_d, stage, "cell")

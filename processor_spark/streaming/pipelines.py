@@ -1187,14 +1187,15 @@ def stream_ivf_ingest(
     (similarity._cents_np_path: no Spark job, no schema inference) and
     every batch is assigned by the batch path's numpy policy,
     similarity._numpy_assign_auto — exact flat (value-identical to the
-    _ivfa_assign crossJoin: exact integer distances, argmin over
-    cid-ascending columns = the (sq, cid) tie-break), routed
+    Catalyst flat _assign_cells crossJoin: exact integer distances,
+    argmin over cid-ascending columns = the (sq, cid) tie-break), routed
     multi-probe at TWOLEVEL_RPROBE_PAIR past NUMPY_FLAT_MAX_NLIST (the
     retrain's own _assign_cells policy, so post-retrain generations
     keep one cell policy).  A one-file micro-batch is ONE partition,
     where the crossJoin fold ran n×nlist×d on one core (~90 s per 16k
     rows at nlist=512 — SCALE.md r14).  Only the FIRST batch counts
-    its rows: it trains the centroids and must not train on nothing.
+    its rows: it trains the centroids (similarity._ivfk_cents from
+    rank seeds) and must not train on nothing.
     A later empty batch writes a stage with no parquet file, which is
     discarded, so it creates no generation.
 
@@ -1209,7 +1210,7 @@ def stream_ivf_ingest(
     from processor_spark.operators.similarity import (
         IVFK_NLIST,
         _cents_np_path,
-        _ivfa_cents,
+        _ivfk_cents,
         _micro_arr,
         _numpy_assign_auto,
         heal_swapped_root,
@@ -1264,7 +1265,8 @@ def stream_ivf_ingest(
                 )
             )
             stage = os.path.join(path, f".stage-cents-{uuid.uuid4().hex[:8]}")
-            _stage_centroids(_ivfa_cents(vecs, seeds=seeds), stage, IVFK_NLIST)
+            cents = _ivfk_cents(vecs, IVFK_NLIST, seeds=seeds)
+            _stage_centroids(cents, stage, IVFK_NLIST)
             os.replace(os.path.join(stage, "centroids"), cents_dir)
             shutil.rmtree(stage, ignore_errors=True)
 
@@ -1318,8 +1320,8 @@ def _retrain_cents(vecs: DataFrame) -> tuple[int, int, DataFrame]:
     (auto, rprobe=TWOLEVEL_RPROBE_PAIR — the streaming consumers are
     occupancy-sensitive: per-cell STATE size and the SemDeDup pair
     replay both bound on cell balance); at the fixture-scale floor the
-    flat branch runs, value-identical to the r12 _ivfa_cents training
-    (same crossJoin argmin + integer means)."""
+    flat branch runs, the same _ivfk_cents training as the ingest's
+    first batch (same crossJoin argmin + _cell_means update)."""
     from pyspark.sql import Window
 
     from processor_spark.operators.similarity import (
@@ -1415,7 +1417,7 @@ def compact_ivf_stream_index(
     if retrain:
         # explicit file-list snapshot (ADVICE r12 medium): the
         # assignments dir GROWS a generation per micro-batch, and
-        # _ivfa_cents persists its plan — a dir-path read would build
+        # _ivfk_cents persists its plan — a dir-path read would build
         # the identical logical plan on every retrain and the
         # CacheManager would serve the PRIOR epoch's cached training
         # rows (the exact stale-cache failure the r12 drift test caught
@@ -1436,8 +1438,8 @@ def compact_ivf_stream_index(
             os.path.join(stage, "centroids")
         )
         # derived nlist → the O(n·nlist) flat re-assign is the two-level
-        # router's exact use case (auto past TWOLEVEL_MIN_NLIST; flat —
-        # byte-identical to _ivfa_assign — at the fixture-scale floor)
+        # router's exact use case (auto past TWOLEVEL_MIN_NLIST; the
+        # flat crossJoin at the fixture-scale floor)
         write_partitioned(
             _assign_cells(vecs, new_cents, nlist).select("vec_id", "cell", "vm"),
             os.path.join(stage, "assignments", f"gen={gens[-1]}"),
@@ -1446,7 +1448,7 @@ def compact_ivf_stream_index(
     else:
         # fold-only compaction KEEPS every vector's cell, and each
         # generation's cell= directories already carry it.  Re-deriving
-        # it with the flat _ivfa_assign crossJoin (the pre-r14 path) was
+        # it with the flat _assign_cells crossJoin (the pre-r14 path) was
         # O(n·nlist) waste (128k × 512 ≈ 66M zip_with folds: measured
         # 247.6 s vs 5.9 s for the path-parse fold at 64×/nlist=512 —
         # SCALE.md r14) AND not cell-preserving: a post-retrain

@@ -1415,3 +1415,54 @@ def test_prune_prototypes_drops_the_closest_fifth_per_cell(spark):
             exp_drop.add(v)
     got_drop = set(got.loc[got["kept"] == 0, "vec_id"])
     assert got_drop == exp_drop
+
+
+@pytest.mark.parametrize("keys", [(), ("m",)], ids=["flat", "per_subspace"])
+def test_cell_means_truncates_toward_zero(spark, keys):
+    """_cell_means, the one Lloyd update every trainer runs, against an
+    independent pure-Python integer reference: per (*keys, cid), each
+    coordinate is the members' sum divided by their count, truncated
+    toward zero as Spark's ``div`` does (a floor, numpy's ``//``,
+    would give −4 for −7 over 2 members).  Residual coordinates are
+    signed, so the residual codebooks depend on this; the rows mix
+    signed ±4e6 residual-range values, a cell summing to −7 over 2
+    members and a singleton cell, and with keys=("m",) the same cids
+    recur under two subspaces that must not mix."""
+    import random
+
+    from processor_spark.operators.similarity import _cell_means
+
+    rng = random.Random(16)
+    rows = []
+    for m in (0, 1):
+        rows += [
+            (m, 1, [-3, 4, 0, -1]),
+            (m, 1, [-4, 3, -5, 2]),  # cid 1 sums to [-7, 7, -5, 1] over 2
+            (m, 2, [-7, 8_000_000, -8_000_000, 5]),  # singleton
+        ]
+        rows += [
+            (m, rng.randint(3, 6), [rng.randint(-4_000_000, 4_000_000) for _ in range(4)])
+            for _ in range(40)
+        ]
+    if not keys:
+        rows = [r for r in rows if r[0] == 0]
+
+    def trunc_div(s, n):
+        q = abs(s) // n
+        return -q if s < 0 else q
+
+    groups: dict[tuple, list] = {}
+    for m, cid, vm in rows:
+        groups.setdefault((m, cid)[-1 - len(keys):], []).append(vm)
+    want = {
+        g: [trunc_div(sum(col), len(col)) for col in zip(*members)]
+        for g, members in groups.items()
+    }
+
+    df = spark.createDataFrame(rows, "m int, cid long, vm array<bigint>")
+    out = _cell_means(df.select(*keys, "cid", "vm"), keys)
+    assert out.columns == [*keys, "cid", "cm"]
+    got = {tuple(r[:-1]): list(r.cm) for r in out.collect()}
+    assert got == want
+    assert got[(0, 1)[-1 - len(keys):]] == [-3, 3, -2, 0]
+    assert got[(0, 2)[-1 - len(keys):]] == [-7, 8_000_000, -8_000_000, 5]

@@ -1147,8 +1147,9 @@ def test_stream_ivf_ingest_equals_batch_assignment_and_replay_safe(spark, tmp_pa
     import os
 
     from processor_spark.operators.similarity import (
+        IVFK_NLIST,
         KNN_QUERIES,
-        _ivfa_assign,
+        _assign_cells,
         _micro_arr,
     )
 
@@ -1187,7 +1188,8 @@ def test_stream_ivf_ingest_equals_batch_assignment_and_replay_safe(spark, tmp_pa
     vecs = load(spark, SF_SMALL, "embeddings").select(
         "vec_id", _micro_arr("embedding").alias("vm")
     )
-    _ivfa_assign(vecs, cents).write.partitionBy("cell").parquet(
+    flat = _assign_cells(vecs, cents, IVFK_NLIST, two_level=False)
+    flat.write.partitionBy("cell").parquet(
         os.path.join(batch_path, "assignments", "gen=0")
     )
     want = sorted(
@@ -2093,7 +2095,7 @@ def test_semdedup_assign_refuses_unrepresentable_cells(spark):
 def test_stream_ivf_second_retrain_sees_new_files(spark, tmp_path):
     """r13 (ADVICE r12 medium): a SECOND retrain compaction after new
     generations land must train on the FULL accumulated corpus, not on
-    the prior retrain's CacheManager-cached rows — _ivfa_cents persists
+    the prior retrain's CacheManager-cached rows — _ivfk_cents persists
     its plan, and a directory-path read of the assignments root builds
     the identical logical plan every retrain (the exact stale-cache
     failure the r12 SemDeDup drift test caught; the IVF path now
@@ -2416,7 +2418,8 @@ def test_stream_ivf_assign_numpy_equals_flat(spark):
     """r14: the ingest sink assigns micro-batches via the numpy
     exact-flat argmin (a single-file batch is ONE partition — the
     crossJoin fold measured ~90 s/16k rows at nlist=512 on one core);
-    it must equal _ivfa_assign cell-for-cell at any nlist (exact
+    it must equal the Catalyst flat argmin (_assign_cells,
+    two_level=False) cell-for-cell at any nlist (exact
     integer distances, same (sq, cid) tie-break) — the fixture-floor
     nlist=8 included, which the sink now assigns through numpy too.
     Both entry points are pinned: the flat kernel and the auto policy
@@ -2424,8 +2427,8 @@ def test_stream_ivf_assign_numpy_equals_flat(spark):
     import numpy as np
 
     from processor_spark.operators.similarity import (
+        _assign_cells,
         _cents_sorted,
-        _ivfa_assign,
         _micro_arr,
         _numpy_assign_auto,
         _numpy_flat_assign,
@@ -2447,7 +2450,7 @@ def test_stream_ivf_assign_numpy_equals_flat(spark):
         )
         flat = {
             (r.vec_id, int(r.cell))
-            for r in _ivfa_assign(svecs, cents).collect()
+            for r in _assign_cells(svecs, cents, nlist, two_level=False).collect()
         }
         pair = _cents_sorted(
             [cid for cid, _ in cents_rows],
@@ -2467,12 +2470,13 @@ def test_stream_ivf_assign_numpy_equals_flat(spark):
 def test_stream_ivf_ingest_numpy_branch_end_to_end(spark, tmp_path):
     """r14: a pre-seeded 80-centroid table (the post-retrain shape)
     must make the ingest sink's numpy assign produce generations
-    identical to the _ivfa_assign batch twin — including the
+    identical to the Catalyst flat batch twin (_assign_cells,
+    two_level=False) — including the
     one-file-per-cell-dir clustered layout."""
     import os
 
     from processor_spark.operators.similarity import (
-        _ivfa_assign,
+        _assign_cells,
         _micro_arr,
     )
 
@@ -2515,7 +2519,8 @@ def test_stream_ivf_ingest_numpy_branch_end_to_end(spark, tmp_path):
         ).collect()
     }
     want = {
-        (r.vec_id, int(r.cell)) for r in _ivfa_assign(svecs, cents).collect()
+        (r.vec_id, int(r.cell))
+        for r in _assign_cells(svecs, cents, 80, two_level=False).collect()
     }
     assert got == want
     # clustered layout: each generation holds at most one file per

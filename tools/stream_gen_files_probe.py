@@ -108,7 +108,7 @@ def main() -> None:
 
     # raw twin: the identical assignment frame for ONE post-retrain
     # chunk written with plain partitionBy (the pre-r14 sink)
-    from processor_spark.operators.similarity import _micro_arr, _ivfa_assign
+    from processor_spark.operators.similarity import _assign_cells, _micro_arr
 
     cents = spark.read.parquet(os.path.join(path, "centroids"))
     one = (
@@ -117,7 +117,9 @@ def main() -> None:
     )
     raw_dir = os.path.join(work, "raw-twin")
     t0 = time.perf_counter()
-    _ivfa_assign(one, cents).write.partitionBy("cell").parquet(raw_dir)
+    _assign_cells(one, cents, nlist, two_level=False).write.partitionBy(
+        "cell"
+    ).parquet(raw_dir)
     raw_s = round(time.perf_counter() - t0, 1)
     raw_files = sum(count_leaf_files(raw_dir).values())
     clustered_files = post_gens.get(
